@@ -60,6 +60,15 @@ def _jvm_tokens(text: str | None) -> list[str]:
     return re.split(r"\s+", (text or "").strip(" "))
 
 
+def _gram_set(text: str | None) -> set[str]:
+    """Distinct word 3-grams of ``text`` — the one gram semantics of every
+    Python kernel here, equal to shingles() and the DuckDB oracle:
+    _jvm_tokens tokenization, " ".join 3-grams, and one partial gram for
+    texts with fewer than 3 tokens."""
+    toks = _jvm_tokens(text)
+    return {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
+
+
 def _bucket_ids(
     rows: DataFrame, keys: list[str], collect_expr, max_bucket: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -394,20 +403,15 @@ def minhash_band_rows(
 def _jaccard_verify_batches(batches):
     """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> exact word-
     3-gram Jaccard per candidate pair. Mirrors shingles()/the DuckDB
-    oracle exactly: _jvm_tokens tokenization (space-only trim + \\s+
-    split, identical to the JVM expression down to edge-whitespace
-    texts), " ".join 3-grams (one partial gram for <3-token texts), set
-    semantics, and HALF-UP rounding to 4 places (Spark's ROUND and
-    DuckDB's round both round half away from zero; Python's built-in
-    round is banker's — hence the floor form).
+    oracle exactly: _gram_set grams (tokenization identical to the JVM
+    expression down to edge-whitespace texts), set semantics, and
+    HALF-UP rounding to 4 places (Spark's ROUND and DuckDB's round both
+    round half away from zero; Python's built-in round is banker's —
+    hence the floor form).
     """
     import math
 
     import pyarrow as pa
-
-    def gram_set(text: str) -> set:
-        toks = _jvm_tokens(text)
-        return {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
 
     for batch in batches:
         a_ids = batch.column("a_id").to_pylist()
@@ -416,7 +420,7 @@ def _jaccard_verify_batches(batches):
         b_txt = batch.column("b_text").to_pylist()
         jacs = []
         for ta, tb in zip(a_txt, b_txt):
-            sa, sb = gram_set(ta), gram_set(tb)
+            sa, sb = _gram_set(ta), _gram_set(tb)
             inter = len(sa & sb)
             union = len(sa | sb)
             j = inter / union if union else float("nan")
@@ -563,19 +567,17 @@ def verify_candidate_pairs(
     ~8ms/pair because higher-order-function lambdas are interpreted, vs
     ~20us/pair for C-level Python set ops."""
     par = docs.sparkSession.sparkContext.defaultParallelism * 2
-    # r8 (guide §2.3 "project before the exchange", measured): the old
-    # shape repartitioned AFTER the text joins, so the one explicit
-    # exchange shipped |pairs| x two texts (~270 MB at sf0.1's 444k
-    # candidates) just to fix the kernel's width. Instead BOTH thin
-    # sides are widened explicitly BEFORE the joins — the candidate
-    # pairs (16 B/row; keeps the CPU-bound kernel exempt from AQE's
-    # byte-based coalescing whichever side the planner broadcasts) and
-    # the doc texts (one text per doc, not per pair) — so the joined
-    # pair-texts never cross an exchange: whichever join side AQE
-    # broadcasts, the output inherits an explicitly par-wide
-    # partitioning. At scale (docs too big to broadcast) the joins fall
-    # back to shuffled joins on the same thin inputs — still never an
-    # exchange of pair-expanded texts.
+    # BOTH thin sides are widened explicitly BEFORE the joins — the
+    # candidate pairs (16 B/row; keeps the CPU-bound kernel exempt from
+    # AQE's byte-based coalescing) and the doc texts (one text per doc,
+    # not per pair) — instead of repartitioning the joined pair-texts
+    # (|pairs| x two texts, ~270 MB at sf0.1's 444k candidates). When
+    # AQE broadcasts the doc side of a join, that join adds its text
+    # with no exchange and keeps the explicit par-wide partitioning.
+    # When both joins are shuffled (docs too big to broadcast), the
+    # second join re-partitions the first join's output by b_id, so the
+    # a-side texts DO cross that exchange, once per candidate pair; only
+    # the b-side texts never do.
     cand = cand.repartition(par, "a_id", "b_id")
     ver = (
         cand.join(docs.select(F.col("doc_id").alias("a_id"),
@@ -591,8 +593,8 @@ def verify_candidate_pairs(
 
 def _shingle_rows_batches(batches):
     """Arrow-batch kernel: (doc_id, text) -> one row per DISTINCT word
-    3-gram (doc_id, shingle, sz). Same gram semantics as shingles()/
-    _jaccard_verify_batches (one partial gram for <3-token texts).
+    3-gram (doc_id, shingle, sz), from _gram_set like every verify
+    kernel (one partial gram for <3-token texts).
     Exists because the shingles() JVM expression is interpreted HOF
     (~3ms/doc) and every downstream consumer re-executes its subtree —
     the Python set build is ~10us/doc and cheap to recompute."""
@@ -603,8 +605,7 @@ def _shingle_rows_batches(batches):
         texts = batch.column("text").to_pylist()
         out_id, out_sh, out_sz = [], [], []
         for doc_id, text in zip(doc_ids, texts):
-            toks = _jvm_tokens(text)
-            grams = {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
+            grams = _gram_set(text)
             out_id.extend([doc_id] * len(grams))
             out_sh.extend(grams)
             out_sz.extend([len(grams)] * len(grams))
@@ -787,10 +788,6 @@ def _containment_verify_batches(batches):
 
     import pyarrow as pa
 
-    def gram_set(text: str) -> set:
-        toks = _jvm_tokens(text)
-        return {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
-
     for batch in batches:
         a_ids = batch.column("a_id").to_pylist()
         b_ids = batch.column("b_id").to_pylist()
@@ -798,7 +795,7 @@ def _containment_verify_batches(batches):
         b_txt = batch.column("b_text").to_pylist()
         cons = []
         for ta, tb in zip(a_txt, b_txt):
-            sa, sb = gram_set(ta), gram_set(tb)
+            sa, sb = _gram_set(ta), _gram_set(tb)
             c = len(sa & sb) / len(sa) if sa else float("nan")
             cons.append(math.floor(c * 10000 + 0.5) / 10000)
         yield pa.RecordBatch.from_arrays(
@@ -816,8 +813,9 @@ def verify_containment_pairs(
 ) -> DataFrame:
     """Exact-containment verification of ORDERED candidate (a_id, b_id)
     pairs — same rejoin-text-once + Arrow-kernel shape as
-    verify_candidate_pairs (incl. the r8 thin-side widening: pair-
-    expanded texts never cross an exchange, see there)."""
+    verify_candidate_pairs, including the thin-side widening before the
+    joins (the a-side texts still cross one exchange per pair when both
+    joins are shuffled rather than broadcast; see there)."""
     par = docs.sparkSession.sparkContext.defaultParallelism * 2
     cand = cand.repartition(par, "a_id", "b_id")
     ver = (
@@ -1542,11 +1540,10 @@ def _star_edges(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     a star forest rooted at each component's minimum in O(log n)
     rounds.
 
-    r8 optimization (guide §2.4): the per-node neighborhood min is a
-    ``min(...) over (partition by node)`` WINDOW instead of the old
-    groupBy + self-join — one exchange + one partition-local sort per
-    star op where the join form paid two exchanges AND (as sort-merge at
-    scale) two sorts anyway. Duplicate edges never change a min, so
+    The per-node neighborhood min is a ``min(...) over (partition by
+    node)`` WINDOW — one exchange + one partition-local sort per star
+    op, where a groupBy + self-join pays two exchanges AND (as
+    sort-merge at scale) two sorts. Duplicate edges never change a min, so
     ``dedup=False`` lets the large-star feed the small-star raw and
     defers the distinct to once per (large, small) round — the per-round
     canonical edge SET (what the convergence signature hashes) is
@@ -1580,45 +1577,82 @@ def _star_edges(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-def _two_star_components(
+def connected_components_pairs(
     pairs: DataFrame,
-    max_iter: int,
-    checkpoint_dir: str | None,
-    round_counter: list | None,
+    max_iter: int = 20,
+    checkpoint_dir: str | None = None,
+    mode: str | None = None,
+    round_counter: list | None = None,
 ) -> DataFrame:
-    """Alternating large-star/small-star connected components — the
-    LONG-CHAIN scale mode: min-label propagation needs diameter rounds
-    (a 1,000-link drifting near-dup chain = ~1,000 joins at 100 TB),
-    this converges in O(log diameter) rounds (round count asserted by
-    test on a 1,024-node path). Same output contract as the min-label
-    mode: (doc_id, keeper_id, cluster_size) — including a (d, d, 1)
-    singleton row for a node whose only pairs are self-loops (the star
-    loop drops self-loops up front, so those nodes are re-added
-    explicitly; r5 ADVICE).
+    """Connected components over a near-dup pair graph — the operator
+    that turns PAIRS into dedup DECISIONS: every doc in a duplicate
+    cluster maps to the cluster's smallest doc_id (the deterministic
+    keeper).
 
-    Convergence = the canonical edge set reaches a fixed point of one
-    full (large, small) round, detected by a collision-resistant
-    signature (count + bit_xor(xxhash64(a, b)) — xor cannot overflow
-    under ANSI mode and is order-insensitive over the distinct set); the
-    result is then PROVEN consistent, not assumed: every original pair
-    must connect two nodes with equal labels (one O(E) join), so a
-    signature collision cannot emit a silently-split cluster."""
-    sc = pairs.sparkSession.sparkContext
-    prior_ckpt_dir = None
-    if checkpoint_dir is not None:
-        prior_ckpt_dir = _set_ckpt_dir(
-            sc, checkpoint_dir, "connected_components_pairs(mode='twostar')"
+    Algorithm: alternating large-star/small-star contraction (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC 2014;
+    one round = one large-star + one small-star, see _star_edges) over
+    the canonical edge set (a_id < b_id, distinct, self-loops dropped).
+    It converges to a star forest rooted at each component's minimum in
+    O(log diameter) rounds — a 1,024-node path takes 11 — so a long
+    drifting near-dup chain needs ~log2(length) rounds, not one per link.
+    Convergence = the canonical edge set is a fixed point of one full
+    round, detected by a collision-resistant signature (count +
+    bit_xor(xxhash64(a, b)) — xor cannot overflow under ANSI mode and is
+    order-insensitive over the distinct set). The result is then PROVEN
+    consistent, not assumed: every original pair must connect two nodes
+    with equal labels (one O(E) join), so a signature collision cannot
+    emit a silently-split cluster.
+
+    Returns (doc_id, keeper_id, cluster_size), one row per doc that
+    appears in some pair — including a (d, d, 1) row for a doc whose
+    only pairs are self-loops.
+
+    ``max_iter`` bounds the rounds; a graph still changing after it
+    raises ``RuntimeError`` ("not converged") instead of emitting split
+    clusters. ``round_counter``: optional list; the number of rounds
+    used is appended (tests assert the O(log n) bound).
+
+    Lineage is truncated EVERY round: each star op references its input
+    2-3x, so the logical plan would grow ~6x per round and the driver
+    would pay Catalyst analysis exponential in the rounds. Truncation is
+    a reliable ``checkpoint`` into ``checkpoint_dir`` when set (an
+    HDFS/object-store path on a real cluster — survives executor loss),
+    else ``localCheckpoint`` (executor-resident blocks, freed by the
+    ContextCleaner when the frames are garbage-collected). Caller
+    contract for ``checkpoint_dir``: the files written there are NOT
+    auto-deleted (Spark only removes reliable checkpoints when
+    spark.cleaner.referenceTracking.cleanCheckpoints is enabled) — pass
+    a per-job directory and delete it after consuming the result; the
+    session's checkpoint dir is restored on exit when one was previously
+    set (Spark cannot unset it, so otherwise ours remains, with a
+    warning).
+
+    ``mode`` is deprecated and ignored: "minlabel", "twostar" and "auto"
+    all run the algorithm above; any other value raises ``ValueError``.
+    """
+    if mode not in (None, "minlabel", "twostar", "auto"):
+        raise ValueError(
+            f"unknown mode {mode!r}: mode is deprecated, omit it"
         )
+    sc = pairs.sparkSession.sparkContext
     reliable = checkpoint_dir is not None
-    edges0 = (
+    prior_ckpt_dir = None
+    if reliable:
+        prior_ckpt_dir = _set_ckpt_dir(
+            sc, checkpoint_dir, "connected_components_pairs"
+        )
+    # one read of the (possibly expensive, unpersisted) pair input feeds
+    # both the edge set and the self-loop-only singletons below
+    canon = (
         pairs.select(
             F.least("a_id", "b_id").alias("a_id"),
             F.greatest("a_id", "b_id").alias("b_id"),
         )
-        .where(F.col("a_id") != F.col("b_id"))
         .distinct()
         .persist()
     )
+    edges0 = canon.where(F.col("a_id") != F.col("b_id"))
     try:
         edges = edges0
         prev_sig = None
@@ -1630,12 +1664,9 @@ def _two_star_components(
             nxt = _star_edges(
                 _star_edges(edges, large=True, dedup=False), large=False
             )
-            # truncate every round: each star op references its input
-            # 2-3x, so the logical plan would grow ~6x per round. On
-            # the localCheckpoint path the cut is NON-eager (the plan
+            # on the localCheckpoint path the cut is NON-eager (the plan
             # is truncated immediately either way) so the signature agg
-            # below is the one materializing job per round — the old
-            # eager cut + separate agg paid two.
+            # below is the one materializing job per round
             if reliable:
                 nxt = _truncate_lineage(nxt, True)
             else:
@@ -1652,9 +1683,9 @@ def _two_star_components(
             prev_sig = sig
         else:
             raise RuntimeError(
-                f"connected_components_pairs(mode='twostar'): not converged "
-                f"after {max_iter} rounds — O(log n) convergence makes this "
-                "a bug or an absurd graph; raise max_iter"
+                f"connected_components_pairs: not converged after "
+                f"{max_iter} rounds — O(log n) convergence makes this a bug "
+                "or an absurd graph; raise max_iter"
             )
         if round_counter is not None:
             round_counter.append(rounds)
@@ -1688,9 +1719,9 @@ def _two_star_components(
         )
         if bad:
             raise RuntimeError(
-                f"connected_components_pairs(mode='twostar'): {bad} original "
-                "pairs violate label consistency — convergence signature "
-                "collision or star invariant broken"
+                f"connected_components_pairs: {bad} original pairs violate "
+                "label consistency — convergence signature collision or "
+                "star invariant broken"
             )
         sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
         out = labels.join(sizes, "label").select(
@@ -1698,14 +1729,10 @@ def _two_star_components(
             F.col("label").alias("keeper_id"),
             F.col("cluster_size").cast("int").alias("cluster_size"),
         )
-        # self-loop-ONLY nodes never reach edges0 (the canonical set
-        # filters a != b) but minlabel emits them as (d, d, 1) —
-        # re-add the ones no real edge touches so both modes share one
-        # output contract (r5 ADVICE)
-        loop_ids = (
-            pairs.where(F.col("a_id") == F.col("b_id"))
-            .select(F.col("a_id").alias("id"))
-            .distinct()
+        # self-loop-only nodes never reach edges0 (the canonical set
+        # drops a == b); re-add the ones no real edge touches as (d, d, 1)
+        loop_ids = canon.where(F.col("a_id") == F.col("b_id")).select(
+            F.col("a_id").alias("id")
         )
         edge_ids = edges0.select(F.col("a_id").alias("id")).unionByName(
             edges0.select(F.col("b_id").alias("id"))
@@ -1715,391 +1742,24 @@ def _two_star_components(
             F.col("id").alias("keeper_id"),
             F.lit(1).cast("int").alias("cluster_size"),
         )
+        # self-contained BEFORE the cached input is released (never a
+        # driver collect — the label set can be huge at scale)
         return _truncate_lineage(out.unionByName(singletons), reliable)
     finally:
-        edges0.unpersist()
+        canon.unpersist()
         if prior_ckpt_dir is not None:
             sc.setCheckpointDir(prior_ckpt_dir)
-
-
-class ComponentsNotConverged(RuntimeError):
-    """Min-label ran out of rounds (pair-graph diameter > max_iter) —
-    or, with ``_bail_ratio`` set, gave up EARLY because the change
-    frontier was not collapsing (the chain-graph signature).
-
-    Raised instead of silently emitting split clusters; ``mode="auto"``
-    catches exactly this and falls back to the O(log diameter) two-star
-    contraction. ``rounds_used`` carries how many propagation rounds ran
-    before the raise; ``partial_labels`` (r8) carries the last
-    checkpointed (id, label) frame so auto can contract the graph by the
-    labels already computed instead of discarding that work — label(u)
-    is always a node id inside u's component and the component minimum
-    keeps itself as label, so the label-quotient graph has exactly the
-    original components (with minima preserved) at a fraction of the
-    edges and diameter."""
-
-    def __init__(
-        self, msg: str, rounds_used: int = 0, partial_labels=None
-    ):
-        super().__init__(msg)
-        self.rounds_used = rounds_used
-        self.partial_labels = partial_labels
-
-
-# mode="auto": frontier-decay bail threshold. A COST heuristic, never a
-# correctness knob (a false bail just takes the equally-correct twostar
-# path): on a dense near-dup cluster (near-clique — the overwhelmingly
-# common shape) the per-round changed-label count collapses
-# geometrically (round 2 is a small fraction of round 1), while on a
-# drifting chain the min label advances ~one hop per round and the
-# frontier stays flat. From round 2 on (r8: was round 3 — a clique's
-# round-2 count already collapses toward 0, so one comparison suffices
-# and saves a ~1 s round on chain graphs), if this round changed more
-# than _AUTO_BAIL_RATIO of the previous round's count, the graph is
-# chain-shaped and the remaining budget would be wasted — bail to
-# twostar immediately instead of burning all _AUTO_MINLABEL_ROUNDS.
-_AUTO_BAIL_RATIO = 0.5
-
-# r8 (ADVICE): never bail on a TINY frontier — a nearly-converged dense
-# graph whose last few labels trickle in (e.g. 3 -> 2 changed) would
-# otherwise false-bail into a full two-star contraction exactly where
-# the remaining min-label rounds are cheapest. Below this many changed
-# labels the bail check is skipped and min-label runs out its budget.
-_AUTO_BAIL_MIN_FRONTIER = 256
-
-# mode="auto": max rounds of min-label to attempt before falling back
-# to two-star. Dense near-dup clusters (the overwhelmingly common
-# shape) converge in 2-4 rounds of the cheaper per-round op (one join +
-# one agg vs two-star's two of each); a drifting-chain graph exits via
-# the _AUTO_BAIL_RATIO frontier check at ~round 2, so this cap only
-# bounds the slow-but-still-collapsing middle ground.
-_AUTO_MINLABEL_ROUNDS = 6
-
-
-def connected_components_pairs(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    checkpoint_dir: str | None = None,
-    mode: str = "minlabel",
-    round_counter: list | None = None,
-    _bail_ratio: float | None = None,
-    _bail_min_frontier: int | None = None,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph — the operator
-    that turns PAIRS into dedup DECISIONS: every doc in a duplicate
-    cluster maps to the cluster's smallest doc_id (the deterministic
-    keeper). Two modes behind one API:
-
-    - ``mode="minlabel"`` (default, the ORACLE mode — mirrored exactly
-      by the DuckDB recursive-CTE closure): distributed min-label
-      propagation. Each node starts labeled with its own id; every
-      round each node takes the min of its label and its neighbors'
-      labels; converged when no label changes. Rounds needed = graph
-      diameter — tiny for dup clusters (near-dup families are dense),
-      and ``max_iter`` bounds pathology.
-    - ``mode="twostar"`` (the LONG-CHAIN scale mode): alternating
-      large-star/small-star contraction (Kiveris et al., SoCC 2014),
-      O(log diameter) rounds — see _two_star_components. Same output,
-      property-tested equal to minlabel and to a union-find.
-    - ``mode="auto"``: min-label for up to ``_AUTO_MINLABEL_ROUNDS``
-      rounds (dense dup clusters converge in 2-4 of the cheaper
-      per-round op) with the ``_AUTO_BAIL_RATIO`` frontier-decay check
-      (r7; r8: from round 2, with the _AUTO_BAIL_MIN_FRONTIER floor
-      so tiny trickling frontiers never false-bail): if the changed
-      count is not
-      collapsing (chain signature — the frontier advances one hop per
-      round instead of shrinking geometrically), bail immediately
-      instead of burning the rest of the budget. Either exit path
-      raises ``ComponentsNotConverged`` and falls back to two-star on
-      the original pairs — fast on the common dense shape,
-      O(log diameter) on chains, never fails on diameter alone. The
-      output is mode-independent (property-tested; the bail is a cost
-      heuristic only — a false bail just takes the equally-correct
-      two-star path), so callers lose nothing by not choosing.
-
-    ``round_counter``: optional list; the number of propagation rounds
-    actually used is appended (tests assert the O(log n) bound). Per
-    round (r8 shape): one edges-labels join and ONE fused aggregation
-    over (messages UNION self rows) that yields the new label AND the
-    old one, so the changed count is a filter on the materialized frame
-    — no second join, no changed-count join; labels truncated and the
-    previous round released, so lineage stays flat and the working
-    set is one (id, label) frame — at 100 TB that frame holds only docs
-    that appear in some pair, orders of magnitude smaller than the
-    corpus.
-
-    Lineage truncation is NOT optional here, and it runs EVERY round:
-    each round's frame references the previous one twice (directly and
-    through the neighbor-min join), so the LOGICAL plan doubles per
-    round — ``persist`` alone caches data but keeps the plan, and the
-    driver pays Catalyst analysis/optimization EXPONENTIAL in the
-    rounds since the last truncation even though execution reads the
-    cache (measured at sf0.1: rounds 0.5-0.7 s right after a
-    truncation, 27-47 s four rounds later; truncating every round cut
-    the 19-round loop 245 s -> 12.9 s, and pre-truncation r4 the
-    analysis itself OOM'd the driver by ~15 rounds). The per-round
-    eager cut is cheap because the label frame is small (one row per
-    pair-connected doc). Truncation is a reliable ``checkpoint`` into
-    ``checkpoint_dir`` when set (an HDFS/object-store path on a real
-    cluster — survives executor loss), else ``localCheckpoint``
-    (executor-resident blocks). Caller contract for ``checkpoint_dir``: the
-    files written there are NOT auto-deleted (Spark only removes
-    reliable checkpoints when spark.cleaner.referenceTracking.
-    cleanCheckpoints is enabled) — pass a per-job directory and delete
-    it after consuming the result; the session's checkpoint dir is
-    restored on exit when one was previously set (Spark cannot unset
-    it, so otherwise ours remains).
-
-    Returns (doc_id, keeper_id, cluster_size).
-    """
-    if mode == "twostar":
-        return _two_star_components(pairs, max_iter, checkpoint_dir, round_counter)
-    if mode == "auto":
-        # persist the PAIRS input across attempt + fallback: on bail the
-        # two-star leg would otherwise recompute the whole upstream pair
-        # generator (e.g. the simhash banding subtree — measured ~5-7 s
-        # of the r7 bench row, as large as the bail savings themselves).
-        # Safe to release in finally: both legs return eagerly
-        # lineage-truncated frames, self-contained by return time.
-        # r8 (ADVICE): only add — and later drop — the cache when the
-        # caller had not already persisted the frame, so auto mode never
-        # silently evicts a caller's own cache on exit.
-        sl = pairs.storageLevel
-        _we_persisted = not (sl.useMemory or sl.useDisk)
-        if _we_persisted:
-            pairs = pairs.persist()
-        try:
-            return connected_components_pairs(
-                pairs,
-                max_iter=min(max_iter, _AUTO_MINLABEL_ROUNDS),
-                checkpoint_dir=checkpoint_dir,
-                mode="minlabel",
-                round_counter=round_counter,
-                # frontier-decay early bail (see _AUTO_BAIL_RATIO): on a
-                # chain graph, stop wasting the budget after ~2 rounds
-                _bail_ratio=_AUTO_BAIL_RATIO,
-            )
-        except ComponentsNotConverged as e:
-            # the failed attempt appended nothing to round_counter and
-            # its caches were released in the minlabel finally block —
-            # except the last checkpointed label frame, which r8 reuses:
-            # contract the graph by those labels (label(u) is a node id
-            # inside u's component, and the component minimum keeps
-            # itself as label, so the quotient has exactly the original
-            # components with minima preserved — at the bench graph,
-            # 3,414 pairs contract to ~210 quotient edges and two-star
-            # needs 3 rounds instead of 5), run two-star on the
-            # quotient, and compose keeper(u) = keeper_q(label(u)).
-            lab = e.partial_labels
-            if lab is None:
-                return _two_star_components(
-                    pairs, max_iter, checkpoint_dir, round_counter
-                )
-            la = lab.select(F.col("id").alias("a_id"), F.col("label").alias("_la"))
-            lb = lab.select(F.col("id").alias("b_id"), F.col("label").alias("_lb"))
-            q = (
-                pairs.select("a_id", "b_id")
-                .join(la, "a_id")
-                .join(lb, "b_id")
-                .select(F.col("_la").alias("a_id"), F.col("_lb").alias("b_id"))
-            )
-            qout = _two_star_components(q, max_iter, checkpoint_dir, round_counter)
-            out = lab.join(
-                qout.select(F.col("doc_id").alias("label"), "keeper_id"),
-                "label",
-            ).select(F.col("id").alias("doc_id"), "keeper_id")
-            sizes = out.groupBy("keeper_id").agg(
-                F.count("*").alias("cluster_size")
-            )
-            out = out.join(sizes, "keeper_id").select(
-                "doc_id",
-                "keeper_id",
-                F.col("cluster_size").cast("int").alias("cluster_size"),
-            )
-            return _truncate_lineage(out, checkpoint_dir is not None)
-        finally:
-            if _we_persisted:
-                pairs.unpersist()
-    if mode != "minlabel":
-        raise ValueError(
-            f"unknown mode {mode!r}: use 'minlabel', 'twostar', or 'auto'"
-        )
-    sc = pairs.sparkSession.sparkContext
-    prior_ckpt_dir = None
-    if checkpoint_dir is not None:
-        # setCheckpointDir is SESSION-GLOBAL state: remember any prior
-        # dir and restore it on exit so an unrelated frame's later
-        # checkpoint() doesn't silently land in (possibly disposable)
-        # checkpoint_dir; warns when there is no prior dir to restore.
-        prior_ckpt_dir = _set_ckpt_dir(
-            sc, checkpoint_dir, "connected_components_pairs"
-        )
-    # r8 round shape (guide §2.3-2.4, measured ~1.9 s/round -> ~0.8 s):
-    #  * the neighbor-min and the label update fuse into ONE aggregation
-    #    over (neighbor messages UNION self rows) — the old form paid a
-    #    second labels join for the update and a THIRD join just to
-    #    count changed labels; here the old label rides along as `_old`
-    #    and changed = a filter-count on the already-materialized frame;
-    #  * lineage truncation is a NON-eager localCheckpoint (the plan is
-    #    truncated immediately either way) so that changed-count is the
-    #    single materializing job per round, not a separate one. The
-    #    reliable-checkpoint path keeps the eager persist-first form
-    #    (a non-eager reliable checkpoint would run the lineage twice).
-    # Truncation still happens EVERY round: Catalyst analysis cost is
-    # exponential in rounds-since-truncation (see docstring).
-    e = pairs.select("a_id", "b_id")
-    edges = e.unionByName(
-        e.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
-    )
-    # keyed by the per-round join side (a_id), count left to AQE so the
-    # exchange is sized by bytes, not a local-core constant
-    edges = edges.repartition(F.col("a_id")).persist()
-    labels = (
-        edges.select(F.col("a_id").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .persist()
-    )
-    # truncated frames' blocks are the ONLY copy of their data (no
-    # recomputable lineage) — never unpersist one mid-loop while later
-    # rounds still chain off it; they are released together in finally
-    truncated: list[DataFrame] = []
-    labels_is_truncated = False
-    try:
-        changed = -1
-        prev_changed = -1
-        for round_idx in range(max_iter):
-            msgs = (
-                edges.join(labels, edges.a_id == labels.id)
-                .select(
-                    F.col("b_id").alias("id"), "label",
-                    F.lit(False).alias("_own"),
-                )
-            )
-            u = msgs.unionByName(
-                labels.select("id", "label", F.lit(True).alias("_own"))
-            )
-            # every id has exactly ONE self row (labels is distinct), so
-            # min(label) = least(old, min neighbor label) and `_old`
-            # recovers the previous label for the changed count
-            new_full = u.groupBy("id").agg(
-                F.min("label").alias("label"),
-                F.max(F.when(F.col("_own"), F.col("label"))).alias("_old"),
-            )
-            if checkpoint_dir is not None:
-                # persist first: an eager reliable checkpoint of an
-                # UNPERSISTED frame runs the lineage twice (once for
-                # the eager count, again for the checkpoint-write
-                # job); the cache makes the write job a cache read,
-                # and is dropped as soon as the files exist
-                base = new_full.persist()
-                new_full = base.checkpoint(eager=True)
-                base.unpersist()
-            else:
-                new_full = new_full.localCheckpoint(eager=False)
-            truncated.append(new_full)
-            changed = new_full.where(F.col("label") != F.col("_old")).count()
-            if not labels_is_truncated:
-                labels.unpersist()
-            labels = new_full.select("id", "label")
-            labels_is_truncated = True
-            if changed == 0:
-                break
-            floor = (
-                _AUTO_BAIL_MIN_FRONTIER
-                if _bail_min_frontier is None
-                else _bail_min_frontier
-            )
-            if (
-                _bail_ratio is not None
-                and round_idx >= 1
-                and prev_changed >= floor
-                and changed > _bail_ratio * prev_changed
-            ):
-                # frontier not collapsing — the chain-graph signature;
-                # stop burning budget (auto catches this and contracts)
-                raise ComponentsNotConverged(
-                    f"connected_components_pairs: change frontier flat "
-                    f"after {round_idx + 1} rounds ({prev_changed} -> "
-                    f"{changed} changed labels; bail ratio "
-                    f"{_bail_ratio}) — chain-shaped graph, use "
-                    "mode='twostar'/'auto'",
-                    rounds_used=round_idx + 1,
-                    partial_labels=labels if labels_is_truncated else None,
-                )
-            prev_changed = changed
-        if changed != 0:
-            # fail fast, never emit silently-split clusters: a pair
-            # graph with diameter > max_iter (a long drifting-near-dup
-            # chain) needs a bigger budget, not wrong keepers
-            raise ComponentsNotConverged(
-                f"connected_components_pairs: not converged after "
-                f"{max_iter} rounds ({changed} labels still changing) — "
-                "raise max_iter (rounds needed = pair-graph diameter), or "
-                "use mode='twostar' (O(log diameter) rounds) or "
-                "mode='auto' (falls back to twostar automatically)",
-                rounds_used=max_iter,
-                partial_labels=labels if labels_is_truncated else None,
-            )
-        if round_counter is not None:
-            round_counter.append(round_idx + 1)
-        sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-        out = (
-            labels.join(sizes, "label")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.col("label").alias("keeper_id"),
-                F.col("cluster_size").cast("int").alias("cluster_size"),
-            )
-        )
-        # Truncate the iterative lineage and make the result
-        # self-contained BEFORE the cached inputs are released (never a
-        # driver collect — the label set can be huge at scale).
-        # localCheckpoint blocks are executor-resident (freed by the
-        # ContextCleaner when the frame is GC'd) and die with their
-        # executor — pass checkpoint_dir for the reliable storage-backed
-        # form on a real cluster.
-        if checkpoint_dir is not None:
-            return out.checkpoint(eager=True)
-        return out.localCheckpoint(eager=True)
-    finally:
-        # runs AFTER the result is checkpointed self-contained (or on
-        # the error path, where nothing downstream needs the blocks)
-        edges.unpersist()
-        if not labels_is_truncated:
-            labels.unpersist()
-        if prior_ckpt_dir is not None:
-            sc.setCheckpointDir(prior_ckpt_dir)
-        # mid-loop localCheckpoint blocks cannot be dropped via
-        # DataFrame.unpersist (they are RDD-level persists, not
-        # CacheManager entries); the ContextCleaner frees them when the
-        # frames go out of scope here — same lifecycle as the returned
-        # frame's blocks. Bounded: at most one frame per round of
-        # one (id, label) row per pair-connected doc. RELIABLE
-        # checkpoint FILES under checkpoint_dir are NOT auto-deleted
-        # (spark.cleaner.referenceTracking.cleanCheckpoints defaults to
-        # false): the CALLER owns the dir's lifecycle — use a per-job
-        # subdirectory and remove it after consuming the result, or
-        # enable that conf session-wide.
 
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keeper assignment over the Manku-banded simhash pair graph — the
-    end-to-end 'pairs -> decisions' path, exactly mirrored by a DuckDB
-    recursive-CTE transitive closure (the oracle is mode-independent:
-    it checks the OUTPUT clustering). Runs ``mode="auto"`` — the mode
-    callers should not have to choose (r6 verdict #6): min-label with
-    the frontier-decay bail, then on non-convergence two-star
-    contraction on the original pairs. On THIS corpus the pair graph
-    has diameter ~19, so auto's min-label leg bails at round 2 (r8:
-    the frontier check starts one round earlier, with a min-frontier
-    floor) and lands in two-star — certifying in the driver file the
-    exact path a caller gets by default, at a
-    measured ~1.5x of pinned-twostar on this adversarial-diameter graph
-    (and ~min-label-optimal on the common dense shape). Output is
-    mode-independent (property-tested equal across all three modes)."""
+    end-to-end 'pairs -> decisions' path through the two-star
+    contraction. The DuckDB oracle is a recursive-CTE transitive
+    closure: it checks the OUTPUT clustering, not the algorithm. This
+    corpus's pair graph has diameter ~19, so it also exercises the
+    logarithmic round count on a chain-shaped graph."""
     pairs = _q_simhash_pairs_scale(spark, sf_dir)
-    return connected_components_pairs(pairs, mode="auto")
+    return connected_components_pairs(pairs)
 
 
 _SQL_COMP_CTES = f"""

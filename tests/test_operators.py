@@ -663,10 +663,10 @@ def test_pack_token_shards_is_partition_invariant(spark):
 
 
 def test_connected_components_multi_hop_chain(spark):
-    """Min-label propagation must converge across multi-hop chains (a
-    cluster connected only transitively), handle several disjoint
-    clusters, and report exact sizes — beyond what single-round
-    neighbor-min could do."""
+    """Components must converge across multi-hop chains (a cluster
+    connected only transitively), handle several disjoint clusters, and
+    report exact sizes — beyond what single-round neighbor-min could
+    do — without leaking cached RDDs."""
     from opencv_table_extraction_spark.operators.dedup import (
         connected_components_pairs,
     )
@@ -687,11 +687,11 @@ def test_connected_components_multi_hop_chain(spark):
         d: (10, 5) for d in (10, 11, 12, 13, 14)}
     assert got[20] == (20, 2) and got[21] == (20, 2)
     assert all(got[d] == (30, 3) for d in (30, 31, 32))
-    # the loop's per-round persists are all released; what may remain:
-    # the returned frame's localCheckpoint blocks plus the per-round
-    # truncation frames (one per round — RDD-level persists the
-    # ContextCleaner frees on GC; DataFrame.unpersist cannot), bounded
-    # by the round count the counter reports
+    # the cached canonical edge input is released; what may remain is
+    # one localCheckpoint per star round (RDD-level persists the
+    # ContextCleaner frees on GC; DataFrame.unpersist cannot) plus the
+    # returned frame's — exactly rounds + 1 when nothing is GC'd yet, so
+    # a leaked input cache (one more RDD) fails the bound
     n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert n_cached_after - n_cached_before <= rounds[0] + 1, (
         n_cached_before, n_cached_after, rounds)
@@ -715,103 +715,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
     got = {r["doc_id"]: r["keeper_id"]
            for r in connected_components_pairs(chain, max_iter=10).collect()}
     assert all(k == 10 for k in got.values())
-
-
-def test_connected_components_auto_mode(spark):
-    """mode='auto' = min-label for up to _AUTO_MINLABEL_ROUNDS, then a
-    two-star fallback on the original pairs instead of the fail-fast.
-    Dense graph: stays on the cheaper min-label (round_counter small).
-    Chain beyond the budget: falls back and still produces the correct
-    single cluster — never ComponentsNotConverged on diameter alone."""
-    from opencv_table_extraction_spark.operators.dedup import (
-        _AUTO_MINLABEL_ROUNDS,
-        connected_components_pairs,
-    )
-
-    # dense star: diameter 2, min-label converges inside the budget
-    dense = spark.createDataFrame(
-        [(0, i) for i in range(1, 6)], ["a_id", "b_id"]
-    )
-    rounds: list[int] = []
-    got = {r["doc_id"]: r["keeper_id"]
-           for r in connected_components_pairs(
-               dense, mode="auto", round_counter=rounds).collect()}
-    assert all(k == 0 for k in got.values()) and len(got) == 6
-    assert rounds and rounds[0] <= _AUTO_MINLABEL_ROUNDS
-
-    # chain of diameter 12 > budget 6: the old minlabel default raised;
-    # auto must fall back to two-star and emit one correct cluster
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["a_id", "b_id"]
-    )
-    rounds2: list[int] = []
-    got2 = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
-            for r in connected_components_pairs(
-                chain, max_iter=20, mode="auto",
-                round_counter=rounds2).collect()}
-    assert len(got2) == 13
-    assert all(v == (0, 13) for v in got2.values())
-    # the failed min-label attempt appends nothing; the single entry is
-    # the two-star fallback's round count (O(log diameter))
-    assert len(rounds2) == 1 and rounds2[0] <= 8, rounds2
-
-    # r7/r8 frontier-decay bail: on a chain the changed-label count
-    # decays ~one per round (12 -> 11 -> 10 ...), so with _bail_ratio
-    # (and the frontier floor disabled) the min-label leg must give up
-    # at round 2 — the earliest comparison — not burn the whole budget
-    # (a COST assertion — auto's output above is already proven equal)
-    import pytest
-    from opencv_table_extraction_spark.operators.dedup import (
-        _AUTO_BAIL_RATIO,
-        ComponentsNotConverged,
-    )
-
-    with pytest.raises(ComponentsNotConverged) as ei:
-        connected_components_pairs(
-            chain, max_iter=20, mode="minlabel", _bail_ratio=_AUTO_BAIL_RATIO,
-            _bail_min_frontier=0,
-        )
-    assert ei.value.rounds_used == 2
-    # r8 (ADVICE): with the default _AUTO_BAIL_MIN_FRONTIER floor, a
-    # frontier this small (12 changed labels) never bails — min-label
-    # just converges (diameter < max_iter), no two-star detour
-    ok_floor = connected_components_pairs(
-        chain, max_iter=20, mode="minlabel", _bail_ratio=_AUTO_BAIL_RATIO
-    )
-    assert ok_floor.count() == 13
-    # without the bail, the same call converges (diameter < max_iter)
-    ok = connected_components_pairs(chain, max_iter=20, mode="minlabel")
-    assert ok.count() == 13
-
-
-def test_auto_mode_quotient_composition(spark):
-    """r8: auto's fallback contracts the pair graph by the bailed
-    min-label attempt's partial labels and composes keepers through the
-    quotient. Mixed graph — a dense star (merges fully inside the
-    budget), a chain longer than the budget, and a self-loop-only node
-    — must come out identical to plain min-label with a big budget."""
-    from opencv_table_extraction_spark.operators.dedup import (
-        connected_components_pairs,
-    )
-
-    edges = (
-        [(100, 100 + i) for i in range(1, 6)]        # star, keeper 100
-        + [(i, i + 1) for i in range(12)]            # chain 0..12
-        + [(500, 500)]                               # self-loop singleton
-    )
-    df = spark.createDataFrame(edges, ["a_id", "b_id"])
-    want = {
-        (r["doc_id"], r["keeper_id"], r["cluster_size"])
-        for r in connected_components_pairs(df, max_iter=30,
-                                            mode="minlabel").collect()
-    }
-    got = {
-        (r["doc_id"], r["keeper_id"], r["cluster_size"])
-        for r in connected_components_pairs(df, max_iter=30,
-                                            mode="auto").collect()
-    }
-    assert got == want
-    assert (500, 500, 1) in got
 
 
 def test_sample_by_quality_strata_and_rates(spark, tmp_path):
@@ -976,10 +879,9 @@ def test_shingles_expression(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir engages the reliable checkpoint() path (periodic
-    label truncation + checkpointed result): a long chain whose
-    propagation needs more rounds than the truncation interval must
-    converge to the same keepers as the localCheckpoint path, and the
+    """checkpoint_dir engages the reliable checkpoint() path (per-round
+    edge truncation + checkpointed result): a chain needing several
+    rounds must converge to the exact keepers and sizes, and the
     checkpoint dir must actually receive data."""
     import os
 
@@ -988,7 +890,7 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     )
 
     # chain 10-...-22: diameter 12, so the per-round reliable
-    # truncation fires many times mid-loop
+    # truncation fires several times mid-loop
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(10, 22)], ["a_id", "b_id"]
     )
@@ -999,15 +901,6 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert got == {d: (10, 13) for d in range(10, 23)}
     wrote = any(files for _, _, files in os.walk(ckpt))
     assert wrote, "reliable checkpoint dir received no data"
-
-    # same contract for the twostar mode's per-round reliable truncation
-    ckpt2 = str(tmp_path / "ckpt2")
-    got2 = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
-            for r in connected_components_pairs(
-                chain, max_iter=20, checkpoint_dir=ckpt2,
-                mode="twostar").collect()}
-    assert got2 == got
-    assert any(files for _, _, files in os.walk(ckpt2))
 
 
 def test_winnow_batch_equals_per_doc():
@@ -1067,9 +960,10 @@ def test_connected_components_restores_prior_checkpoint_dir(spark, tmp_path):
 
 def test_connected_components_random_graphs(spark):
     """Property test: on seeded random pair graphs (self-contained
-    clusters, chains, isolated pairs, dense blobs) the distributed
-    min-label propagation must equal a Python union-find — keepers AND
-    cluster sizes."""
+    clusters, chains, isolated pairs, dense blobs) and one fixed mixed
+    graph (a dense star, a 12-link chain and a self-loop-only node) the
+    distributed two-star contraction must equal a Python union-find —
+    keepers AND cluster sizes."""
     import random
 
     from opencv_table_extraction_spark.operators.dedup import (
@@ -1100,6 +994,7 @@ def test_connected_components_random_graphs(spark):
                 out[m] = (keeper, len(members))
         return out
 
+    graphs = []
     for seed in range(4):
         rng = random.Random(seed)
         n_nodes = rng.randrange(4, 40)
@@ -1111,19 +1006,26 @@ def test_connected_components_random_graphs(spark):
         if not edges:
             edges = {(0, 1)}
         # self-loops, including on ids ABOVE the edge range so some are
-        # self-loop-only: both modes must emit (d, d, 1) for those
+        # self-loop-only: those must come out as (d, d, 1)
         loops = {(i, i) for i in rng.sample(range(n_nodes + 5), 3)}
+        graphs.append((f"seed {seed}", edges, loops))
+    graphs.append((
+        "star + chain + self-loop",
+        {(100, 100 + i) for i in range(1, 6)}        # star, keeper 100
+        | {(i, i + 1) for i in range(12)},           # chain 0..12
+        {(500, 500)},                                # self-loop singleton
+    ))
+    for label, edges, loops in graphs:
         pairs = spark.createDataFrame(
             sorted(edges | loops), ["a_id", "b_id"]
         )
         want = union_find(edges)
         for i, _ in loops:
             want.setdefault(i, (i, 1))
-        for mode in ("minlabel", "twostar"):
-            got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
-                   for r in connected_components_pairs(
-                       pairs, max_iter=40, mode=mode).collect()}
-            assert got == want, (seed, mode)
+        got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
+               for r in connected_components_pairs(
+                   pairs, max_iter=40).collect()}
+        assert got == want, label
 
 
 def test_pairs_crosscheck_agrees_and_reports_drops(spark):
@@ -1154,31 +1056,35 @@ def test_pairs_crosscheck_agrees_and_reports_drops(spark):
 def test_components_tolerate_messy_pair_input(spark):
     """Real pair generators are deduped and canonical, but the operator
     must not depend on it: self-loops, duplicate pairs, and both
-    orientations of the same edge must not change the clustering in
-    either mode."""
+    orientations of the same edge must not change the clustering."""
     from opencv_table_extraction_spark.operators.dedup import (
         connected_components_pairs,
     )
 
     messy = spark.createDataFrame(
         # (3, 3): self-loop on a clustered node; (9, 9): a self-loop-ONLY
-        # node — must come out as a (9, 9, 1) singleton in BOTH modes
-        # (r5 ADVICE: twostar used to drop it silently)
+        # node — must come out as a (9, 9, 1) singleton, not be dropped
         [(1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (5, 6), (9, 9)],
         ["a_id", "b_id"],
     )
     want = {1: (1, 3), 2: (1, 3), 3: (1, 3), 5: (5, 2), 6: (5, 2), 9: (9, 1)}
-    for mode in ("minlabel", "twostar"):
-        got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
-               for r in connected_components_pairs(
-                   messy, max_iter=20, mode=mode).collect()}
-        assert got == want, (mode, got)
+    got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
+           for r in connected_components_pairs(
+               messy, max_iter=20).collect()}
+    assert got == want, got
+    # the deprecated mode= names are accepted and ignored; others raise
+    got_auto = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
+                for r in connected_components_pairs(
+                    messy, max_iter=20, mode="auto").collect()}
+    assert got_auto == want, got_auto
+    with pytest.raises(ValueError, match="unknown mode"):
+        connected_components_pairs(messy, mode="bogus")
 
 
 def test_two_star_components_logarithmic_on_long_chain(spark):
-    """The twostar mode is THE long-chain scale path: a 1,024-node path
-    graph (diameter 1,023 — min-label propagation would need ~1,023
-    rounds) must converge in O(log diameter) rounds with the correct
+    """Two-star is the long-chain scale path: a 1,024-node path graph
+    (diameter 1,023 — min-label propagation would need ~1,023 rounds)
+    must converge in O(log diameter) rounds with the correct
     single cluster. Measured 11 rounds (~log2(1024)); assert <= 14 so
     the bound fails loudly if the alternation ever degrades toward
     linear."""
@@ -1192,7 +1098,7 @@ def test_two_star_components_logarithmic_on_long_chain(spark):
     rounds: list[int] = []
     got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
            for r in connected_components_pairs(
-               chain, max_iter=25, mode="twostar", round_counter=rounds
+               chain, max_iter=25, round_counter=rounds
            ).collect()}
     assert len(got) == 1024
     assert all(v == (0, 1024) for v in got.values())

@@ -139,12 +139,12 @@ def main() -> None:
     out["crosscheck_s"] = round(time.time() - t, 1)
     out["crosscheck"] = row.asDict()
 
-    # stage 2: LSH pairs -> twostar components (the long-chain mode)
+    # stage 2: LSH pairs -> two-star connected components
     t = time.time()
     pairs = minhash_lsh_pairs(corpus)
     rounds: list[int] = []
     decisions = connected_components_pairs(
-        pairs, max_iter=25, mode="twostar", round_counter=rounds
+        pairs, max_iter=25, round_counter=rounds
     )
     out["n_decision_rows"] = decisions.count()
     out["components_s"] = round(time.time() - t, 1)
