@@ -246,9 +246,11 @@ def _open_1d_runs(bin_img: np.ndarray, k: int) -> np.ndarray:
     l, r = (k - 1) // 2, k // 2
     H, W = bin_img.shape
     f = bin_img != 0
-    # int16 index math: canvases are capped at MAX_CANVAS=2400 px, and
-    # the accumulate passes are memory-bandwidth-bound, so halving the
-    # element width is a direct win (int32 fallback for giant inputs)
+    # int16 index math: the accumulate passes are memory-bandwidth-bound,
+    # so halving the element width is a direct win. Canvases are not
+    # capped (layout_table only targets a width; the vertical opening
+    # scans rows of H px, and H grows with the row count), so runs of
+    # 32000 px or more take the int32 fallback
     dt = np.int16 if W + k < 32000 else np.int32
     idx = np.arange(W, dtype=dt)
     last_zero = np.maximum.accumulate(np.where(f, dt(-1), idx), axis=1)

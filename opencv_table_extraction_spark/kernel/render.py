@@ -43,7 +43,10 @@ CELL_H = 12         # px interior height of a row
 LINE_T = 2          # grid line thickness
 MARGIN = 8          # canvas margin around the outer border
 MIN_CELL_W = 16     # px floor for a column's interior width
-MAX_CANVAS = 2400   # hard cap on either canvas dimension
+# Target canvas width, not a cap: layout_table scales wider tables'
+# columns down to it, but each column keeps an 8 px floor, so very
+# wide tables still exceed it; height grows with the row count.
+MAX_CANVAS = 2400
 
 _PIPE_ROW = re.compile(r"^\s*\|.*\|\s*$")
 _SEP_ROW = re.compile(r"^\s*\|(?:\s*:?-{2,}:?\s*\|)+\s*$")

@@ -1,5 +1,7 @@
 """Training-data pipeline operators (task brief: dedup, similarity
-search, text analysis, multimodal plumbing) — all Spark-first: built-in
-pyspark.sql.functions / higher-order array functions on the JVM side
-wherever expressible; Arrow-batched pandas UDFs only where not
-(simhash bit-packing, multimodal byte decode)."""
+search, text analysis, multimodal plumbing) — Spark-first: joins,
+aggregations and windows use built-in pyspark.sql functions, and
+per-row numeric work runs in Python only over Arrow batches — the
+dedup mapInArrow kernels (minhash bands, pair verification, shingle
+rows, simhash, SRP sketches), the textstats pandas UDFs (winnowing,
+repetition stats) and the multimodal mapInPandas decoders."""

@@ -1,8 +1,15 @@
-"""Deduplication operators: exact (hash-groupBy), n-gram Jaccard
-near-dup (blocked pairwise), MinHash+LSH (shingle -> minhash -> band ->
-bucket self-join), SimHash (md5 bit votes). Spark-first: every operator
-is pure JVM-side expression algebra (xxhash64 / md5 / transform /
-aggregate / array_min) — zero Python anywhere, including simhash.
+"""Deduplication operators: exact (hash groupBy), n-gram Jaccard
+near-dup (blocked pairwise baseline and exact prefix-filter join),
+asymmetric containment, MinHash+LSH, SimHash, SRP embedding dedup,
+connected components and the keep-filter that applies the decisions.
+
+Joins, aggregations and windows stay JVM-side; per-document and per-pair
+numeric work runs in five Arrow-batch (mapInArrow) kernels — minhash
+bands, pair verification, shingle rows, simhash and SRP sketches —
+because Spark interprets higher-order-function lambdas. The bucketed
+generators (LSH, Jaccard prefix, simhash, SRP) get their candidates from
+a groupBy on the bucket key plus in-bucket pair enumeration
+(_bucket_pairs), never from a self-join of the bucket rows.
 
 The dedup corpus derives near-duplicates deterministically from the
 documents table (each doc unioned with its 90%-prefix truncation at
@@ -15,6 +22,7 @@ brute-force pair set (see _SQL_MINHASH notes).
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 
@@ -22,21 +30,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-_VERIFY_SCHEMA = StructType(
-    [
-        StructField("a_id", LongType()),
-        StructField("b_id", LongType()),
-        StructField("jaccard", DoubleType()),
-    ]
-)
-
 N_HASHES = 32
 N_BANDS = 16  # 16 bands x 2 rows: ~0.99 candidate recall at jaccard 0.5
 JACCARD_THRESHOLD = 0.2
 # Hot-bucket cap for the bucketed candidate generators (LSH / prefix /
-# SRP): a bucket key shared by more than MAX_BUCKET ids is dropped from
-# pair enumeration BEFORE its id array is ever materialized (count-first
-# anti-join, see _bucket_ids). Over-hot buckets are exact-dup /
+# containment / simhash / SRP): a bucket key shared by more than
+# MAX_BUCKET ids is dropped from pair enumeration BEFORE its id array is
+# ever materialized (a count window filters the key rows ahead of
+# collect_list, see _bucket_ids; the prefix joins filter on document
+# frequency). Over-hot buckets are exact-dup /
 # boilerplate families that dedup_exact absorbs in O(N); enumerating
 # them here would be O(B^2) pairs and an O(B) single-task array. The
 # default clears every fixture bucket by >100x (measured max ~30 at
@@ -79,19 +81,17 @@ def _bucket_ids(
     degenerate bucket's array (the OOM + cartesian bomb a
     ``where(size(ids) <= cap)`` AFTER the agg would still hit).
 
-    r8 shape (guide §2.4): ONE key-hash exchange, ONE kernel pass. The
-    bucket size rides a COUNT window over the key partition and the
-    1 < n <= max_bucket filter runs BEFORE collect_list, which then
-    aggregates in place on the window's partitioning (no further
-    exchange, no anti-join). The r7 count-first form never shipped a
-    degenerate bucket's rows (partial-agg counts + anti-join before the
-    array exchange) but paid a SECOND full scan->banding-kernel pass
-    for the counts branch — and Catalyst/AQE does not dedupe Python
-    MapInArrow subtrees (verified in the executed plan: two kernel
-    instances, no ReusedExchange), so that second pass was real. Band
-    rows are ~20-byte key tuples: shipping even a pathological bucket's
-    rows once (window-buffered, disk-spillable, never an array) costs
-    far less than re-running the per-doc kernel over the whole corpus.
+    ONE key-hash exchange, ONE kernel pass: the bucket size rides a
+    COUNT window over the key partition and the 1 < n <= max_bucket
+    filter runs BEFORE collect_list, which then aggregates in place on
+    the window's partitioning (no further exchange, no anti-join).
+    Counting in a separate partial-agg branch would avoid shipping a
+    degenerate bucket's rows, but would run the scan->banding kernel a
+    second time: Catalyst/AQE does not dedupe Python MapInArrow subtrees
+    (no ReusedExchange across them). Band rows are ~20-byte key tuples,
+    so shipping even a pathological bucket's rows once (window-buffered,
+    disk-spillable, never an array) costs far less than re-running the
+    per-doc kernel over the whole corpus.
 
     Returns the buckets frame (>1 ids each, all <= max_bucket) and the
     lazy ``dropped`` frame (key columns + n) enumerating every excluded
@@ -114,6 +114,33 @@ def _bucket_ids(
         .where(F.col("n") > max_bucket)
     )
     return buckets, dropped
+
+
+def _bucket_pairs(buckets: DataFrame, pair, keep=None) -> DataFrame:
+    """Distinct candidate pairs from each bucket row's ``ids`` array.
+
+    ``pair(x, y)`` builds the struct for one unordered element pair (x
+    before y in the array); it carries canonical ``a_id``/``b_id``
+    fields and may carry more. ``keep(p)``, when given, prunes those
+    structs inside the array, before the explode. Returns one row per
+    distinct (a_id, b_id) with every field of the pair struct."""
+
+    def partners(x, i):
+        ps = F.transform(
+            F.slice(F.col("ids"), i + 2, F.size("ids")), lambda y: pair(x, y)
+        )
+        return ps if keep is None else F.filter(ps, keep)
+
+    return (
+        buckets.select(F.explode(F.flatten(F.transform("ids", partners))).alias("p"))
+        .select("p.*")
+        .dropDuplicates(["a_id", "b_id"])
+    )
+
+
+def _canonical_pair(x, y):
+    """Pair struct of two bare ids, smaller id first."""
+    return F.struct(F.least(x, y).alias("a_id"), F.greatest(x, y).alias("b_id"))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,8 +407,6 @@ def minhash_band_rows(
     """(doc_id, text) -> n_bands rows (doc_id, band_id, band_hash); the
     narrow, CPU-bound LSH signature stage. Explicit-count repartition so
     a 1-file scan doesn't serialize it (AQE byte-coalescing exemption)."""
-    import functools
-
     from pyspark.sql.types import IntegerType
 
     schema = StructType(
@@ -400,39 +425,42 @@ def minhash_band_rows(
     )
 
 
-def _jaccard_verify_batches(batches):
-    """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> exact word-
-    3-gram Jaccard per candidate pair. Mirrors shingles()/the DuckDB
-    oracle exactly: _gram_set grams (tokenization identical to the JVM
-    expression down to edge-whitespace texts), set semantics, and
-    HALF-UP rounding to 4 places (Spark's ROUND and DuckDB's round both
-    round half away from zero; Python's built-in round is banker's —
-    hence the floor form).
+def _verify_batches(batches, col: str, denom):
+    """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> (a_id, b_id,
+    ``col``) with col = |S(A) ∩ S(B)| / denom(S(A), S(B)) per candidate
+    pair. S is _gram_set, which mirrors shingles()/the DuckDB oracle
+    exactly (tokenization identical to the JVM expression down to
+    edge-whitespace texts, set semantics). Values round HALF-UP to 4
+    places: Spark's ROUND and DuckDB's round both round half away from
+    zero, Python's built-in round is banker's — hence the floor form.
     """
     import math
 
     import pyarrow as pa
 
     for batch in batches:
-        a_ids = batch.column("a_id").to_pylist()
-        b_ids = batch.column("b_id").to_pylist()
         a_txt = batch.column("a_text").to_pylist()
         b_txt = batch.column("b_text").to_pylist()
-        jacs = []
+        vals = []
         for ta, tb in zip(a_txt, b_txt):
             sa, sb = _gram_set(ta), _gram_set(tb)
-            inter = len(sa & sb)
-            union = len(sa | sb)
-            j = inter / union if union else float("nan")
-            jacs.append(math.floor(j * 10000 + 0.5) / 10000)
+            d = denom(sa, sb)
+            v = len(sa & sb) / d if d else float("nan")
+            vals.append(math.floor(v * 10000 + 0.5) / 10000)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(a_ids, type=pa.int64()),
-                pa.array(b_ids, type=pa.int64()),
-                pa.array(jacs, type=pa.float64()),
+                pa.array(batch.column("a_id").to_pylist(), type=pa.int64()),
+                pa.array(batch.column("b_id").to_pylist(), type=pa.int64()),
+                pa.array(vals, type=pa.float64()),
             ],
-            names=["a_id", "b_id", "jaccard"],
+            names=["a_id", "b_id", col],
         )
+
+
+# Verify metrics, passed to verify_candidate_pairs as data: (output
+# column, denominator of the shared-gram count given both gram sets).
+_JACCARD = ("jaccard", lambda sa, sb: len(sa | sb))
+_CONTAINMENT = ("containment", lambda sa, sb: len(sa))  # A inside B
 
 
 # Named banding profiles, measured on the r6 sf1-equivalent sweep
@@ -516,56 +544,33 @@ def minhash_lsh_pairs_with_drops(
     buckets, dropped = _bucket_ids(
         bands, ["band_id", "band_hash"], F.col("doc_id"), max_bucket
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(
-                    F.least(x, y).alias("a_id"), F.greatest(x, y).alias("b_id")
-                ),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a_id", "p.b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    pairs = verify_candidate_pairs(cand, docs, threshold)
+    cand = _bucket_pairs(buckets, _canonical_pair)
+    pairs = verify_candidate_pairs(cand, docs, threshold, _JACCARD)
     return pairs, dropped
 
 
-def minhash_lsh_pairs(
-    corpus: DataFrame,
-    n_bands: int = N_BANDS,
-    threshold: float = 0.5,
-    max_bucket: int = MAX_BUCKET,
-    n_hashes: int | None = None,
-    recall: str | None = None,
-) -> DataFrame:
-    """Pairs-only convenience wrapper over minhash_lsh_pairs_with_drops.
-    Drop telemetry has exactly ONE contract: the ``_with_drops`` form's
-    explicit second frame (certified by dedup_dropped_buckets) — this
-    wrapper is for callers that consciously ignore drops."""
-    pairs, _ = minhash_lsh_pairs_with_drops(
-        corpus, n_bands=n_bands, threshold=threshold, max_bucket=max_bucket,
-        n_hashes=n_hashes, recall=recall,
-    )
-    return pairs
-
-
 def verify_candidate_pairs(
-    cand: DataFrame, docs: DataFrame, threshold: float
+    cand: DataFrame, docs: DataFrame, threshold: float, metric: tuple[str, Callable]
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate (a_id, b_id) pairs.
+    """Exact verification of candidate (a_id, b_id) pairs: keeps the
+    pairs whose ``metric`` value is >= threshold. ``metric`` is
+    _JACCARD (column ``jaccard``) or _CONTAINMENT (column
+    ``containment``, for ORDERED pairs: a contained in b).
 
     Rejoins the source text once per side (text is smaller than the
     shingle array and ships once per DEDUPED candidate pair, not once
-    per band/bucket match); the Jaccard itself runs in an Arrow kernel —
+    per band/bucket match); the metric itself runs in an Arrow kernel —
     the JVM formulation (shingles() + array_intersect per pair) costs
     ~8ms/pair because higher-order-function lambdas are interpreted, vs
     ~20us/pair for C-level Python set ops."""
+    col, denom = metric
+    schema = StructType(
+        [
+            StructField("a_id", LongType()),
+            StructField("b_id", LongType()),
+            StructField(col, DoubleType()),
+        ]
+    )
     par = docs.sparkSession.sparkContext.defaultParallelism * 2
     # BOTH thin sides are widened explicitly BEFORE the joins — the
     # candidate pairs (16 B/row; keeps the CPU-bound kernel exempt from
@@ -586,14 +591,14 @@ def verify_candidate_pairs(
         .join(docs.select(F.col("doc_id").alias("b_id"),
                           F.col("text").alias("b_text"))
               .repartition(par, "b_id"), "b_id")
-        .mapInArrow(_jaccard_verify_batches, _VERIFY_SCHEMA)
+        .mapInArrow(functools.partial(_verify_batches, col=col, denom=denom), schema)
     )
-    return ver.where(F.col("jaccard") >= threshold)
+    return ver.where(F.col(col) >= threshold)
 
 
 def _shingle_rows_batches(batches):
     """Arrow-batch kernel: (doc_id, text) -> one row per DISTINCT word
-    3-gram (doc_id, shingle, sz), from _gram_set like every verify
+    3-gram (doc_id, shingle, sz), from _gram_set like the verify
     kernel (one partial gram for <3-token texts).
     Exists because the shingles() JVM expression is interpreted HOF
     (~3ms/doc) and every downstream consumer re-executes its subtree —
@@ -619,6 +624,68 @@ def _shingle_rows_batches(batches):
         )
 
 
+def _prefix_shingles(
+    docs: DataFrame, t_eff: float, max_bucket: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared front half of the two prefix-filter joins, over (doc_id,
+    text) docs at (rounding-guarded) threshold ``t_eff``. Returns
+    ``(shingles, prefix, dropped)``:
+
+      shingles  one row per distinct (doc_id, shingle), with the doc's
+                distinct-shingle count ``sz`` and the shingle's document
+                frequency ``df``;
+      prefix    the shingles rows inside each doc's df-ascending prefix
+                of |S| - ceil(t*|S|) + 1 shingles, with their 0-based
+                ``pos``, restricted to df <= max_bucket (a bucket on a
+                shingle never exceeds its df);
+      dropped   (shingle, n) for every shingle with df > max_bucket —
+                lazy telemetry that re-runs the shingle kernel when read.
+
+    df rides a COUNT window over the shingle partition (no df join, no
+    second kernel pass), and the prefix is a ROW_NUMBER window per doc
+    over (df, shingle) — a total order within a doc, since its shingles
+    are distinct — so no per-doc array is ever materialized. No persist
+    anywhere: at 100 TB the shingle explosion is ~5-10x text bytes and
+    the lazy return values have no unpersist point."""
+    from pyspark.sql.types import IntegerType, StringType
+
+    par = docs.sparkSession.sparkContext.defaultParallelism * 2
+    sh_schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("shingle", StringType()),
+            StructField("sz", IntegerType()),
+        ]
+    )
+    ex = (
+        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+        .repartition(par, "doc_id")
+        .mapInArrow(_shingle_rows_batches, sh_schema)
+    )
+    shingles = ex.withColumn(
+        "df", F.count("*").over(Window.partitionBy("shingle"))
+    )
+    posw = F.row_number().over(
+        Window.partitionBy("doc_id").orderBy("df", "shingle")
+    )
+    plen = (
+        F.col("sz")
+        - F.ceil(F.lit(t_eff) * F.col("sz")).cast("int")
+        + F.lit(1)
+    )
+    prefix = (
+        shingles.withColumn("pos", (posw - 1).cast("int"))
+        .where(F.col("pos") < plen)
+        .select("doc_id", "sz", "pos", "shingle", "df")
+        .where(F.col("df") <= max_bucket)
+    )
+    dropped = (
+        ex.groupBy("shingle").agg(F.count("*").alias("n"))
+        .where(F.col("n") > max_bucket)
+    )
+    return shingles, prefix, dropped
+
+
 def jaccard_prefix_pairs_with_drops(
     corpus: DataFrame, threshold: float = 0.5, max_bucket: int = MAX_BUCKET
 ) -> tuple[DataFrame, DataFrame]:
@@ -635,13 +702,14 @@ def jaccard_prefix_pairs_with_drops(
     ascending (rarest first), which provably minimizes bucket sizes:
     hot shingles land outside most prefixes.
 
-    Pipeline: shingle -> df count -> (df, shingle)-sort -> prefix
-    explode -> bucket pairs (ratio-filtered) -> exact Arrow verify.
+    Pipeline: _prefix_shingles (shingle rows -> df window -> per-doc
+    (df, shingle) rank -> prefix filter) -> bucket pairs (PPJoin-pruned)
+    -> exact Arrow verify.
 
     ``max_bucket`` bounds the prefix buckets for FREE: a bucket on
     shingle s can never exceed s's document frequency, and df is already
-    computed and rides the ordered-shingle structs — so hot shingles are
-    excluded by a narrow filter on the exploded prefix rows, with zero
+    computed for the prefix order — so hot shingles are excluded by a
+    narrow filter on the prefix rows, with zero
     extra aggregation passes (unlike the LSH/SRP operators, which need
     the count-first _bucket_ids pass because their bucket sizes aren't
     known upstream). Exactness holds whenever nothing is dropped — the
@@ -649,185 +717,43 @@ def jaccard_prefix_pairs_with_drops(
     as (shingle, n=df) so the caller sees precisely where (and whether)
     the no-false-negatives guarantee was traded for bound.
     """
-    from pyspark.sql.types import IntegerType, StringType
-
     t_eff = threshold - 0.0001  # guard the 4-digit rounding edge
-    par = corpus.sparkSession.sparkContext.defaultParallelism * 2
     docs = corpus.select("doc_id", "text")
-    sh_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("shingle", StringType()),
-            StructField("sz", IntegerType()),
-        ]
-    )
-    ex = (
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-        .repartition(par, "doc_id")
-        .mapInArrow(_shingle_rows_batches, sh_schema)
-    )
-    # r8 shape (guide §2.4, was: df-count agg + shingle join +
-    # collect_list + interpreted array_sort over (df, shingle) structs +
-    # posexplode — measured 2.9 s of the 5.5 s query at sf0.1):
-    #  * document frequency rides a COUNT window over the shingle
-    #    partition — no second pass of the shingle kernel, no join;
-    #  * the df-ascending prefix is a ROW_NUMBER window per doc over
-    #    (df, shingle) — Tungsten-codegen'd sort instead of the
-    #    interpreted per-element struct comparator, and the prefix
-    #    filter drops non-prefix rows without ever materializing a
-    #    per-doc array. Row-for-row equal to the old slice(osh, 1,
-    #    plen) + posexplode (shingles are distinct per doc, so the
-    #    (df, shingle) order is total within a doc).
-    # No persist anywhere: at 100 TB the shingle explosion is ~5-10x
-    # text bytes and the lazy return value has no unpersist point.
-    # ex's own sz column IS the per-doc distinct-shingle count the old
-    # size(osh) recomputed, so only two windows are needed
-    dfw = F.count("*").over(Window.partitionBy("shingle"))
-    posw = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("df", "shingle")
-    )
-    ranked = (
-        ex.withColumn("df", dfw)
-        .withColumn("pos", (posw - 1).cast("int"))
-    )
-    plen = (
-        F.col("sz")
-        - F.ceil(F.lit(t_eff) * F.col("sz")).cast("int")
-        + F.lit(1)
-    )
-    pre = ranked.where(F.col("pos") < plen).select(
-        "doc_id", "sz", "pos", "shingle", "df"
-    )
-    # df-ascending prefixes already push hot shingles out of most
-    # prefixes; the df bound (bucket size <= df, already in hand) drops
-    # the residue with a narrow filter — no counting pass needed. The
-    # dropped frame stays the (lazy) aggregate form: it is telemetry,
-    # evaluated only by its consumer, and re-runs the kernel then.
-    dropped = (
-        ex.groupBy("shingle").agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bucket)
-        .select("shingle", "n")
-    )
+    _, prefix, dropped = _prefix_shingles(docs, t_eff, max_bucket)
     buckets = (
-        pre.where(F.col("df") <= max_bucket)
-        .groupBy("shingle")
+        prefix.groupBy("shingle")
         .agg(F.collect_list(F.struct("doc_id", "sz", "pos")).alias("ids"))
         .where(F.size("ids") > 1)
     )
     # overlap floor for J >= t: o >= ceil(t/(1+t) * (|A|+|B|))
     t_frac = t_eff / (1.0 + t_eff)
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size("ids")),
-                    lambda y: F.struct(
-                        F.least(x["doc_id"], y["doc_id"]).alias("a_id"),
-                        F.greatest(x["doc_id"], y["doc_id"]).alias("b_id"),
-                        F.least(x["sz"], y["sz"]).alias("mn"),
-                        F.greatest(x["sz"], y["sz"]).alias("mx"),
-                        # tokens at or after this shared one, per side
-                        F.least(x["sz"] - x["pos"], y["sz"] - y["pos"]).alias(
-                            "mn_rem"
-                        ),
-                    ),
-                ),
-                # two EXACT prunes (PPJoin family, Xiao et al.):
-                #  - length ratio: J >= t implies min >= t*max;
-                #  - positional: at the pair's FIRST shared prefix token
-                #    the remaining suffix bounds the overlap, so
-                #    min_rem < ceil(t/(1+t)*(szA+szB)) kills the pair
-                #    (later shared tokens may fail this test while the
-                #    first passes — OR-ing over tokens keeps exactness,
-                #    and every true match passes at its first token).
-                lambda p: (p["mn"] >= F.lit(t_eff) * p["mx"])
-                & (p["mn_rem"] >= F.ceil(F.lit(t_frac) * (p["mn"] + p["mx"]))),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a_id", "p.b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    pairs = verify_candidate_pairs(cand, docs, threshold)
+    cand = _bucket_pairs(
+        buckets,
+        lambda x, y: F.struct(
+            F.least(x["doc_id"], y["doc_id"]).alias("a_id"),
+            F.greatest(x["doc_id"], y["doc_id"]).alias("b_id"),
+            F.least(x["sz"], y["sz"]).alias("mn"),
+            F.greatest(x["sz"], y["sz"]).alias("mx"),
+            # tokens at or after this shared one, per side
+            F.least(x["sz"] - x["pos"], y["sz"] - y["pos"]).alias("mn_rem"),
+        ),
+        # two EXACT prunes (PPJoin family, Xiao et al.):
+        #  - length ratio: J >= t implies min >= t*max;
+        #  - positional: at the pair's FIRST shared prefix token
+        #    the remaining suffix bounds the overlap, so
+        #    min_rem < ceil(t/(1+t)*(szA+szB)) kills the pair
+        #    (later shared tokens may fail this test while the
+        #    first passes — OR-ing over tokens keeps exactness,
+        #    and every true match passes at its first token).
+        lambda p: (p["mn"] >= F.lit(t_eff) * p["mx"])
+        & (p["mn_rem"] >= F.ceil(F.lit(t_frac) * (p["mn"] + p["mx"]))),
+    ).select("a_id", "b_id")
+    pairs = verify_candidate_pairs(cand, docs, threshold, _JACCARD)
     return pairs, dropped
 
 
-def jaccard_prefix_pairs(
-    corpus: DataFrame, threshold: float = 0.5, max_bucket: int = MAX_BUCKET
-) -> DataFrame:
-    """Pairs-only wrapper; drops are consciously ignored — use the
-    ``_with_drops`` form (the one telemetry contract) to consume them."""
-    pairs, _ = jaccard_prefix_pairs_with_drops(
-        corpus, threshold=threshold, max_bucket=max_bucket
-    )
-    return pairs
-
-
 def _q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return jaccard_prefix_pairs(dedup_corpus(spark, sf_dir))
-
-
-_CONTAIN_SCHEMA = StructType(
-    [
-        StructField("a_id", LongType()),
-        StructField("b_id", LongType()),
-        StructField("containment", DoubleType()),
-    ]
-)
-
-
-def _containment_verify_batches(batches):
-    """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> exact
-    containment C(A,B) = |S(A) ∩ S(B)| / |S(A)| of the ORDERED pair
-    (a contained-in b). Same gram semantics, tokenization, and HALF-UP
-    4-place rounding as _jaccard_verify_batches."""
-    import math
-
-    import pyarrow as pa
-
-    for batch in batches:
-        a_ids = batch.column("a_id").to_pylist()
-        b_ids = batch.column("b_id").to_pylist()
-        a_txt = batch.column("a_text").to_pylist()
-        b_txt = batch.column("b_text").to_pylist()
-        cons = []
-        for ta, tb in zip(a_txt, b_txt):
-            sa, sb = _gram_set(ta), _gram_set(tb)
-            c = len(sa & sb) / len(sa) if sa else float("nan")
-            cons.append(math.floor(c * 10000 + 0.5) / 10000)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(a_ids, type=pa.int64()),
-                pa.array(b_ids, type=pa.int64()),
-                pa.array(cons, type=pa.float64()),
-            ],
-            names=["a_id", "b_id", "containment"],
-        )
-
-
-def verify_containment_pairs(
-    cand: DataFrame, docs: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-containment verification of ORDERED candidate (a_id, b_id)
-    pairs — same rejoin-text-once + Arrow-kernel shape as
-    verify_candidate_pairs, including the thin-side widening before the
-    joins (the a-side texts still cross one exchange per pair when both
-    joins are shuffled rather than broadcast; see there)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism * 2
-    cand = cand.repartition(par, "a_id", "b_id")
-    ver = (
-        cand.join(docs.select(F.col("doc_id").alias("a_id"),
-                              F.col("text").alias("a_text"))
-                  .repartition(par, "a_id"), "a_id")
-        .join(docs.select(F.col("doc_id").alias("b_id"),
-                          F.col("text").alias("b_text"))
-              .repartition(par, "b_id"), "b_id")
-        .mapInArrow(_containment_verify_batches, _CONTAIN_SCHEMA)
-    )
-    return ver.where(F.col("containment") >= threshold)
+    return jaccard_prefix_pairs_with_drops(dedup_corpus(spark, sf_dir))[0]
 
 
 def containment_pairs_with_drops(
@@ -862,58 +788,16 @@ def containment_pairs_with_drops(
     dropped hot shingles surface in the returned ``(pairs, dropped)``
     tuple (boilerplate shingles that dedup_exact / the LSH path absorb);
     exactness holds whenever ``dropped`` is empty."""
-    from pyspark.sql.types import IntegerType, StringType
-
     t_eff = threshold - 0.0001  # guard the 4-digit rounding edge
-    par = corpus.sparkSession.sparkContext.defaultParallelism * 2
     docs = corpus.select("doc_id", "text")
-    sh_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("shingle", StringType()),
-            StructField("sz", IntegerType()),
-        ]
-    )
-    ex = (
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-        .repartition(par, "doc_id")
-        .mapInArrow(_shingle_rows_batches, sh_schema)
-    )
-    # r8: same window rewrite as the Jaccard prefix join (see there) —
-    # df rides a count window over the shingle partition (no df join,
-    # no second kernel pass), the contained side's df-ascending prefix
-    # is a row_number per doc (Tungsten sort, no collect_list /
-    # interpreted array_sort / posexplode), and ex's own sz column is
-    # the per-doc distinct-shingle count the old size(osh) recomputed.
-    withdf = ex.withColumn(
-        "df", F.count("*").over(Window.partitionBy("shingle"))
-    )
-    bside = withdf.where(F.col("df") <= max_bucket).select(
+    shingles, prefix, dropped = _prefix_shingles(docs, t_eff, max_bucket)
+    # the container side emits ALL its shingles, the contained side only
+    # its prefix (see the theorem above)
+    bside = shingles.where(F.col("df") <= max_bucket).select(
         "shingle", F.col("doc_id").alias("b_id"), F.col("sz").alias("b_sz")
     )
-    posw = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("df", "shingle")
-    )
-    ranked = withdf.withColumn("pos", (posw - 1).cast("int"))
-    plen = (
-        F.col("sz")
-        - F.ceil(F.lit(t_eff) * F.col("sz")).cast("int")
-        + F.lit(1)
-    )
-    aside = (
-        ranked.where(F.col("pos") < plen)
-        .select(
-            "shingle",
-            F.col("doc_id").alias("a_id"),
-            F.col("sz").alias("a_sz"),
-            "pos", "df",
-        )
-        .where(F.col("df") <= max_bucket)
-    )
-    dropped = (
-        ex.groupBy("shingle").agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bucket)
-        .select("shingle", "n")
+    aside = prefix.select(
+        "shingle", F.col("doc_id").alias("a_id"), F.col("sz").alias("a_sz"), "pos"
     )
     need = F.ceil(F.lit(t_eff) * F.col("a_sz"))
     cand = (
@@ -926,26 +810,15 @@ def containment_pairs_with_drops(
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
-    pairs = verify_containment_pairs(cand, docs, threshold)
+    pairs = verify_candidate_pairs(cand, docs, threshold, _CONTAINMENT)
     return pairs, dropped
-
-
-def containment_pairs(
-    corpus: DataFrame, threshold: float = 0.8, max_bucket: int = MAX_BUCKET
-) -> DataFrame:
-    """Pairs-only wrapper; drops are consciously ignored — use the
-    ``_with_drops`` form (the one telemetry contract) to consume them."""
-    pairs, _ = containment_pairs_with_drops(
-        corpus, threshold=threshold, max_bucket=max_bucket
-    )
-    return pairs
 
 
 def _q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment over the dedup corpus: every truncated twin is fully
     contained in its base (C = 1.0) and the base is ~0.9-contained in
     its twin — both directions clear t=0.8, making recall measurable."""
-    return containment_pairs(dedup_corpus(spark, sf_dir))
+    return containment_pairs_with_drops(dedup_corpus(spark, sf_dir))[0]
 
 
 # Brute-force quadratic oracle (small-corpus verification baseline,
@@ -979,7 +852,7 @@ WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 
 
 def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(dedup_corpus(spark, sf_dir))
+    return minhash_lsh_pairs_with_drops(dedup_corpus(spark, sf_dir))[0]
 
 
 # Exact oracle for the LSH query: brute-force all-pairs Jaccard >= 0.5
@@ -1277,38 +1150,17 @@ def simhash_candidate_pairs_with_drops(
     buckets, dropped = _bucket_ids(
         chunks, ["chunk_id", "chunk_val"], F.struct("doc_id", "sh"), max_bucket
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(
-                    F.least(x["doc_id"], y["doc_id"]).alias("a_id"),
-                    F.greatest(x["doc_id"], y["doc_id"]).alias("b_id"),
-                    # hamming is symmetric: side assignment is free
-                    x["sh"].alias("a_sh"),
-                    y["sh"].alias("b_sh"),
-                ),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a_id", "p.b_id", "p.a_sh", "p.b_sh")
-        .dropDuplicates(["a_id", "b_id"])
+    cand = _bucket_pairs(
+        buckets,
+        lambda x, y: F.struct(
+            F.least(x["doc_id"], y["doc_id"]).alias("a_id"),
+            F.greatest(x["doc_id"], y["doc_id"]).alias("b_id"),
+            # hamming is symmetric: side assignment is free
+            x["sh"].alias("a_sh"),
+            y["sh"].alias("b_sh"),
+        ),
     )
     return cand, dropped
-
-
-def simhash_candidate_pairs(
-    corpus: DataFrame, n_chunks: int, max_bucket: int = MAX_BUCKET
-) -> DataFrame:
-    """Candidates-only wrapper; drops are consciously ignored — use the
-    ``_with_drops`` form (the one telemetry contract) to consume them."""
-    cand, _ = simhash_candidate_pairs_with_drops(
-        corpus, n_chunks, max_bucket=max_bucket
-    )
-    return cand
 
 
 def simhash_pairs_with_drops(
@@ -1321,8 +1173,8 @@ def simhash_pairs_with_drops(
 
     Split each 60-bit simhash into n_chunks equal chunks; any pair with
     hamming distance < n_chunks must share at least one chunk
-    (pigeonhole), so candidates come from a shuffle join on
-    (chunk_id, chunk_value) — never a cross product — then are verified
+    (pigeonhole), so candidates are the in-bucket pairs of a groupBy on
+    (chunk_id, chunk_val) — never a cross product — then are verified
     by exact popcount of the XOR. Exact recall requires
     max_hamming <= n_chunks - 1 (asserted) AND no bucket over
     ``max_bucket``: dropped hot buckets (the second element of the
@@ -1345,7 +1197,7 @@ def simhash_pairs_with_drops(
     """
     if max_hamming > n_chunks - 1:
         raise ValueError(
-            f"simhash_pairs: pigeonhole recall requires max_hamming <= "
+            f"simhash_pairs_with_drops: pigeonhole recall requires max_hamming <= "
             f"n_chunks - 1 (got max_hamming={max_hamming}, n_chunks={n_chunks})"
         )
     cand, dropped = simhash_candidate_pairs_with_drops(
@@ -1358,20 +1210,6 @@ def simhash_pairs_with_drops(
         .select("a_id", "b_id", "hamming")
     )
     return pairs, dropped
-
-
-def simhash_pairs(
-    corpus: DataFrame,
-    max_hamming: int = 12,
-    n_chunks: int = 15,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Pairs-only wrapper; drops are consciously ignored — use the
-    ``_with_drops`` form (the one telemetry contract) to consume them."""
-    pairs, _ = simhash_pairs_with_drops(
-        corpus, max_hamming=max_hamming, n_chunks=n_chunks, max_bucket=max_bucket
-    )
-    return pairs
 
 
 def assert_no_drops(dropped: DataFrame, context: str) -> None:
@@ -1403,11 +1241,11 @@ def _q_simhash_pairs_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production banding (radius 3, 4x15-bit chunks) as its own
     driver-certified query: same exact-recall guarantee at its radius,
     near-linear candidate generation (the at-scale default)."""
-    return simhash_pairs(
+    return simhash_pairs_with_drops(
         dedup_corpus(spark, sf_dir),
         max_hamming=SIMHASH_SCALE_HAMMING,
         n_chunks=SIMHASH_SCALE_CHUNKS,
-    )
+    )[0]
 
 
 # Exact oracle: all-pairs hamming over the same 60-bit simhash. Unlike
@@ -1910,22 +1748,7 @@ def embedding_cosine_pairs_with_drops(
     buckets, dropped = _bucket_ids(
         sketches, ["chunk_id", "chunk_val"], F.col("vec_id"), max_bucket
     )
-    pair_structs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(
-                    F.least(x, y).alias("a_id"), F.greatest(x, y).alias("b_id")
-                ),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.a_id", "p.b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    cand = _bucket_pairs(buckets, _canonical_pair)
     ver = (
         cand.join(corpus.select(F.col("vec_id").alias("a_id"),
                                 F.col("v").alias("a_v")), "a_id")
@@ -1941,21 +1764,8 @@ def embedding_cosine_pairs_with_drops(
     return pairs, dropped
 
 
-def embedding_cosine_pairs(
-    corpus: DataFrame,
-    threshold: float = EMB_COS_THRESHOLD,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Pairs-only wrapper; drops are consciously ignored — use the
-    ``_with_drops`` form (the one telemetry contract) to consume them."""
-    pairs, _ = embedding_cosine_pairs_with_drops(
-        corpus, threshold=threshold, max_bucket=max_bucket
-    )
-    return pairs
-
-
 def _q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_cosine_pairs(embedding_corpus(spark, sf_dir))
+    return embedding_cosine_pairs_with_drops(embedding_corpus(spark, sf_dir))[0]
 
 
 # Planted-degenerate certification of the hot-bucket cap itself: every

@@ -468,7 +468,7 @@ FROM documents
 
 
 def repetition_stats_batch(texts) -> list[list[float]]:
-    """Per-document repetition metrics — the standard corpus quality
+    r"""Per-document repetition metrics — the standard corpus quality
     filters (Rae et al. "Gopher" 2021 §A.1.1; FineWeb/RefinedWeb reuse
     them) that the length/punct/stopword `quality_score` family cannot
     express:
@@ -484,14 +484,16 @@ def repetition_stats_batch(texts) -> list[list[float]]:
     Computed per doc in one pass (Counter/set over the tokenized doc) —
     the 100-TB shape is a NARROW Arrow-batched map with ZERO shuffle and
     no cross-doc state; callers filter on thresholds downstream.
-    Tokenization mirrors the DuckDB oracle exactly:
+    Tokenization is dedup._jvm_tokens over the lowered text, which
+    mirrors the DuckDB oracle exactly:
     string_split_regex(trim(lower(text)), '\s+') — space-only trim,
     lower first (same construction as _SQL_BIGRAMS). Values are RAW
     IEEE doubles (no rounding anywhere): Python round() is banker's
     while Spark/DuckDB round half-up, so rounding is where kernel and
     oracle would drift; identical int-ratio divisions are bit-equal."""
-    import re
     from collections import Counter
+
+    from .dedup import _jvm_tokens
 
     out: list[list[float]] = []
     for t in texts:
@@ -503,7 +505,7 @@ def repetition_stats_batch(texts) -> list[list[float]]:
             dlf = dup / n_lines
         else:
             dlf = 0.0
-        toks = re.split(r"\s+", raw.lower().strip(" "))
+        toks = _jvm_tokens(raw.lower())
         n_bg = len(toks) - 1
         if n_bg >= 1:
             tbf = max(Counter(zip(toks, toks[1:])).values()) / n_bg

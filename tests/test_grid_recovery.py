@@ -6,7 +6,10 @@ import numpy as np
 import pytest
 
 from opencv_table_extraction_spark.kernel.extract import extract_turn
-from opencv_table_extraction_spark.kernel.render import parse_pipe_table
+from opencv_table_extraction_spark.kernel.render import (
+    layout_table,
+    parse_pipe_table,
+)
 
 
 def make_table_md(R, C, sep=True):
@@ -34,6 +37,24 @@ def test_exact_grid_recovery(R, C):
     spans = sorted(out["spans"], key=lambda s: (s["row"], s["col"]))
     for s in spans:
         assert text[s["start"] : s["end"]] == f"r{s['row']}c{s['col']}-xx"
+
+
+@pytest.mark.parametrize(
+    "R, C, H, W", [(2301, 2, 32232, 118), (4, 400, 74, 4018)]
+)
+def test_oversized_canvas_extracts_every_cell(R, C, H, W):
+    """Canvas size is not capped: layout_table only scales column widths
+    toward MAX_CANVAS (each keeps an 8 px floor) and height grows with
+    the rows. Pins that a 32,232 px tall table (the int32 fallback of
+    the run-length opening) and a 4,018 px wide one still extract
+    every cell."""
+    text = make_table_md(R, C)
+    assert layout_table(parse_pipe_table(text))[:2] == (H, W)
+    out = extract_turn(text)
+    assert out["err"] == ""
+    assert out["n_cells"] == R * C
+    expected = "\n".join("\t".join(f"r{r}c{c}-xx" for c in range(C)) for r in range(R))
+    assert out["extracted_text"] == expected
 
 
 @pytest.mark.parametrize("use_adaptive", [False, True])

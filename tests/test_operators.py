@@ -30,12 +30,12 @@ def test_minhash_lsh_finds_all_near_dups(spark):
     x 2 rows has ~0.99+ recall at jaccard ~0.87)."""
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_with_drops,
     )
 
     corpus = dedup_corpus(spark, SF)
     pairs = {(r["a_id"], r["b_id"]): r["jaccard"]
-             for r in minhash_lsh_pairs(corpus).collect()}
+             for r in minhash_lsh_pairs_with_drops(corpus)[0].collect()}
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     planted = [(i, i + 1_000_000) for i in range(n_docs)]
     found = [p for p in planted if p in pairs]
@@ -93,7 +93,7 @@ def test_minhash_band_scaling_keeps_two_row_bands(spark):
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
         minhash_band_rows,
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_with_drops,
     )
 
     corpus = dedup_corpus(spark, SF)
@@ -105,9 +105,10 @@ def test_minhash_band_scaling_keeps_two_row_bands(spark):
         )
         assert per_doc and all(r["count"] == nb for r in per_doc)
 
-    p16 = {(r["a_id"], r["b_id"]) for r in minhash_lsh_pairs(corpus).collect()}
-    p32 = {(r["a_id"], r["b_id"])
-           for r in minhash_lsh_pairs(corpus, n_bands=32).collect()}
+    p16 = {(r["a_id"], r["b_id"])
+           for r in minhash_lsh_pairs_with_drops(corpus)[0].collect()}
+    p32 = {(r["a_id"], r["b_id"]) for r in
+           minhash_lsh_pairs_with_drops(corpus, n_bands=32)[0].collect()}
     assert p16 <= p32
 
 
@@ -120,23 +121,23 @@ def test_lsh_recall_profiles(spark):
     from opencv_table_extraction_spark.operators.dedup import (
         RECALL_PROFILES,
         dedup_corpus,
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_with_drops,
         pairs_crosscheck,
     )
 
     assert RECALL_PROFILES == {"standard": (16, 32), "high": (32, 64)}
     corpus = dedup_corpus(spark, SF)
     with pytest.raises(ValueError, match="unknown recall profile"):
-        minhash_lsh_pairs(corpus, recall="maximum")
+        minhash_lsh_pairs_with_drops(corpus, recall="maximum")
     with pytest.raises(ValueError, match="not both"):
-        minhash_lsh_pairs(corpus, recall="high", n_bands=32)
+        minhash_lsh_pairs_with_drops(corpus, recall="high", n_bands=32)
 
-    hi = {(r["a_id"], r["b_id"])
-          for r in minhash_lsh_pairs(corpus, recall="high").collect()}
-    explicit = {(r["a_id"], r["b_id"])
-                for r in minhash_lsh_pairs(corpus, n_bands=32).collect()}
-    std = {(r["a_id"], r["b_id"])
-           for r in minhash_lsh_pairs(corpus, recall="standard").collect()}
+    hi = {(r["a_id"], r["b_id"]) for r in
+          minhash_lsh_pairs_with_drops(corpus, recall="high")[0].collect()}
+    explicit = {(r["a_id"], r["b_id"]) for r in
+                minhash_lsh_pairs_with_drops(corpus, n_bands=32)[0].collect()}
+    std = {(r["a_id"], r["b_id"]) for r in
+           minhash_lsh_pairs_with_drops(corpus, recall="standard")[0].collect()}
     assert hi == explicit and std <= hi
 
     r = pairs_crosscheck(corpus, recall="high").collect()[0]
@@ -268,12 +269,12 @@ def test_simhash_deterministic_and_discriminative(spark):
 def test_simhash_pairs_find_planted_near_dups(spark):
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
-        simhash_pairs,
+        simhash_pairs_with_drops,
     )
 
     # max_hamming=14 = n_chunks-1: the pigeonhole recall guarantee bound
-    pairs = {(r["a_id"], r["b_id"]): r["hamming"]
-             for r in simhash_pairs(dedup_corpus(spark, SF), max_hamming=14).collect()}
+    pairs = {(r["a_id"], r["b_id"]): r["hamming"] for r in simhash_pairs_with_drops(
+        dedup_corpus(spark, SF), max_hamming=14)[0].collect()}
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     planted = [(i, i + 1_000_000) for i in range(n_docs)]
     found = [p for p in planted if p in pairs]
@@ -305,14 +306,14 @@ def test_jaccard_prefix_join_exact_vs_bruteforce(spark):
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
         jaccard_pairs,
-        jaccard_prefix_pairs,
+        jaccard_prefix_pairs_with_drops,
     )
 
     corpus = dedup_corpus(spark, SF).withColumn("source", F.lit("all"))
     brute = {(r["a_id"], r["b_id"]): r["jaccard"]
              for r in jaccard_pairs(corpus, threshold=0.5).collect()}
-    pref = {(r["a_id"], r["b_id"]): r["jaccard"]
-            for r in jaccard_prefix_pairs(corpus, threshold=0.5).collect()}
+    pref = {(r["a_id"], r["b_id"]): r["jaccard"] for r in
+            jaccard_prefix_pairs_with_drops(corpus, threshold=0.5)[0].collect()}
     assert set(pref) == set(brute)
     assert all(abs(pref[k] - brute[k]) < 1e-9 for k in pref)
 
@@ -324,13 +325,13 @@ def test_embedding_cosine_pairs_finds_planted(spark):
     from opencv_table_extraction_spark.operators.dedup import (
         EMB_COS_THRESHOLD,
         embedding_corpus,
-        embedding_cosine_pairs,
+        embedding_cosine_pairs_with_drops,
     )
     from opencv_table_extraction_spark.operators.similarity import cosine
 
     corpus = embedding_corpus(spark, SF)
     pairs = {(r["a_id"], r["b_id"]): r["cos"]
-             for r in embedding_cosine_pairs(corpus).collect()}
+             for r in embedding_cosine_pairs_with_drops(corpus)[0].collect()}
     # ground truth for the planted family only (cheap: n rows, not n^2)
     a = corpus.where(F.col("vec_id") < 1_000_000).select(
         F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"))
@@ -413,8 +414,11 @@ def test_hot_bucket_cap_drops_degenerate_family(spark):
     collect_list materializes them, the job completes, and the drop is
     surfaced on the _with_drops form's dropped frame (VERDICT r2 #2)."""
     from opencv_table_extraction_spark.operators.dedup import (
+        assert_no_drops,
+        containment_pairs_with_drops,
         jaccard_prefix_pairs_with_drops,
         minhash_lsh_pairs_with_drops,
+        simhash_pairs_with_drops,
     )
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -438,11 +442,17 @@ def test_hot_bucket_cap_drops_degenerate_family(spark):
     assert (2_000_000, 2_000_001) in full_pairs
     assert fdrops.count() == 0
 
-    # prefix join: same contract (clone docs share every prefix shingle)
-    pcapped, pdrops = jaccard_prefix_pairs_with_drops(corpus, max_bucket=10)
-    ppairs = {(r["a_id"], r["b_id"]) for r in pcapped.collect()}
-    assert not any(a >= 2_000_000 and b >= 2_000_000 for a, b in ppairs)
-    assert pdrops.count() > 0
+    # prefix, containment and simhash: same contract (clone docs share
+    # every shingle and every simhash chunk)
+    for gen in (jaccard_prefix_pairs_with_drops, containment_pairs_with_drops,
+                simhash_pairs_with_drops):
+        gcapped, gdrops = gen(corpus, max_bucket=10)
+        gpairs = {(r["a_id"], r["b_id"]) for r in gcapped.collect()}
+        assert not any(a >= 2_000_000 and b >= 2_000_000 for a, b in gpairs)
+        assert gdrops.count() > 0, gen.__name__
+    # the exactness-mode guard fails fast on the capped simhash drops
+    with pytest.raises(RuntimeError, match="hot-bucket cap dropped"):
+        assert_no_drops(gdrops, "capped simhash")
 
 
 def test_srp_bucket_cap_drops_degenerate_family(spark):
@@ -474,7 +484,7 @@ def test_simhash_scale_banding_candidates_grow_linearly(spark):
     verdict's #1 scale fix, asserted at two corpus sizes."""
     from opencv_table_extraction_spark.operators.dedup import (
         SIMHASH_SCALE_CHUNKS,
-        simhash_candidate_pairs,
+        simhash_candidate_pairs_with_drops,
     )
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
@@ -491,10 +501,10 @@ def test_simhash_scale_banding_candidates_grow_linearly(spark):
         )
 
     a, b = planted(100), planted(200)   # 200 vs 400 docs
-    sc_a = simhash_candidate_pairs(a, SIMHASH_SCALE_CHUNKS).count()
-    sc_b = simhash_candidate_pairs(b, SIMHASH_SCALE_CHUNKS).count()
-    ex_a = simhash_candidate_pairs(a, 15).count()
-    ex_b = simhash_candidate_pairs(b, 15).count()
+    sc_a = simhash_candidate_pairs_with_drops(a, SIMHASH_SCALE_CHUNKS)[0].count()
+    sc_b = simhash_candidate_pairs_with_drops(b, SIMHASH_SCALE_CHUNKS)[0].count()
+    ex_a = simhash_candidate_pairs_with_drops(a, 15)[0].count()
+    ex_b = simhash_candidate_pairs_with_drops(b, 15)[0].count()
     ap_a, ap_b = 200 * 199 / 2, 400 * 399 / 2
     # scale mode: candidates << N^2 at both sizes, and the candidate
     # FRACTION of all-pairs falls as N grows (sub-quadratic). Measured
@@ -541,11 +551,13 @@ def test_simhash_pairs_rejects_unsound_banding(spark):
 
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
-        simhash_pairs,
+        simhash_pairs_with_drops,
     )
 
     with _pytest.raises(ValueError, match="pigeonhole"):
-        simhash_pairs(dedup_corpus(spark, SF), max_hamming=5, n_chunks=4)
+        simhash_pairs_with_drops(
+            dedup_corpus(spark, SF), max_hamming=5, n_chunks=4
+        )
 
 
 def test_python_kernels_tokenize_like_jvm_on_edge_whitespace(spark):
@@ -800,6 +812,43 @@ def test_scrub_pii_redacts_all_occurrences(spark):
             + r["scrubbed"].count("<IP>")
             + r["scrubbed"].count("<PHONE>")
         )
+
+
+
+def test_verify_kernel_rounds_half_up_and_containment_is_ordered():
+    """The one verify kernel, fed hand-built Arrow batches for both
+    metrics (no Spark). A and B share exactly one 3-gram ("x y z");
+    |S(A)| = 16, |S(B)| = 17, so the union is 32 grams:
+      - Jaccard 1/32 = 0.03125 is an exact tie and must round HALF-UP
+        to 0.0313 like Spark/DuckDB ROUND (Python's round gives 0.0312);
+      - containment is ordered: C(A,B) = 1/16, C(B,A) = 1/17."""
+    import pyarrow as pa
+
+    from opencv_table_extraction_spark.operators.dedup import (
+        _CONTAINMENT,
+        _JACCARD,
+        _gram_set,
+        _verify_batches,
+    )
+
+    a = "x y z " + " ".join(f"a{i}" for i in range(15))
+    b = "x y z " + " ".join(f"b{i}" for i in range(16))
+    assert (len(_gram_set(a)), len(_gram_set(b))) == (16, 17)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1, 2], type=pa.int64()), pa.array([2, 1], type=pa.int64()),
+         pa.array([a, b]), pa.array([b, a])],
+        names=["a_id", "b_id", "a_text", "b_text"],
+    )
+
+    def run(metric):
+        (out,) = _verify_batches([batch], *metric)
+        assert out.schema.names == ["a_id", "b_id", metric[0]]
+        assert out.column("a_id").to_pylist() == [1, 2]
+        return out.column(metric[0]).to_pylist()
+
+    assert round(1 / 32, 4) == 0.0312  # banker's: what the kernel avoids
+    assert run(_JACCARD) == [0.0313, 0.0313]
+    assert run(_CONTAINMENT) == [0.0625, 0.0588]
 
 
 def test_repetition_stats_kernel():

@@ -64,12 +64,13 @@ def test_ivf_assign_is_narrow(spark):
 def test_lsh_band_rows_shuffle_only_keys(spark):
     """The LSH band exchange must carry only (doc_id, band_id, band_hash)
     — never text or shingle arrays (the r1 shuffle amplifier)."""
+    from __spark_entry__ import SF0001
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_with_drops,
     )
 
-    q = minhash_lsh_pairs(dedup_corpus(spark, "/root/testdata/sf0.001"))
+    q, _ = minhash_lsh_pairs_with_drops(dedup_corpus(spark, SF0001))
     plan = _plan(q)
     # formatted plans list each Exchange's Input columns right below it
     band_exchanges = [
@@ -87,17 +88,19 @@ def test_lsh_band_rows_shuffle_only_keys(spark):
 
 
 def test_prefix_join_no_cache_and_single_scan(spark):
-    """jaccard_prefix_pairs must not persist its shingle explosion (the
-    r2 cache leak / 100-TB memory cliff): no InMemoryRelation anywhere,
-    and the corpus scan feeds both consumers through ONE reused exchange
-    (ReusedExchange of the doc_id repartition in the executed plan)."""
+    """jaccard_prefix_pairs_with_drops must not persist its shingle
+    explosion (the r2 cache leak / 100-TB memory cliff): no
+    InMemoryRelation anywhere, and the corpus scan feeds both consumers
+    through ONE reused exchange (ReusedExchange of the doc_id
+    repartition in the executed plan)."""
+    from __spark_entry__ import SF0001
     from opencv_table_extraction_spark.operators.dedup import (
         dedup_corpus,
-        jaccard_prefix_pairs,
+        jaccard_prefix_pairs_with_drops,
     )
 
     n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    p = jaccard_prefix_pairs(dedup_corpus(spark, "/root/testdata/sf0.001"))
+    p, _ = jaccard_prefix_pairs_with_drops(dedup_corpus(spark, SF0001))
     # collect() (not count()) so THIS DataFrame's QueryExecution runs and
     # its adaptive plan is finalized with runtime exchange reuse resolved
     assert len(p.collect()) > 0

@@ -113,7 +113,7 @@ def main() -> None:
         connected_components_pairs,
         dedup_apply,
         dedup_corpus,
-        minhash_lsh_pairs,
+        minhash_lsh_pairs_with_drops,
         pairs_crosscheck,
     )
     from opencv_table_extraction_spark.session import build_session
@@ -141,7 +141,7 @@ def main() -> None:
 
     # stage 2: LSH pairs -> two-star connected components
     t = time.time()
-    pairs = minhash_lsh_pairs(corpus)
+    pairs, _ = minhash_lsh_pairs_with_drops(corpus)
     rounds: list[int] = []
     decisions = connected_components_pairs(
         pairs, max_iter=25, round_counter=rounds
