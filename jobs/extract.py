@@ -47,7 +47,9 @@ def main() -> None:
                     help="conv buckets (commit granularity)")
     ap.add_argument("--max-buckets", type=int, default=None,
                     help="bound this run (testing / staged rollout)")
-    ap.add_argument("--salt", type=int, default=16, help="salt buckets per conv")
+    ap.add_argument("--salt", type=int, default=16,
+                    help="non-zero: balanced round-robin exchange before the "
+                         "kernel; 0: none (the value is only an on/off switch)")
     ap.add_argument("--local", type=int, default=None,
                     help="run on local[N] instead of deferring to spark-submit")
     ap.add_argument("--cpu-bound-scan", default=True,

@@ -2,19 +2,18 @@
 
 No cv2/PIL: every imaging primitive is reimplemented from the public
 algorithm definitions (OpenCV docs "Extract horizontal and vertical lines
-by using morphological operations"; Otsu 1979; van Herk 1992 for O(1)
-running min/max). All functions are deterministic and operate on NumPy
-arrays; they are called only from inside Arrow record batches (no per-row
-Python at the DataFrame layer).
+by using morphological operations"; Otsu 1979; two-pass run-based
+union-find labeling). One run extractor, ``imaging.runs``, serves both
+the h/v line openings (a 1-D opening keeps whole runs of border-extended
+length >= k) and the connected-components labeling. All functions are
+deterministic and operate on NumPy arrays; they are called only from
+inside Arrow record batches (no per-row Python at the DataFrame layer).
 """
 
 from .imaging import (  # noqa: F401
     adaptive_threshold,
-    dilate,
-    erode,
     grid_mask,
     mask_intersect,
-    morph_open,
     morph_open_h,
     morph_open_v,
     otsu_threshold,

@@ -6,36 +6,19 @@ provide (the reference repo's tree carries no such code — SURVEY.md §0;
 the stage list comes from BASELINE.json:6 "contour/connected-component
 cell detection ... row/column ordering into cell text spans").
 
-The labeling is run-based: rows are decomposed into foreground runs with
-vectorized NumPy, and the union-find loop iterates over *runs*, not
-pixels, so grid-like images (few long runs) label in microseconds.
+The labeling is run-based: rows are decomposed into foreground runs by
+``imaging.runs`` (the same extractor the h/v openings filter), and the
+union-find loop iterates over *runs*, not pixels, so grid-like images
+(few long runs) label in microseconds.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from .imaging import runs
+
 __all__ = ["connected_components", "detect_cells", "order_cells"]
-
-
-def _all_runs(fg: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized run extraction for the WHOLE image in one pass.
-
-    A guard column of False is appended so runs never straddle rows;
-    transitions are found on the flattened mask with a single diff.
-    Returns (row, start_col, end_col) int64 arrays sorted by (row, start).
-    """
-    H, W = fg.shape
-    padded = np.zeros((H, W + 1), dtype=bool)
-    padded[:, :W] = fg
-    flat = padded.ravel()
-    d = np.diff(flat.astype(np.int8))
-    starts = np.flatnonzero(d == 1) + 1
-    ends = np.flatnonzero(d == -1) + 1
-    if flat[0]:
-        starts = np.concatenate(([0], starts))
-    rows = starts // (W + 1)
-    return rows, starts - rows * (W + 1), ends - rows * (W + 1)
 
 
 class _UnionFind:
@@ -66,23 +49,17 @@ class _UnionFind:
         return ra
 
 
-def connected_components(
-    bin_img: np.ndarray, return_labels: bool = False
-) -> tuple[int, np.ndarray | None, np.ndarray]:
+def connected_components(bin_img: np.ndarray) -> np.ndarray:
     """4-connectivity connected components of a binary image.
 
-    Returns ``(n, labels, stats)`` where ``stats`` is an int64 array of
-    shape (n, 5) with columns (x, y, w, h, area), sorted by (y, x, w, h)
-    for determinism. ``labels`` is an int32 label map (1-based, 0 =
-    background) when ``return_labels`` else None. Label ids follow the
-    stats row order + 1.
+    Returns ``stats``, an int64 array of shape (n, 5) with columns
+    (x, y, w, h, area), one row per component, sorted by (y, x, w, h)
+    for determinism.
     """
     H, W = bin_img.shape
     fg = bin_img != 0
     if not fg.any():
-        return 0, (np.zeros((H, W), np.int32) if return_labels else None), np.empty(
-            (0, 5), np.int64
-        )
+        return np.empty((0, 5), np.int64)
     # band compression (exact): consecutive identical rows — the common
     # case for grid/cell imagery, where components are rectangles — are
     # collapsed to one representative row each; 4-connectivity within a
@@ -95,7 +72,7 @@ def connected_components(
     else:
         band_y0 = np.zeros(1, np.int64)
     band_y1 = np.concatenate((band_y0[1:], [H]))
-    r_row, r_s, r_e = _all_runs(fg[band_y0])
+    r_row, r_s, r_e = runs(fg[band_y0])
     rows_l = r_row.tolist()
     s_l = r_s.tolist()
     e_l = r_e.tolist()
@@ -154,18 +131,7 @@ def connected_components(
 
     stats = np.stack([x0, y0, x1 - x0, y1 - y0, area], axis=1)
     order = np.lexsort((stats[:, 2], stats[:, 0], stats[:, 1]))
-    stats = stats[order]
-    labels = None
-    if return_labels:
-        remap = np.empty(n, dtype=np.int32)
-        remap[order] = np.arange(1, n + 1, dtype=np.int32)
-        labels = np.zeros((H, W), dtype=np.int32)
-        run_remap = remap[comp]
-        ry0 = run_y0.tolist()
-        ry1 = run_y1.tolist()
-        for k in range(n_runs):
-            labels[ry0[k] : ry1[k], s_l[k] : e_l[k]] = run_remap[k]
-    return n, labels, stats
+    return stats[order]
 
 
 def detect_cells(
@@ -182,9 +148,7 @@ def detect_cells(
     """
     H, W = grid.shape
     inv = np.where(grid == 0, np.uint8(255), np.uint8(0))
-    _, _, stats = connected_components(inv)
-    if stats.size == 0:
-        return np.empty((0, 4), np.int64)
+    stats = connected_components(inv)
     x, y, w, h = stats[:, 0], stats[:, 1], stats[:, 2], stats[:, 3]
     keep = (
         (x > 0)

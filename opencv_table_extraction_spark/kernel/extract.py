@@ -89,7 +89,7 @@ def _extract_table(text: str, use_adaptive: bool) -> dict:
     # a true line crossing is at least LINE_T x LINE_T; smaller clusters
     # are residue of noise chaining into a line (same spirit as the
     # min_area filter in detect_cells, A12)
-    _, _, joint_stats = connected_components(joints)
+    joint_stats = connected_components(joints)
     n_joints = int((joint_stats[:, 4] >= LINE_T * LINE_T).sum()) if len(joint_stats) else 0
     rects = detect_cells(grid)
     ordered = order_cells(rects)

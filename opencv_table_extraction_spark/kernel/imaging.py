@@ -9,15 +9,18 @@ horizontal and vertical lines by using morphological operations":
   cv2.cvtColor(BGR2GRAY)                        -> to_gray
   cv2.threshold(THRESH_BINARY_INV|THRESH_OTSU)  -> otsu_threshold
   cv2.adaptiveThreshold(~g, MEAN_C, 15, -2)     -> adaptive_threshold
-  cv2.erode / cv2.dilate (MORPH_RECT SE)        -> erode / dilate
   open with (cols//scale, 1) / (1, rows//scale) -> morph_open_h / morph_open_v
   cv2.bitwise_and(h, v)                         -> mask_intersect
   cv2.add(h, v)                                 -> grid_mask
 
-Erode/dilate use the van Herk / Gil-Werman O(1)-per-pixel running
-min/max (separable for rectangular structuring elements), so cost is
-independent of SE size — this is what keeps the kernel viable inside
-Arrow batches at 10^12-turn scale.
+Both line SEs are 1-D, and a 1-D opening (erode with out-of-image = ink,
+then dilate by the reflected SE) keeps exactly the whole foreground runs
+whose border-extended length is at least the SE length k: erosion
+(anchor l, r = (k-1)//2, k//2) shrinks a run [a, b) to [a+l, b-r), and
+the reflected dilation grows it back by (r, l). So the openings are
+filters over ``runs``, the kernel's one run extractor (connected
+components label the same runs); cost is one pass over the canvas,
+independent of the SE size.
 
 Binary masks are uint8 with ink=255, background=0.
 """
@@ -30,9 +33,7 @@ __all__ = [
     "to_gray",
     "otsu_threshold",
     "adaptive_threshold",
-    "erode",
-    "dilate",
-    "morph_open",
+    "runs",
     "morph_open_h",
     "morph_open_v",
     "mask_intersect",
@@ -120,148 +121,37 @@ def adaptive_threshold(
     return np.where(inv > mean - C, np.uint8(255), np.uint8(0))
 
 
-def _running_extremum_1d(
-    x: np.ndarray,
-    k: int,
-    ufunc: np.ufunc,
-    pad_value: int,
-    reflect: bool = False,
-    axis: int = 1,
-) -> np.ndarray:
-    """van Herk / Gil-Werman running extremum along rows or columns.
+def runs(fg: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every foreground run of a boolean mask, one pass over the canvas.
 
-    Centered anchor (left = (k-1)//2, right = k//2), constant-padded with
-    `pad_value` so the output keeps the input's extent. Three passes,
-    cost independent of k. ``reflect=True`` swaps the anchor to the
-    reflected SE (needed by the dilation half of an opening when k is
-    even, so open(open(x)) == open(x) exactly). Axis-aware so vertical
-    passes need no transpose copies; padding is a manual full+assign
-    (np.pad's generic path is a hot-loop cost at ~16k-pixel canvases).
+    A guard column of False is appended so runs never straddle rows; on
+    the flattened mask (with a False prepended) the edges alternate
+    start, end. Returns (row, start, end) int64 arrays, end exclusive,
+    sorted by (row, start).
     """
-    if k <= 1:
-        return x
+    H, W = fg.shape
+    padded = np.zeros((H, W + 1), dtype=bool)
+    padded[:, :W] = fg
+    edges = np.flatnonzero(np.diff(padded.ravel(), prepend=False))
+    starts, ends = edges[0::2], edges[1::2]
+    rows = starts // (W + 1)
+    return rows, starts - rows * (W + 1), ends - rows * (W + 1)
+
+
+def _open_rows(fg: np.ndarray, k: int) -> np.ndarray:
+    """Opening of each row by a (1, k) SE as a filter over ``runs(fg)``:
+    a run survives whole iff its border-extended length is >= k, where
+    out-of-image pixels count as ink for the erosion, extending a run
+    that touches the left border by l = (k-1)//2 and the right border by
+    r = k//2. Kept runs are only the line strokes, so painting them is a
+    short loop."""
+    H, W = fg.shape
     l, r = (k - 1) // 2, k // 2
-    if reflect:
-        l, r = r, l
-    H, W = x.shape
-    if axis == 1:
-        n = W + l + r
-        nb = -(-n // k)
-        xp = np.full((H, nb * k), pad_value, dtype=x.dtype)
-        xp[:, l : l + W] = x
-        blocks = xp.reshape(H, nb, k)
-        g = ufunc.accumulate(blocks, axis=2).reshape(H, nb * k)
-        h = ufunc.accumulate(blocks[:, :, ::-1], axis=2)[:, :, ::-1].reshape(H, nb * k)
-        return ufunc(h[:, :W], g[:, k - 1 : k - 1 + W])
-    n = H + l + r
-    nb = -(-n // k)
-    xp = np.full((nb * k, W), pad_value, dtype=x.dtype)
-    xp[l : l + H] = x
-    blocks = xp.reshape(nb, k, W)
-    g = ufunc.accumulate(blocks, axis=1).reshape(nb * k, W)
-    h = ufunc.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].reshape(nb * k, W)
-    return ufunc(h[:H], g[k - 1 : k - 1 + H])
-
-
-def _morph(
-    bin_img: np.ndarray,
-    se: tuple[int, int],
-    ufunc: np.ufunc,
-    pad: int,
-    reflect: bool = False,
-) -> np.ndarray:
-    kh, kw = se
-    out = bin_img
-    if kw > 1:
-        out = _running_extremum_1d(out, kw, ufunc, pad, reflect, axis=1)
-    if kh > 1:
-        out = _running_extremum_1d(out, kh, ufunc, pad, reflect, axis=0)
-    return np.ascontiguousarray(out, dtype=np.uint8)
-
-
-def erode(bin_img: np.ndarray, se: tuple[int, int]) -> np.ndarray:
-    """Morphological erosion with a rectangular SE (separable running min).
-
-    Out-of-image neighborhood is treated as 255 (does not shrink at the
-    border), matching OpenCV's default replicate-ish behavior for erosion.
-    """
-    return _morph(bin_img, se, np.minimum, 255)
-
-
-def dilate(bin_img: np.ndarray, se: tuple[int, int], reflect: bool = False) -> np.ndarray:
-    """Morphological dilation with a rectangular SE (separable running max)."""
-    return _morph(bin_img, se, np.maximum, 0, reflect)
-
-
-def morph_open(bin_img: np.ndarray, se: tuple[int, int]) -> np.ndarray:
-    """Opening = erode by SE, dilate by the *reflected* SE — the textbook
-    definition; the reflection only matters for even SE sizes, where it
-    keeps surviving runs at their exact original position.
-
-    Sparse fast path for 1-D SEs (the h/v line extractions): a row can
-    survive opening by a (1, k) SE only if it holds >= ceil(k/2) ink
-    pixels — an interior erosion window needs k consecutive ink, and a
-    border window still needs its k - k//2 in-image positions inked
-    (out-of-image counts as 255). Rows under that count map to all-zero
-    output EXACTLY and are skipped. On rendered tables only the
-    ~2*(n_rows+1) actual line rows qualify (every other row carries just
-    the n_cols+1 vertical-line crossings), cutting the van Herk passes
-    ~8-25x. Columns symmetric for (k, 1)."""
-    kh, kw = se
-    if kh == 1 and kw > 1:
-        # min(·, W): when the row is narrower than the SE, both borders
-        # pad the erosion window, so a full-ink row of ANY width survives
-        thresh = min((kw + 1) // 2, bin_img.shape[1])
-        rows = np.flatnonzero(np.count_nonzero(bin_img, axis=1) >= thresh)
-        if rows.size < bin_img.shape[0]:
-            out = np.zeros_like(bin_img)
-            if rows.size:
-                out[rows] = _open_1d_runs(bin_img[rows], kw)
-            return out
-        return _open_1d_runs(bin_img, kw)
-    if kw == 1 and kh > 1:
-        thresh = min((kh + 1) // 2, bin_img.shape[0])
-        cols = np.flatnonzero(np.count_nonzero(bin_img, axis=0) >= thresh)
-        if cols.size < bin_img.shape[1]:
-            out = np.zeros_like(bin_img)
-            if cols.size:
-                out[:, cols] = _open_1d_runs(bin_img[:, cols].T, kh).T
-            return out
-        return np.ascontiguousarray(_open_1d_runs(bin_img.T, kh).T)
-    return dilate(erode(bin_img, se), se, reflect=True)
-
-
-def _open_1d_runs(bin_img: np.ndarray, k: int) -> np.ndarray:
-    """1-D opening along rows as pure run-length logic: a pixel survives
-    iff its ink run has (border-extended) length >= k.
-
-    Equivalence to erode(pad 255) + dilate(reflected SE, pad 0): erosion
-    of a run [a, b] leaves [a+l, b-r]; the reflected dilation expands it
-    by (r, l) — exactly back to [a, b]. The 255-padding is a virtual
-    extension of border-touching runs by l on the left / r on the right.
-    So opening keeps whole runs with extended length >= k and nothing
-    else. Two accumulates (nearest zero before/after each pixel) instead
-    of erode+dilate's four, and no pad/reshape allocations.
-    """
-    l, r = (k - 1) // 2, k // 2
-    H, W = bin_img.shape
-    f = bin_img != 0
-    # int16 index math: the accumulate passes are memory-bandwidth-bound,
-    # so halving the element width is a direct win. Canvases are not
-    # capped (layout_table only targets a width; the vertical opening
-    # scans rows of H px, and H grows with the row count), so runs of
-    # 32000 px or more take the int32 fallback
-    dt = np.int16 if W + k < 32000 else np.int32
-    idx = np.arange(W, dtype=dt)
-    last_zero = np.maximum.accumulate(np.where(f, dt(-1), idx), axis=1)
-    next_zero = np.minimum.accumulate(
-        np.where(f, dt(W), idx)[:, ::-1], axis=1
-    )[:, ::-1]
-    eff = next_zero - last_zero - 1
-    eff += np.where(last_zero == -1, dt(l), dt(0))
-    eff += np.where(next_zero == W, dt(r), dt(0))
+    row, s, e = runs(fg)
+    keep = (e - s) + l * (s == 0) + r * (e == W) >= k
     out = np.zeros((H, W), dtype=np.uint8)
-    out[f & (eff >= k)] = 255
+    for y, a, b in zip(row[keep].tolist(), s[keep].tolist(), e[keep].tolist()):
+        out[y, a:b] = 255
     return out
 
 
@@ -272,13 +162,13 @@ def morph_open_h(bin_img: np.ndarray, scale: int = 20, min_k: int = 9) -> np.nda
     chain of three specks plus a dash (8px) cannot masquerade as a line
     stroke; real grid lines are always far longer than 9px."""
     k = max(min_k, bin_img.shape[1] // scale)
-    return morph_open(bin_img, (1, k))
+    return _open_rows(bin_img != 0, k)
 
 
 def morph_open_v(bin_img: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
     """Keep only vertical line strokes: open with SE (H//scale, 1)."""
     k = max(min_k, bin_img.shape[0] // scale)
-    return morph_open(bin_img, (k, 1))
+    return np.ascontiguousarray(_open_rows((bin_img != 0).T, k).T)
 
 
 def mask_intersect(h_mask: np.ndarray, v_mask: np.ndarray) -> np.ndarray:

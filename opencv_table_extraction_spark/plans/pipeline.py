@@ -20,18 +20,12 @@ from __future__ import annotations
 
 import functools
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..kernel.extract import extract_batch
+from ..kernel.extract import arrow_out_schema, extract_batch
 
 __all__ = [
     "OUT_SCHEMA",
@@ -43,34 +37,8 @@ __all__ = [
     "transcripts_from_tpch",
 ]
 
-SPAN_TYPE = StructType(
-    [
-        StructField("row", IntegerType()),
-        StructField("col", IntegerType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-    ]
-)
-
-OUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("route", StringType()),
-        StructField("extracted_text", StringType()),
-        StructField("spans", ArrayType(SPAN_TYPE)),
-        StructField("n_rows", IntegerType()),
-        StructField("n_cols", IntegerType()),
-        StructField("n_cells", IntegerType()),
-        StructField("n_joints", IntegerType()),
-        StructField("err", StringType()),
-        StructField("proc_us", LongType()),
-    ]
-)
+# the Spark view of the kernel's one Arrow output schema
+OUT_SCHEMA = from_arrow_schema(arrow_out_schema())
 
 
 def extract_transcripts(
@@ -130,7 +98,9 @@ def extract_transcripts(
     if keep_text:
         # the echoed source payload (see extract_batch): lets span
         # consumers slice offsets without a join-back derivation pass
-        schema = StructType(OUT_SCHEMA.fields + [StructField("text", StringType())])
+        schema = from_arrow_schema(
+            arrow_out_schema().append(pa.field("text", pa.string()))
+        )
     out = src.mapInArrow(fn, schema)
     if add_turn_seq:
         # unbounded mode takes its (conv_id, turn_idx) keys from the

@@ -39,22 +39,17 @@ def bfs_components(img):
 @pytest.mark.parametrize("density", [0.1, 0.3, 0.5, 0.7])
 def test_components_match_bfs(density):
     img = (RNG.rand(40, 55) < density).astype(np.uint8) * 255
-    n, labels, stats = connected_components(img, return_labels=True)
+    stats = connected_components(img)
     ref = bfs_components(img)
-    assert n == len(ref)
+    assert len(stats) == len(ref)
     assert [tuple(s) for s in stats] == ref
-    # label map partitions the foreground consistently
-    assert (labels > 0).sum() == (img > 0).sum()
-    for lab in range(1, n + 1):
-        area = (labels == lab).sum()
-        assert area == stats[lab - 1, 4]
 
 
 def test_components_empty_and_full():
-    n, _, stats = connected_components(np.zeros((5, 5), np.uint8))
-    assert n == 0 and stats.shape == (0, 5)
-    n, _, stats = connected_components(np.full((4, 6), 255, np.uint8))
-    assert n == 1 and tuple(stats[0]) == (0, 0, 6, 4, 24)
+    stats = connected_components(np.zeros((5, 5), np.uint8))
+    assert stats.shape == (0, 5)
+    stats = connected_components(np.full((4, 6), 255, np.uint8))
+    assert len(stats) == 1 and tuple(stats[0]) == (0, 0, 6, 4, 24)
 
 
 def test_detect_cells_excludes_border_and_noise():

@@ -5,11 +5,9 @@ import pytest
 
 from opencv_table_extraction_spark.kernel.imaging import (
     adaptive_threshold,
-    dilate,
-    erode,
     grid_mask,
     mask_intersect,
-    morph_open,
+    morph_open_h,
     otsu_threshold,
     to_gray,
 )
@@ -35,19 +33,6 @@ def brute_otsu(gray):
     return best_t
 
 
-def brute_morph(img, se, op, pad):
-    kh, kw = se
-    lh, rh = (kh - 1) // 2, kh // 2
-    lw, rw = (kw - 1) // 2, kw // 2
-    p = np.pad(img, ((lh, rh), (lw, rw)), constant_values=pad)
-    H, W = img.shape
-    out = np.empty_like(img)
-    for y in range(H):
-        for x in range(W):
-            out[y, x] = op(p[y : y + kh, x : x + kw])
-    return out
-
-
 @pytest.mark.parametrize("trial", range(8))
 def test_otsu_matches_bruteforce(trial):
     if trial < 4:
@@ -66,18 +51,11 @@ def test_otsu_empty_and_flat():
     assert b.shape == flat.shape
 
 
-@pytest.mark.parametrize("se", [(1, 3), (3, 1), (3, 3), (1, 8), (7, 1), (2, 5), (5, 2), (4, 4), (1, 25)])
-def test_erode_dilate_match_bruteforce(se):
-    img = (RNG.rand(23, 31) < 0.45).astype(np.uint8) * 255
-    assert np.array_equal(erode(img, se), brute_morph(img, se, np.min, 255))
-    assert np.array_equal(dilate(img, se), brute_morph(img, se, np.max, 0))
-
-
 def test_open_removes_short_keeps_long_runs():
     img = np.zeros((5, 60), np.uint8)
     img[2, 5:9] = 255     # run of 4 < k
     img[2, 20:45] = 255   # run of 25 >= k
-    out = morph_open(img, (1, 10))
+    out = morph_open_h(img, scale=61, min_k=10)  # SE exactly (1, 10)
     assert out[2, 5:9].sum() == 0
     assert np.array_equal(out[2, 20:45], np.full(25, 255, np.uint8))
     assert out.sum() == 25 * 255  # opening is idempotent-exact on long runs
