@@ -41,13 +41,13 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derive transcripts from sf0.001 parquet, run the full
-    extraction pipeline (salted kernel map + turn ordering). Uses the
+    extraction pipeline (balanced kernel map + turn ordering). Uses the
     UNBOUNDED turn_seq form (two-level prefix sum + join-back) so no
     stage of the flagship path serializes a conversation into one task
     at any conversation size (r5 verdict #3)."""
     transcripts = transcripts_from_tpch(spark, SF0001)
     return ordered_output(
-        extract_transcripts(transcripts, salt_buckets=8, unbounded_turn_seq=True)
+        extract_transcripts(transcripts, unbounded_turn_seq=True)
     )
 
 
@@ -55,7 +55,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_extract_order_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
-    out = extract_transcripts(t, salt_buckets=8, add_turn_seq=False)
+    out = extract_transcripts(t, add_turn_seq=False)
     return out.select(
         F.col("turn_idx").cast("bigint").alias("order_key"),
         "route",
@@ -77,9 +77,7 @@ def _q_extract_tables_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum + join-back, r5 verdict #3): the emitted turn_seq column
     must hash-match the oracle's per-conversation row_number."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
-    out = extract_transcripts(
-        t, salt_buckets=8, use_adaptive=True, unbounded_turn_seq=True
-    )
+    out = extract_transcripts(t, use_adaptive=True, unbounded_turn_seq=True)
     return out.select(
         F.col("turn_idx").cast("bigint").alias("order_key"),
         "route",
@@ -94,7 +92,7 @@ def _q_extract_tables_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("doc-"))
-    out = extract_transcripts(t, salt_buckets=8, add_turn_seq=False)
+    out = extract_transcripts(t, add_turn_seq=False)
     return out.select(
         F.col("turn_idx").cast("bigint").alias("doc_id"), "route", "extracted_text"
     )
@@ -102,7 +100,7 @@ def _q_extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_extract_scan_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("scan-"))
-    out = extract_transcripts(t, salt_buckets=8, add_turn_seq=False)
+    out = extract_transcripts(t, add_turn_seq=False)
     return out.select(
         (F.col("turn_idx").cast("bigint") - 1_000_000).alias("doc_id"),
         "route",
@@ -168,7 +166,7 @@ def _q_extract_order_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # span slicing reads the echo instead of a join-back through a
     # second derivation pass (the echo is the input Arrow buffer
     # re-emitted — byte-identical to the joined source by construction)
-    out = extract_transcripts(t, salt_buckets=8, add_turn_seq=False, keep_text=True)
+    out = extract_transcripts(t, add_turn_seq=False, keep_text=True)
     return (
         out.select(
             F.col("turn_idx").cast("bigint").alias("order_key"),
@@ -657,7 +655,7 @@ def _q_lineage_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation counts exactly what the kernel produced — the oracle
     derives the same totals from lineitem arithmetic alone."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
-    out = extract_transcripts(t, salt_buckets=8, add_turn_seq=False)
+    out = extract_transcripts(t, add_turn_seq=False)
     lin = lineage_summary(out)
     return lin.agg(
         F.count("*").cast("bigint").alias("n_partitions_nonempty"),

@@ -43,7 +43,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, callable]:
 
     def q_extract_full():
         t = transcripts_from_tpch(spark, sf_dir)
-        out = extract_transcripts(t, salt_buckets=8)
+        out = extract_transcripts(t)
         return out.where(F.col("err") == "").count()
 
     def mk(name):

@@ -74,7 +74,7 @@ def bench_frames(spark) -> dict:
 
     def full():
         t = transcripts_from_tpch(spark, SF_DIR)
-        return extract_transcripts(t, salt_buckets=8).where(F.col("err") == "")
+        return extract_transcripts(t).where(F.col("err") == "")
 
     frames["extract_full_pipeline"] = full
     return frames
@@ -136,10 +136,9 @@ def cmd_stages() -> None:
     src = transcripts_from_tpch(spark, SF_DIR)
     t("derive_transcripts", src)
     t("derive_tables_only", src.where(F.col("conv_id").startswith("order-")))
-    t("kernel_no_turnseq", extract_transcripts(src, salt_buckets=8, add_turn_seq=False))
-    t("kernel_with_turnseq", extract_transcripts(src, salt_buckets=8))
-    t("kernel_unsalted", extract_transcripts(src, salt_buckets=None,
-                                             repartition_to=CPUS * 2,
+    t("kernel_no_turnseq", extract_transcripts(src, add_turn_seq=False))
+    t("kernel_with_turnseq", extract_transcripts(src))
+    t("kernel_unsalted", extract_transcripts(src, partitions=CPUS * 2,
                                              add_turn_seq=False))
     spark.stop()
 

@@ -4,7 +4,7 @@ Deployed as:
     spark-submit --py-files engine.zip jobs/extract.py \
         --input  <transcripts parquet/iceberg dir> \
         --output <catalog root> [--buckets 256] [--max-buckets N] \
-        [--salt 16] [--local N]
+        [--partitions N] [--local N]
 
 Reads the conv_id-partitioned transcript table, resumes from the last
 committed snapshot (skips committed conv buckets), extracts with the
@@ -47,9 +47,10 @@ def main() -> None:
                     help="conv buckets (commit granularity)")
     ap.add_argument("--max-buckets", type=int, default=None,
                     help="bound this run (testing / staged rollout)")
-    ap.add_argument("--salt", type=int, default=16,
-                    help="non-zero: balanced round-robin exchange before the "
-                         "kernel; 0: none (the value is only an on/off switch)")
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="width of the round-robin exchange before the "
+                         "kernel (default: 2 x default parallelism); "
+                         "0: no exchange")
     ap.add_argument("--local", type=int, default=None,
                     help="run on local[N] instead of deferring to spark-submit")
     ap.add_argument("--cpu-bound-scan", default=True,
@@ -82,7 +83,7 @@ def main() -> None:
         cat = SnapshotCatalog(args.output, n_buckets=args.buckets)
     df = spark.read.parquet(args.input)
     result = run_resumable(
-        spark, df, cat, max_buckets=args.max_buckets, salt_buckets=args.salt
+        spark, df, cat, max_buckets=args.max_buckets, partitions=args.partitions
     )
     print(json.dumps(result))
     spark.stop()

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..session import kernel_partitions
+
 N_HASHES = 32
 N_BANDS = 16  # 16 bands x 2 rows: ~0.99 candidate recall at jaccard 0.5
 JACCARD_THRESHOLD = 0.2
@@ -272,11 +274,8 @@ def jaccard_pairs(
         )
     )
     # the pair set is small in bytes but quadratic in CPU (array
-    # intersections): explicit repartition keeps AQE from collapsing the
-    # compute stage to a couple of tasks
-    pairs = pairs.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism * 2, "a_id", "b_id"
-    )
+    # intersections)
+    pairs = pairs.repartition(kernel_partitions(corpus.sparkSession), "a_id", "b_id")
     jac = F.round(
         F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
         / F.size(F.array_union("a_sh", "b_sh")),
@@ -405,8 +404,8 @@ def minhash_band_rows(
     docs: DataFrame, n_hashes: int = N_HASHES, n_bands: int = N_BANDS
 ) -> DataFrame:
     """(doc_id, text) -> n_bands rows (doc_id, band_id, band_hash); the
-    narrow, CPU-bound LSH signature stage. Explicit-count repartition so
-    a 1-file scan doesn't serialize it (AQE byte-coalescing exemption)."""
+    narrow, CPU-bound LSH signature stage, widened to the kernel width so
+    a 1-file scan doesn't serialize it."""
     from pyspark.sql.types import IntegerType
 
     schema = StructType(
@@ -416,7 +415,7 @@ def minhash_band_rows(
             StructField("band_hash", LongType()),
         ]
     )
-    par = docs.sparkSession.sparkContext.defaultParallelism * 2
+    par = kernel_partitions(docs.sparkSession)
     fn = functools.partial(_minhash_band_batches, n_hashes=n_hashes, n_bands=n_bands)
     return (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
@@ -571,18 +570,17 @@ def verify_candidate_pairs(
             StructField(col, DoubleType()),
         ]
     )
-    par = docs.sparkSession.sparkContext.defaultParallelism * 2
+    par = kernel_partitions(docs.sparkSession)
     # BOTH thin sides are widened explicitly BEFORE the joins — the
-    # candidate pairs (16 B/row; keeps the CPU-bound kernel exempt from
-    # AQE's byte-based coalescing) and the doc texts (one text per doc,
-    # not per pair) — instead of repartitioning the joined pair-texts
-    # (|pairs| x two texts, ~270 MB at sf0.1's 444k candidates). When
-    # AQE broadcasts the doc side of a join, that join adds its text
-    # with no exchange and keeps the explicit par-wide partitioning.
-    # When both joins are shuffled (docs too big to broadcast), the
-    # second join re-partitions the first join's output by b_id, so the
-    # a-side texts DO cross that exchange, once per candidate pair; only
-    # the b-side texts never do.
+    # candidate pairs (16 B/row, feeding the CPU-bound kernel) and the doc
+    # texts (one text per doc, not per pair) — instead of repartitioning
+    # the joined pair-texts (|pairs| x two texts, ~270 MB at sf0.1's 444k
+    # candidates). When AQE broadcasts the doc side of a join, that join
+    # adds its text with no exchange and keeps the explicit par-wide
+    # partitioning. When both joins are shuffled (docs too big to
+    # broadcast), the second join re-partitions the first join's output by
+    # b_id, so the a-side texts DO cross that exchange, once per candidate
+    # pair; only the b-side texts never do.
     cand = cand.repartition(par, "a_id", "b_id")
     ver = (
         cand.join(docs.select(F.col("doc_id").alias("a_id"),
@@ -649,7 +647,7 @@ def _prefix_shingles(
     the lazy return values have no unpersist point."""
     from pyspark.sql.types import IntegerType, StringType
 
-    par = docs.sparkSession.sparkContext.defaultParallelism * 2
+    par = kernel_partitions(docs.sparkSession)
     sh_schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -1107,7 +1105,7 @@ def simhash_rows(corpus: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("sh", LongType())]
     )
-    par = corpus.sparkSession.sparkContext.defaultParallelism * 2
+    par = kernel_partitions(corpus.sparkSession)
     return (
         corpus.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         .repartition(par, "doc_id")
@@ -1734,7 +1732,7 @@ def embedding_cosine_pairs_with_drops(
 
     from .similarity import cosine
 
-    par = corpus.sparkSession.sparkContext.defaultParallelism * 2
+    par = kernel_partitions(corpus.sparkSession)
     sk_schema = StructType(
         [
             StructField("vec_id", LongType()),

@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import kernel_partitions
+
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 _BPE_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
@@ -404,7 +406,7 @@ def pack_token_shards(
     parallelism)."""
     from pyspark.sql import Window
 
-    par = partitions or d.sparkSession.sparkContext.defaultParallelism * 2
+    par = partitions or kernel_partitions(d.sparkSession)
     n_tok = F.size(F.split(F.trim("text"), r"\s+"))
     parts = (
         d.select("doc_id", "source", n_tok.alias("n_tokens"))

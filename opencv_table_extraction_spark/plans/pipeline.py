@@ -8,12 +8,12 @@ pruning, and join strategy; the single Python boundary is the
   B4 mapInArrow(extract_batch) -> B5 window(turn order) ->
   B6 range sort -> B13 sink (+ B8 lineage aggregation)
 
-At 100 TB the salting shuffle is the only wide stage before the kernel;
-it exists to break up hot conversations when the source is
+At 100 TB the round-robin exchange is the only wide stage before the
+kernel; it breaks up hot conversations when the source is
 conv_id-clustered (BASELINE.json:6 "skewed conversations are salted and
 AQE-split"). When the source layout is already size-balanced (plain
-parquet split by bytes), pass ``salt_buckets=None`` and the kernel map
-runs narrow, straight off the scan.
+parquet split by bytes), pass ``partitions=0`` and the kernel map runs
+narrow, straight off the scan.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.extract import arrow_out_schema, extract_batch
+from ..session import kernel_partitions
 
 __all__ = [
     "OUT_SCHEMA",
@@ -43,8 +44,7 @@ OUT_SCHEMA = from_arrow_schema(arrow_out_schema())
 
 def extract_transcripts(
     df: DataFrame,
-    salt_buckets: int | None = 8,
-    repartition_to: int | None = None,
+    partitions: int | None = None,
     use_adaptive: bool = False,
     add_turn_seq: bool = True,
     unbounded_turn_seq: bool = False,
@@ -54,43 +54,21 @@ def extract_transcripts(
 
     B3: only (conv_id, turn_idx, text) cross the Arrow boundary — Catalyst
     prunes everything else out of the scan (check ReadSchema in explain).
-    B9: ``salt_buckets`` truthy = a balanced round-robin exchange before
-    the kernel map — the limit of per-turn salting (every task gets an
-    equal row count no matter how hot any conversation is); per-turn
-    extraction is embarrassingly parallel, so correctness never depends
-    on grouping.
+    B9: ``partitions`` is the round-robin exchange before the kernel map
+    — the limit of per-turn salting: every task gets an equal row count
+    no matter how hot any conversation is. ``None`` gives the default
+    kernel width (``session.kernel_partitions``), ``N > 0`` width N, and
+    ``0`` no exchange (the narrow mode for size-balanced scans).
+    Per-turn extraction is embarrassingly parallel, so correctness never
+    depends on grouping, and row order into the kernel is not
+    load-bearing; Spark's sort-before-repartition keeps the
+    row->partition assignment stable under task retries.
     B5: row_number over (conv_id, turn_idx) re-establishes stable turn
-    ordering after the salted shuffle (never rely on task order).
-
-    The repartition always carries an EXPLICIT partition count: the
-    kernel stage is CPU-bound, so AQE's byte-based partition coalescing
-    (sized for ~64MB of shuffle data) would collapse a few MB of text —
-    hours of image work — into one task. An explicit count opts this one
-    exchange out of coalescing while AQE still manages the joins/aggs.
+    ordering after the exchange (never rely on task order).
     """
     src = df.select("conv_id", "turn_idx", "text")
-    if salt_buckets:
-        # r8 optimization (guide §2.5): per-turn extraction is
-        # embarrassingly parallel, so the balanced limit of "salt each
-        # conversation over k buckets" is a keyless round-robin exchange
-        # — every task gets an identical row count REGARDLESS of the
-        # source's conv clustering, where hash((conv_id, salt)) left a
-        # CPU-weighted ±15-20% task skew at salt_buckets=8 (measured
-        # sf0.1/local[32]: 10.4-10.9 s vs 8.5-9.5 s for the kernel
-        # stage; see OPTIMIZATION_r08.md). Row order feeding the kernel
-        # is not load-bearing: turn_seq is re-established by B5 and the
-        # oracle compares sorted output. Spark's sort-before-repartition
-        # (on by default) keeps the row->partition assignment stable
-        # under task retries. ``salt_buckets`` stays the on/off knob for
-        # the exchange; its count no longer bounds the spread (the
-        # docstring's hot-conversation goal, taken to its limit).
-        n = repartition_to or df.sparkSession.sparkContext.defaultParallelism * 2
-        src = src.repartition(n)
-    elif repartition_to:
-        # unsalted but an explicit width was requested: honor it with a
-        # round-robin exchange (salt_buckets=None + repartition_to=None
-        # remains the zero-shuffle narrow mode for size-balanced scans)
-        src = src.repartition(repartition_to)
+    if partitions != 0:
+        src = src.repartition(partitions or kernel_partitions(df.sparkSession))
     fn = functools.partial(
         extract_batch, use_adaptive=use_adaptive, keep_text=keep_text
     )

@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession
 
 __all__ = [
     "build_session",
+    "kernel_partitions",
     "tune_scan_for_cpu_bound",
     "restore_confs",
     "ENGINE_CONFS",
@@ -31,6 +32,21 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
+
+
+def kernel_partitions(spark: SparkSession) -> int:
+    """The default width of the exchange in front of a CPU-bound Python
+    stage (a ``mapInArrow`` kernel or a quadratic pair verify): twice the
+    default parallelism.
+
+    The count must be explicit. AQE coalesces shuffle partitions by
+    bytes (~64MB each), but the optimizer cannot see what a UDF costs:
+    a few MB of text can be hours of image or pair work, and byte-based
+    coalescing would collapse it into one or two tasks. An explicit
+    count opts that one exchange out of coalescing while AQE still
+    manages the joins and aggregations around it.
+    """
+    return spark.sparkContext.defaultParallelism * 2
 
 
 def tune_scan_for_cpu_bound(

@@ -38,6 +38,25 @@ __all__ = [
 ]
 
 
+def _overwrite_partitions(df: DataFrame, part_col: str, path: str) -> None:
+    """Idempotent parquet write: dynamic partition overwrite replaces
+    exactly the ``part_col`` directories present in ``df``, so a retried
+    write replaces its own partitions instead of appending duplicates.
+    The overwrite-mode conf is saved/restored — mutating the session
+    globally would silently change unrelated writes."""
+    spark = df.sparkSession
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(part_col).parquet(path)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 class SnapshotCatalog:
     """Bucket-committed snapshot bookkeeping over a local/posix dir."""
 
@@ -83,41 +102,17 @@ class SnapshotCatalog:
 
     def write_data(self, out: DataFrame) -> None:
         """Idempotent per-bucket write: dynamic partition overwrite
-        replaces exactly the bucket directories this run owns. The
-        overwrite-mode conf is saved/restored — mutating the session
-        globally would silently change unrelated writes."""
-        spark = out.sparkSession
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.root, "data")
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        replaces exactly the bucket directories this run owns."""
+        _overwrite_partitions(out, "bucket", os.path.join(self.root, "data"))
 
     def write_lineage(self, lineage: DataFrame) -> None:
         """Lineage is partitioned by snapshot_id and dynamically
         overwritten, so a crash-and-retry of the same snapshot replaces
         its own lineage rows instead of appending duplicates (the data
         write was already idempotent; this makes lineage match)."""
-        spark = lineage.sparkSession
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "dynamic")
-        try:
-            lineage.write.mode("overwrite").partitionBy("snapshot_id").parquet(
-                os.path.join(self.root, "lineage")
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        _overwrite_partitions(
+            lineage, "snapshot_id", os.path.join(self.root, "lineage")
+        )
 
     def read_output(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "data"))
@@ -200,7 +195,7 @@ def run_resumable(
     transcripts: DataFrame,
     catalog: SnapshotCatalog,
     max_buckets: int | None = None,
-    salt_buckets: int | None = 8,
+    partitions: int | None = None,
 ) -> dict:
     """One (re)start of the extraction job against a catalog (B14).
 
@@ -210,6 +205,8 @@ def run_resumable(
     manifest. Buckets are committed only after their data lands, so a
     crash between write and commit at worst reprocesses one run's
     buckets into overwritten (idempotent) bucket directories.
+    ``partitions`` is the kernel exchange width (see
+    ``extract_transcripts``; 0 = no exchange).
     """
     done = catalog.committed_buckets()
     todo = [b for b in range(catalog.n_buckets) if b not in done]
@@ -221,7 +218,7 @@ def run_resumable(
     work = transcripts.where(catalog.bucket_col().isin([int(b) for b in todo]))
     # persist the kernel output once: both the lineage aggregation and the
     # data write consume it, and the kernel is the expensive stage
-    raw = extract_transcripts(work, salt_buckets=salt_buckets, add_turn_seq=False)
+    raw = extract_transcripts(work, partitions=partitions, add_turn_seq=False)
     raw.persist()
     try:
         snap_id = catalog.last_snapshot_id() + 1

@@ -30,7 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..plans.pipeline import extract_transcripts, with_turn_seq
+from ..plans.pipeline import extract_transcripts
+from ..sources.catalog import _overwrite_partitions
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -181,36 +182,25 @@ def run_incremental(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str | None = None,
-    salt_buckets: int | None = 8,
+    partitions: int | None = None,
 ) -> int:
     """Process all not-yet-seen parquet files under ``source_dir`` as
     micro-batches; append extraction output to ``out_dir``. Returns the
     number of micro-batches processed. Re-running after new files land
-    extracts only the new files (resume is the stream checkpoint)."""
+    extracts only the new files (resume is the stream checkpoint).
+    ``partitions`` is the kernel exchange width (see
+    ``extract_transcripts``; 0 = no exchange)."""
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     n_batches = 0
 
     def process(batch_df, batch_id: int) -> None:
         nonlocal n_batches
-        out = with_turn_seq(
-            extract_transcripts(batch_df, salt_buckets=salt_buckets,
-                                add_turn_seq=False)
-        ).withColumn("batch_id", F.lit(batch_id))
+        out = extract_transcripts(batch_df, partitions=partitions).withColumn(
+            "batch_id", F.lit(batch_id)
+        )
         # idempotent sink: a retried micro-batch overwrites ITS OWN
         # batch_id partition instead of appending duplicates
-        spark = batch_df.sparkSession
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("batch_id").parquet(
-                os.path.join(out_dir, "data")
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        _overwrite_partitions(out, "batch_id", os.path.join(out_dir, "data"))
         n_batches += 1
 
     stream = (

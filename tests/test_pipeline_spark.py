@@ -20,7 +20,7 @@ DET_COLS = ["conv_id", "turn_idx", "route", "extracted_text", "n_rows",
 @pytest.fixture(scope="module")
 def extracted(spark, fixture_dir):
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = ordered_output(extract_transcripts(df, salt_buckets=8))
+    out = ordered_output(extract_transcripts(df))
     rows = out.collect()
     return {(r["conv_id"], r["turn_idx"]): r for r in rows}
 
@@ -63,7 +63,7 @@ def test_determinism_two_runs_identical(spark, fixture_dir):
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
 
     def run_hash():
-        out = extract_transcripts(df, salt_buckets=8).select(*DET_COLS)
+        out = extract_transcripts(df).select(*DET_COLS)
         h = out.select(
             F.sha2(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in DET_COLS]), 256
                    ).alias("h")
@@ -136,7 +136,7 @@ def test_lineage_idempotent_and_conf_restored(spark, fixture_dir, tmp_path):
     before = spark.conf.get(key, None)
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
     cat = SnapshotCatalog(str(tmp_path / "cat"), n_buckets=4)
-    raw = extract_transcripts(df, salt_buckets=4, add_turn_seq=False)
+    raw = extract_transcripts(df, add_turn_seq=False)
     lineage = lineage_summary(raw).withColumn("snapshot_id", F.lit(1))
     out = with_turn_seq(raw).withColumn("bucket", cat.bucket_col())
     for _ in range(2):  # second write simulates the retry
@@ -181,8 +181,7 @@ def test_salting_bounds_skew(spark, fixture_dir):
     task: with salting, the max per-partition kernel time is bounded
     relative to the median (SURVEY.md §5.2-7)."""
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = extract_transcripts(df, salt_buckets=8, repartition_to=16,
-                              add_turn_seq=False)
+    out = extract_transcripts(df, partitions=16, add_turn_seq=False)
     lin = lineage_summary(out).collect()
     times = sorted(r["wall_ms"] for r in lin if r["n_turns"] > 0)
     assert len(times) >= 8
@@ -195,7 +194,7 @@ def test_salting_bounds_skew(spark, fixture_dir):
 
 def test_lineage_counts(spark, fixture_dir):
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = extract_transcripts(df, salt_buckets=4, add_turn_seq=False)
+    out = extract_transcripts(df, add_turn_seq=False)
     lin = lineage_summary(out)
     total = lin.agg(F.sum("n_turns").alias("t"), F.sum("n_cells").alias("c")).collect()[0]
     assert total["t"] == df.count()

@@ -9,6 +9,7 @@ the pipeline viable at 100 TB must be visible in `explain`, not assumed.
 - filter pushdown reaches the scan for the route prefilter.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from opencv_table_extraction_spark.plans import extract_transcripts
@@ -22,7 +23,7 @@ def _plan(df) -> str:
 
 def test_scan_prunes_to_kernel_columns(spark, fixture_dir):
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = extract_transcripts(df, salt_buckets=8, add_turn_seq=False)
+    out = extract_transcripts(df, add_turn_seq=False)
     plan = _plan(out)
     scan = plan[plan.index("Scan parquet"):]
     read_schema = scan[scan.index("ReadSchema"): scan.index("\n", scan.index("ReadSchema"))]
@@ -211,15 +212,31 @@ def test_ivf_batch_search_dpp_and_exactness(spark, tmp_path):
     assert a == b and len(a) == 3 * TOP_K
 
 
-def test_kernel_stage_not_coalesced_to_one_task(spark, fixture_dir):
-    """The CPU-bound kernel repartition carries an explicit count, so
-    AQE must not collapse it to a single task (the 1-task regression the
-    harness caught)."""
+@pytest.mark.parametrize("partitions", [None, 16, 0])
+def test_kernel_stage_not_coalesced_to_one_task(spark, fixture_dir, partitions):
+    """The three exchange states of ``partitions``: None = round-robin at
+    the default kernel width, N = round-robin at width N, 0 = no
+    exchange between the scan and the kernel map. The exchange carries
+    an explicit count, so AQE must not collapse the CPU-bound kernel
+    stage to a single task (the 1-task regression the harness caught)."""
+    import re
+
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = extract_transcripts(df, salt_buckets=8, repartition_to=16,
-                              add_turn_seq=False)
-    n_parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
-    assert n_parts >= 8, n_parts
+    out = extract_transcripts(df, partitions=partitions, add_turn_seq=False)
+    plan = _plan(out)
+    tree = plan[: plan.index("\n\n")]
+    assert tree.count("MapInArrow") == 1, tree
+    if partitions == 0:
+        # nothing but project/filter nodes between the scan and the map
+        assert "Exchange" not in tree, tree
+        return
+    width = partitions or 2 * spark.sparkContext.defaultParallelism
+    assert re.findall(r"RoundRobinPartitioning\(\d+\)", plan) == [
+        f"RoundRobinPartitioning({width})"
+    ], plan
+    if partitions:
+        n_parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+        assert n_parts >= 8, n_parts
 
 
 def test_entry_contract_shapes(spark):
@@ -336,7 +353,7 @@ def test_unbounded_turn_seq_runs_kernel_once(spark, fixture_dir):
     import re
 
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
-    out = extract_transcripts(df, salt_buckets=8, unbounded_turn_seq=True)
+    out = extract_transcripts(df, unbounded_turn_seq=True)
     plan = _plan(out)
     assert len(re.findall(r"\(\d+\)\s+MapInArrow", plan)) == 1
     # one scan feeds the kernel (carries text); the keys branch scans

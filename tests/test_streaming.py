@@ -25,20 +25,24 @@ def test_incremental_two_appends(spark, tmp_path):
     t2, _, _ = gen_tables(80, seed=7, skew=False)
     pq.write_table(t1, str(src / "part-001.parquet"))
 
-    n1 = run_incremental(spark, str(src), str(out), salt_buckets=4)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key, None)
+    n1 = run_incremental(spark, str(src), str(out))
     assert n1 >= 1
     got1 = spark.read.parquet(str(out / "data"))
     assert got1.count() == t1.num_rows
 
     # append new "snapshot"; re-run processes ONLY the new file
     pq.write_table(t2, str(src / "part-002.parquet"))
-    run_incremental(spark, str(src), str(out), salt_buckets=4)
+    run_incremental(spark, str(src), str(out))
     got2 = spark.read.parquet(str(out / "data"))
     assert got2.count() == t1.num_rows + t2.num_rows
 
     # idempotent: nothing new -> nothing appended
-    run_incremental(spark, str(src), str(out), salt_buckets=4)
+    run_incremental(spark, str(src), str(out))
     assert spark.read.parquet(str(out / "data")).count() == t1.num_rows + t2.num_rows
+    # the idempotent sink restores the session's overwrite mode
+    assert spark.conf.get(key, None) == before
 
 
 def _events_table(rows):

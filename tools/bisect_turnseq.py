@@ -49,7 +49,7 @@ def main() -> None:
 
     def run(mode: str) -> float:
         t = transcripts_from_tpch(spark, sf_dir)
-        kw = {"salt_buckets": 8}
+        kw = {}
         if mode == "none":
             kw["add_turn_seq"] = False
         elif mode == "unbounded":

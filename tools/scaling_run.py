@@ -67,10 +67,9 @@ def one_run():
     t0 = time.time()
     # narrow: the map runs straight off the (many-file, size-balanced)
     # scan with no pre-shuffle — the layout a bucketed store gives you;
-    # salted: the explicit skew path (hot-conversation clustering)
-    out = extract_transcripts(df,
-                              salt_buckets=None if narrow else 8,
-                              repartition_to=None if narrow else cpus * 4,
+    # otherwise a round-robin exchange at 4 x cores (the skew path for
+    # hot-conversation clustering)
+    out = extract_transcripts(df, partitions=0 if narrow else cpus * 4,
                               add_turn_seq=False)
     lin = lineage_summary(out).collect()
     wall = time.time() - t0
@@ -320,7 +319,7 @@ runs, median wall-clock.
   over {skew["n_parts"]} partitions; errors: {skew["n_errors"]}
 - confs: AQE on (+skewJoin, +coalescePartitions),
   arrow maxRecordsPerBatch=2048, shuffle.partitions=cores,
-  kernel repartition_to = 4 x cores (explicit — exempt from AQE
+  kernel partitions = 4 x cores (explicit — exempt from AQE
   byte-based coalescing; the kernel stage is CPU-bound)
 """)
 
