@@ -441,22 +441,11 @@ FROM events GROUP BY user_id
 
 def _q_event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling-window aggregation (F.window — the same
-    construct a streaming job uses with a watermark; here certified in
-    batch against DuckDB time_bucket)."""
-    from opencv_table_extraction_spark.streaming import sum_value_cents
+    tumbling_window_agg the streaming job runs with a watermark; here
+    certified in batch against DuckDB time_bucket)."""
+    from opencv_table_extraction_spark.streaming import tumbling_window_agg
 
-    e = _read(spark, sf_dir, "events")
-    w = F.window("ts", "1 hour")
-    return (
-        e.groupBy(w.alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), sum_value_cents())
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
+    return tumbling_window_agg(_read(spark, sf_dir, "events"), "1 hour")
 
 
 _SQL_TUMBLING = """

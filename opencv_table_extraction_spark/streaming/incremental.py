@@ -83,10 +83,10 @@ def windowed_event_counts(
     window: str = "1 hour",
 ) -> None:
     """Watermarked event-time tumbling-window aggregation, streaming form
-    of the batch ``event_tumbling_counts`` query (same F.window + agg
-    expressions, certified against DuckDB time_bucket in batch; the test
-    asserts the streaming rows equal the batch rows for every finalized
-    window).
+    of the batch ``event_tumbling_counts`` query (both call
+    ``tumbling_window_agg``, certified against DuckDB time_bucket in
+    batch; the test asserts the streaming rows equal the batch rows for
+    every finalized window).
 
     Semantics: append mode emits a window only once its end falls behind
     the watermark (max event time seen in a PRIOR micro-batch minus the
@@ -101,17 +101,7 @@ def windowed_event_counts(
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), sum_value_cents())
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
+    agg = tumbling_window_agg(stream.withWatermark("ts", watermark), window)
     q = (
         agg.writeStream.format("parquet")
         .option("path", os.path.join(out_dir, "data"))
@@ -121,6 +111,23 @@ def windowed_event_counts(
         .start()
     )
     q.awaitTermination()
+
+
+def tumbling_window_agg(df, window: str = "1 hour"):
+    """THE tumbling-window aggregation (F.window + count/sum per
+    event_type -> formatted window start) — one definition shared by the
+    batch-certified ``event_tumbling_counts`` driver query and the
+    streaming ``windowed_event_counts`` job."""
+    return (
+        df.groupBy(F.window("ts", window).alias("w"), "event_type")
+        .agg(F.count("*").alias("cnt"), sum_value_cents())
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type",
+            "cnt",
+            "sum_value",
+        )
+    )
 
 
 def session_window_agg(df, gap: str = "30 minutes"):

@@ -381,13 +381,22 @@ def test_recognizer_seam_is_pluggable():
 
 
 def test_ivf_search_recall_vs_bruteforce(spark):
+    """A single query is the one-row frame of ivf_batch_search."""
     from opencv_table_extraction_spark.operators.similarity import (
+        QUERY_VEC_ID,
         _q_embedding_topk,
-        ivf_search,
+        _query_frame,
+        assigned_store,
+        ivf_batch_search,
+        kmeans_centroids,
     )
 
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cents = kmeans_centroids(e)
+    q = _query_frame(e, [QUERY_VEC_ID])
+    res = ivf_batch_search(assigned_store(e, cents), cents, q, n_probe=4)
     brute = [r["vec_id"] for r in _q_embedding_topk(spark, SF).collect()]
-    approx = [r["vec_id"] for r in ivf_search(spark, SF, n_probe=4).collect()]
+    approx = [r["vec_id"] for r in res.collect()]
     overlap = len(set(brute) & set(approx)) / len(brute)
     assert overlap >= 0.5, (brute, approx)  # n_probe=4 of 8 buckets
 
@@ -395,7 +404,6 @@ def test_ivf_search_recall_vs_bruteforce(spark):
 def test_multimodal_meta_and_stub(spark):
     from opencv_table_extraction_spark.operators.multimodal import (
         _q_multimodal_meta,
-        decode_image,
         sniff_kind,
     )
 
@@ -404,8 +412,6 @@ def test_multimodal_meta_and_stub(spark):
     assert all(r["kind"] == "application/octet-stream" for r in rows)
     assert sniff_kind(b"\x89PNG\r\n") == "image/png"
     assert sniff_kind(b"\xff\xd8\xff\xe0") == "image/jpeg"
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG....")
 
 
 def test_hot_bucket_cap_drops_degenerate_family(spark):
@@ -952,6 +958,43 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert wrote, "reliable checkpoint dir received no data"
 
 
+def winnow_fingerprint(text: str, k: int = 8, window: int = 6) -> list[int]:
+    """Per-document reference for textstats.winnow_fingerprint_batch:
+    winnowing (Schleimer/Wilkerson/Aiken, SIGMOD 2003) — Rabin-Karp
+    polynomial hash over character k-grams of the whitespace-normalized
+    text, then the minimum hash per sliding window with the rightmost-
+    min tie rule. The k-gram hashes are k Horner passes over the
+    code-point array and window selection is a strided sliding-window
+    argmin, one document at a time."""
+    import numpy as np
+
+    s = " ".join(text.lower().split())
+    if len(s) < k:
+        return []
+    data = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
+    # mod < 2^31 keeps every Horner intermediate (< mod*base + 0x10FFFF)
+    # well under 2^64: exact, overflow-free uint64 arithmetic
+    base = np.uint64(131)
+    mod = np.uint64((1 << 31) - 1)
+    n = len(data) - k + 1
+    h = np.zeros(n, dtype=np.uint64)
+    for j in range(k):  # k vectorized passes, not len(s) scalar steps
+        h = (h * base + data[j : j + n]) % mod
+    if n <= window:
+        return [int(h.min())]
+    win = np.lib.stride_tricks.sliding_window_view(h, window)
+    # rightmost min per window: argmin over the reversed window
+    j = (window - 1) - np.argmin(win[:, ::-1], axis=1)
+    pos = np.arange(len(win)) + j
+    # selected positions are non-decreasing as the window slides, so
+    # collapsing consecutive repeats == the classic "new position only"
+    # winnowing emission rule
+    keep = np.empty(len(pos), dtype=bool)
+    keep[0] = True
+    keep[1:] = pos[1:] != pos[:-1]
+    return [int(x) for x in h[pos[keep]]]
+
+
 def test_winnow_batch_equals_per_doc():
     """The cross-doc vectorized winnow kernel (one global Horner pass +
     one global window pass) must be EXACTLY the per-document reference
@@ -964,7 +1007,6 @@ def test_winnow_batch_equals_per_doc():
     import pyarrow.parquet as pq
 
     from opencv_table_extraction_spark.operators.textstats import (
-        winnow_fingerprint,
         winnow_fingerprint_batch,
     )
 

@@ -116,38 +116,8 @@ def test_prefix_join_no_cache_and_single_scan(spark):
     assert n_cached_after <= n_cached_before, "prefix join leaked a cache"
 
 
-def test_ivf_store_probe_is_partition_pruned(spark, tmp_path):
-    """The IVF store layout claim must be visible in the plan: probing
-    a centroid-partitioned store pushes centroid_id into
-    PartitionFilters (whole non-probed partitions never scanned), and
-    the pruned search returns exactly what the unpartitioned
-    ivf_search computes with the same codebook."""
-    from opencv_table_extraction_spark.operators.similarity import (
-        QUERY_VEC_ID,
-        ivf_search,
-        ivf_search_store,
-        ivf_write_partitioned,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    store = str(tmp_path / "ivf_store")
-    cents = ivf_write_partitioned(spark, sf, store)
-    q = [float(v) for v in
-         spark.read.parquet(f"{sf}/embeddings.parquet")
-         .where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]["embedding"]]
-    res = ivf_search_store(spark, store, cents, q,
-                           exclude_vec_id=QUERY_VEC_ID)
-    plan = _plan(res)
-    pf = plan[plan.index("PartitionFilters"):]
-    pf = pf[:pf.index("\n")]
-    assert "centroid_id" in pf, pf
-    got = [(r["vec_id"], r["cos"]) for r in res.collect()]
-    want = [(r["vec_id"], r["cos"]) for r in ivf_search(spark, sf).collect()]
-    assert got == want
-
-
 def test_ivf_batch_search_dpp_and_exactness(spark, tmp_path):
-    """Batched-query ANN over the partitioned store (r6 verdict #4):
+    """Batched-query ANN over the partitioned store:
     1. the broadcast probe-block equi-join on centroid_id must trigger
        DYNAMIC partition pruning against the store (no driver-side
        collect of probe ids anywhere in the operator);
@@ -155,7 +125,10 @@ def test_ivf_batch_search_dpp_and_exactness(spark, tmp_path):
        per-query brute force EXACTLY — certifying the plumbing with a
        real oracle, independent of bucketing quality;
     3. the store-backed result must equal the in-session assigned-frame
-       result at the production n_probe.
+       result at the production n_probe;
+    4. a one-query search bounds its top-k exchange: the executed plan
+       has a partial WindowGroupLimit directly below the query_id
+       exchange, so at most k rows per map partition cross it.
     """
     from pyspark.sql import Window
     from opencv_table_extraction_spark.operators.similarity import (
@@ -210,6 +183,16 @@ def test_ivf_batch_search_dpp_and_exactness(spark, tmp_path):
     a = {(r["query_id"], r["vec_id"], r["cos"], r["rank"]) for r in full.collect()}
     b = {(r["query_id"], r["vec_id"], r["cos"], r["rank"]) for r in brute.collect()}
     assert a == b and len(a) == 3 * TOP_K
+
+    one = ivf_batch_search(store, cents, queries.where(F.col("query_id") == 3))
+    assert len(one.collect()) == TOP_K  # finalizes the adaptive plan
+    lines = one._jdf.queryExecution().executedPlan().toString().split("\n")
+    i = next(i for i, ln in enumerate(lines)
+             if "Exchange hashpartitioning(query_id" in ln)
+    below = lines[i + 1]
+    assert "WindowGroupLimit" in below and below.rstrip().endswith("Partial"), (
+        "\n".join(lines)
+    )
 
 
 @pytest.mark.parametrize("partitions", [None, 16, 0])
