@@ -4,9 +4,10 @@ asymmetric containment, MinHash+LSH, SimHash, SRP embedding dedup,
 connected components and the keep-filter that applies the decisions.
 
 Joins, aggregations and windows stay JVM-side; per-document and per-pair
-numeric work runs in five Arrow-batch (mapInArrow) kernels — minhash
-bands, pair verification, shingle rows, simhash and SRP sketches —
-because Spark interprets higher-order-function lambdas. The bucketed
+numeric work runs in Arrow-batch (mapInArrow) kernels — minhash bands,
+pair verification, shingle rows, simhash, SRP sketches and the
+components pre-contraction — because Spark interprets higher-order-
+function lambdas and cannot express a union-find. The bucketed
 generators (LSH, Jaccard prefix, simhash, SRP) get their candidates from
 a groupBy on the bucket key plus in-bucket pair enumeration
 (_bucket_pairs), never from a self-join of the bucket rows.
@@ -1413,6 +1414,39 @@ def _star_edges(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
+def _contract_batches(batches):
+    """Arrow-batch kernel: one partition's canonical edges -> its local
+    star forest, one (component min, node) edge per non-minimum node.
+    Ids get ascending dense indices and _UnionFind roots every set at
+    its smallest index, so each root is its component's minimum id. The
+    output keeps the input's components and is distinct across
+    partitions: a local minimum is an a_id of its partition, and range
+    partitioning puts each a_id in exactly one partition."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..kernel.components import _UnionFind
+
+    a, b = [], []
+    for batch in batches:
+        a.append(batch.column("a_id").to_numpy())
+        b.append(batch.column("b_id").to_numpy())
+    if not a:
+        return
+    ids, idx = np.unique(np.concatenate(a + b), return_inverse=True)
+    n = len(idx) // 2
+    uf = _UnionFind()
+    uf.parent = list(range(len(ids)))
+    for x, y in zip(idx[:n].tolist(), idx[n:].tolist()):
+        uf.union(x, y)
+    root = np.array([uf.find(i) for i in range(len(ids))], dtype=np.int64)
+    child = root != np.arange(len(ids))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[root[child]]), pa.array(ids[child])],
+        names=["a_id", "b_id"],
+    )
+
+
 def connected_components_pairs(
     pairs: DataFrame,
     max_iter: int = 20,
@@ -1420,52 +1454,43 @@ def connected_components_pairs(
     mode: str | None = None,
     round_counter: list | None = None,
 ) -> DataFrame:
-    """Connected components over a near-dup pair graph — the operator
-    that turns PAIRS into dedup DECISIONS: every doc in a duplicate
-    cluster maps to the cluster's smallest doc_id (the deterministic
-    keeper).
+    """Connected components over a near-dup pair graph: every doc in a
+    duplicate cluster maps to the cluster's smallest doc_id (the
+    deterministic keeper). Returns (doc_id, keeper_id, cluster_size),
+    one row per doc that appears in some pair, including a (d, d, 1) row
+    for a doc whose only pairs are self-loops.
 
-    Algorithm: alternating large-star/small-star contraction (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC 2014;
-    one round = one large-star + one small-star, see _star_edges) over
-    the canonical edge set (a_id < b_id, distinct, self-loops dropped).
-    It converges to a star forest rooted at each component's minimum in
-    O(log diameter) rounds — a 1,024-node path takes 11 — so a long
-    drifting near-dup chain needs ~log2(length) rounds, not one per link.
-    Convergence = the canonical edge set is a fixed point of one full
-    round, detected by a collision-resistant signature (count +
-    bit_xor(xxhash64(a, b)) — xor cannot overflow under ANSI mode and is
-    order-insensitive over the distinct set). The result is then PROVEN
-    consistent, not assumed: every original pair must connect two nodes
-    with equal labels (one O(E) join), so a signature collision cannot
-    emit a silently-split cluster.
+    The canonical edges (a_id < b_id, distinct, no self-loops) are
+    range-partitioned on a_id, and a union-find per partition
+    (_contract_batches) turns each local component into a star around
+    its minimum id (Łącki, Mirrokni and Włodarczyk, "Connected
+    Components at Scale via Local Contractions", 2018). AQE sizes these
+    partitions by bytes, which suits union-find work, linear in edge
+    bytes: each task's work and memory are O(edges in its partition),
+    bounded by the advisory partition size; a hub whose edges share one
+    a_id lands in one task. Two-star rounds (_star_edges) then run on
+    that quotient until one round leaves it unchanged: 1 round when the
+    graph fits one partition, about log2 P + 1 for a chain cut into P
+    partitions along its ids; components whose ids scatter across
+    partitions keep two-star's O(log diameter) rounds.
 
-    Returns (doc_id, keeper_id, cluster_size), one row per doc that
-    appears in some pair — including a (d, d, 1) row for a doc whose
-    only pairs are self-loops.
+    Convergence is a signature match (count + bit_xor(xxhash64(a, b)))
+    followed by a proof: every ORIGINAL pair must join two nodes with
+    equal labels, so a signature collision cannot emit a split cluster.
+    A graph still changing after ``max_iter`` rounds raises
+    RuntimeError ("not converged"); ``round_counter``, if given, gets
+    the number of rounds appended.
 
-    ``max_iter`` bounds the rounds; a graph still changing after it
-    raises ``RuntimeError`` ("not converged") instead of emitting split
-    clusters. ``round_counter``: optional list; the number of rounds
-    used is appended (tests assert the O(log n) bound).
+    Lineage is cut after the pre-contraction and after every round (a
+    star op reads its input 2-3x): a reliable checkpoint into
+    ``checkpoint_dir`` when set, else ``localCheckpoint``. Files in
+    ``checkpoint_dir`` are not auto-deleted: pass a per-job directory
+    and delete it after use. A prior session checkpoint dir is restored
+    on exit; without one, ours remains (Spark cannot unset it) and a
+    warning says so.
 
-    Lineage is truncated EVERY round: each star op references its input
-    2-3x, so the logical plan would grow ~6x per round and the driver
-    would pay Catalyst analysis exponential in the rounds. Truncation is
-    a reliable ``checkpoint`` into ``checkpoint_dir`` when set (an
-    HDFS/object-store path on a real cluster — survives executor loss),
-    else ``localCheckpoint`` (executor-resident blocks, freed by the
-    ContextCleaner when the frames are garbage-collected). Caller
-    contract for ``checkpoint_dir``: the files written there are NOT
-    auto-deleted (Spark only removes reliable checkpoints when
-    spark.cleaner.referenceTracking.cleanCheckpoints is enabled) — pass
-    a per-job directory and delete it after consuming the result; the
-    session's checkpoint dir is restored on exit when one was previously
-    set (Spark cannot unset it, so otherwise ours remains, with a
-    warning).
-
-    ``mode`` is deprecated and ignored: "minlabel", "twostar" and "auto"
-    all run the algorithm above; any other value raises ``ValueError``.
+    ``mode`` is deprecated and ignored ("minlabel", "twostar", "auto");
+    any other value raises ``ValueError``.
     """
     if mode not in (None, "minlabel", "twostar", "auto"):
         raise ValueError(
@@ -1490,30 +1515,35 @@ def connected_components_pairs(
     )
     edges0 = canon.where(F.col("a_id") != F.col("b_id"))
     try:
-        edges = edges0
-        prev_sig = None
+        def cut(df):
+            # NON-eager localCheckpoint (the plan is truncated either
+            # way): the signature agg is the one materializing job
+            if reliable:
+                return _truncate_lineage(df, True)
+            return df.localCheckpoint(eager=False)
+
+        def signature(df):
+            sig = F.bit_xor(F.xxhash64("a_id", "b_id"))
+            return tuple(df.agg(F.count("*"), sig).collect()[0])
+
+        # the quotient is the first round's input: when it already is a
+        # star forest, that round confirms the fixed point and ends
+        edges = cut(
+            edges0.repartitionByRange("a_id").mapInArrow(
+                _contract_batches, edges0.schema
+            )
+        )
+        prev_sig = signature(edges)
         rounds = 0
         for _ in range(max_iter):
             # one distinct per round: the large-star output feeds the
             # small-star raw (dedup=False — min is duplicate-blind, the
             # per-round canonical SET is unchanged; see _star_edges)
-            nxt = _star_edges(
-                _star_edges(edges, large=True, dedup=False), large=False
+            edges = cut(
+                _star_edges(_star_edges(edges, large=True, dedup=False), large=False)
             )
-            # on the localCheckpoint path the cut is NON-eager (the plan
-            # is truncated immediately either way) so the signature agg
-            # below is the one materializing job per round
-            if reliable:
-                nxt = _truncate_lineage(nxt, True)
-            else:
-                nxt = nxt.localCheckpoint(eager=False)
             rounds += 1
-            sig = tuple(
-                nxt.agg(
-                    F.count("*"), F.bit_xor(F.xxhash64("a_id", "b_id"))
-                ).collect()[0]
-            )
-            edges = nxt
+            sig = signature(edges)
             if sig == prev_sig:
                 break
             prev_sig = sig
@@ -1588,12 +1618,11 @@ def connected_components_pairs(
 
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keeper assignment over the Manku-banded simhash pair graph — the
-    end-to-end 'pairs -> decisions' path through the two-star
-    contraction. The DuckDB oracle is a recursive-CTE transitive
-    closure: it checks the OUTPUT clustering, not the algorithm. This
-    corpus's pair graph has diameter ~19, so it also exercises the
-    logarithmic round count on a chain-shaped graph."""
+    """Keeper assignment over the Manku-banded simhash pair graph: the
+    end-to-end 'pairs -> decisions' path through
+    connected_components_pairs. The DuckDB oracle is a recursive-CTE
+    transitive closure: it checks the OUTPUT clustering, not the
+    algorithm."""
     pairs = _q_simhash_pairs_scale(spark, sf_dir)
     return connected_components_pairs(pairs)
 
