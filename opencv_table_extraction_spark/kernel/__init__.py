@@ -5,7 +5,9 @@ algorithm definitions (OpenCV docs "Extract horizontal and vertical lines
 by using morphological operations"; Otsu 1979; two-pass run-based
 union-find labeling). One run extractor, ``imaging.runs``, serves both
 the h/v line openings (a 1-D opening keeps whole runs of border-extended
-length >= k) and the connected-components labeling. All functions are
+length >= k) and the connected-components labeling. Every mask after
+``to_gray`` (threshold output, line openings, joints, grid, the scan
+router's ink raster) is a bool array with ink = True. All functions are
 deterministic and operate on NumPy arrays; they are called only from
 inside Arrow record batches (no per-row Python at the DataFrame layer).
 """

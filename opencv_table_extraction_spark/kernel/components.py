@@ -49,15 +49,14 @@ class _UnionFind:
         return ra
 
 
-def connected_components(bin_img: np.ndarray) -> np.ndarray:
-    """4-connectivity connected components of a binary image.
+def connected_components(fg: np.ndarray) -> np.ndarray:
+    """4-connectivity connected components of a bool ink mask.
 
     Returns ``stats``, an int64 array of shape (n, 5) with columns
     (x, y, w, h, area), one row per component, sorted by (y, x, w, h)
     for determinism.
     """
-    H, W = bin_img.shape
-    fg = bin_img != 0
+    H, W = fg.shape
     if not fg.any():
         return np.empty((0, 5), np.int64)
     # band compression (exact): consecutive identical rows — the common
@@ -147,8 +146,7 @@ def detect_cells(
     sanity. Returns int64 (n_cells, 4) rects (x, y, w, h) in stats order.
     """
     H, W = grid.shape
-    inv = np.where(grid == 0, np.uint8(255), np.uint8(0))
-    stats = connected_components(inv)
+    stats = connected_components(~grid)
     x, y, w, h = stats[:, 0], stats[:, 1], stats[:, 2], stats[:, 3]
     keep = (
         (x > 0)

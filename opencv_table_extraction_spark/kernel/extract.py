@@ -68,22 +68,27 @@ def arrow_out_schema() -> pa.Schema:
     return pa.schema(OUT_FIELDS)
 
 
+def _row(route: str, text: str, err: str = "") -> dict:
+    """An output row with no spans and zero counters."""
+    return {"route": route, "extracted_text": text, "spans": [], "n_rows": 0,
+            "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": err}
+
+
 def _extract_table(text: str, use_adaptive: bool) -> dict:
     pt = parse_pipe_table(text)
     if pt is None:  # classified table but unparseable -> plain fallback
-        return {"route": "plain", "extracted_text": text.strip(), "spans": [],
-                "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": ""}
+        return _row("plain", text.strip())
     # deterministic per-payload noise seed (process-independent: crc32,
     # not Python hash(), which varies with PYTHONHASHSEED)
     seed = zlib.crc32(text.encode("utf-8"))
     img, layout_rects = render_table(pt, noise_seed=seed)
     gray = to_gray(img)
     if use_adaptive:
-        bin_img = adaptive_threshold(gray)
+        ink = adaptive_threshold(gray)
     else:
-        _, bin_img = otsu_threshold(gray)
-    h_mask = morph_open_h(bin_img)
-    v_mask = morph_open_v(bin_img)
+        _, ink = otsu_threshold(gray)
+    h_mask = morph_open_h(ink)
+    v_mask = morph_open_v(ink)
     joints = mask_intersect(h_mask, v_mask)
     grid = grid_mask(h_mask, v_mask)
     # a true line crossing is at least LINE_T x LINE_T; smaller clusters
@@ -148,18 +153,11 @@ def extract_turn(text: str, use_adaptive: bool = False) -> dict:
     if route == "table":
         return _extract_table(text, use_adaptive)
     if route == "html":
-        return {"route": "html",
-                "extracted_text": html_mod.extract_main_content(text),
-                "spans": [], "n_rows": 0, "n_cols": 0, "n_cells": 0,
-                "n_joints": 0, "err": ""}
+        return _row("html", html_mod.extract_main_content(text))
     if route == "scan":
         mode, transcript = router_mod.route_page(text)
-        return {"route": mode,
-                "extracted_text": router_mod.transcribe(mode, transcript),
-                "spans": [], "n_rows": 0, "n_cols": 0, "n_cells": 0,
-                "n_joints": 0, "err": ""}
-    return {"route": "plain", "extracted_text": text.strip(), "spans": [],
-            "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": ""}
+        return _row(mode, router_mod.transcribe(mode, transcript))
+    return _row("plain", text.strip())
 
 
 def extract_batch(
@@ -173,12 +171,12 @@ def extract_batch(
     ignored (project before the map — B3). Never raises per turn: kernel
     failures land in the ``err`` column and are counted by lineage (B8).
 
-    ``keep_text=True`` (r8) echoes the input ``text`` column verbatim as
-    a trailing output column: consumers that slice span offsets out of
-    the source payload (extract_order_cells) read the echo instead of
-    join-back through a second derivation pass — the echoed Arrow column
-    is the input buffer re-emitted, so equality with the joined source
-    is by construction.
+    ``keep_text=True`` echoes the input ``text`` column verbatim as a
+    trailing output column: consumers that slice span offsets out of the
+    source payload (extract_order_cells) read the echo instead of joining
+    back through a second derivation pass. The echoed Arrow column is the
+    input buffer re-emitted, so equality with the joined source holds by
+    construction.
     """
     schema = arrow_out_schema()
     if keep_text:
@@ -195,14 +193,11 @@ def extract_batch(
             try:
                 row = extract_turn(txt or "", use_adaptive=use_adaptive)
             except Exception as e:  # noqa: BLE001 — lineage-counted
-                row = {"route": "error", "extracted_text": "", "spans": [],
-                       "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0,
-                       "err": f"{type(e).__name__}: {e}"}
+                row = _row("error", "", f"{type(e).__name__}: {e}")
             cols["conv_id"].append(cid)
             cols["turn_idx"].append(tix)
-            for k in ("route", "extracted_text", "spans", "n_rows", "n_cols",
-                      "n_cells", "n_joints", "err"):
-                cols[k].append(row[k])
+            for k, v in row.items():
+                cols[k].append(v)
             cols["proc_us"].append(int((time.perf_counter() - t0) * 1e6))
         arrays = [pa.array(cols[name], type=typ) for name, typ in OUT_FIELDS]
         if keep_text:

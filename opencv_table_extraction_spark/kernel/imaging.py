@@ -22,7 +22,8 @@ filters over ``runs``, the kernel's one run extractor (connected
 components label the same runs); cost is one pass over the canvas,
 independent of the SE size.
 
-Binary masks are uint8 with ink=255, background=0.
+Every stage after ``to_gray`` works on one mask format: a bool array,
+ink = True, background = False.
 """
 
 from __future__ import annotations
@@ -54,11 +55,11 @@ def to_gray(img: np.ndarray) -> np.ndarray:
 
 
 def otsu_threshold(gray: np.ndarray) -> tuple[int, np.ndarray]:
-    """Otsu (1979) global threshold, inverted binary (ink -> 255).
+    """Otsu (1979) global threshold, inverted binary (ink -> True).
 
     Maximizes inter-class variance over the 256-bin histogram; class 0 is
     bins [0..t]. Ties resolve to the smallest t (np.argmax), so the result
-    is deterministic. Matches THRESH_BINARY_INV: pixels <= t become 255.
+    is deterministic. Matches THRESH_BINARY_INV: pixels <= t are ink.
     """
     counts = np.bincount(gray.ravel(), minlength=256)
     nz = np.flatnonzero(counts)
@@ -70,10 +71,8 @@ def otsu_threshold(gray: np.ndarray) -> tuple[int, np.ndarray]:
         # elsewhere; for a single value or empty image every sigma_b
         # entry is 0 and argmax = 0. Rendered tables are pure {0, 255},
         # so the hot path always lands here.
-        if nz.size == 0:
-            return 0, np.zeros_like(gray, dtype=np.uint8)
         thr = int(nz[0]) if nz.size == 2 else 0
-        return thr, np.where(gray <= thr, np.uint8(255), np.uint8(0))
+        return thr, gray <= thr
     hist = counts.astype(np.float64)
     total = hist.sum()
     p = hist / total
@@ -85,15 +84,13 @@ def otsu_threshold(gray: np.ndarray) -> tuple[int, np.ndarray]:
     valid = denom > 1e-12
     sigma_b[valid] = (mu_t * omega[valid] - mu[valid]) ** 2 / denom[valid]
     thr = int(np.argmax(sigma_b))
-    # uint8 scalars keep np.where in uint8 — no int64 temp + cast pass
-    binary = np.where(gray <= thr, np.uint8(255), np.uint8(0))
-    return thr, binary
+    return thr, gray <= thr
 
 
 def adaptive_threshold(
     gray: np.ndarray, block: int = 15, C: int = -2
 ) -> np.ndarray:
-    """Mean-of-neighborhood adaptive threshold, inverted binary (ink=255).
+    """Mean-of-neighborhood adaptive threshold, inverted binary (ink=True).
 
     Equivalent to the public recipe
     ``cv2.adaptiveThreshold(~gray, 255, ADAPTIVE_THRESH_MEAN_C,
@@ -118,7 +115,7 @@ def adaptive_threshold(
     s = ii[y1, x1] - ii[y0, x1] - ii[y1, x0] + ii[y0, x0]
     cnt = (y1 - y0) * (x1 - x0)
     mean = s / cnt
-    return np.where(inv > mean - C, np.uint8(255), np.uint8(0))
+    return inv > mean - C
 
 
 def runs(fg: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -149,33 +146,36 @@ def _open_rows(fg: np.ndarray, k: int) -> np.ndarray:
     l, r = (k - 1) // 2, k // 2
     row, s, e = runs(fg)
     keep = (e - s) + l * (s == 0) + r * (e == W) >= k
-    out = np.zeros((H, W), dtype=np.uint8)
+    out = np.zeros((H, W), dtype=bool)
     for y, a, b in zip(row[keep].tolist(), s[keep].tolist(), e[keep].tolist()):
-        out[y, a:b] = 255
+        out[y, a:b] = True
     return out
 
 
-def morph_open_h(bin_img: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
+def morph_open_h(ink: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
     """Keep only horizontal line strokes: open with SE (1, W//scale).
 
     min_k = 9: noise specks are 2px and glyph dashes are 3px, so even a
     chain of three specks plus a dash (8px) cannot masquerade as a line
     stroke; real grid lines are always far longer than 9px."""
-    k = max(min_k, bin_img.shape[1] // scale)
-    return _open_rows(bin_img != 0, k)
+    k = max(min_k, ink.shape[1] // scale)
+    return _open_rows(ink, k)
 
 
-def morph_open_v(bin_img: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
-    """Keep only vertical line strokes: open with SE (H//scale, 1)."""
-    k = max(min_k, bin_img.shape[0] // scale)
-    return np.ascontiguousarray(_open_rows((bin_img != 0).T, k).T)
+def morph_open_v(ink: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
+    """Keep only vertical line strokes: open with SE (H//scale, 1).
+
+    The result is made C-contiguous: ``grid_mask``'s OR over a
+    transposed view is several times slower."""
+    k = max(min_k, ink.shape[0] // scale)
+    return np.ascontiguousarray(_open_rows(ink.T, k).T)
 
 
 def mask_intersect(h_mask: np.ndarray, v_mask: np.ndarray) -> np.ndarray:
     """Grid joints = horizontal AND vertical line masks (cv2.bitwise_and)."""
-    return np.minimum(h_mask, v_mask)
+    return h_mask & v_mask
 
 
 def grid_mask(h_mask: np.ndarray, v_mask: np.ndarray) -> np.ndarray:
     """Full line lattice = horizontal OR vertical line masks (cv2.add)."""
-    return np.maximum(h_mask, v_mask)
+    return h_mask | v_mask

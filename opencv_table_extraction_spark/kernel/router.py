@@ -77,19 +77,19 @@ def _dither_pattern(H: int, W: int) -> np.ndarray:
 def render_scan(W: int, H: int, regions: np.ndarray) -> np.ndarray:
     """Rasterize ink regions as dithered strokes at the given density.
 
-    Deterministic Bayer-style dither: within a region of density d, pixel
-    (y, x) is ink iff ((y * 7 + x * 3) % 16) < d * 16. Gives ink pixel
-    counts proportional to d * area without randomness. The pattern is
-    cached per page size (pages in a batch share dimensions).
+    Returns the page's bool ink mask (ink = True). Deterministic
+    Bayer-style dither: within a region of density d, pixel (y, x) is ink
+    iff ((y * 7 + x * 3) % 16) < d * 16. Gives ink pixel counts
+    proportional to d * area without randomness. The pattern is cached
+    per page size (pages in a batch share dimensions).
     """
-    img = np.full((H, W), 255, dtype=np.uint8)
+    ink = np.zeros((H, W), dtype=bool)
     pattern = _dither_pattern(H, W)
     for x, y, w, h, d in regions:
         x0, y0 = int(x), int(y)
         x1, y1 = min(W, x0 + int(w)), min(H, y0 + int(h))
-        sub = pattern[y0:y1, x0:x1] < d * 16
-        img[y0:y1, x0:x1][sub] = 0
-    return img
+        ink[y0:y1, x0:x1] |= pattern[y0:y1, x0:x1] < d * 16
+    return ink
 
 
 def route_page(text: str) -> tuple[str, str]:
@@ -102,12 +102,12 @@ def route_page(text: str) -> tuple[str, str]:
     test2.py:5 carve-out).
     """
     W, H, regions, transcript = parse_scan(text)
-    img = render_scan(W, H, regions)
+    ink = render_scan(W, H, regions)
     inked = []
     for x, y, w, h, _ in regions:
         x0, y0 = int(x), int(y)
         x1, y1 = min(W, x0 + int(w)), min(H, y0 + int(h))
-        ink_px = int(np.count_nonzero(img[y0:y1, x0:x1] == 0))
+        ink_px = int(np.count_nonzero(ink[y0:y1, x0:x1]))
         if ink_px >= MIN_REGION_INK_PX:
             inked.append((x0, y0, x1 - x0, y1 - y0, ink_px))
     if len(inked) >= 2:

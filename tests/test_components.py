@@ -38,7 +38,7 @@ def bfs_components(img):
 
 @pytest.mark.parametrize("density", [0.1, 0.3, 0.5, 0.7])
 def test_components_match_bfs(density):
-    img = (RNG.rand(40, 55) < density).astype(np.uint8) * 255
+    img = RNG.rand(40, 55) < density
     stats = connected_components(img)
     ref = bfs_components(img)
     assert len(stats) == len(ref)
@@ -46,19 +46,19 @@ def test_components_match_bfs(density):
 
 
 def test_components_empty_and_full():
-    stats = connected_components(np.zeros((5, 5), np.uint8))
+    stats = connected_components(np.zeros((5, 5), bool))
     assert stats.shape == (0, 5)
-    stats = connected_components(np.full((4, 6), 255, np.uint8))
+    stats = connected_components(np.ones((4, 6), bool))
     assert len(stats) == 1 and tuple(stats[0]) == (0, 0, 6, 4, 24)
 
 
 def test_detect_cells_excludes_border_and_noise():
-    grid = np.zeros((50, 70), np.uint8)
+    grid = np.zeros((50, 70), bool)
     # a 2x2 cell table drawn as grid lines
     for y in (10, 25, 40):
-        grid[y:y+2, 10:62] = 255
+        grid[y:y+2, 10:62] = True
     for x in (10, 35, 60):
-        grid[10:42, x:x+2] = 255
+        grid[10:42, x:x+2] = True
     cells = detect_cells(grid)
     assert len(cells) == 4
     for x, y, w, h in cells:

@@ -3,14 +3,22 @@
 import numpy as np
 import pytest
 
+from opencv_table_extraction_spark.fixtures.gen import gen_tables
 from opencv_table_extraction_spark.kernel.imaging import (
     adaptive_threshold,
     grid_mask,
     mask_intersect,
     morph_open_h,
+    morph_open_v,
     otsu_threshold,
     to_gray,
 )
+from opencv_table_extraction_spark.kernel.render import (
+    classify_payload,
+    parse_pipe_table,
+    render_table,
+)
+from opencv_table_extraction_spark.kernel.router import parse_scan, render_scan
 
 RNG = np.random.RandomState(1234)
 
@@ -42,39 +50,57 @@ def test_otsu_matches_bruteforce(trial):
                         RNG.randint(200, 256, (40, 50))).astype(np.uint8)
     thr, binary = otsu_threshold(gray)
     assert thr == brute_otsu(gray)
-    assert np.array_equal(binary, np.where(gray <= thr, 255, 0).astype(np.uint8))
+    assert np.array_equal(binary, np.where(gray <= thr, 255, 0).astype(np.uint8) != 0)
 
 
 def test_otsu_empty_and_flat():
+    thr, b = otsu_threshold(np.zeros((0, 5), np.uint8))
+    assert thr == 0 and b.shape == (0, 5) and b.dtype == bool
     flat = np.full((10, 10), 77, np.uint8)
     thr, b = otsu_threshold(flat)
-    assert b.shape == flat.shape
+    assert thr == 0 and b.shape == flat.shape and not b.any()
 
 
 def test_open_removes_short_keeps_long_runs():
     img = np.zeros((5, 60), np.uint8)
     img[2, 5:9] = 255     # run of 4 < k
     img[2, 20:45] = 255   # run of 25 >= k
-    out = morph_open_h(img, scale=61, min_k=10)  # SE exactly (1, 10)
-    assert out[2, 5:9].sum() == 0
-    assert np.array_equal(out[2, 20:45], np.full(25, 255, np.uint8))
-    assert out.sum() == 25 * 255  # opening is idempotent-exact on long runs
+    out = morph_open_h(img != 0, scale=61, min_k=10)  # SE exactly (1, 10)
+    assert not out[2, 5:9].any()
+    assert out[2, 20:45].all()
+    assert out.sum() == 25  # opening is idempotent-exact on long runs
 
 
 def test_adaptive_threshold_lines_on_white():
     img = np.full((60, 80), 255, np.uint8)
     img[30, 10:70] = 0  # a thin dark line
     out = adaptive_threshold(img, block=15, C=-2)
-    assert (out[30, 12:68] == 255).all()      # line is ink
-    assert out[5, 5] == 0 and out[55, 75] == 0  # flat white is background
+    assert out[30, 12:68].all()               # line is ink
+    assert not out[5, 5] and not out[55, 75]  # flat white is background
 
 
 def test_mask_ops_and_gray():
-    a = np.array([[0, 255], [255, 255]], np.uint8)
-    b = np.array([[0, 0], [255, 0]], np.uint8)
-    assert np.array_equal(mask_intersect(a, b), np.array([[0, 0], [255, 0]], np.uint8))
-    assert np.array_equal(grid_mask(a, b), np.array([[0, 255], [255, 255]], np.uint8))
+    a = np.array([[0, 1], [1, 1]], bool)
+    b = np.array([[0, 0], [1, 0]], bool)
+    assert np.array_equal(mask_intersect(a, b), np.array([[0, 0], [1, 0]], bool))
+    assert np.array_equal(grid_mask(a, b), np.array([[0, 1], [1, 1]], bool))
     rgb = np.zeros((2, 2, 3), np.uint8)
     rgb[..., 1] = 255
     g = to_gray(rgb)
     assert g.shape == (2, 2) and abs(int(g[0, 0]) - 150) <= 1  # 0.587*255
+
+
+def test_every_mask_after_gray_is_bool():
+    """One mask format: each stage from the threshold to the grid, and
+    the scan rasterizer, returns a bool ink mask."""
+    texts = gen_tables(60, seed=42)[0].column("text").to_pylist()
+    table = next(t for t in texts if classify_payload(t) == "table")
+    scan = next(t for t in texts if classify_payload(t) == "scan")
+    gray = to_gray(render_table(parse_pipe_table(table))[0])
+    _, otsu = otsu_threshold(gray)
+    h, v = morph_open_h(otsu), morph_open_v(otsu)
+    W, H, regions, _ = parse_scan(scan)
+    masks = [otsu, adaptive_threshold(gray), h, v, mask_intersect(h, v),
+             grid_mask(h, v), render_scan(W, H, regions)]
+    assert [m.dtype for m in masks] == [np.dtype(bool)] * len(masks)
+    assert all(m.any() for m in masks)
