@@ -55,6 +55,9 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
     Returns ``stats``, an int64 array of shape (n, 5) with columns
     (x, y, w, h, area), one row per component, sorted by (y, x, w, h)
     for determinism.
+
+    If no run touches one in the band above (a joint mask's isolated
+    squares), each run is a component, already in (y, x) order.
     """
     H, W = fg.shape
     if not fg.any():
@@ -66,7 +69,9 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
     # construction, so labeling over bands is equivalent to labeling over
     # rows. Turns O(H * runs/row) union-find work into O(bands * runs).
     if H > 1:
-        changed = np.any(fg[1:] != fg[:-1], axis=1)
+        # each row as one W-byte scalar: a row compare is one memcmp
+        row_key = np.ascontiguousarray(fg).view(np.dtype((np.void, W)))[:, 0]
+        changed = row_key[1:] != row_key[:-1]
         band_y0 = np.concatenate(([0], np.flatnonzero(changed) + 1))
     else:
         band_y0 = np.zeros(1, np.int64)
@@ -108,6 +113,11 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
         prev_lo, prev_hi, prev_row = i, j_end, r
         i = j_end
 
+    run_y0, run_y1 = band_y0[r_row], band_y1[r_row]
+    if len(uf.parent) == n_runs:  # no run merged: runs are the components
+        w, h = r_e - r_s, run_y1 - run_y0
+        return np.stack([r_s, run_y0, w, h, w * h], axis=1)
+
     roots = [find(x) for x in run_lab]
     uniq: dict[int, int] = {}
     comp = np.array([uniq.setdefault(x, len(uniq)) for x in roots], dtype=np.int64)
@@ -120,8 +130,6 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
     y0 = np.full(n, H, np.int64)
     y1 = np.zeros(n, np.int64)
     area = np.zeros(n, np.int64)
-    run_y0 = band_y0[r_row]
-    run_y1 = band_y1[r_row]
     np.minimum.at(x0, comp, r_s)
     np.maximum.at(x1, comp, r_e)
     np.minimum.at(y0, comp, run_y0)
@@ -166,14 +174,16 @@ def order_cells(rects: np.ndarray) -> np.ndarray:
     Rows are formed by scanning y-centers in ascending order and starting
     a new row when the gap to the previous center exceeds half the median
     cell height (BASELINE.json:6 "sorts cells by (row, col)"); stable and
-    deterministic. Returns int64 (n, 6): (row, col, x, y, w, h).
+    deterministic. The median is read off ``np.sort``, the same float as
+    ``np.median``. Returns int64 (n, 6): (row, col, x, y, w, h).
     """
     n = len(rects)
     if n == 0:
         return np.empty((0, 6), np.int64)
     yc = rects[:, 1] + rects[:, 3] / 2.0
     xc = rects[:, 0] + rects[:, 2] / 2.0
-    gap = max(2.0, float(np.median(rects[:, 3])) / 2.0)
+    hs = np.sort(rects[:, 3])  # median / 2 = (middle_lo + middle_hi) / 4
+    gap = max(2.0, float(hs[(n - 1) // 2] + hs[n // 2]) / 4.0)
     order = np.lexsort((xc, yc))
     # row ids: a new row starts when the gap to the PREVIOUS center (in
     # (yc, xc) order) exceeds `gap` — the same chained comparison the

@@ -100,10 +100,12 @@ def _extract_table(text: str, use_adaptive: bool) -> dict:
     ordered = order_cells(rects)
 
     # match detected cells back to layout rects by center containment —
-    # one vectorized (n_cells x n_layout) containment test, not a loop
+    # one vectorized (n_cells x n_layout) containment test, not a loop.
+    # ``ordered`` is sorted by (row, col): a line is a run of one row's cells
     err = ""
     spans: list[dict] = []
-    row_texts: dict[int, list[tuple[int, str]]] = {}
+    row_cells: list[list[str]] = []
+    last_row = -1
     if len(ordered):
         cx = (ordered[:, 2] + ordered[:, 4] / 2.0)[:, None]
         cy = (ordered[:, 3] + ordered[:, 5] / 2.0)[:, None]
@@ -126,20 +128,17 @@ def _extract_table(text: str, use_adaptive: bool) -> dict:
                 {"row": row, "col": col, "x": lx0, "y": ly0, "w": lw0,
                  "h": lh0, "start": cell.start, "end": cell.end}
             )
-            row_texts.setdefault(row, []).append((col, text[cell.start : cell.end]))
+            if row != last_row:
+                row_cells.append([])
+                last_row = row
+            row_cells[-1].append(text[cell.start : cell.end])
 
-    lines = []
-    for r in sorted(row_texts):
-        cells = [t for _, t in sorted(row_texts[r], key=lambda p: p[0])]
-        lines.append("\t".join(cells))
-    n_rows = len(row_texts)
-    n_cols = max((len(v) for v in row_texts.values()), default=0)
     return {
         "route": "table",
-        "extracted_text": "\n".join(lines),
+        "extracted_text": "\n".join("\t".join(cells) for cells in row_cells),
         "spans": spans,
-        "n_rows": n_rows,
-        "n_cols": n_cols,
+        "n_rows": len(row_cells),
+        "n_cols": max(map(len, row_cells), default=0),
         "n_cells": len(spans),
         "n_joints": int(n_joints),
         "err": err,

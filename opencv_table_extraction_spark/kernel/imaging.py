@@ -60,20 +60,18 @@ def otsu_threshold(gray: np.ndarray) -> tuple[int, np.ndarray]:
     Maximizes inter-class variance over the 256-bin histogram; class 0 is
     bins [0..t]. Ties resolve to the smallest t (np.argmax), so the result
     is deterministic. Matches THRESH_BINARY_INV: pixels <= t are ink.
+
+    With <=2 gray levels sigma_b is 0 outside [lo, hi) and constant inside,
+    so argmax = lo (0 for one level or none), found from min/max and two
+    counts without the histogram: rendered tables are pure {0, 255}.
     """
-    counts = np.bincount(gray.ravel(), minlength=256)
-    nz = np.flatnonzero(counts)
-    if nz.size <= 2:
-        # <=2 distinct gray levels: sigma_b is 0 outside [v0, v1) and
-        # constant inside, so argmax = v0 (or 0 when degenerate) — skip
-        # the 256-bin float pass. Exactly equal to the general branch:
-        # for {v0 < v1}, omega/mu are flat on [v0, v1) and denom = 0
-        # elsewhere; for a single value or empty image every sigma_b
-        # entry is 0 and argmax = 0. Rendered tables are pure {0, 255},
-        # so the hot path always lands here.
-        thr = int(nz[0]) if nz.size == 2 else 0
-        return thr, gray <= thr
-    hist = counts.astype(np.float64)
+    lo, hi = (int(gray.min()), int(gray.max())) if gray.size else (0, 0)
+    if lo == hi:
+        return 0, gray <= 0
+    ink = gray <= lo
+    if np.count_nonzero(ink) + np.count_nonzero(gray == hi) == gray.size:
+        return lo, ink
+    hist = np.bincount(gray.ravel(), minlength=256).astype(np.float64)
     total = hist.sum()
     p = hist / total
     omega = np.cumsum(p)
@@ -121,35 +119,32 @@ def adaptive_threshold(
 def runs(fg: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Every foreground run of a boolean mask, one pass over the canvas.
 
-    A guard column of False is appended so runs never straddle rows; on
-    the flattened mask (with a False prepended) the edges alternate
-    start, end. Returns (row, start, end) int64 arrays, end exclusive,
-    sorted by (row, start).
+    The mask is copied into a flat buffer of H*(W+1)+1 bools, a False guard
+    before each row and one False at the end, so the edges buf[i] != buf[i+1]
+    alternate start, end at column i - row*(W+1). Returns (row, start, end)
+    int64 arrays, end exclusive, sorted by (row, start).
     """
     H, W = fg.shape
-    padded = np.zeros((H, W + 1), dtype=bool)
-    padded[:, :W] = fg
-    edges = np.flatnonzero(np.diff(padded.ravel(), prepend=False))
+    buf = np.zeros(H * (W + 1) + 1, dtype=bool)
+    buf[:-1].reshape(H, W + 1)[:, 1:] = fg
+    edges = np.flatnonzero(buf[1:] != buf[:-1])
     starts, ends = edges[0::2], edges[1::2]
     rows = starts // (W + 1)
     return rows, starts - rows * (W + 1), ends - rows * (W + 1)
 
 
-def _open_rows(fg: np.ndarray, k: int) -> np.ndarray:
+def _open_rows(fg: np.ndarray, k: int) -> tuple[list[int], list[int], list[int]]:
     """Opening of each row by a (1, k) SE as a filter over ``runs(fg)``:
     a run survives whole iff its border-extended length is >= k, where
     out-of-image pixels count as ink for the erosion, extending a run
     that touches the left border by l = (k-1)//2 and the right border by
-    r = k//2. Kept runs are only the line strokes, so painting them is a
-    short loop."""
-    H, W = fg.shape
+    r = k//2. Returns the kept runs as (row, start, end) lists: only the
+    line strokes, so the caller paints them in a short loop."""
+    W = fg.shape[1]
     l, r = (k - 1) // 2, k // 2
     row, s, e = runs(fg)
     keep = (e - s) + l * (s == 0) + r * (e == W) >= k
-    out = np.zeros((H, W), dtype=bool)
-    for y, a, b in zip(row[keep].tolist(), s[keep].tolist(), e[keep].tolist()):
-        out[y, a:b] = True
-    return out
+    return row[keep].tolist(), s[keep].tolist(), e[keep].tolist()
 
 
 def morph_open_h(ink: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
@@ -159,16 +154,22 @@ def morph_open_h(ink: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray
     chain of three specks plus a dash (8px) cannot masquerade as a line
     stroke; real grid lines are always far longer than 9px."""
     k = max(min_k, ink.shape[1] // scale)
-    return _open_rows(ink, k)
+    out = np.zeros(ink.shape, dtype=bool)
+    for y, a, b in zip(*_open_rows(ink, k)):
+        out[y, a:b] = True
+    return out
 
 
 def morph_open_v(ink: np.ndarray, scale: int = 20, min_k: int = 9) -> np.ndarray:
     """Keep only vertical line strokes: open with SE (H//scale, 1).
 
-    The result is made C-contiguous: ``grid_mask``'s OR over a
-    transposed view is several times slower."""
+    The runs of ``ink.T`` are painted as ``out[a:b, x]`` into an (H, W)
+    array: C-contiguous by construction, as ``grid_mask``'s OR needs."""
     k = max(min_k, ink.shape[0] // scale)
-    return np.ascontiguousarray(_open_rows(ink.T, k).T)
+    out = np.zeros(ink.shape, dtype=bool)
+    for x, a, b in zip(*_open_rows(ink.T, k)):
+        out[a:b, x] = True
+    return out
 
 
 def mask_intersect(h_mask: np.ndarray, v_mask: np.ndarray) -> np.ndarray:

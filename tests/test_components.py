@@ -10,6 +10,7 @@ from opencv_table_extraction_spark.kernel.components import (
     detect_cells,
     order_cells,
 )
+from opencv_table_extraction_spark.kernel.imaging import morph_open_v
 
 RNG = np.random.RandomState(99)
 
@@ -50,6 +51,63 @@ def test_components_empty_and_full():
     assert stats.shape == (0, 5)
     stats = connected_components(np.ones((4, 6), bool))
     assert len(stats) == 1 and tuple(stats[0]) == (0, 0, 6, 4, 24)
+
+
+def _spy_lexsort(monkeypatch):
+    calls = []
+    real = np.lexsort
+    monkeypatch.setattr(np, "lexsort", lambda *a, **k: calls.append(1) or real(*a, **k))
+    return calls
+
+
+def test_components_isolated_rects_take_no_merge_exit(monkeypatch):
+    """Row-aligned rectangles (joint-like) and a checkerboard of squares
+    touching only at corners: no run merges with one above, so the runs
+    are the components (no final sort needed), equal to BFS."""
+    joints = np.zeros((30, 50), bool)
+    for y in (2, 12, 25):
+        for x in (0, 9, 20, 47):
+            joints[y:y + 3, x:x + 3] = True
+    checker = np.kron((np.indices((6, 7)).sum(axis=0) % 2).astype(bool),
+                      np.ones((3, 4), bool))
+    for img in (joints, checker):
+        calls = _spy_lexsort(monkeypatch)
+        stats = connected_components(img)
+        assert calls == []
+        assert [tuple(s) for s in stats] == bfs_components(img)
+
+
+def test_components_merged_rects_match_bfs():
+    """Rectangles that span different bands merge across them."""
+    img = np.zeros((20, 30), bool)
+    img[1:9, 2:6] = True
+    img[4:15, 10:13] = True
+    img[12:19, 20:29] = True
+    img[6:8, 5:11] = True  # bridge: joins the first two
+    assert [tuple(s) for s in connected_components(img)] == bfs_components(img)
+
+
+@pytest.mark.parametrize("shape", [(1, 1), (1, 40), (40, 1), (17, 13), (9, 31)])
+def test_components_thin_and_odd_widths(shape):
+    rng = np.random.RandomState(7)
+    for density in (0.3, 0.6):
+        img = rng.rand(*shape) < density
+        assert [tuple(s) for s in connected_components(img)] == bfs_components(img)
+
+
+def test_components_non_contiguous_input():
+    base = np.random.RandomState(8).rand(37, 29) < 0.5
+    for img in (base.T, base[::2, ::3], base[3:, 1:-2]):
+        assert not img.flags.c_contiguous
+        assert [tuple(s) for s in connected_components(img)] == bfs_components(img)
+
+
+def test_morph_open_v_is_c_contiguous():
+    ink = np.random.RandomState(9).rand(40, 30) < 0.5
+    ink[:, 7] = True
+    v = morph_open_v(ink)
+    assert v.flags.c_contiguous and v[:, 7].all()
+    assert morph_open_v(ink.T).flags.c_contiguous
 
 
 def test_detect_cells_excludes_border_and_noise():

@@ -61,6 +61,45 @@ def test_otsu_empty_and_flat():
     assert thr == 0 and b.shape == flat.shape and not b.any()
 
 
+def _spy_bincount(monkeypatch):
+    calls = []
+    real = np.bincount
+    monkeypatch.setattr(np, "bincount", lambda *a, **k: calls.append(1) or real(*a, **k))
+    return calls
+
+
+@pytest.mark.parametrize("levels", [(0,), (77,), (255,), (0, 255), (37, 38),
+                                    (254, 255), (0, 1), (120, 200)])
+def test_otsu_two_level_shortcut_matches_bruteforce(levels, monkeypatch):
+    """<=2 gray levels: the min/max shortcut gives brute force's threshold
+    and mask without building the histogram."""
+    rng = np.random.RandomState(sum(levels))
+    gray = np.array(levels, np.uint8)[rng.randint(0, len(levels), (23, 37))]
+    gray.flat[: len(levels)] = levels  # every level present
+    calls = _spy_bincount(monkeypatch)
+    thr, ink = otsu_threshold(gray)
+    assert calls == []
+    assert thr == brute_otsu(gray)
+    assert ink.dtype == bool and np.array_equal(ink, gray <= thr)
+
+
+@pytest.mark.parametrize("levels,stray", [((0, 255), 128), ((37, 38), 200),
+                                          ((37, 38), 0), ((254, 255), 0),
+                                          ((254, 255), 253)])
+def test_otsu_two_levels_plus_stray_takes_histogram(levels, stray, monkeypatch):
+    """One pixel at a third level: the shortcut's count check fails and
+    the histogram branch decides, still equal to brute force."""
+    rng = np.random.RandomState(stray)
+    gray = np.array(levels, np.uint8)[rng.randint(0, 2, (23, 37))]
+    gray.flat[:2] = levels
+    gray[11, 17] = stray
+    calls = _spy_bincount(monkeypatch)
+    thr, ink = otsu_threshold(gray)
+    assert calls == [1]
+    assert thr == brute_otsu(gray)
+    assert np.array_equal(ink, gray <= thr)
+
+
 def test_open_removes_short_keeps_long_runs():
     img = np.zeros((5, 60), np.uint8)
     img[2, 5:9] = 255     # run of 4 < k

@@ -1,9 +1,10 @@
 """Property-based hardening (hypothesis) for the imaging primitives:
 morphology vs brute force on arbitrary masks, Otsu vs argmax scan on
-arbitrary histograms, CC invariants, parse-offset round-trips."""
+arbitrary histograms, CC invariants, parse-offset round-trips, and the
+render geometry."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
@@ -13,7 +14,11 @@ from opencv_table_extraction_spark.kernel.imaging import (
     morph_open_v,
     otsu_threshold,
 )
-from opencv_table_extraction_spark.kernel.render import parse_pipe_table
+from opencv_table_extraction_spark.kernel.render import (
+    CHAR_W,
+    parse_pipe_table,
+    render_table,
+)
 
 masks = arrays(
     np.uint8,
@@ -96,3 +101,28 @@ def test_parse_offsets_roundtrip(rows):
     assert pt is not None
     for cell in pt.cells:
         assert text[cell.start : cell.end] == cell.text
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.lists(st.text(
+    alphabet=st.characters(blacklist_characters="|\n\r", min_codepoint=32,
+                           max_codepoint=126),
+    max_size=120).map(str.strip), min_size=1, max_size=12),
+    min_size=1, max_size=6))
+def test_render_dash_pixels_inside_canvas(rows):
+    """Every dash pixel render_table scatters lies inside the (H, W)
+    canvas. The scatter is fancy indexing, which raises on an index past
+    the edge (and wraps a negative one) where a slice would clip, so a
+    geometry change must fail here rather than in the err column."""
+    pt = parse_pipe_table("\n".join("| " + " | ".join(r) + " |" for r in rows))
+    assume(pt is not None)  # every row may parse as a |---| separator
+    img, rects = render_table(pt)
+    H, W = img.shape
+    for cell, (x, y, w, h) in zip(pt.cells, rects.tolist()):
+        npx = min(len(cell.text) * CHAR_W, w - 8)
+        if npx <= 0:
+            continue
+        cols = x + 4 + np.flatnonzero(np.arange(npx) % 6 < 3)
+        cy = y + h // 2
+        assert 0 <= cols[0] and cols[-1] < W and 0 <= cy and cy + 1 < H
+        assert not img[cy : cy + 2, cols].any()  # the pixels are ink
