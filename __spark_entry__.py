@@ -853,22 +853,18 @@ FROM t GROUP BY conv_id
 
 # ------------------------------------------------------------ registry
 
-# The driver grades at most 50 registered queries (r4/r5 lesson: rows
-# past the cap silently fall out of CORRECTNESS_rN and the "deliberate
-# sacrifice" list grows every round). The registry therefore holds
-# EXACTLY the 50 driver-graded rows — one per certified operator family
-# member — and the redundant-within-family rows live in
-# ``extra_queries()`` / ``extra_oracle_sql()`` below, which
-# tools/check_queries.py verifies in every sweep with the same
-# oracle contract (they are certified, just not driver-graded).
+# At most 50 registered queries are graded; rows past the cap would fall
+# out of the correctness report. The registry therefore holds EXACTLY
+# the 50 graded rows — one per certified operator family member — and
+# the redundant-within-family rows live in ``extra_queries()`` /
+# ``extra_oracle_sql()`` below, which tools/check_queries.py verifies in
+# every sweep with the same oracle contract (they are certified, just
+# not graded).
 #
-# STANDING ROTATION RULE (r6 verdict #1): new operators are
-# driver-graded in their DEBUT round; long-stable rows whose operator
-# family keeps other graded coverage rotate into extras to stay under
-# the 50-row cap. r7 rotation: the four r6 operators
-# (text_repetition_stats, text_scrub_pii, text_sample_by_quality,
-# dedup_containment_pairs) plus the new sim_ivf_batch_search move INTO
-# the graded registry; five veterans move out:
+# Rotation rule: a new operator is graded from the change that adds it;
+# long-stable rows whose operator family keeps other graded coverage
+# live in extras to stay under the cap. The extras and the graded
+# coverage each one leans on:
 #   semi_join_f_customers      (joins keep equi/broadcast/anti/as-of rows)
 #   event_sliding_counts       (windows keep session/native/olympic rows)
 #   top_bigrams                (text keeps seven+ certified rows)
@@ -876,16 +872,15 @@ FROM t GROUP BY conv_id
 #   dedup_simhash_pairs        (guarded quadratic radius-12 exactness
 #                               mode; dedup_simhash certifies the hash,
 #                               _pairs_scale the at-scale banding)
-#   union_distinct_nations     (set ops; r7 rotation — was graded r1-r6)
-#   event_tumbling_counts      (windows; r7 rotation — was graded r1-r6)
-#   part_type_revenue          (aggregation; r7 rotation)
-#   anti_join_quiet_customers  (joins; r7 rotation — semi/anti family
-#                               keeps the graded events_asof rows)
-#   event_rollup_counts        (ROLLUP, §2.C extra; r7 rotation to make
-#                               room for sim_ivf_batch_search)
-#   dedup_pairs_crosscheck_high (r7, extras by design: same oracle and
-#                               invariant as the graded crosscheck row,
-#                               just the recall="high" banding profile)
+#   union_distinct_nations     (set ops)
+#   event_tumbling_counts      (windows)
+#   part_type_revenue          (aggregation)
+#   anti_join_quiet_customers  (joins; the semi/anti family keeps the
+#                               graded events_asof rows)
+#   event_rollup_counts        (ROLLUP, §2.C extra)
+#   dedup_pairs_crosscheck_high (same oracle and invariant as the graded
+#                               crosscheck row, just the recall="high"
+#                               banding profile)
 _EXTRA = {
     "dedup_pairs_crosscheck_high",
     "semi_join_f_customers",

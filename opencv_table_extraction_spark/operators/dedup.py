@@ -3,14 +3,16 @@ near-dup (blocked pairwise baseline and exact prefix-filter join),
 asymmetric containment, MinHash+LSH, SimHash, SRP embedding dedup,
 connected components and the keep-filter that applies the decisions.
 
-Joins, aggregations and windows stay JVM-side; per-document and per-pair
-numeric work runs in Arrow-batch (mapInArrow) kernels — minhash bands,
-pair verification, shingle rows, simhash, SRP sketches and the
-components pre-contraction — because Spark interprets higher-order-
-function lambdas and cannot express a union-find. The bucketed
-generators (LSH, Jaccard prefix, simhash, SRP) get their candidates from
-a groupBy on the bucket key plus in-bucket pair enumeration
-(_bucket_pairs), never from a self-join of the bucket rows.
+Joins, aggregations, windows and native array ops stay JVM-side; every
+per-document and per-pair primitive has one implementation, an
+Arrow-batch (mapInArrow) kernel — word n-gram rows, minhash bands, pair
+verification, simhash, SRP sketches and the components pre-contraction
+— because Spark interprets higher-order-function lambdas and cannot
+express a union-find. Each kernel's output columns are one module-level
+``pa.Schema``; the Spark side passes ``from_arrow_schema`` of it. The
+bucketed generators (LSH, Jaccard prefix, simhash, SRP) get their
+candidates from a groupBy on the bucket key plus in-bucket pair
+enumeration (_bucket_pairs), never from a self-join of the bucket rows.
 
 The dedup corpus derives near-duplicates deterministically from the
 documents table (each doc unioned with its 90%-prefix truncation at
@@ -27,9 +29,10 @@ import functools
 import re
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..session import kernel_partitions
 
@@ -52,26 +55,76 @@ MAX_BUCKET = 4096
 MAX_BLOCK = 20_000
 
 
+# The JVM's \s: ASCII whitespace [ \t\n\x0B\f\r] only. Python's Unicode
+# \s also matches NBSP, EM SPACE, \x1c-\x1f and \x85, which Spark and
+# DuckDB keep inside tokens.
+_WS = re.compile(r"\s+", re.ASCII)
+# Word n-gram width of the shingle sets behind Jaccard, containment and
+# the prefix joins (decontamination uses DECONTAM_NGRAM).
+_SHINGLE_N = 3
+
+
 def _jvm_tokens(text: str | None) -> list[str]:
     """Tokenize exactly like the JVM/DuckDB pipelines' split(trim(col),
     '\\s+'): trim strips SPACES only (Spark StringTrim and DuckDB trim
-    both default to ' '), and the split keeps leading AND trailing empty
-    tokens when the trimmed text is edged with non-space whitespace
-    (Spark's split uses limit=-1, which preserves trailing empties —
-    identical to Python re.split). Python's .strip().split() differs on
-    texts edged with tabs/newlines — every Python kernel that must agree
-    with a JVM expression or a DuckDB oracle tokenizes through here.
-    (tests/test_operators.py pins edge-whitespace agreement directly.)"""
-    return re.split(r"\s+", (text or "").strip(" "))
+    both default to ' '), the split runs on ASCII whitespace only, and
+    it keeps leading AND trailing empty tokens when the trimmed text is
+    edged with non-space whitespace (Spark's split uses limit=-1, which
+    preserves trailing empties, as re.split does). Python's
+    .strip().split() differs on both counts; every Python kernel that
+    must agree with a JVM expression or a DuckDB oracle tokenizes
+    through here (tests/test_operators.py pins the agreement)."""
+    return _WS.split((text or "").strip(" "))
 
 
-def _gram_set(text: str | None) -> set[str]:
-    """Distinct word 3-grams of ``text`` — the one gram semantics of every
-    Python kernel here, equal to shingles() and the DuckDB oracle:
-    _jvm_tokens tokenization, " ".join 3-grams, and one partial gram for
-    texts with fewer than 3 tokens."""
+def _gram_set(text: str | None, n: int) -> set[str]:
+    """Distinct word n-grams of ``text``: _jvm_tokens tokenization,
+    " ".join n-grams, and one partial gram for texts with fewer than n
+    tokens — the gram semantics of the DuckDB oracles. The one word
+    n-gram implementation: verify, gram rows, containment, the prefix
+    joins, the Jaccard baseline and decontamination all use it."""
     toks = _jvm_tokens(text)
-    return {" ".join(toks[i : i + 3]) for i in range(max(len(toks) - 2, 1))}
+    return {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))}
+
+
+# Output of the gram-row kernel: one row per distinct (doc_id, gram),
+# with the doc's distinct-gram count sz.
+_GRAM_SCHEMA = pa.schema(
+    [("doc_id", pa.int64()), ("shingle", pa.string()), ("sz", pa.int32())]
+)
+
+
+def _shingle_rows_batches(batches, n: int):
+    """Arrow-batch kernel: (doc_id, text) -> _GRAM_SCHEMA rows, one per
+    gram of _gram_set(text, n). Spark evaluates higher-order-function
+    lambdas interpreted (~3 ms/doc for the same grams as a JVM
+    expression); the Python set build is ~10 us/doc, cheap enough to
+    recompute in every consumer's subtree."""
+    for batch in batches:
+        doc_ids = batch.column("doc_id").to_pylist()
+        texts = batch.column("text").to_pylist()
+        out_id, out_sh, out_sz = [], [], []
+        for doc_id, text in zip(doc_ids, texts):
+            grams = _gram_set(text, n)
+            out_id.extend([doc_id] * len(grams))
+            out_sh.extend(grams)
+            out_sz.extend([len(grams)] * len(grams))
+        yield pa.RecordBatch.from_arrays(
+            [out_id, out_sh, out_sz], schema=_GRAM_SCHEMA
+        )
+
+
+def _gram_rows(docs: DataFrame, n: int, widen: bool) -> DataFrame:
+    """(doc_id, text) -> (doc_id, shingle, sz) rows of distinct word
+    n-grams. ``widen`` hash-partitions the docs to the kernel width
+    first, so a 1-file scan does not run the kernel in one task; without
+    it the kernel is a narrow map with no exchange above the scan."""
+    src = docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    if widen:
+        src = src.repartition(kernel_partitions(docs.sparkSession), "doc_id")
+    return src.mapInArrow(
+        functools.partial(_shingle_rows_batches, n=n), from_arrow_schema(_GRAM_SCHEMA)
+    )
 
 
 def _bucket_ids(
@@ -178,12 +231,17 @@ FROM documents
 """
 
 
+def normalized_fingerprint(col):
+    """sha256 of the lowered, trimmed, whitespace-collapsed text: the
+    exact-dedup key, and textstats' document fingerprint."""
+    return F.sha2(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "), 256)
+
+
 def exact_dedup(corpus: DataFrame) -> DataFrame:
     """Exact dedup: group identical normalized text by sha256; keep the
     lowest doc_id (deterministic keeper)."""
-    h = F.sha2(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "), 256)
     return (
-        corpus.withColumn("fp", h)
+        corpus.withColumn("fp", normalized_fingerprint("text"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies"))
     )
@@ -206,25 +264,6 @@ FROM corpus GROUP BY 1
 """
 
 
-def shingles(col, n: int = 3, distinct: bool = True):
-    """Word n-gram shingle set, as a JVM-side array expression.
-
-    ``distinct=False`` skips the array_distinct pass — correct wherever
-    duplicates are harmless (the minhash min is duplicate-insensitive),
-    and worth it: distinct over a ~200-element string array is the most
-    expensive part of the expression."""
-    toks = F.split(F.trim(col), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        # try_element_at: texts shorter than n tokens yield one
-        # partial shingle instead of an ANSI out-of-bounds error
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(toks, (i + k + 1).cast("int")) for k in range(n)]
-        ),
-    )
-    return F.array_distinct(grams) if distinct else grams
-
-
 def jaccard_pairs(
     corpus: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
@@ -232,7 +271,11 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Blocked pairwise n-gram Jaccard near-dup detection — the
     brute-force VERIFICATION BASELINE, quadratic per block by design.
-    Blocking key = source (the natural shard).
+    Blocking key = source (the natural shard). Each doc's 3-gram set is
+    a collect_set over the gram-row kernel's rows; the Jaccard itself
+    stays JVM-native array_intersect/array_union arithmetic, so the
+    baseline shares no verify code with the bounded operators it checks
+    (test_jaccard_prefix_join_exact_vs_bruteforce).
 
     Scale guards:
       * exact length-ratio prefilter in the join condition (J >= t
@@ -244,10 +287,9 @@ def jaccard_pairs(
         (dedup_jaccard_prefix_pairs / dedup_minhash_lsh_pairs) instead
         of silently launching a quadratic job.
     """
-    c = corpus.withColumn("sh", shingles(F.col("text")))
     if max_block is not None:
         hot = (
-            c.groupBy("source").count().where(F.col("count") > max_block).collect()
+            corpus.groupBy("source").count().where(F.col("count") > max_block).collect()
         )
         if hot:
             raise ValueError(
@@ -256,6 +298,12 @@ def jaccard_pairs(
                 + " — use dedup_jaccard_prefix_pairs or "
                 "dedup_minhash_lsh_pairs for unbounded blocks"
             )
+    sh = (
+        _gram_rows(corpus, _SHINGLE_N, widen=True)
+        .groupBy("doc_id")
+        .agg(F.collect_set("shingle").alias("sh"))
+    )
+    c = corpus.select("doc_id", "source").join(sh, "doc_id")
     a = c.select(
         F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"), "source"
     )
@@ -314,8 +362,14 @@ WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 """
 
 
+_BAND_SCHEMA = pa.schema(
+    [("doc_id", pa.int64()), ("band_id", pa.int32()), ("band_hash", pa.int64())]
+)
+
+
 def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
-    """Arrow-batch kernel: (doc_id, text) -> (doc_id, band_id, band_hash).
+    """Arrow-batch kernel: (doc_id, text) -> _BAND_SCHEMA rows
+    (doc_id, band_id, band_hash), n_bands per doc.
 
     Why a mapInArrow kernel and not expression algebra: Spark evaluates
     higher-order-function lambdas INTERPRETED (no whole-stage codegen
@@ -337,21 +391,19 @@ def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
       band hash    = fold of the band's signature rows.
 
     Why keyed splitmix64 and not the classic affine (a_i*h + b_i) mod p
-    family: the r6 sf1 sweep caught the affine form missing 9 of
-    102,615 true pairs at J = 0.82-0.89 where banding theory predicts
-    ~2e-8 misses per pair. Root cause (probed empirically, see
-    BENCH/BASELINE.md r6): the a_i/b_i were a LINEAR progression
-    ((i+1)*phi masked), so for a fixed pair of shingle values the
-    order of hash_i(x1) vs hash_i(x2) across i is a correlated Weyl
-    rotation, not 32 independent draws — unlucky residues let one
-    tail shingle win the min in nearly every function (observed 5-10/32
-    collisions where J predicts ~27/32). Independent avalanche keys
-    restore per-hash collision rate = J (measured 0.886 vs J 0.880 over
-    200 pairs; all 9 missed pairs found with 7-14/16 bands), and the
-    mix is mod-free, so it is also no slower.
+    family with a LINEAR progression of a_i/b_i ((i+1)*phi masked): on
+    the 200k-doc sf1-equivalent corpus (BENCH/BASELINE.md) that family
+    misses 9 of 102,615 true pairs at J = 0.82-0.89 where banding theory
+    predicts ~2e-8 misses per pair. For a fixed pair of shingle values
+    the order of hash_i(x1) vs hash_i(x2) across i is a correlated Weyl
+    rotation, not 32 independent draws — unlucky residues let one tail
+    shingle win the min in nearly every function (5-10/32 collisions
+    where J predicts ~27/32). Independent avalanche keys restore the
+    per-hash collision rate = J (0.886 vs J 0.880 over 200 pairs; all 9
+    pairs found with 7-14/16 bands), and the mix is mod-free, so it is
+    also no slower.
     """
     import numpy as np
-    import pyarrow as pa
     from pandas.util import hash_array
 
     rows_per_band = n_hashes // n_bands
@@ -392,12 +444,8 @@ def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
             out_doc[i * n_bands : (i + 1) * n_bands] = doc_id
             out_hash[i * n_bands : (i + 1) * n_bands] = bh
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_doc, type=pa.int64()),
-                pa.array(np.tile(band_ids, len(doc_ids)), type=pa.int32()),
-                pa.array(out_hash.astype(np.int64), type=pa.int64()),
-            ],
-            names=["doc_id", "band_id", "band_hash"],
+            [out_doc, np.tile(band_ids, len(doc_ids)), out_hash.astype(np.int64)],
+            schema=_BAND_SCHEMA,
         )
 
 
@@ -407,63 +455,53 @@ def minhash_band_rows(
     """(doc_id, text) -> n_bands rows (doc_id, band_id, band_hash); the
     narrow, CPU-bound LSH signature stage, widened to the kernel width so
     a 1-file scan doesn't serialize it."""
-    from pyspark.sql.types import IntegerType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("band_id", IntegerType()),
-            StructField("band_hash", LongType()),
-        ]
-    )
     par = kernel_partitions(docs.sparkSession)
     fn = functools.partial(_minhash_band_batches, n_hashes=n_hashes, n_bands=n_bands)
     return (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         .repartition(par, "doc_id")
-        .mapInArrow(fn, schema)
+        .mapInArrow(fn, from_arrow_schema(_BAND_SCHEMA))
     )
 
 
-def _verify_batches(batches, col: str, denom):
-    """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> (a_id, b_id,
-    ``col``) with col = |S(A) ∩ S(B)| / denom(S(A), S(B)) per candidate
-    pair. S is _gram_set, which mirrors shingles()/the DuckDB oracle
-    exactly (tokenization identical to the JVM expression down to
-    edge-whitespace texts, set semantics). Values round HALF-UP to 4
-    places: Spark's ROUND and DuckDB's round both round half away from
-    zero, Python's built-in round is banker's — hence the floor form.
+def _verify_batches(batches, schema: pa.Schema, denom):
+    """Arrow-batch kernel: (a_id, b_id, a_text, b_text) -> ``schema``
+    rows (a_id, b_id, value) with value = |S(A) ∩ S(B)| / denom(S(A),
+    S(B)) per candidate pair, S = the _gram_set 3-grams. The id columns
+    pass through as Arrow arrays. Values round HALF-UP to 4 places:
+    Spark's ROUND and DuckDB's round both round half away from zero,
+    Python's built-in round is banker's — hence the floor form.
     """
     import math
-
-    import pyarrow as pa
 
     for batch in batches:
         a_txt = batch.column("a_text").to_pylist()
         b_txt = batch.column("b_text").to_pylist()
         vals = []
         for ta, tb in zip(a_txt, b_txt):
-            sa, sb = _gram_set(ta), _gram_set(tb)
+            sa, sb = _gram_set(ta, _SHINGLE_N), _gram_set(tb, _SHINGLE_N)
             d = denom(sa, sb)
             v = len(sa & sb) / d if d else float("nan")
             vals.append(math.floor(v * 10000 + 0.5) / 10000)
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(batch.column("a_id").to_pylist(), type=pa.int64()),
-                pa.array(batch.column("b_id").to_pylist(), type=pa.int64()),
-                pa.array(vals, type=pa.float64()),
-            ],
-            names=["a_id", "b_id", col],
+            [batch.column("a_id"), batch.column("b_id"), vals], schema=schema
         )
 
 
-# Verify metrics, passed to verify_candidate_pairs as data: (output
-# column, denominator of the shared-gram count given both gram sets).
-_JACCARD = ("jaccard", lambda sa, sb: len(sa | sb))
-_CONTAINMENT = ("containment", lambda sa, sb: len(sa))  # A inside B
+def _verify_schema(col: str) -> pa.Schema:
+    return pa.schema(
+        [("a_id", pa.int64()), ("b_id", pa.int64()), (col, pa.float64())]
+    )
 
 
-# Named banding profiles, measured on the r6 sf1-equivalent sweep
+# Verify metrics, passed to verify_candidate_pairs as data: (kernel
+# output schema, whose last column is the metric, and the denominator of
+# the shared-gram count given both gram sets).
+_JACCARD = (_verify_schema("jaccard"), lambda sa, sb: len(sa | sb))
+_CONTAINMENT = (_verify_schema("containment"), lambda sa, sb: len(sa))  # A inside B
+
+
+# Named banding profiles, measured on the sf1-equivalent corpus
 # (200k docs, BENCH/BASELINE.md): the knob a caller actually wants —
 # recall target — instead of raw (n_bands, n_hashes).
 #   standard: 16 bands x 2 rows — 99.982% measured recall, every miss
@@ -512,8 +550,8 @@ def minhash_lsh_pairs_with_drops(
 
     ``n_hashes``/``n_bands`` set the banding S-curve (rows per band =
     n_hashes // n_bands). ``n_hashes`` defaults to 2*n_bands so that
-    raising n_bands keeps 2-row bands — the r6 sf1 sweep measured the
-    three relevant points on the 200k-doc corpus (BENCH/BASELINE.md r6):
+    raising n_bands keeps 2-row bands. The three relevant points, measured
+    on the 200k-doc sf1-equivalent corpus (BENCH/BASELINE.md):
     16x2 (default) recall 99.982%, all misses at J in [0.5, 0.575],
     and the leanest band-exchange volume — the 100-TB default; 32x2
     (n_bands=32) measured PERFECT recall (102,615/102,615, 0 extra) at
@@ -550,7 +588,10 @@ def minhash_lsh_pairs_with_drops(
 
 
 def verify_candidate_pairs(
-    cand: DataFrame, docs: DataFrame, threshold: float, metric: tuple[str, Callable]
+    cand: DataFrame,
+    docs: DataFrame,
+    threshold: float,
+    metric: tuple[pa.Schema, Callable],
 ) -> DataFrame:
     """Exact verification of candidate (a_id, b_id) pairs: keeps the
     pairs whose ``metric`` value is >= threshold. ``metric`` is
@@ -560,17 +601,11 @@ def verify_candidate_pairs(
     Rejoins the source text once per side (text is smaller than the
     shingle array and ships once per DEDUPED candidate pair, not once
     per band/bucket match); the metric itself runs in an Arrow kernel —
-    the JVM formulation (shingles() + array_intersect per pair) costs
+    a JVM formulation (gram arrays + array_intersect per pair) costs
     ~8ms/pair because higher-order-function lambdas are interpreted, vs
     ~20us/pair for C-level Python set ops."""
-    col, denom = metric
-    schema = StructType(
-        [
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField(col, DoubleType()),
-        ]
-    )
+    schema, denom = metric
+    col = schema.names[-1]
     par = kernel_partitions(docs.sparkSession)
     # BOTH thin sides are widened explicitly BEFORE the joins — the
     # candidate pairs (16 B/row, feeding the CPU-bound kernel) and the doc
@@ -590,37 +625,12 @@ def verify_candidate_pairs(
         .join(docs.select(F.col("doc_id").alias("b_id"),
                           F.col("text").alias("b_text"))
               .repartition(par, "b_id"), "b_id")
-        .mapInArrow(functools.partial(_verify_batches, col=col, denom=denom), schema)
+        .mapInArrow(
+            functools.partial(_verify_batches, schema=schema, denom=denom),
+            from_arrow_schema(schema),
+        )
     )
     return ver.where(F.col(col) >= threshold)
-
-
-def _shingle_rows_batches(batches):
-    """Arrow-batch kernel: (doc_id, text) -> one row per DISTINCT word
-    3-gram (doc_id, shingle, sz), from _gram_set like the verify
-    kernel (one partial gram for <3-token texts).
-    Exists because the shingles() JVM expression is interpreted HOF
-    (~3ms/doc) and every downstream consumer re-executes its subtree —
-    the Python set build is ~10us/doc and cheap to recompute."""
-    import pyarrow as pa
-
-    for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
-        out_id, out_sh, out_sz = [], [], []
-        for doc_id, text in zip(doc_ids, texts):
-            grams = _gram_set(text)
-            out_id.extend([doc_id] * len(grams))
-            out_sh.extend(grams)
-            out_sz.extend([len(grams)] * len(grams))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out_id, type=pa.int64()),
-                pa.array(out_sh, type=pa.string()),
-                pa.array(out_sz, type=pa.int32()),
-            ],
-            names=["doc_id", "shingle", "sz"],
-        )
 
 
 def _prefix_shingles(
@@ -646,21 +656,7 @@ def _prefix_shingles(
     are distinct — so no per-doc array is ever materialized. No persist
     anywhere: at 100 TB the shingle explosion is ~5-10x text bytes and
     the lazy return values have no unpersist point."""
-    from pyspark.sql.types import IntegerType, StringType
-
-    par = kernel_partitions(docs.sparkSession)
-    sh_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("shingle", StringType()),
-            StructField("sz", IntegerType()),
-        ]
-    )
-    ex = (
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
-        .repartition(par, "doc_id")
-        .mapInArrow(_shingle_rows_batches, sh_schema)
-    )
+    ex = _gram_rows(docs, _SHINGLE_N, widen=True)
     shingles = ex.withColumn(
         "df", F.count("*").over(Window.partitionBy("shingle"))
     )
@@ -899,10 +895,10 @@ def pairs_crosscheck(corpus: DataFrame, recall: str | None = None) -> DataFrame:
     n_dropped_lsh, n_dropped_prefix). When the symmetric difference and
     both drop counts are zero, the probabilistic generator provably
     found EXACTLY the exact generator's pair set — the strongest recall
-    evidence the repo has (previously prose in BENCH/BASELINE.md: 6,024
-    set-identical pairs at sf0.1), now a query that re-proves itself
-    every run. One action computes everything: a full-outer join on the
-    canonical (a_id, b_id) keys feeds the count/diff aggregates, and
+    evidence the repo has (6,024 set-identical pairs at sf0.1), as a
+    query that re-proves itself every run. One action computes
+    everything: a full-outer join on the canonical (a_id, b_id) keys
+    feeds the count/diff aggregates, and
     the lazy drop frames reduce to counts (their banding subtrees are
     keys-only — cheap relative to either verify stage). At sf0.01 the
     DuckDB oracle recomputes the truth by brute force; at scales where
@@ -954,13 +950,13 @@ def _q_pairs_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pairs_crosscheck_high(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crosscheck in the HIGH recall profile (32x2 banding): the
-    r6 sf1 sweep measured this configuration at perfect recall — this
+    """The crosscheck in the HIGH recall profile (32x2 banding), which
+    measures perfect recall on the sf1-equivalent corpus: this
     extras-tier row re-proves diff == drops == 0 against exact PPJoin
     truth every sweep, so the profile's claim is a query, not a
-    BENCH/BASELINE.md footnote (r6 verdict #5). Shares the standard
-    crosscheck's oracle/invariant: the expected outcome (set identity
-    with exact truth) is profile-independent wherever both are exact."""
+    footnote. Shares the standard crosscheck's oracle/invariant: the
+    expected outcome (set identity with exact truth) is
+    profile-independent wherever both are exact."""
     return pairs_crosscheck(dedup_corpus(spark, sf_dir), recall="high")
 
 
@@ -980,30 +976,9 @@ FROM truth
 
 SIMHASH_BITS = 60
 
-# 60-bit SimHash as ONE whole-stage-codegen JVM expression: token hash =
-# first 15 hex chars of md5 (60 bits keeps every value positive in
-# int64), per-bit +/-1 votes folded with a single aggregate over the
-# token array, majority vote packed back into a BIGINT. md5 (unlike
-# xxhash64) exists in DuckDB too, so the oracle mirrors the arithmetic
-# exactly. Zero Python anywhere.
-_SIMHASH_EXPR = r"""
-CAST(aggregate(
-  zip_with(
-    aggregate(
-      transform(split(trim(lower({c})), '\\s+'),
-                w -> CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT)),
-      array_repeat(CAST(0 AS BIGINT), 60),
-      (acc, h) -> zip_with(acc,
-                           transform(sequence(0, 59),
-                                     j -> (shiftright(h, j) & CAST(1 AS BIGINT)) * 2 - 1),
-                           (a, b) -> a + b)),
-    sequence(0, 59),
-    (v, j) -> IF(v > 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))),
-  CAST(0 AS BIGINT), (acc, x) -> acc + x) AS BIGINT)
-"""
-
-# The identical hash in DuckDB list algebra (hex digits folded with
-# list_reduce; verified bit-identical on the corpus + unicode edges).
+# The 60-bit md5 SimHash of _simhash_batches in DuckDB list algebra (hex
+# digits folded with list_reduce). md5, unlike xxhash64, exists in
+# DuckDB, so the oracle mirrors the arithmetic exactly.
 _SIMHASH_SQL = r"""
 CAST(list_sum(list_transform(range(0, 60), j ->
   CASE WHEN list_sum(list_transform(
@@ -1018,14 +993,8 @@ CAST(list_sum(list_transform(range(0, 60), j ->
 """
 
 
-def simhash60(col_name: str):
-    """SimHash of a text column as a JVM-side Column expression."""
-    return F.expr(_SIMHASH_EXPR.format(c=col_name))
-
-
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.select("doc_id", simhash60("text").alias("simhash"))
+    return simhash_rows(_docs(spark, sf_dir)).withColumnRenamed("sh", "simhash")
 
 
 _SQL_SIMHASH = f"""
@@ -1046,23 +1015,22 @@ SIMHASH_SCALE_HAMMING = 3
 SIMHASH_SCALE_CHUNKS = 4  # 4 chunks x 15 bits; exact recall <= 3
 
 
-def _simhash_batches(batches):
-    """Arrow-batch kernel: (doc_id, text) -> (doc_id, sh) — the EXACT
-    60-bit md5 simhash _SIMHASH_EXPR computes, ~100x cheaper: the JVM
-    expression is an interpreted HOF (md5 + 60 bit-votes per token,
-    measured ~1.6ms/doc, and a self-join evaluates it twice), while here
-    md5 runs in C (hashlib, memoized per batch vocabulary) and the
-    bit-vote fold is one NumPy matrix op per doc. Bit-equality with the
-    expression is pinned by test_simhash_kernel_matches_expression.
+_SIMHASH_SCHEMA = pa.schema([("doc_id", pa.int64()), ("sh", pa.int64())])
 
-    Tokenization mirrors split(trim(lower(text)), '\\s+') via
-    _jvm_tokens; token hash = first 15 hex chars of md5(utf-8 bytes),
-    like conv(substring(md5(w),1,15),16,10); votes count token
-    OCCURRENCES (no distinct), bit j set iff votes_j > 0."""
+
+def _simhash_batches(batches):
+    """Arrow-batch kernel: (doc_id, text) -> _SIMHASH_SCHEMA rows, the
+    60-bit md5 SimHash (Charikar) of each doc. Tokens are
+    _jvm_tokens(lower(text)), the oracle's split(trim(lower(text)),
+    '\\s+'); token hash = first 15 hex chars of md5(utf-8 bytes), so
+    every value is positive in int64; votes count token OCCURRENCES (no
+    distinct), bit j set iff votes_j > 0. md5 runs in C (hashlib,
+    memoized per batch vocabulary) and the bit-vote fold is one NumPy
+    matrix op per doc; as a JVM higher-order-function expression the
+    same hash is interpreted at ~1.6 ms/doc."""
     import hashlib
 
     import numpy as np
-    import pyarrow as pa
 
     bits = np.arange(SIMHASH_BITS, dtype=np.uint64)
     one = np.uint64(1)
@@ -1081,9 +1049,8 @@ def _simhash_batches(batches):
                 cache[w] = h
             return h
 
-        doc_ids = batch.column("doc_id").to_pylist()
         texts = batch.column("text").to_pylist()
-        out = np.empty(len(doc_ids), dtype=np.int64)
+        out = np.empty(len(texts), dtype=np.int64)
         for i, text in enumerate(texts):
             toks = _jvm_tokens((text or "").lower())
             hs = np.fromiter(
@@ -1093,24 +1060,19 @@ def _simhash_batches(batches):
             votes = 2 * b.sum(axis=0, dtype=np.int64) - len(toks)
             out[i] = int(((votes > 0).astype(np.uint64) << bits).sum())
         yield pa.RecordBatch.from_arrays(
-            [pa.array(doc_ids, type=pa.int64()),
-             pa.array(out, type=pa.int64())],
-            names=["doc_id", "sh"],
+            [batch.column("doc_id"), out], schema=_SIMHASH_SCHEMA
         )
 
 
 def simhash_rows(corpus: DataFrame) -> DataFrame:
-    """(doc_id, sh) via the Arrow kernel (the pairs operators' fast
-    path; the driver-certified dedup_simhash query keeps the pure JVM
-    expression, and a test pins the two bit-equal)."""
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("sh", LongType())]
-    )
+    """(doc_id, sh) rows from the simhash kernel, widened to the kernel
+    width so a 1-file scan doesn't serialize it; the one simhash behind
+    dedup_simhash and every pairs, components and apply query."""
     par = kernel_partitions(corpus.sparkSession)
     return (
         corpus.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
         .repartition(par, "doc_id")
-        .mapInArrow(_simhash_batches, schema)
+        .mapInArrow(_simhash_batches, from_arrow_schema(_SIMHASH_SCHEMA))
     )
 
 
@@ -1285,13 +1247,19 @@ def decontaminate_flags(
     public knowledge).
 
     Spark shape for 100 TB: the eval set is small by nature, so its
-    distinct n-gram set is BROADCAST and the corpus side is a map-only
-    explode + broadcast hash join — the 10^12-row side never shuffles.
-    Returns (doc_id, n_hits) for flagged docs only.
+    distinct n-gram set is BROADCAST, and the corpus side is the gram-row
+    kernel as a narrow map (no exchange) feeding a broadcast hash join —
+    the 10^12-row side never shuffles. Returns (doc_id, n_hits) for
+    flagged docs only.
     """
-    grams = F.explode(shingles(F.col("text"), n=n)).alias("gram")
-    eval_grams = eval_docs.select(grams).distinct()
-    corpus_grams = corpus.select("doc_id", grams)
+
+    def grams(docs: DataFrame) -> DataFrame:
+        return _gram_rows(docs, n, widen=False).select(
+            "doc_id", F.col("shingle").alias("gram")
+        )
+
+    eval_grams = grams(eval_docs).select("gram").distinct()
+    corpus_grams = grams(corpus)
     return (
         corpus_grams.join(F.broadcast(eval_grams), "gram")
         .groupBy("doc_id")
@@ -1423,7 +1391,6 @@ def _contract_batches(batches):
     partitions: a local minimum is an a_id of its partition, and range
     partitioning puts each a_id in exactly one partition."""
     import numpy as np
-    import pyarrow as pa
 
     from ..kernel.components import _UnionFind
 
@@ -1708,9 +1675,14 @@ def embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.unionByName(near)
 
 
+_SRP_SCHEMA = pa.schema(
+    [("vec_id", pa.int64()), ("chunk_id", pa.int32()), ("chunk_val", pa.int64())]
+)
+
+
 def _srp_chunk_batches(batches):
     """Arrow-batch kernel: (vec_id, v) -> SRP sketch chunk rows
-    (vec_id, chunk_id, chunk_val). Sign-random-projection LSH (Charikar
+    (_SRP_SCHEMA: vec_id, chunk_id, chunk_val). Sign-random-projection LSH (Charikar
     2002): bit_j = sign(v . r_j) over SRP_BITS fixed Gaussian
     hyperplanes (seeded rng — deterministic across processes); the
     64-bit sketch splits into SRP_CHUNKS 4-bit chunks for pigeonhole
@@ -1718,7 +1690,6 @@ def _srp_chunk_batches(batches):
     (angle≈21°) miss all 16 chunks with probability ~(1-0.61^4)^16
     ≈ 3e-7 — measured zero misses on the fixed corpus."""
     import numpy as np
-    import pyarrow as pa
 
     rng = np.random.default_rng(42)
     R = rng.standard_normal((SRP_BITS, EMB_DIM))
@@ -1738,11 +1709,11 @@ def _srp_chunk_batches(batches):
         )  # (n, SRP_CHUNKS)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(np.repeat(vec_ids, SRP_CHUNKS), type=pa.int64()),
-                pa.array(np.tile(chunk_ids, len(vec_ids)), type=pa.int32()),
-                pa.array(vals.reshape(-1), type=pa.int64()),
+                np.repeat(vec_ids, SRP_CHUNKS),
+                np.tile(chunk_ids, len(vec_ids)),
+                vals.reshape(-1),
             ],
-            names=["vec_id", "chunk_id", "chunk_val"],
+            schema=_SRP_SCHEMA,
         )
 
 
@@ -1757,20 +1728,11 @@ def embedding_cosine_pairs_with_drops(
     element) -> exact cosine verification. The verify cosine is the same
     sequential-sum double expression the brute-force oracle uses, so
     values match bitwise."""
-    from pyspark.sql.types import IntegerType
-
     from .similarity import cosine
 
     par = kernel_partitions(corpus.sparkSession)
-    sk_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("chunk_id", IntegerType()),
-            StructField("chunk_val", LongType()),
-        ]
-    )
-    sketches = (
-        corpus.repartition(par, "vec_id").mapInArrow(_srp_chunk_batches, sk_schema)
+    sketches = corpus.repartition(par, "vec_id").mapInArrow(
+        _srp_chunk_batches, from_arrow_schema(_SRP_SCHEMA)
     )
     buckets, dropped = _bucket_ids(
         sketches, ["chunk_id", "chunk_val"], F.col("vec_id"), max_bucket

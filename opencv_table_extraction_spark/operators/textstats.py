@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import kernel_partitions
+from .dedup import _jvm_tokens, normalized_fingerprint
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 _BPE_PAT = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
@@ -48,22 +49,35 @@ FROM documents
 """
 
 
-def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+def _quality_terms():
+    """(n_stop, stop_ratio, quality_ok) over the lowered whitespace
+    tokens of ``text``: the one definition of document quality, shared
+    by quality_score and sample_by_quality."""
     tokens = F.split(F.trim(F.lower("text")), r"\s+")
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     n_stop = F.size(F.filter(tokens, lambda w: F.array_contains(stop_arr, w)))
-    n_punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))
     n_tok = F.size(tokens)
     stop_ratio = F.round(n_stop.cast("double") / n_tok, 4)
+    ok = (n_tok >= 10) & (n_tok <= 2000) & (stop_ratio <= F.lit(0.6))
+    return n_stop, stop_ratio, ok
+
+
+def _md5_bucket(key):
+    """Stable 0-99 bucket of a string key: the first 8 hex digits of its
+    md5 mod 100 — reproducible across runs, partitionings and engines."""
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % 100
+
+
+def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _docs(spark, sf_dir)
+    n_stop, stop_ratio, ok = _quality_terms()
+    n_punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))
     return d.select(
         "doc_id",
         n_stop.alias("n_stopwords"),
         n_punct.alias("n_punct"),
         stop_ratio.alias("stop_ratio"),
-        (
-            (n_tok >= 10) & (n_tok <= 2000) & (stop_ratio <= F.lit(0.6))
-        ).alias("quality_ok"),
+        ok.alias("quality_ok"),
     )
 
 
@@ -121,8 +135,7 @@ FROM documents
 
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
-    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return d.select("doc_id", F.sha2(norm, 256).alias("fingerprint"))
+    return d.select("doc_id", normalized_fingerprint("text").alias("fingerprint"))
 
 
 _SQL_FINGERPRINT = r"""
@@ -134,9 +147,9 @@ FROM documents
 # winnow_fingerprint_batch working-set cap: the global arrays cost
 # ~32-44 bytes per concatenated character (utf-32 data + uint64 hashes +
 # window argmin columns), so an unbounded Arrow batch of large docs
-# would swap the old per-doc transient peak for a multi-GB per-batch
-# peak. 8M chars caps the kernel at ~350 MB per Python worker while
-# keeping batches large enough that the global-pass speedup holds.
+# would reach a multi-GB per-batch peak. 8M chars caps the kernel at
+# ~350 MB per Python worker while keeping batches large enough that the
+# global-pass speedup holds.
 WINNOW_BATCH_MAX_CHARS = 8_000_000
 
 
@@ -315,10 +328,7 @@ def _q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps its split when the corpus grows — the property a training
     pipeline needs for leak-free incremental rebuilds. md5 exists in
     DuckDB too, so the oracle mirrors the hash arithmetic exactly."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = _md5_bucket(F.col("doc_id").cast("string"))
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -454,8 +464,6 @@ def repetition_stats_batch(texts) -> list[list[float]]:
     oracle would drift; identical int-ratio divisions are bit-equal."""
     from collections import Counter
 
-    from .dedup import _jvm_tokens
-
     out: list[list[float]] = []
     for t in texts:
         raw = t or ""
@@ -554,20 +562,13 @@ def _q_sample_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5('sample:' || doc_id)) so it is reproducible across runs,
     partitionings, and engines, a doc keeps its fate as the corpus
     grows, AND the sampling hash is independent of train_test_split's
-    unsalted md5 — sampling does not bias the split. Strata reuse the
-    exact quality_score expressions (rounded stop_ratio, token bounds)
-    so the two queries agree on what "quality" means. Pure JVM, zero
+    unsalted md5 — sampling does not bias the split. Strata come from
+    _quality_terms, the expressions quality_score emits (rounded
+    stop_ratio, token bounds), so the two queries agree on what
+    "quality" means. Pure JVM, zero
     shuffle, one pass."""
     d = _docs(spark, sf_dir)
-    tokens = F.split(F.trim(F.lower("text")), r"\s+")
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    n_tok = F.size(tokens)
-    stop_ratio = F.round(
-        F.size(F.filter(tokens, lambda w: F.array_contains(stop_arr, w)))
-        .cast("double") / n_tok,
-        4,
-    )
-    ok = (n_tok >= 10) & (n_tok <= 2000) & (stop_ratio <= F.lit(0.6))
+    _, stop_ratio, ok = _quality_terms()
     stratum = (
         F.when(ok & (stop_ratio <= F.lit(0.3)), "high")
         .when(ok, "mid")
@@ -578,15 +579,7 @@ def _q_sample_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("stratum") == "mid", 50)
         .otherwise(10)
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sample:"), F.col("doc_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("bigint") % 100
-    )
+    bucket = _md5_bucket(F.concat(F.lit("sample:"), F.col("doc_id").cast("string")))
     return (
         d.select(
             "doc_id",
@@ -649,8 +642,8 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     pattern's count is taken on the PROGRESSIVELY-scrubbed text (the
     same string the replace sees), so sum(n_*) equals the number of
     redactions actually performed — a substring matching two patterns
-    is counted only by the one that redacted it (r6 advice; previously
-    counts ran on the raw text and could over-report)."""
+    is counted only by the one that redacted it (counting on the raw
+    text would over-report)."""
     out = df
     scrubbed = F.col(text_col)
     for name, pat, repl in PII_PATTERNS:

@@ -7,15 +7,15 @@ delta row. State lives in the stream checkpoint's state store, so a
 restarted job (availableNow re-run after new files land) CONTINUES each
 conversation instead of starting over — the property the test pins.
 
-Scale design (r2 verdict #6):
+Scale design:
   * the fold is fully vectorized — pandas sort + column concat +
     ``"\\n".join`` — no ``iterrows``/per-row Python;
   * state is BOUNDED at O(1) per conversation: (n_turns, max_turn_idx,
     total_chars). The assembled text itself is spilled to the SINK as
     per-batch ``delta_text`` rows instead of being rewritten into the
-    state store every batch (the r2 shape grew state linearly with
-    conversation length for the stream's whole life). The full
-    transcript is the concatenation of a conversation's deltas in
+    state store every batch (state that held the text would grow
+    linearly with conversation length for the stream's whole life).
+    The full transcript is the concatenation of a conversation's deltas in
     cumulative ``n_turns`` order — an ordinary ordered aggregation over
     the sink.
   * cross-batch ordering assumption (documented, inherited from the
@@ -140,8 +140,8 @@ def assemble_conversations(
 
 def replay_assemble(spark: SparkSession, turns, bucket_col: str = "_bkt"):
     """Deterministic batch-REPLAY of the stateful assembler, for oracle
-    certification (r5 verdict #6: this was the only §2.B operator
-    certified by pytest alone). ``turns`` carries TRANSCRIPT_SCHEMA
+    certification, so the assembler has a DuckDB oracle like every
+    other §2.B operator, not pytest alone. ``turns`` carries TRANSCRIPT_SCHEMA
     columns plus an integer ``bucket_col`` that is non-decreasing in
     turn_idx (bucket ranges partition the turn_idx order — the module
     contract: cross-batch arrival in non-decreasing turn_idx). Each

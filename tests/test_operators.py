@@ -4,11 +4,13 @@ All at sf0.001 for speed; exact SQL-parity is covered by
 tools/check_queries.py (driver-mimic) at sf0.01."""
 
 import contextlib
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+SF01 = SF.replace("sf0.001", "sf0.01")  # the scale the oracle rows run at
 
 
 def test_exact_dedup_groups(spark):
@@ -249,11 +251,11 @@ def test_minhash_family_collision_rate_tracks_jaccard():
 
 
 def test_simhash_deterministic_and_discriminative(spark):
-    from opencv_table_extraction_spark.operators.dedup import simhash60
+    from opencv_table_extraction_spark.operators.dedup import simhash_rows
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    h1 = {r["doc_id"]: r["h"] for r in d.select("doc_id", simhash60("text").alias("h")).collect()}
-    h2 = {r["doc_id"]: r["h"] for r in d.select("doc_id", simhash60("text").alias("h")).collect()}
+    h1 = {r["doc_id"]: r["sh"] for r in simhash_rows(d).collect()}
+    h2 = {r["doc_id"]: r["sh"] for r in simhash_rows(d).collect()}
     assert h1 == h2
     assert all(0 <= v < (1 << 60) for v in h1.values())  # 60-bit, positive
     # near-identical docs must land at small hamming distance,
@@ -262,8 +264,9 @@ def test_simhash_deterministic_and_discriminative(spark):
     for r in rows:
         toks = r["text"].split()
         trunc = " ".join(toks[: int(len(toks) * 0.9)])
-        a = spark.createDataFrame([(r["text"],), (trunc,)], ["text"])
-        ha, hb = [x["h"] for x in a.select(simhash60("text").alias("h")).collect()]
+        a = spark.createDataFrame([(0, r["text"]), (1, trunc)], ["doc_id", "text"])
+        h = {x["doc_id"]: x["sh"] for x in simhash_rows(a).collect()}
+        ha, hb = h[0], h[1]
         ham = bin(ha ^ hb).count("1")
         assert ham <= 14, (r["doc_id"], ham)
 
@@ -531,27 +534,81 @@ def test_simhash_scale_banding_candidates_grow_linearly(spark):
     assert ex_a > 10 * sc_a and ex_b > 10 * sc_b
 
 
-def test_simhash_kernel_matches_expression(spark):
-    """The Arrow simhash kernel (the pairs operators' fast path) must be
-    bit-equal to the pure JVM md5 expression (the oracle-certified
-    dedup_simhash query) on the corpus AND on edge inputs (empty text,
-    edge whitespace, repeated tokens — votes count occurrences)."""
+def _docs_with(tmp_path, extra: list[str]) -> str:
+    """sf0.01 documents plus ``extra`` texts (doc_id 9001, 9002, ...) as
+    one parquet dir both Spark and DuckDB read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{SF01}/documents.parquet",
+                         columns=["doc_id", "text", "source"])
+    edge = pa.table({
+        "doc_id": pa.array(range(9001, 9001 + len(extra)), pa.int64()),
+        "text": pa.array(extra, pa.string()),
+        "source": pa.array(["edge"] * len(extra), pa.string()),
+    }).cast(docs.schema)
+    pq.write_table(pa.concat_tables([docs, edge]), str(tmp_path / "documents.parquet"))
+    return str(tmp_path)
+
+
+def _duckdb_documents(sf_dir: str):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/documents.parquet')")
+    return con
+
+
+def test_simhash_kernel_matches_expression(spark, tmp_path):
+    """The simhash kernel must be bit-equal to the DuckDB oracle's md5
+    list-algebra hash (_SQL_SIMHASH) on sf0.01 AND on edge inputs
+    (empty text, edge whitespace, repeated tokens — votes count
+    occurrences). ASCII only: DuckDB's lower() differs from Python's
+    and the JVM's on non-ASCII letters."""
     from opencv_table_extraction_spark.operators.dedup import (
-        simhash60,
+        _SQL_SIMHASH,
         simhash_rows,
     )
 
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    edge = spark.createDataFrame(
-        [(9001, ""), (9002, "\tTab  Edge\n"), (9003, "dup dup dup x"),
-         (9004, "MiXeD Case"), (9005, "one")],
-        ["doc_id", "text"],
+    sf = _docs_with(tmp_path, ["", "\tTab  Edge\n", "dup dup dup x",
+                               "MiXeD Case", "one"])
+    d = spark.read.parquet(f"{sf}/documents.parquet")
+    kern = {r["doc_id"]: r["sh"] for r in simhash_rows(d).collect()}
+    want = dict(_duckdb_documents(sf).execute(_SQL_SIMHASH).fetchall())
+    assert len(kern) == 505
+    assert kern == want
+
+
+def test_gram_set_matches_decontam_oracle_grams(tmp_path):
+    """_gram_set(t, 8) must equal the DuckDB decontamination oracle's
+    per-doc 8-gram list (the ``g`` CTE of _SQL_DECONTAM) on the sf0.01
+    dedup corpus plus short texts (one partial gram) and texts edged
+    with tabs/newlines."""
+    from opencv_table_extraction_spark.operators.dedup import (
+        _SQL_DECONTAM,
+        DECONTAM_NGRAM,
+        _gram_set,
     )
-    corpus = d.unionByName(edge)
-    expr = {r["doc_id"]: r["h"]
-            for r in corpus.select("doc_id", simhash60("text").alias("h")).collect()}
-    kern = {r["doc_id"]: r["sh"] for r in simhash_rows(corpus).collect()}
-    assert kern == expr
+
+    sf = _docs_with(tmp_path, [
+        "", "one", "a b c", "one two three four five six seven",
+        "\tone two three four five six seven eight nine",
+        "one two three four five six seven eight nine\n",
+        " a\tb  c d e f g h i j ", "\n\t lead", "trail \t\n",
+    ])
+    ctes = _SQL_DECONTAM[: _SQL_DECONTAM.index("\ne AS (")].rstrip().rstrip(",")
+    con = _duckdb_documents(sf)
+    # DuckDB's array_to_string([]) is NULL: the twins of the "" and "one"
+    # docs have no text and no grams
+    texts = dict(con.execute(
+        ctes + " SELECT doc_id, text FROM corpus WHERE text IS NOT NULL").fetchall())
+    grams = dict(con.execute(
+        ctes + " SELECT doc_id, list(gram) FROM g GROUP BY doc_id").fetchall())
+    assert len(texts) == 2 * 509 - 2 and set(grams) == set(texts)
+    bad = [d for d, t in texts.items()
+           if sorted(grams[d]) != sorted(_gram_set(t, DECONTAM_NGRAM))]
+    assert not bad, [(d, texts[d]) for d in bad[:5]]
 
 
 def test_simhash_pairs_rejects_unsound_banding(spark):
@@ -570,13 +627,16 @@ def test_simhash_pairs_rejects_unsound_banding(spark):
 
 def test_python_kernels_tokenize_like_jvm_on_edge_whitespace(spark):
     """_jvm_tokens must agree with the JVM split(trim(col), '\\s+') on
-    texts edged with tabs/newlines (the r2 ADVICE divergence: Python
-    .strip().split() strips ALL whitespace, Spark trim strips spaces
-    only)."""
+    texts edged with tabs/newlines (Python .strip().split() strips ALL
+    whitespace, Spark trim strips spaces only) and on texts holding non-ASCII whitespace (Python's Unicode
+    \\s splits on NBSP, EM SPACE, \\x1c and \\x85; the JVM's does not)."""
     from opencv_table_extraction_spark.operators.dedup import _jvm_tokens
 
     texts = ["\tfoo bar baz", "foo bar baz\n", " a\tb  c d ", "", "x",
-             "\n\t lead", "trail \t\n", "  spaced  ", "ab"]
+             "\n\t lead", "trail \t\n", "  spaced  ", "ab",
+             # non-ASCII whitespace: the JVM's \s is ASCII-only
+             "a\u2003b c", "a\xa0b c", "\xa0nbsp\xa0word", "a\u2003b",
+             "a\x1cb", "a\x85b"]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     jvm = [r["t"] for r in
            df.select(F.split(F.trim("text"), r"\s+").alias("t")).collect()]
@@ -615,7 +675,17 @@ def test_decontaminate_flags_planted_contamination(spark):
     plan = flags._sc._jvm.PythonSQLUtils.explainString(
         flags._jdf.queryExecution(), "formatted"
     )
-    assert "BroadcastHashJoin" in plan
+    # the streamed (left) side of the join: the lines under it that hang
+    # off its first child's ":" column, down to the corpus scan
+    lines = plan[: plan.index("\n\n")].splitlines()
+    j = next(i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln)
+    assert "BuildRight" in lines[j], lines[j]
+    col = lines[j].index("BroadcastHashJoin")
+    streamed = list(itertools.takewhile(lambda ln: ln[col:col + 1] == ":",
+                                        lines[j + 1:]))
+    assert any("Scan parquet" in ln for ln in streamed), streamed
+    assert any("MapInArrow" in ln for ln in streamed), streamed
+    assert not any("Exchange" in ln for ln in streamed), streamed
     got = {r["doc_id"]: r["n_hits"] for r in flags.collect()}
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     planted = {i + 1_000_000 for i in range(0, n_docs, EVAL_MOD)}
@@ -846,6 +916,15 @@ def test_scrub_pii_redacts_all_occurrences(spark):
 
 
 
+def test_shingles_expression():
+    """_gram_set, the one word n-gram implementation: overlapping
+    3-grams, and one partial gram for a text shorter than n."""
+    from opencv_table_extraction_spark.operators.dedup import _gram_set
+
+    assert _gram_set("a b c d", 3) == {"a b c", "b c d"}
+    assert _gram_set("x y", 3) == {"x y"}
+
+
 def test_verify_kernel_rounds_half_up_and_containment_is_ordered():
     """The one verify kernel, fed hand-built Arrow batches for both
     metrics (no Spark). A and B share exactly one 3-gram ("x y z");
@@ -864,7 +943,7 @@ def test_verify_kernel_rounds_half_up_and_containment_is_ordered():
 
     a = "x y z " + " ".join(f"a{i}" for i in range(15))
     b = "x y z " + " ".join(f"b{i}" for i in range(16))
-    assert (len(_gram_set(a)), len(_gram_set(b))) == (16, 17)
+    assert (len(_gram_set(a, 3)), len(_gram_set(b, 3))) == (16, 17)
     batch = pa.RecordBatch.from_arrays(
         [pa.array([1, 2], type=pa.int64()), pa.array([2, 1], type=pa.int64()),
          pa.array([a, b]), pa.array([b, a])],
@@ -872,10 +951,12 @@ def test_verify_kernel_rounds_half_up_and_containment_is_ordered():
     )
 
     def run(metric):
+        schema, _ = metric
         (out,) = _verify_batches([batch], *metric)
-        assert out.schema.names == ["a_id", "b_id", metric[0]]
+        assert out.schema == schema
+        assert out.schema.names[:2] == ["a_id", "b_id"]
         assert out.column("a_id").to_pylist() == [1, 2]
-        return out.column(metric[0]).to_pylist()
+        return out.column(schema.names[-1]).to_pylist()
 
     assert round(1 / 32, 4) == 0.0312  # banker's: what the kernel avoids
     assert run(_JACCARD) == [0.0313, 0.0313]
@@ -917,7 +998,6 @@ def test_winnow_oracle_matches_on_edge_whitespace(spark, tmp_path):
     texts edged with tabs/newlines (the r2 ADVICE divergence: DuckDB's
     bare trim strips spaces only; the oracle now trims an explicit
     ASCII-whitespace charset to match Python's .split() normalizer)."""
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -939,23 +1019,10 @@ def test_winnow_oracle_matches_on_edge_whitespace(spark, tmp_path):
     )
     got = {r["doc_id"]: (r["n_fingerprints"], r["fingerprints_csv"])
            for r in _q_winnow(spark, str(tmp_path)).collect()}
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet')"
-    )
+    con = _duckdb_documents(str(tmp_path))
     want = {int(r[0]): (int(r[1]), r[2])
             for r in con.execute(_SQL_WINNOW).fetchall()}
     assert got == want
-
-
-def test_shingles_expression(spark):
-    from opencv_table_extraction_spark.operators.dedup import shingles
-
-    df = spark.createDataFrame([("a b c d",), ("x y",)], ["text"])
-    got = [r["sh"] for r in df.select(shingles(F.col("text")).alias("sh")).collect()]
-    assert got[0] == ["a b c", "b c d"]
-    assert got[1] == ["x y"]
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
