@@ -223,9 +223,9 @@ _SQL_CORPUS = r"""
 SELECT doc_id, text, source FROM documents
 UNION ALL
 SELECT doc_id + 1000000 AS doc_id,
-       array_to_string(
+       coalesce(array_to_string(
          string_split_regex(trim(text), '\s+')[1:CAST(floor(len(string_split_regex(trim(text), '\s+')) * 0.9) AS INT)],
-         ' ') AS text,
+         ' '), '') AS text,
        source
 FROM documents
 """

@@ -453,7 +453,7 @@ def _q_ivf_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+    import pyarrow as pa
 
     # mkdtemp, not a fixed shared path: a predictable /tmp name races
     # concurrent runs (one run's overwrite deletes files mid-scan of
@@ -480,19 +480,13 @@ def _q_ivf_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         csv = store.agg(_id_csv().alias("found_ids_csv")).collect()[0]["found_ids_csv"]
     finally:
         shutil.rmtree(tmp_root, ignore_errors=True)
-    return spark.createDataFrame(
-        [(TOP_K, int(n_store), int(n_common),
-          int(n_store == n_common == TOP_K), csv)],
-        StructType(
-            [
-                StructField("k", IntegerType()),
-                StructField("n_store", IntegerType()),
-                StructField("n_common", IntegerType()),
-                StructField("store_equals_direct", IntegerType()),
-                StructField("found_ids_csv", StringType()),
-            ]
-        ),
-    )
+    # an Arrow-built 1-row frame: no Python stage, unlike a list of rows
+    return spark.createDataFrame(pa.table(
+        [[TOP_K], [n_store], [n_common], [int(n_store == n_common == TOP_K)], [csv]],
+        schema=pa.schema([("k", pa.int32()), ("n_store", pa.int32()),
+                          ("n_common", pa.int32()), ("store_equals_direct", pa.int32()),
+                          ("found_ids_csv", pa.string())]),
+    ))
 
 
 # Batch-search oracle: the brute-force half is DERIVED FOR REAL (exact

@@ -14,7 +14,9 @@ identical to a single run) is what the tests pin.
 Layout:
     root/
       data/bucket=K/*.parquet      one directory per conv bucket
-      lineage/*.parquet            per-partition lineage rows, appended
+      lineage/snapshot_id=N/*.parquet
+                                   per-partition lineage rows of snapshot N,
+                                   written by the driver, replaced on retry
       _committed.json              {"snapshots": [{id, buckets, ts}...]}
 """
 
@@ -22,9 +24,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +61,19 @@ def _overwrite_partitions(df: DataFrame, part_col: str, path: str) -> None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def _replace_dir(src: str, dst: str) -> None:
+    """Rename ``src`` over ``dst``. A directory rename needs an empty
+    target, so an existing ``dst`` first moves aside under a hidden
+    name (which Spark's reader skips) and is removed after."""
+    old = None
+    if os.path.exists(dst):
+        old = os.path.join(os.path.dirname(dst), f".old-{uuid.uuid4().hex}")
+        os.rename(dst, old)
+    os.rename(src, dst)
+    if old is not None:
+        shutil.rmtree(old)
 
 
 class SnapshotCatalog:
@@ -105,14 +124,23 @@ class SnapshotCatalog:
         replaces exactly the bucket directories this run owns."""
         _overwrite_partitions(out, "bucket", os.path.join(self.root, "data"))
 
-    def write_lineage(self, lineage: DataFrame) -> None:
-        """Lineage is partitioned by snapshot_id and dynamically
-        overwritten, so a crash-and-retry of the same snapshot replaces
-        its own lineage rows instead of appending duplicates (the data
-        write was already idempotent; this makes lineage match)."""
-        _overwrite_partitions(
-            lineage, "snapshot_id", os.path.join(self.root, "lineage")
-        )
+    def write_lineage(self, lineage: pa.Table) -> None:
+        """Driver-side write of the collected lineage rows: no Spark job.
+        Each snapshot's rows go to one parquet file in
+        ``lineage/snapshot_id=N/``, the layout of a Spark partitioned
+        write, so ``read_lineage`` reads catalogs written either way. The
+        file lands in a hidden temp dir renamed over the old partition
+        dir, so a retry of the same snapshot replaces its own rows
+        instead of appending duplicates. A zero-row table writes
+        nothing."""
+        base = os.path.join(self.root, "lineage")
+        ids = lineage.column("snapshot_id")
+        for snap_id in pc.unique(ids).to_pylist():
+            rows = lineage.filter(pc.equal(ids, snap_id)).drop_columns(["snapshot_id"])
+            tmp = os.path.join(base, f".tmp-{uuid.uuid4().hex}")
+            os.makedirs(tmp)
+            pq.write_table(rows, os.path.join(tmp, "part-00000.parquet"))
+            _replace_dir(tmp, os.path.join(base, f"snapshot_id={snap_id}"))
 
     def read_output(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "data"))
@@ -177,8 +205,11 @@ class IcebergSnapshotCatalog(SnapshotCatalog):
     def write_data(self, out: DataFrame) -> None:
         self._write_partitioned(out, self.table, "bucket")
 
-    def write_lineage(self, lineage: DataFrame) -> None:
-        self._write_partitioned(lineage, f"{self.table}_lineage", "snapshot_id")
+    def write_lineage(self, lineage: pa.Table) -> None:
+        # an Arrow-built frame: no Python stage, unlike a list of rows
+        self._write_partitioned(
+            self.spark.createDataFrame(lineage), f"{self.table}_lineage", "snapshot_id"
+        )
 
     def read_output(self, spark: SparkSession, snapshot_id: int | None = None):
         reader = spark.read.format("iceberg")
@@ -201,10 +232,12 @@ def run_resumable(
 
     Reads the committed-bucket set, processes only the remainder
     (``max_buckets`` bounds this run — the resume tests kill the job
-    after half), writes per-bucket output + lineage, then commits the
-    manifest. Buckets are committed only after their data lands, so a
-    crash between write and commit at worst reprocesses one run's
-    buckets into overwritten (idempotent) bucket directories.
+    after half), writes per-bucket output, hands the lineage rows (one
+    per kernel partition, already on the driver from ``toArrow``) to
+    ``catalog.write_lineage``, then commits the manifest. Buckets are
+    committed only after their data lands, so a crash between write and
+    commit at worst reprocesses one run's buckets into overwritten
+    (idempotent) bucket directories.
     ``partitions`` is the kernel exchange width (see
     ``extract_transcripts``; 0 = no exchange).
     """
@@ -227,12 +260,12 @@ def run_resumable(
             .withColumn("snapshot_id", F.lit(snap_id))
             .withColumn("attempt", F.lit(len(catalog.snapshots()) + 1))
         )
-        lin_rows = lineage.collect()
-        n_turns = sum(r["n_turns"] for r in lin_rows)
+        lin = lineage.toArrow()
+        n_turns = pc.sum(lin.column("n_turns")).as_py() or 0
 
         out = with_turn_seq(raw).withColumn("bucket", catalog.bucket_col())
         catalog.write_data(out)
-        catalog.write_lineage(spark.createDataFrame(lin_rows, lineage.schema))
+        catalog.write_lineage(lin)
     finally:
         raw.unpersist()
     committed_id = catalog.commit(todo)

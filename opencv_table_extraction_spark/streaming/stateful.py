@@ -36,6 +36,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -208,17 +209,15 @@ def replay_assemble(spark: SparkSession, turns, bucket_col: str = "_bkt"):
                 "\n",
             ).alias("transcript"),
         )
-        rows = agg.collect()
+        rows = agg.toArrow()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("n_turns", LongType()),
-            StructField("max_turn_idx", IntegerType()),
-            StructField("total_chars", LongType()),
-            StructField("n_deltas", LongType()),
-            StructField("transcript", StringType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    # an Arrow-built frame: no Python stage, unlike a list of rows
+    return spark.createDataFrame(rows.cast(pa.schema([
+        ("conv_id", pa.string()),
+        ("n_turns", pa.int64()),
+        ("max_turn_idx", pa.int32()),
+        ("total_chars", pa.int64()),
+        ("n_deltas", pa.int64()),
+        ("transcript", pa.string()),
+    ])))

@@ -599,16 +599,28 @@ def test_gram_set_matches_decontam_oracle_grams(tmp_path):
     ])
     ctes = _SQL_DECONTAM[: _SQL_DECONTAM.index("\ne AS (")].rstrip().rstrip(",")
     con = _duckdb_documents(sf)
-    # DuckDB's array_to_string([]) is NULL: the twins of the "" and "one"
-    # docs have no text and no grams
-    texts = dict(con.execute(
-        ctes + " SELECT doc_id, text FROM corpus WHERE text IS NOT NULL").fetchall())
+    texts = dict(con.execute(ctes + " SELECT doc_id, text FROM corpus").fetchall())
     grams = dict(con.execute(
         ctes + " SELECT doc_id, list(gram) FROM g GROUP BY doc_id").fetchall())
-    assert len(texts) == 2 * 509 - 2 and set(grams) == set(texts)
+    assert len(texts) == 2 * 509 and set(grams) == set(texts)
     bad = [d for d, t in texts.items()
            if sorted(grams[d]) != sorted(_gram_set(t, DECONTAM_NGRAM))]
     assert not bad, [(d, texts[d]) for d in bad[:5]]
+
+
+def test_sql_corpus_matches_dedup_corpus_on_short_docs(spark, tmp_path):
+    """The oracle corpus (_SQL_CORPUS) equals dedup_corpus, near-dup twins
+    included, on docs of at most one token: their twin keeps no token and
+    its text is "" on both sides (DuckDB's array_to_string([]) is NULL
+    unless coalesced)."""
+    from opencv_table_extraction_spark.operators.dedup import _SQL_CORPUS, dedup_corpus
+
+    sf = _docs_with(tmp_path, ["", "one"])
+    got = {r["doc_id"]: r["text"] for r in dedup_corpus(spark, sf).collect()}
+    want = dict(_duckdb_documents(sf).execute(
+        f"SELECT doc_id, text FROM ({_SQL_CORPUS})").fetchall())
+    assert got[1_009_001] == got[1_009_002] == ""
+    assert got == want
 
 
 def test_simhash_pairs_rejects_unsound_banding(spark):
@@ -647,9 +659,10 @@ def test_python_kernels_tokenize_like_jvm_on_edge_whitespace(spark):
 def test_corpus_whitespace_is_pinned_for_oracles(spark):
     """The DuckDB oracles and the Python kernels agree on tokenization
     for any text whose edges are space-only and whose whitespace chars
-    are ASCII \\s — pin that corpus invariant (like the multimodal ASCII
-    pin) so a future corpus change that breaks it fails loudly here
-    rather than as a silent oracle mismatch."""
+    are ASCII \\s other than \\v (DuckDB's RE2 \\s does not split on
+    \\x0B; the JVM and _jvm_tokens do) — pin that corpus invariant (like
+    the multimodal ASCII pin) so a future corpus change that breaks it
+    fails loudly here rather than as a silent oracle mismatch."""
     import re as _re
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
@@ -658,7 +671,7 @@ def test_corpus_whitespace_is_pinned_for_oracles(spark):
             t = r["text"]
             assert not _re.match(r"^[\t\n\r\f\v]", t), repr(t[:20])
             assert not _re.search(r"[\t\n\r\f\v]$", t), repr(t[-20:])
-            assert all(_re.match(r"[ \t\n\r\f\v]", ch) for ch in t if ch.isspace())
+            assert all(_re.match(r"[ \t\n\r\f]", ch) for ch in t if ch.isspace()), repr(t[:80])
 
 
 def test_decontaminate_flags_planted_contamination(spark):

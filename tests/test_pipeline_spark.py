@@ -2,6 +2,8 @@
 the single-process oracle AND the independent generator truth, output
 determinism, resumability, and skew-bounding under salting."""
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -141,7 +143,7 @@ def test_lineage_idempotent_and_conf_restored(spark, fixture_dir, tmp_path):
     out = with_turn_seq(raw).withColumn("bucket", cat.bucket_col())
     for _ in range(2):  # second write simulates the retry
         cat.write_data(out)
-        cat.write_lineage(lineage)
+        cat.write_lineage(lineage.toArrow())
     lin = cat.read_lineage(spark)
     assert lin.groupBy("snapshot_id", "partition_id").count().where(
         F.col("count") > 1
@@ -149,6 +151,56 @@ def test_lineage_idempotent_and_conf_restored(spark, fixture_dir, tmp_path):
     assert lin.agg(F.sum("n_turns")).collect()[0][0] == df.count()
     assert cat.read_output(spark).count() == df.count()
     assert spark.conf.get(key, None) == before
+
+
+def _hidden_dirs(root):
+    return [os.path.join(dp, n) for dp, dns, _ in os.walk(root)
+            for n in dns if n.startswith(".")]
+
+
+@pytest.fixture(scope="module")
+def lineage_snapshot_2(spark, fixture_dir):
+    """Lineage rows of snapshot 2, shaped as run_resumable builds them."""
+    df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    lin = (lineage_summary(extract_transcripts(df, add_turn_seq=False))
+           .withColumn("snapshot_id", F.lit(2)).withColumn("attempt", F.lit(2))).persist()
+    yield lin
+    lin.unpersist()
+
+
+def test_write_lineage_runs_no_spark_job(spark, tmp_path, lineage_snapshot_2):
+    rows = lineage_snapshot_2.toArrow()
+    cat = SnapshotCatalog(str(tmp_path / "cat"), n_buckets=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("write-lineage", "write-lineage")
+    try:
+        cat.write_lineage(rows)
+        cat.write_lineage(rows.slice(0, 0))  # zero rows: nothing written
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("write-lineage")) == []
+    assert os.listdir(tmp_path / "cat" / "lineage") == ["snapshot_id=2"]
+
+
+def test_lineage_driver_write_reads_with_spark_written(spark, tmp_path, lineage_snapshot_2):
+    """A catalog whose snapshot 1 was written by Spark's partitioned
+    write (the layout of older catalogs) and whose snapshot 2 comes from
+    the driver reads back through read_lineage with one schema holding
+    both snapshots; a retry replaces snapshot 2 and leaves no temp dir."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"), n_buckets=4)
+    lineage_snapshot_2.withColumn("snapshot_id", F.lit(1)).withColumn(
+        "attempt", F.lit(1)
+    ).write.mode("overwrite").partitionBy("snapshot_id").parquet(
+        str(tmp_path / "cat" / "lineage"))
+    rows = lineage_snapshot_2.toArrow()
+    for _ in range(2):  # second write is the retry
+        cat.write_lineage(rows)
+        assert _hidden_dirs(tmp_path / "cat") == []
+    lin = cat.read_lineage(spark)
+    assert dict(lin.dtypes) == dict(lineage_snapshot_2.dtypes)
+    got = lin.groupBy("snapshot_id").agg(F.count("*"), F.sum("n_turns")).collect()
+    assert sorted(tuple(r) for r in got) == [
+        (s, rows.num_rows, sum(rows.column("n_turns").to_pylist())) for s in (1, 2)]
 
 
 def test_iceberg_binding_contract(spark, tmp_path):
