@@ -24,12 +24,8 @@ __all__ = ["connected_components", "detect_cells", "order_cells"]
 class _UnionFind:
     __slots__ = ("parent",)
 
-    def __init__(self) -> None:
-        self.parent: list[int] = []
-
-    def make(self) -> int:
-        self.parent.append(len(self.parent))
-        return len(self.parent) - 1
+    def __init__(self, n: int) -> None:
+        self.parent = list(range(n))
 
     def find(self, a: int) -> int:
         p = self.parent
@@ -82,11 +78,12 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
     e_l = r_e.tolist()
     n_runs = len(rows_l)
 
-    uf = _UnionFind()
-    find, union, make = uf.find, uf.union, uf.make
-    run_lab = [0] * n_runs
-    # single pass over runs (already sorted by (row, start)); two-pointer
-    # against the previous row's run range for 4-connectivity merges
+    # run k is node k; each run is united with every run it touches in
+    # the band above (runs are sorted by (band, start): a two-pointer
+    # over the previous band's run range)
+    uf = _UnionFind(n_runs)
+    find, union = uf.find, uf.union
+    merged = False
     prev_lo = prev_hi = 0
     prev_row = -2
     i = 0
@@ -102,23 +99,22 @@ def connected_components(fg: np.ndarray) -> np.ndarray:
         j = lo
         for k in range(i, j_end):
             s, e = s_l[k], e_l[k]
-            lab = -1
             while j < hi and e_l[j] <= s:
                 j += 1
             jj = j
             while jj < hi and s_l[jj] < e:
-                lab = union(lab, find(run_lab[jj])) if lab >= 0 else find(run_lab[jj])
+                union(k, jj)
+                merged = True
                 jj += 1
-            run_lab[k] = make() if lab < 0 else lab
         prev_lo, prev_hi, prev_row = i, j_end, r
         i = j_end
 
     run_y0, run_y1 = band_y0[r_row], band_y1[r_row]
-    if len(uf.parent) == n_runs:  # no run merged: runs are the components
+    if not merged:  # no union happened: runs are the components
         w, h = r_e - r_s, run_y1 - run_y0
         return np.stack([r_s, run_y0, w, h, w * h], axis=1)
 
-    roots = [find(x) for x in run_lab]
+    roots = [find(k) for k in range(n_runs)]
     uniq: dict[int, int] = {}
     comp = np.array([uniq.setdefault(x, len(uniq)) for x in roots], dtype=np.int64)
     n = len(uniq)

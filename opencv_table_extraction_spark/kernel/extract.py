@@ -99,39 +99,39 @@ def _extract_table(text: str, use_adaptive: bool) -> dict:
     rects = detect_cells(grid)
     ordered = order_cells(rects)
 
-    # match detected cells back to layout rects by center containment —
-    # one vectorized (n_cells x n_layout) containment test, not a loop.
-    # ``ordered`` is sorted by (row, col): a line is a run of one row's cells
+    # match detected cells back to layout rects by center containment.
+    # The layout is a grid of disjoint rects, so one searchsorted per axis
+    # finds the column and row whose start is the last at or before the
+    # center; the cell matches that rect if its center also lies before
+    # the rect's end, and no rect otherwise (a grid line, or off the table).
+    xs, ws = layout_rects[: pt.n_cols, 0], layout_rects[: pt.n_cols, 2]
+    ys, hs = layout_rects[:: pt.n_cols, 1], layout_rects[:: pt.n_cols, 3]
+    cx = ordered[:, 2] + ordered[:, 4] / 2.0
+    cy = ordered[:, 3] + ordered[:, 5] / 2.0
+    ci = np.searchsorted(xs, cx, side="right") - 1
+    ri = np.searchsorted(ys, cy, side="right") - 1
+    hit = (ci >= 0) & (ri >= 0) & (cx < (xs + ws)[ci]) & (cy < (ys + hs)[ri])
     err = ""
+    if not hit.all():
+        row, col = ordered[np.flatnonzero(~hit)[-1], :2].tolist()
+        err = f"cell ({row},{col}) matched 0 layout rects"
     spans: list[dict] = []
     row_cells: list[list[str]] = []
     last_row = -1
-    if len(ordered):
-        cx = (ordered[:, 2] + ordered[:, 4] / 2.0)[:, None]
-        cy = (ordered[:, 3] + ordered[:, 5] / 2.0)[:, None]
-        lx, ly = layout_rects[:, 0][None, :], layout_rects[:, 1][None, :]
-        contained = (
-            (lx <= cx) & (cx < lx + layout_rects[:, 2][None, :])
-            & (ly <= cy) & (cy < ly + layout_rects[:, 3][None, :])
+    layout_list = layout_rects.tolist()
+    # ``ordered`` is sorted by (row, col): a line is a run of one row's cells
+    for (row, col), li in zip(ordered[hit, :2].tolist(),
+                              (ri * pt.n_cols + ci)[hit].tolist()):
+        cell = pt.cells[li]
+        lx0, ly0, lw0, lh0 = layout_list[li]
+        spans.append(
+            {"row": row, "col": col, "x": lx0, "y": ly0, "w": lw0,
+             "h": lh0, "start": cell.start, "end": cell.end}
         )
-        n_hits = contained.sum(axis=1)
-        hit_idx = contained.argmax(axis=1)
-        layout_list = layout_rects.tolist()
-        for (row, col, *_), nh, li in zip(ordered.tolist(), n_hits.tolist(),
-                                          hit_idx.tolist()):
-            if nh != 1:
-                err = f"cell ({row},{col}) matched {nh} layout rects"
-                continue
-            cell = pt.cells[li]
-            lx0, ly0, lw0, lh0 = layout_list[li]
-            spans.append(
-                {"row": row, "col": col, "x": lx0, "y": ly0, "w": lw0,
-                 "h": lh0, "start": cell.start, "end": cell.end}
-            )
-            if row != last_row:
-                row_cells.append([])
-                last_row = row
-            row_cells[-1].append(text[cell.start : cell.end])
+        if row != last_row:
+            row_cells.append([])
+            last_row = row
+        row_cells[-1].append(text[cell.start : cell.end])
 
     return {
         "route": "table",

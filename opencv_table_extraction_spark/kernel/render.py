@@ -136,28 +136,25 @@ def parse_pipe_table(text: str) -> ParsedTable | None:
 def layout_table(pt: ParsedTable) -> tuple[int, int, np.ndarray]:
     """Deterministic pixel layout. Returns (H, W, rects) where rects is
     int64 (n_rows*n_cols, 4) row-major (x, y, w, h) *interior* rects —
-    i.e. the regions bounded by (exclusive of) the grid lines."""
-    col_w = np.full(pt.n_cols, MIN_CELL_W, dtype=np.int64)
-    for c in pt.cells:
-        col_w[c.col] = max(col_w[c.col], (len(c.text) + 2) * CHAR_W)
+    i.e. the regions bounded by (exclusive of) the grid lines. Columns
+    start at the running sum of (width + LINE_T), rows at a fixed
+    CELL_H + LINE_T stride."""
+    lens = np.fromiter((len(c.text) for c in pt.cells), np.int64, len(pt.cells))
+    col_w = np.maximum((lens.reshape(pt.n_rows, pt.n_cols).max(axis=0) + 2) * CHAR_W,
+                       MIN_CELL_W)
     total_w = int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
-    scale = 1.0
     if total_w > MAX_CANVAS - 2 * MARGIN:
         scale = (MAX_CANVAS - 2 * MARGIN - (pt.n_cols + 1) * LINE_T) / float(col_w.sum())
         col_w = np.maximum((col_w * scale).astype(np.int64), 8)
     W = 2 * MARGIN + int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
     H = 2 * MARGIN + pt.n_rows * CELL_H + (pt.n_rows + 1) * LINE_T
-    xs = np.empty(pt.n_cols, dtype=np.int64)
-    acc = MARGIN + LINE_T
-    for c in range(pt.n_cols):
-        xs[c] = acc
-        acc += col_w[c] + LINE_T
-    rects = np.empty((pt.n_rows * pt.n_cols, 4), dtype=np.int64)
-    for r in range(pt.n_rows):
-        y = MARGIN + LINE_T + r * (CELL_H + LINE_T)
-        for c in range(pt.n_cols):
-            rects[r * pt.n_cols + c] = (xs[c], y, col_w[c], CELL_H)
-    return H, W, rects
+    step = col_w + LINE_T
+    rects = np.empty((pt.n_rows, pt.n_cols, 4), dtype=np.int64)
+    rects[..., 0] = MARGIN + LINE_T + np.cumsum(step) - step
+    rects[..., 1] = (MARGIN + LINE_T + np.arange(pt.n_rows) * (CELL_H + LINE_T))[:, None]
+    rects[..., 2] = col_w
+    rects[..., 3] = CELL_H
+    return H, W, rects.reshape(-1, 4)
 
 
 def render_table(pt: ParsedTable, noise_seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
@@ -165,39 +162,30 @@ def render_table(pt: ParsedTable, noise_seed: int = 0) -> tuple[np.ndarray, np.n
     plus deterministic sub-threshold noise specks. Returns (img, rects)."""
     H, W, rects = layout_table(pt)
     img = np.full((H, W), 255, dtype=np.uint8)
-    # grid lines spanning the table bounding box
-    x0, y0 = MARGIN, MARGIN
-    x1 = W - MARGIN
-    y1 = H - MARGIN
-    for r in range(pt.n_rows + 1):
-        y = y0 + r * (CELL_H + LINE_T)
-        img[y : y + LINE_T, x0:x1] = 0
-    xs = sorted({int(rc[0]) - LINE_T for rc in rects})
-    for x in xs + [x1 - LINE_T]:
-        img[y0:y1, x : x + LINE_T] = 0
+    # grid lines: one LINE_T band before every row/column start of the
+    # layout, and one after the last, spanning the table bounding box
+    line_y = np.append(rects[:: pt.n_cols, 1], H - MARGIN) - LINE_T
+    line_x = np.append(rects[: pt.n_cols, 0], W - MARGIN) - LINE_T
+    thick = np.arange(LINE_T)
+    img[(line_y[:, None] + thick).ravel(), MARGIN : W - MARGIN] = 0
+    img[MARGIN : H - MARGIN, (line_x[:, None] + thick).ravel()] = 0
     # dashed "glyph" strokes: 3-on/3-off, max run 3 px << any SE length.
     # A cell's dash pixels are exactly the offsets j in [0, n_px) with
     # j % 6 < 3 at columns x+4+j, rows (cy, cy+1) — painted for ALL
     # cells in one scatter instead of a per-cell/per-dash Python loop.
-    n_cells_r = len(pt.cells)
-    if n_cells_r:
-        lens = np.fromiter(
-            (len(c.text) for c in pt.cells), dtype=np.int64, count=n_cells_r
-        )
-        npx = np.minimum(lens * CHAR_W, rects[:, 2] - 8)
-        valid = npx > 0
-        if valid.any():
-            npx_v = npx[valid]
-            x_v = rects[valid, 0] + 4
-            cy_v = rects[valid, 1] + rects[valid, 3] // 2
-            cnt = 3 * (npx_v // 6) + np.minimum(npx_v % 6, 3)
-            starts = np.cumsum(cnt) - cnt
-            k = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)
-            j = (k // 3) * 6 + (k % 3)
-            cols = np.repeat(x_v, cnt) + j
-            rows_px = np.repeat(cy_v, cnt)
-            img[rows_px, cols] = 0
-            img[rows_px + 1, cols] = 0
+    lens = np.fromiter((len(c.text) for c in pt.cells), np.int64, len(pt.cells))
+    npx = np.minimum(lens * CHAR_W, rects[:, 2] - 8)
+    valid = npx > 0
+    npx_v = npx[valid]
+    x_v = rects[valid, 0] + 4
+    cy_v = rects[valid, 1] + rects[valid, 3] // 2
+    cnt = 3 * (npx_v // 6) + np.minimum(npx_v % 6, 3)
+    starts = np.cumsum(cnt) - cnt
+    k = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)
+    cols = np.repeat(x_v, cnt) + (k // 3) * 6 + (k % 3)
+    rows_px = np.repeat(cy_v, cnt)
+    img[rows_px, cols] = 0
+    img[rows_px + 1, cols] = 0
     # deterministic noise specks (2x2 px, below min_area; removed by
     # opens). Inline LCG (Numerical Recipes constants) instead of a
     # RandomState: constructing one per turn costs more than the kernel's

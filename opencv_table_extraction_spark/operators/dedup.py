@@ -231,6 +231,22 @@ FROM documents
 """
 
 
+def _sql_grams(n: int, text: str = "text") -> str:
+    """The DuckDB twin of ``_gram_set(text, n)``, as a list expression
+    over the SQL expression ``text``: the one word n-gram list of every
+    oracle."""
+    toks = rf"string_split_regex(trim({text}), '\s+')"
+    return (f"list_distinct(list_transform(range(0, greatest(len({toks}) - {n}, 0) + 1),"
+            f" i -> array_to_string({toks}[i+1:i+{n}], ' ')))")
+
+
+# The oracle corpus with each doc's distinct 3-gram list: the input of
+# the Jaccard, containment and MinHash oracles.
+_SQL_SHINGLED = f"""
+WITH corpus AS ({_SQL_CORPUS}),
+sh AS (SELECT doc_id, source, {_sql_grams(_SHINGLE_N)} AS sh FROM corpus)"""
+
+
 def normalized_fingerprint(col):
     """sha256 of the lowered, trimmed, whitespace-collapsed text: the
     exact-dedup key, and textstats' document fingerprint."""
@@ -344,15 +360,7 @@ def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(dedup_corpus(spark, sf_dir), max_block=MAX_BLOCK)
 
 
-_SQL_JACCARD = rf"""
-WITH corpus AS ({_SQL_CORPUS}),
-sh AS (
-  SELECT doc_id, source,
-         list_distinct(list_transform(
-           range(0, greatest(len(string_split_regex(trim(text), '\s+')) - 3, 0) + 1),
-           i -> array_to_string(string_split_regex(trim(text), '\s+')[i+1:i+3], ' ')
-         )) AS sh
-  FROM corpus)
+_SQL_JACCARD = f"""{_SQL_SHINGLED}
 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
              / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
@@ -501,9 +509,9 @@ _JACCARD = (_verify_schema("jaccard"), lambda sa, sb: len(sa | sb))
 _CONTAINMENT = (_verify_schema("containment"), lambda sa, sb: len(sa))  # A inside B
 
 
-# Named banding profiles, measured on the sf1-equivalent corpus
-# (200k docs, BENCH/BASELINE.md): the knob a caller actually wants —
-# recall target — instead of raw (n_bands, n_hashes).
+# The banding options of minhash_lsh_pairs_with_drops, (n_bands,
+# n_hashes) by recall target, measured on the sf1-equivalent corpus
+# (200k docs, BENCH/BASELINE.md):
 #   standard: 16 bands x 2 rows — 99.982% measured recall, every miss
 #             at J in [0.5, 0.575] (the S-curve tail), leanest band
 #             exchange; the 100-TB default.
@@ -518,28 +526,11 @@ RECALL_PROFILES: dict[str, tuple[int, int]] = {
 }
 
 
-def _resolve_recall(
-    recall: str | None, n_bands: int, n_hashes: int | None
-) -> tuple[int, int | None]:
-    if recall is None:
-        return n_bands, n_hashes
-    if recall not in RECALL_PROFILES:
-        raise ValueError(
-            f"unknown recall profile {recall!r}: use one of "
-            f"{sorted(RECALL_PROFILES)} or pass n_bands/n_hashes directly"
-        )
-    if n_bands != N_BANDS or n_hashes is not None:
-        raise ValueError("pass either recall= or n_bands/n_hashes, not both")
-    return RECALL_PROFILES[recall]
-
-
 def minhash_lsh_pairs_with_drops(
     corpus: DataFrame,
-    n_bands: int = N_BANDS,
     threshold: float = 0.5,
     max_bucket: int = MAX_BUCKET,
-    n_hashes: int | None = None,
-    recall: str | None = None,
+    recall: str = "standard",
 ) -> tuple[DataFrame, DataFrame]:
     """MinHash + LSH banding near-dup pairs, fully distributed:
       1. per-doc signature -> band keys (narrow Arrow kernel);
@@ -548,32 +539,23 @@ def minhash_lsh_pairs_with_drops(
          giant single-task array, no quadratic blow-up; see _bucket_ids);
       3. exact-Jaccard verification of the deduped candidates.
 
-    ``n_hashes``/``n_bands`` set the banding S-curve (rows per band =
-    n_hashes // n_bands). ``n_hashes`` defaults to 2*n_bands so that
-    raising n_bands keeps 2-row bands. The three relevant points, measured
-    on the 200k-doc sf1-equivalent corpus (BENCH/BASELINE.md):
-    16x2 (default) recall 99.982%, all misses at J in [0.5, 0.575],
-    and the leanest band-exchange volume — the 100-TB default; 32x2
-    (n_bands=32) measured PERFECT recall (102,615/102,615, 0 extra) at
-    ~1.3x warm wall and 2x band-exchange volume; 32x1 (n_bands=32,
-    n_hashes=32) also perfect recall but ~8x wall — single-row bands
-    admit every J-similar pair as a candidate, so the verify leg
-    dominates. Raise n_bands to 32 when near-threshold recall matters
-    more than shuffle volume — or just say what you mean with
-    ``recall="standard"|"high"`` (RECALL_PROFILES carries the measured
-    tradeoff; mutually exclusive with explicit n_bands/n_hashes).
+    ``recall`` names the banding S-curve, one of RECALL_PROFILES:
+    "standard" (16 bands x 2 rows, the leanest band exchange) or "high"
+    (32 x 2, perfect measured recall at ~1.3x warm wall). Both keep
+    2-row bands; the measured tradeoff is at RECALL_PROFILES.
 
     Returns ``(pairs, dropped)`` — the explicit telemetry contract: the
     ``dropped`` frame (band_id, band_hash, n) enumerates every excluded
     bucket, is lazy (evaluating it re-runs the banding subtree), and is
     certified by the ``dedup_dropped_buckets`` driver query.
     """
-    n_bands, n_hashes = _resolve_recall(recall, n_bands, n_hashes)
+    if recall not in RECALL_PROFILES:
+        raise ValueError(
+            f"unknown recall profile {recall!r}: use one of {sorted(RECALL_PROFILES)}"
+        )
+    n_bands, n_hashes = RECALL_PROFILES[recall]
     docs = corpus.select("doc_id", "text")
-    bands = minhash_band_rows(
-        docs, n_hashes=(2 * n_bands if n_hashes is None else n_hashes),
-        n_bands=n_bands,
-    )
+    bands = minhash_band_rows(docs, n_hashes=n_hashes, n_bands=n_bands)
     # candidate pairs via ONE exchange: group band rows by bucket key and
     # enumerate ordered pairs inside each bucket. A self-join would
     # re-execute the whole scan->shingle->signature pipeline for both
@@ -819,22 +801,7 @@ def _q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Brute-force quadratic oracle (small-corpus verification baseline,
 # like _SQL_MINHASH): all ordered pairs with the exact length
 # pre-filter len(b.sh) >= ceil(t*len(a.sh)) (drops no true pair).
-_SQL_CONTAINMENT = r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id,
-         array_to_string(
-           string_split_regex(trim(text), '\s+')[1:CAST(floor(len(string_split_regex(trim(text), '\s+')) * 0.9) AS INT)],
-           ' ') AS text
-  FROM documents),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(0, greatest(len(string_split_regex(trim(text), '\s+')) - 3, 0) + 1),
-           i -> array_to_string(string_split_regex(trim(text), '\s+')[i+1:i+3], ' ')
-         )) AS sh
-  FROM corpus)
+_SQL_CONTAINMENT = f"""{_SQL_SHINGLED}
 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
              / len(a.sh), 4) AS containment
@@ -858,22 +825,7 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the exact pair set (16 bands x 2 rows: the sf0.01 check finds all 600
 # true pairs; miss probability per pair at J=0.9 planted dups ~ 3e-12,
 # at the 0.5 boundary ~1%, measured zero on this corpus).
-_SQL_MINHASH = r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id,
-         array_to_string(
-           string_split_regex(trim(text), '\s+')[1:CAST(floor(len(string_split_regex(trim(text), '\s+')) * 0.9) AS INT)],
-           ' ') AS text
-  FROM documents),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(0, greatest(len(string_split_regex(trim(text), '\s+')) - 3, 0) + 1),
-           i -> array_to_string(string_split_regex(trim(text), '\s+')[i+1:i+3], ' ')
-         )) AS sh
-  FROM corpus)
+_SQL_MINHASH = f"""{_SQL_SHINGLED}
 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
              / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
@@ -886,7 +838,7 @@ WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 """
 
 
-def pairs_crosscheck(corpus: DataFrame, recall: str | None = None) -> DataFrame:
+def pairs_crosscheck(corpus: DataFrame, recall: str = "standard") -> DataFrame:
     """Exact-recall cross-check of the two INDEPENDENT near-dup pair
     generators — probabilistic minhash-LSH banding vs the exact PPJoin
     prefix filter — on the same corpus at the same threshold (0.5).
@@ -1278,15 +1230,9 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flags
 
 
-_SQL_DECONTAM = rf"""
+_SQL_DECONTAM = f"""
 WITH corpus AS ({_SQL_CORPUS}),
-g AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           range(0, greatest(len(string_split_regex(trim(text), '\s+')) - {DECONTAM_NGRAM}, 0) + 1),
-           i -> array_to_string(string_split_regex(trim(text), '\s+')[i+1:i+{DECONTAM_NGRAM}], ' ')
-         ))) AS gram
-  FROM corpus),
+g AS (SELECT doc_id, unnest({_sql_grams(DECONTAM_NGRAM)}) AS gram FROM corpus),
 e AS (SELECT DISTINCT gram FROM g
       WHERE doc_id % {EVAL_MOD} = 0 AND doc_id < 1000000)
 SELECT doc_id, count(DISTINCT gram) AS n_hits
@@ -1402,8 +1348,7 @@ def _contract_batches(batches):
         return
     ids, idx = np.unique(np.concatenate(a + b), return_inverse=True)
     n = len(idx) // 2
-    uf = _UnionFind()
-    uf.parent = list(range(len(ids)))
+    uf = _UnionFind(len(ids))
     for x, y in zip(idx[:n].tolist(), idx[n:].tolist()):
         uf.union(x, y)
     root = np.array([uf.find(i) for i in range(len(ids))], dtype=np.int64)

@@ -17,8 +17,9 @@ batch replaces its own partition, so output is idempotent per batch.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -74,6 +75,37 @@ def sum_value_cents(col: str = "value"):
     )
 
 
+def _append_available_now(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    max_files_per_trigger: int,
+    out_dir: str,
+    checkpoint_dir: str | None,
+    build: Callable[[DataFrame], DataFrame],
+) -> None:
+    """The availableNow parquet-to-parquet stream: read the files under
+    ``source_dir`` with ``schema``, at most ``max_files_per_trigger`` per
+    micro-batch, apply ``build``, append the result to ``out_dir/data``
+    (checkpoint at ``checkpoint_dir``, default ``out_dir/_checkpoint``),
+    and return once every file present at the start is processed."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+    )
+    q = (
+        build(stream).writeStream.format("parquet")
+        .option("path", os.path.join(out_dir, "data"))
+        .option("checkpointLocation",
+                checkpoint_dir or os.path.join(out_dir, "_checkpoint"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def windowed_event_counts(
     spark: SparkSession,
     source_dir: str,
@@ -95,22 +127,10 @@ def windowed_event_counts(
     until a future run advances the watermark past them; the stream
     checkpoint carries both the watermark and the window state across
     restarts."""
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    _append_available_now(
+        spark, source_dir, EVENT_SCHEMA, 1, out_dir, checkpoint_dir,
+        lambda s: tumbling_window_agg(s.withWatermark("ts", watermark), window),
     )
-    agg = tumbling_window_agg(stream.withWatermark("ts", watermark), window)
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "data"))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def tumbling_window_agg(df, window: str = "1 hour"):
@@ -166,22 +186,10 @@ def session_event_counts(
     in-delay event can bridge two open sessions); a session is emitted
     once its end (last event + gap) falls behind the watermark, at which
     point no admissible event can extend it."""
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    _append_available_now(
+        spark, source_dir, EVENT_SCHEMA, 1, out_dir, checkpoint_dir,
+        lambda s: session_window_agg(s.withWatermark("ts", watermark), gap),
     )
-    agg = session_window_agg(stream.withWatermark("ts", watermark), gap)
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "data"))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_incremental(

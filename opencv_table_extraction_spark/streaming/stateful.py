@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .incremental import TRANSCRIPT_SCHEMA
+from .incremental import TRANSCRIPT_SCHEMA, _append_available_now
 
 ASSEMBLED_SCHEMA = StructType(
     [
@@ -115,28 +115,17 @@ def assemble_conversations(
     docstring for how to reassemble full transcripts from the deltas.
     ``max_files_per_trigger=1`` forces one micro-batch per source file —
     the deterministic-replay shape the oracle certification uses."""
-    checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    _append_available_now(
+        spark, source_dir, TRANSCRIPT_SCHEMA, max_files_per_trigger, out_dir,
+        checkpoint_dir,
+        lambda stream: stream.groupBy("conv_id").applyInPandasWithState(
+            _fold_conversation,
+            outputStructType=ASSEMBLED_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
     )
-    snapshots = stream.groupBy("conv_id").applyInPandasWithState(
-        _fold_conversation,
-        outputStructType=ASSEMBLED_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        snapshots.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "data"))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def replay_assemble(spark: SparkSession, turns, bucket_col: str = "_bkt"):

@@ -90,3 +90,25 @@ def test_noise_specks_do_not_create_cells():
         text = make_table_md(3, 3) + f"\n\nnoise salt {salt}."
         out = extract_turn(text)
         assert out["n_cells"] == 9, f"salt {salt}: {out}"
+
+
+def test_cell_off_the_layout_is_reported_and_skipped(monkeypatch):
+    """A detected cell whose center lies in no layout rect is left out of
+    the spans and the text, and ``err`` names it. The detector is wrapped
+    to add one rect centred on the grid line between columns 0 and 1 of
+    row 0, so ``order_cells`` makes it cell (0, 1) and shifts the row's
+    true cells to columns 2 and 3."""
+    from opencv_table_extraction_spark.kernel import extract as kx
+    from opencv_table_extraction_spark.kernel.render import CELL_H, LINE_T
+
+    text = make_table_md(2, 3)
+    rects = layout_table(parse_pipe_table(text))[2]
+    line_center = int(rects[1, 0]) - LINE_T // 2  # between columns 0 and 1
+    extra = [line_center - 4, int(rects[1, 1]), 8, CELL_H]
+    detect = kx.detect_cells
+    monkeypatch.setattr(kx, "detect_cells", lambda grid: np.vstack([detect(grid), [extra]]))
+    out = kx.extract_turn(text)
+    assert out["err"] == "cell (0,1) matched 0 layout rects"
+    assert out["n_cells"] == 6
+    assert out["extracted_text"] == "r0c0-xx\tr0c1-xx\tr0c2-xx\nr1c0-xx\tr1c1-xx\tr1c2-xx"
+    assert [(s["row"], s["col"]) for s in out["spans"]][:3] == [(0, 0), (0, 2), (0, 3)]

@@ -4,6 +4,7 @@ All at sf0.001 for speed; exact SQL-parity is covered by
 tools/check_queries.py (driver-mimic) at sf0.01."""
 
 import contextlib
+import inspect
 import itertools
 
 import pytest
@@ -88,13 +89,15 @@ def test_containment_finds_planted_subsumptions(spark):
 
 
 def test_minhash_band_scaling_keeps_two_row_bands(spark):
-    """n_bands=32 must scale n_hashes to 64 (2-row bands), not degrade
-    to 32 single-row bands (the r6 sf1-sweep finding: 32x1 is
-    perfect-recall but ~8x wall because every J-similar pair becomes a
-    candidate). Pin: band rows per doc = n_bands in both configs, and
-    the 32x2 pair set is a superset of the 16x2 set on the test corpus
-    (higher recall, identical verify threshold)."""
+    """Both recall profiles band 2-row signatures: "high" doubles the
+    hashes with the bands, instead of degrading to 32 single-row bands
+    (the r6 sf1-sweep finding: 32x1 is perfect-recall but ~8x wall
+    because every J-similar pair becomes a candidate). Pin: band rows
+    per doc = n_bands in both profiles, and the "high" pair set is a
+    superset of the "standard" set on the test corpus (higher recall,
+    identical verify threshold)."""
     from opencv_table_extraction_spark.operators.dedup import (
+        RECALL_PROFILES,
         dedup_corpus,
         minhash_band_rows,
         minhash_lsh_pairs_with_drops,
@@ -102,26 +105,27 @@ def test_minhash_band_scaling_keeps_two_row_bands(spark):
 
     corpus = dedup_corpus(spark, SF)
     docs = corpus.select("doc_id", "text").limit(5)
-    for nb in (16, 32):
+    for nb, nh in RECALL_PROFILES.values():
+        assert nh == 2 * nb
         per_doc = (
-            minhash_band_rows(docs, n_hashes=2 * nb, n_bands=nb)
+            minhash_band_rows(docs, n_hashes=nh, n_bands=nb)
             .groupBy("doc_id").count().collect()
         )
         assert per_doc and all(r["count"] == nb for r in per_doc)
 
-    p16 = {(r["a_id"], r["b_id"])
-           for r in minhash_lsh_pairs_with_drops(corpus)[0].collect()}
+    p16 = {(r["a_id"], r["b_id"]) for r in
+           minhash_lsh_pairs_with_drops(corpus, recall="standard")[0].collect()}
     p32 = {(r["a_id"], r["b_id"]) for r in
-           minhash_lsh_pairs_with_drops(corpus, n_bands=32)[0].collect()}
+           minhash_lsh_pairs_with_drops(corpus, recall="high")[0].collect()}
     assert p16 <= p32
 
 
 def test_lsh_recall_profiles(spark):
-    """recall="standard"|"high" is the named form of the measured
-    banding tradeoff (r6 verdict #5): high must resolve to exactly the
-    32x2 configuration, unknown/conflicting arguments must fail fast,
-    and the crosscheck accepts the profile so the high-profile
-    generator can be measured against exact PPJoin truth."""
+    """recall="standard"|"high" is the one banding option (r6 verdict
+    #5): the profiles are exactly 16x2 and 32x2, the default is
+    "standard", an unknown profile fails fast, and the crosscheck
+    accepts the profile so the high-profile generator can be measured
+    against exact PPJoin truth."""
     from opencv_table_extraction_spark.operators.dedup import (
         RECALL_PROFILES,
         dedup_corpus,
@@ -133,16 +137,14 @@ def test_lsh_recall_profiles(spark):
     corpus = dedup_corpus(spark, SF)
     with pytest.raises(ValueError, match="unknown recall profile"):
         minhash_lsh_pairs_with_drops(corpus, recall="maximum")
-    with pytest.raises(ValueError, match="not both"):
-        minhash_lsh_pairs_with_drops(corpus, recall="high", n_bands=32)
 
     hi = {(r["a_id"], r["b_id"]) for r in
           minhash_lsh_pairs_with_drops(corpus, recall="high")[0].collect()}
-    explicit = {(r["a_id"], r["b_id"]) for r in
-                minhash_lsh_pairs_with_drops(corpus, n_bands=32)[0].collect()}
     std = {(r["a_id"], r["b_id"]) for r in
            minhash_lsh_pairs_with_drops(corpus, recall="standard")[0].collect()}
-    assert hi == explicit and std <= hi
+    assert std <= hi
+    default = inspect.signature(minhash_lsh_pairs_with_drops).parameters["recall"].default
+    assert default == "standard"
 
     r = pairs_crosscheck(corpus, recall="high").collect()[0]
     assert r["n_symmetric_diff"] == 0
@@ -621,6 +623,30 @@ def test_sql_corpus_matches_dedup_corpus_on_short_docs(spark, tmp_path):
         f"SELECT doc_id, text FROM ({_SQL_CORPUS})").fetchall())
     assert got[1_009_001] == got[1_009_002] == ""
     assert got == want
+
+
+def test_pair_oracles_match_spark_on_short_docs(spark, tmp_path):
+    """The MinHash-LSH, prefix-join and containment oracles read the same
+    corpus as Spark. On the docs "one", "two" and "alpha beta gamma
+    delta", the twins of the one-token docs are both "" (one empty gram
+    each, so J = C = 1.0 between them), and each query's rows equal its
+    oracle's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opencv_table_extraction_spark.operators.dedup import oracle_sql, queries
+
+    pq.write_table(pa.table({
+        "doc_id": pa.array([1, 2, 3], pa.int64()),
+        "text": ["one", "two", "alpha beta gamma delta"],
+        "source": ["s"] * 3,
+    }), str(tmp_path / "documents.parquet"))
+    con = _duckdb_documents(str(tmp_path))
+    for name in ("dedup_minhash_lsh_pairs", "dedup_jaccard_prefix_pairs",
+                 "dedup_containment_pairs"):
+        got = sorted(tuple(r) for r in queries()[name](spark, str(tmp_path)).collect())
+        assert (1_000_001, 1_000_002, 1.0) in got, name
+        assert got == sorted(con.execute(oracle_sql()[name]).fetchall()), name
 
 
 def test_simhash_pairs_rejects_unsound_banding(spark):

@@ -45,16 +45,6 @@ def _crosscheck_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
     return errs
 
 
-# The n-gram shingle expression shared by the containment invariant —
-# identical to the one inside dedup._SQL_CONTAINMENT (3-gram, partial
-# tail shingles via the slice clamp, list_distinct).
-_SH = (
-    "list_distinct(list_transform("
-    "range(0, greatest(len(string_split_regex(trim({c}), '\\s+')) - 3, 0) + 1),"
-    " i -> array_to_string(string_split_regex(trim({c}), '\\s+')[i+1:i+3], ' ')))"
-)
-
-
 def _containment_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
     """Self-certifying check for dedup_containment_pairs at scales where
     the quadratic all-pairs oracle is infeasible (r6 verdict #3). Two
@@ -74,6 +64,8 @@ def _containment_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
        frame (keys-only banding subtree) and require 0 rows.
     """
     from opencv_table_extraction_spark.operators.dedup import (
+        _SHINGLE_N,
+        _sql_grams,
         containment_pairs_with_drops,
         dedup_corpus,
     )
@@ -86,8 +78,8 @@ def _containment_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
     truth = ctx.con.execute(
         f"""
         WITH t AS (
-          SELECT doc_id, {_SH.format(c='text')} AS bsh,
-                 {_SH.format(c=trunc)} AS tsh
+          SELECT doc_id, {_sql_grams(_SHINGLE_N)} AS bsh,
+                 {_sql_grams(_SHINGLE_N, trunc)} AS tsh
           FROM documents)
         SELECT doc_id,
                round(CAST(len(list_intersect(tsh, bsh)) AS DOUBLE)
