@@ -360,13 +360,15 @@ def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(dedup_corpus(spark, sf_dir), max_block=MAX_BLOCK)
 
 
+# The Jaccard and MinHash oracles' pair score: the Jaccard of two
+# 3-gram lists a.sh and b.sh, rounded to 4 places.
+_SQL_JAC = """round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+             / len(list_distinct(list_concat(a.sh, b.sh))), 4)"""
+
 _SQL_JACCARD = f"""{_SQL_SHINGLED}
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
+SELECT a.doc_id AS a_id, b.doc_id AS b_id, {_SQL_JAC} AS jaccard
 FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
-WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sh, b.sh))), 4) >= {JACCARD_THRESHOLD}
+WHERE {_SQL_JAC} >= {JACCARD_THRESHOLD}
 """
 
 
@@ -826,15 +828,12 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # true pairs; miss probability per pair at J=0.9 planted dups ~ 3e-12,
 # at the 0.5 boundary ~1%, measured zero on this corpus).
 _SQL_MINHASH = f"""{_SQL_SHINGLED}
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
+SELECT a.doc_id AS a_id, b.doc_id AS b_id, {_SQL_JAC} AS jaccard
 FROM sh a JOIN sh b
   ON a.doc_id < b.doc_id
  AND len(a.sh) >= CAST(ceil(0.5 * len(b.sh)) AS BIGINT)
  AND len(b.sh) >= CAST(ceil(0.5 * len(a.sh)) AS BIGINT)
-WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sh, b.sh))), 4) >= 0.5
+WHERE {_SQL_JAC} >= 0.5
 """
 
 
@@ -1161,27 +1160,19 @@ def _q_simhash_pairs_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )[0]
 
 
-# Exact oracle: all-pairs hamming over the same 60-bit simhash. Unlike
-# LSH this needs no luck — the pigeonhole banding has GUARANTEED exact
-# recall for hamming <= n_chunks - 1, so Spark output == brute force.
-_SQL_SIMHASH_PAIRS = f"""
+def _sql_simhash_pairs(radius: int) -> str:
+    """Exact oracle: all-pairs hamming <= ``radius`` over the same 60-bit
+    simhash. Unlike LSH this needs no luck — the pigeonhole banding has
+    GUARANTEED exact recall for hamming <= n_chunks - 1 (radius 12 with
+    15 chunks, the scale config's radius 3 with 4), so Spark output ==
+    brute force."""
+    return f"""
 WITH corpus AS ({_SQL_CORPUS}),
 s AS (SELECT doc_id, {_SIMHASH_SQL.format(c="text")} AS sh FROM corpus)
 SELECT a.doc_id AS a_id, b.doc_id AS b_id,
        CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sh, b.sh)) <= 12
-"""
-
-# The scale config's oracle: identical brute force at radius 3 — the
-# pigeonhole guarantee (4 chunks) makes Spark output == brute force.
-_SQL_SIMHASH_PAIRS_SCALE = f"""
-WITH corpus AS ({_SQL_CORPUS}),
-s AS (SELECT doc_id, {_SIMHASH_SQL.format(c="text")} AS sh FROM corpus)
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sh, b.sh)) <= {SIMHASH_SCALE_HAMMING}
+WHERE bit_count(xor(a.sh, b.sh)) <= {radius}
 """
 
 
@@ -1297,8 +1288,8 @@ def _star_edges(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     sort-merge at scale) two sorts. Duplicate edges never change a min, so
     ``dedup=False`` lets the large-star feed the small-star raw and
     defers the distinct to once per (large, small) round — the per-round
-    canonical edge SET (what the convergence signature hashes) is
-    identical either way; only transient multiplicity differs."""
+    canonical edge SET (what the star-forest check reads) is identical
+    either way; only transient multiplicity differs."""
     if large:
         d = edges.unionByName(
             edges.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
@@ -1359,6 +1350,22 @@ def _contract_batches(batches):
     )
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Two-star's fixed point over canonical edges: no node is both an
+    a_id (root) and a b_id (child), and no b_id repeats — i.e. no node
+    that is a child is seen twice."""
+    n = F.explode(F.array(
+        F.struct(F.col("a_id").alias("id"), F.lit(0).alias("child")),
+        F.struct(F.col("b_id").alias("id"), F.lit(1).alias("child")),
+    ))
+    bad = (
+        edges.select(n.alias("n")).groupBy("n.id")
+        .agg(F.sum("n.child").alias("c"), F.count("*").alias("k"))
+        .where((F.col("c") > 0) & (F.col("k") > 1))
+    )
+    return bad.count() == 0
+
+
 def connected_components_pairs(
     pairs: DataFrame,
     max_iter: int = 20,
@@ -1381,17 +1388,17 @@ def connected_components_pairs(
     bytes: each task's work and memory are O(edges in its partition),
     bounded by the advisory partition size; a hub whose edges share one
     a_id lands in one task. Two-star rounds (_star_edges) then run on
-    that quotient until one round leaves it unchanged: 1 round when the
-    graph fits one partition, about log2 P + 1 for a chain cut into P
-    partitions along its ids; components whose ids scatter across
-    partitions keep two-star's O(log diameter) rounds.
+    that quotient until it is a star forest (_is_star_forest): 0 rounds
+    when the graph fits one partition, about log2 P for a chain cut
+    into P partitions along its ids; components whose ids scatter
+    across partitions keep two-star's O(log diameter) rounds.
 
-    Convergence is a signature match (count + bit_xor(xxhash64(a, b)))
-    followed by a proof: every ORIGINAL pair must join two nodes with
-    equal labels, so a signature collision cannot emit a split cluster.
-    A graph still changing after ``max_iter`` rounds raises
-    RuntimeError ("not converged"); ``round_counter``, if given, gets
-    the number of rounds appended.
+    Every node then takes its star root as keeper (a root, or a doc no
+    star edge names as a child, keeps itself), and a proof checks that
+    every ORIGINAL pair joins two nodes with equal keepers before the
+    output is returned. A graph that is not a star forest after
+    ``max_iter`` rounds raises RuntimeError ("not converged");
+    ``round_counter``, if given, gets the number of rounds appended.
 
     Lineage is cut after the pre-contraction and after every round (a
     star op reads its input 2-3x): a reliable checkpoint into
@@ -1416,7 +1423,7 @@ def connected_components_pairs(
             sc, checkpoint_dir, "connected_components_pairs"
         )
     # one read of the (possibly expensive, unpersisted) pair input feeds
-    # both the edge set and the self-loop-only singletons below
+    # both the edge set and the node list (self-loops included) below
     canon = (
         pairs.select(
             F.least("a_id", "b_id").alias("a_id"),
@@ -1429,25 +1436,26 @@ def connected_components_pairs(
     try:
         def cut(df):
             # NON-eager localCheckpoint (the plan is truncated either
-            # way): the signature agg is the one materializing job
+            # way): building its RDD already runs the upstream AQE
+            # query stages, and the star-forest check's job that reads
+            # it stores the blocks
             if reliable:
                 return _truncate_lineage(df, True)
             return df.localCheckpoint(eager=False)
 
-        def signature(df):
-            sig = F.bit_xor(F.xxhash64("a_id", "b_id"))
-            return tuple(df.agg(F.count("*"), sig).collect()[0])
-
-        # the quotient is the first round's input: when it already is a
-        # star forest, that round confirms the fixed point and ends
         edges = cut(
             edges0.repartitionByRange("a_id").mapInArrow(
                 _contract_batches, edges0.schema
             )
         )
-        prev_sig = signature(edges)
         rounds = 0
-        for _ in range(max_iter):
+        while not _is_star_forest(edges):
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"connected_components_pairs: not converged after "
+                    f"{max_iter} rounds — O(log n) convergence makes this a "
+                    "bug or an absurd graph; raise max_iter"
+                )
             # one distinct per round: the large-star output feeds the
             # small-star raw (dedup=False — min is duplicate-blind, the
             # per-round canonical SET is unchanged; see _star_edges)
@@ -1455,74 +1463,35 @@ def connected_components_pairs(
                 _star_edges(_star_edges(edges, large=True, dedup=False), large=False)
             )
             rounds += 1
-            sig = signature(edges)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-        else:
-            raise RuntimeError(
-                f"connected_components_pairs: not converged after "
-                f"{max_iter} rounds — O(log n) convergence makes this a bug "
-                "or an absurd graph; raise max_iter"
-            )
         if round_counter is not None:
             round_counter.append(rounds)
-        # converged star forest: every canonical edge is (root, child)
-        # with root = component min; label roots with themselves
-        labels = edges.select(
-            F.col("b_id").alias("id"), F.col("a_id").alias("label")
-        ).unionByName(
-            edges.select(F.col("a_id").alias("id"), F.col("a_id").alias("label"))
-        ).distinct()
-        # a node can appear only if some star edge touches it; original
-        # nodes form components of size >= 2, so all must be present AND
-        # consistent — prove it against the ORIGINAL edges
+        # star forest: a child's keeper is its root, the component min;
+        # every other node of canon (a root, a self-loop-only doc) keeps
+        # itself
+        keeper = F.coalesce("root", "doc_id")
+        size = F.count("*").over(Window.partitionBy(keeper)).cast("int")
+        nodes = canon.select(F.explode(F.array("a_id", "b_id")).alias("doc_id"))
+        out = _truncate_lineage(
+            nodes.distinct().join(edges.toDF("root", "doc_id"), "doc_id", "left")
+            .select("doc_id", keeper.alias("keeper_id"), size.alias("cluster_size")),
+            reliable,
+        )
+        # prove the checkpointed keepers against the ORIGINAL edges
+        # before anything is returned: both endpoints present and equal
+        k = out.select("doc_id", "keeper_id")
         bad = (
-            edges0.join(
-                labels.select(F.col("id").alias("a_id"), F.col("label").alias("la")),
-                "a_id",
-                "left",
-            )
-            .join(
-                labels.select(F.col("id").alias("b_id"), F.col("label").alias("lb")),
-                "b_id",
-                "left",
-            )
-            .where(
-                F.col("la").isNull()
-                | F.col("lb").isNull()
-                | (F.col("la") != F.col("lb"))
-            )
+            edges0.join(k.toDF("a_id", "ka"), "a_id", "left")
+            .join(k.toDF("b_id", "kb"), "b_id", "left")
+            .where(F.col("ka").isNull() | F.col("kb").isNull()
+                   | (F.col("ka") != F.col("kb")))
             .count()
         )
         if bad:
             raise RuntimeError(
                 f"connected_components_pairs: {bad} original pairs violate "
-                "label consistency — convergence signature collision or "
-                "star invariant broken"
+                "label consistency — star invariant broken"
             )
-        sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-        out = labels.join(sizes, "label").select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("keeper_id"),
-            F.col("cluster_size").cast("int").alias("cluster_size"),
-        )
-        # self-loop-only nodes never reach edges0 (the canonical set
-        # drops a == b); re-add the ones no real edge touches as (d, d, 1)
-        loop_ids = canon.where(F.col("a_id") == F.col("b_id")).select(
-            F.col("a_id").alias("id")
-        )
-        edge_ids = edges0.select(F.col("a_id").alias("id")).unionByName(
-            edges0.select(F.col("b_id").alias("id"))
-        )
-        singletons = loop_ids.join(edge_ids, "id", "left_anti").select(
-            F.col("id").alias("doc_id"),
-            F.col("id").alias("keeper_id"),
-            F.lit(1).cast("int").alias("cluster_size"),
-        )
-        # self-contained BEFORE the cached input is released (never a
-        # driver collect — the label set can be huge at scale)
-        return _truncate_lineage(out.unionByName(singletons), reliable)
+        return out
     finally:
         canon.unpersist()
         if prior_ckpt_dir is not None:
@@ -1792,8 +1761,8 @@ def oracle_sql() -> dict[str, str]:
         "dedup_pairs_crosscheck": _SQL_CROSSCHECK,
         "dedup_pairs_crosscheck_high": _SQL_CROSSCHECK,
         "dedup_simhash": _SQL_SIMHASH,
-        "dedup_simhash_pairs": _SQL_SIMHASH_PAIRS,
-        "dedup_simhash_pairs_scale": _SQL_SIMHASH_PAIRS_SCALE,
+        "dedup_simhash_pairs": _sql_simhash_pairs(12),
+        "dedup_simhash_pairs_scale": _sql_simhash_pairs(SIMHASH_SCALE_HAMMING),
         "dedup_components": _SQL_COMPONENTS,
         "dedup_apply": _SQL_APPLY,
         "dedup_decontaminate": _SQL_DECONTAM,

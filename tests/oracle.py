@@ -1,11 +1,11 @@
 """Single-process, Spark-free oracle (SURVEY.md §5.2-1).
 
 Runs the same Layer-A kernel (kernel/extract.py) row-by-row in one Python
-process. Per-turn equality of the Spark pipeline's output against this
-oracle isolates bugs in the *Spark plumbing* (Arrow schema round-trip,
-partitioning, ordering, salting); kernel correctness itself is pinned by
-the independent generator truth (fixtures/gen.py) and the constructive /
-property tests in tests/.
+process; only the tests call it. Per-turn equality of the Spark
+pipeline's output against this oracle isolates bugs in the *Spark
+plumbing* (Arrow schema round-trip, partitioning, ordering, salting);
+kernel correctness itself is pinned by the independent generator truth
+(fixtures/gen.py) and the constructive / property tests in tests/.
 """
 
 from __future__ import annotations
@@ -13,7 +13,11 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .kernel.extract import OUT_FIELDS, arrow_out_schema, extract_turn
+from opencv_table_extraction_spark.kernel.extract import (
+    OUT_FIELDS,
+    arrow_out_schema,
+    extract_turn,
+)
 
 __all__ = ["run_oracle", "run_oracle_parquet"]
 

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from opencv_table_extraction_spark.fixtures.gen import gen_tables
-from opencv_table_extraction_spark.oracle import run_oracle
+from oracle import run_oracle
 
 
 @pytest.fixture(scope="module")

@@ -827,6 +827,26 @@ def test_connected_components_multi_hop_chain(spark):
         n_cached_before, n_cached_after, rounds)
 
 
+def test_connected_components_proof_catches_lost_edges(spark, monkeypatch):
+    """The label-consistency proof is the last line of defence: if the
+    pre-contraction loses an edge, the chain (1,2),(2,3),(3,4) splits
+    and some original pair joins two keepers — the call must raise
+    before any output is returned."""
+    from opencv_table_extraction_spark.operators import dedup
+
+    contract = dedup._contract_batches
+
+    def lossy(batches):
+        # a nested function pickles by value, so the workers run it too
+        for batch in contract(batches):
+            yield batch.slice(1)
+
+    monkeypatch.setattr(dedup, "_contract_batches", lossy)
+    chain = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["a_id", "b_id"])
+    with pytest.raises(RuntimeError, match="label consistency"):
+        dedup.connected_components_pairs(chain)
+
+
 @contextlib.contextmanager
 def multi_partition(spark, n: int = 16):
     """Force the regime where a small graph spans many partitions: AQE
@@ -1261,9 +1281,9 @@ def test_connected_components_random_graphs(spark):
     """Property test: on the random and mixed pair graphs the
     distributed components (pre-contraction + two-star) must equal a
     Python union-find — keepers AND cluster sizes. Each graph fits one
-    partition, so the quotient is already a star forest: 1 round."""
+    partition, so the quotient is already a star forest: 0 rounds."""
     for label, edges, loops in random_pair_graphs():
-        assert check_components(spark, edges, loops) == 1, label
+        assert check_components(spark, edges, loops) == 0, label
 
 
 def test_connected_components_multi_partition(spark):
@@ -1271,16 +1291,16 @@ def test_connected_components_multi_partition(spark):
     and 16 shuffle partitions, the random graphs and a 1,024-node chain
     are cut across tasks, so the quotient is no longer a star forest
     and the two-star rounds must finish the job — equal to union-find
-    in at most 5 rounds (log2 16 + 1 for the chain). A hub (one a_id
-    with 5,000 leaves) lands in one task and is one star: correct in
-    1 round."""
+    in at most 4 rounds (log2 16 for the chain). A hub (one a_id with
+    5,000 leaves) lands in one task and is one star: correct in 0
+    rounds."""
     with multi_partition(spark):
         for label, edges, loops in random_pair_graphs():
-            assert check_components(spark, edges, loops) <= 5, label
+            assert check_components(spark, edges, loops) <= 4, label
         chain = {(i, i + 1) for i in range(1023)}
-        assert check_components(spark, chain) <= 5
+        assert check_components(spark, chain) <= 4
         hub = {(0, i) for i in range(1, 5001)}
-        assert check_components(spark, hub) == 1
+        assert check_components(spark, hub) == 0
 
 
 def test_pairs_crosscheck_agrees_and_reports_drops(spark):
@@ -1338,9 +1358,9 @@ def test_components_tolerate_messy_pair_input(spark):
 
 def test_two_star_components_logarithmic_on_long_chain(spark):
     """A 1,024-node path graph (diameter 1,023) fits one partition in
-    the default regime, so the pre-contraction leaves one star and the
-    first two-star round only confirms the fixed point: 1 round with
-    the correct single cluster (two-star alone took 11, ~log2(1024))."""
+    the default regime, so the pre-contraction leaves one star, already
+    two-star's fixed point: 0 rounds with the correct single cluster
+    (two-star alone took 11, ~log2(1024))."""
     from opencv_table_extraction_spark.operators.dedup import (
         connected_components_pairs,
     )
@@ -1355,7 +1375,7 @@ def test_two_star_components_logarithmic_on_long_chain(spark):
            ).collect()}
     assert len(got) == 1024
     assert all(v == (0, 1024) for v in got.values())
-    assert rounds == [1], rounds
+    assert rounds == [0], rounds
 
 
 @pytest.fixture

@@ -40,7 +40,7 @@ def test_equality_vs_generator_truth(spark, fixture_dir, extracted):
 def test_equality_vs_oracle_including_spans(spark, fixture_dir, extracted):
     """100% per-turn equality against the single-process oracle — the
     north-rule invariant (BASELINE.json:14-15), spans included."""
-    from opencv_table_extraction_spark.oracle import run_oracle_parquet
+    from oracle import run_oracle_parquet
 
     oracle = run_oracle_parquet(f"{fixture_dir}/transcripts.parquet")
     for row in oracle.to_pylist():
