@@ -44,7 +44,7 @@ def entry(spark: SparkSession) -> DataFrame:
     extraction pipeline (balanced kernel map + turn ordering). Uses the
     UNBOUNDED turn_seq form (two-level prefix sum + join-back) so no
     stage of the flagship path serializes a conversation into one task
-    at any conversation size (r5 verdict #3)."""
+    at any conversation size."""
     transcripts = transcripts_from_tpch(spark, SF0001)
     return ordered_output(
         extract_transcripts(transcripts, unbounded_turn_seq=True)
@@ -74,7 +74,7 @@ def _q_extract_tables_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovers the identical grid, cells, and spans end-to-end, the branch
     Otsu-default queries never execute. This row also certifies the
     UNBOUNDED turn_seq form (plans/pipeline.turn_seq_map — two-level
-    prefix sum + join-back, r5 verdict #3): the emitted turn_seq column
+    prefix sum + join-back): the emitted turn_seq column
     must hash-match the oracle's per-conversation row_number."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
     out = extract_transcripts(t, use_adaptive=True, unbounded_turn_seq=True)
@@ -162,7 +162,7 @@ def _q_extract_order_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a match proves the kernel's detected (row, col) assignment AND
     char offsets cell-by-cell, not just the assembled text."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
-    # r8: the kernel echoes the source payload (keep_text=True), so the
+    # the kernel echoes the source payload (keep_text=True), so the
     # span slicing reads the echo instead of a join-back through a
     # second derivation pass (the echo is the input Arrow buffer
     # re-emitted — byte-identical to the joined source by construction)
@@ -794,10 +794,9 @@ GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 20
 
 
 def _q_stream_assemble_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle certification of the STATEFUL STREAMING assembler (r5
-    verdict #6 — previously the only §2.B operator certified by pytest
-    alone): derive a deterministic turn stream from the events table
-    (conv = user, turn_idx = event_id, text = type + integer cents +
+    """Oracle certification of the STATEFUL STREAMING assembler, beside
+    its pytest cases: derive a deterministic turn stream from the events
+    table (conv = user, turn_idx = event_id, text = type + integer cents +
     props), split it into 4 turn_idx-quartile files, run the REAL
     applyInPandasWithState job one micro-batch per file, and reassemble
     the sink deltas into final transcripts. The DuckDB oracle recomputes

@@ -10,8 +10,9 @@ ts:timestamp) — plus two sidecar truth tables:
 ``expected_text`` is computed INDEPENDENTLY of the extraction kernel
 (plain string joins over the constructed content), so per-turn equality
 is a real end-to-end check of parse→render→binarize→morphology→
-detect→order→span→assemble. Only geometry spans (which are definitionally
-the shared layout contract) come from kernel/render.layout_table.
+detect→order→span→assemble. The truth carries no span geometry: layout
+rects are the kernel's own contract (kernel/render.layout_table), which
+the grid-recovery tests check, and this module never calls it.
 
 Route mix per FIXTURES.md: 25% pipe-table, 25% HTML, 10% scan
 (handwriting-vs-signature router cases, test2.py:3-5), 40% plain.

@@ -118,20 +118,19 @@ def _extract_table(text: str, use_adaptive: bool) -> dict:
     spans: list[dict] = []
     row_cells: list[list[str]] = []
     last_row = -1
-    layout_list = layout_rects.tolist()
+    li = (ri * pt.n_cols + ci)[hit]
     # ``ordered`` is sorted by (row, col): a line is a run of one row's cells
-    for (row, col), li in zip(ordered[hit, :2].tolist(),
-                              (ri * pt.n_cols + ci)[hit].tolist()):
-        cell = pt.cells[li]
-        lx0, ly0, lw0, lh0 = layout_list[li]
+    for (row, col), (lx0, ly0, lw0, lh0), start, end in zip(
+            ordered[hit, :2].tolist(), layout_rects[li].tolist(),
+            pt.starts[li].tolist(), pt.ends[li].tolist()):
         spans.append(
             {"row": row, "col": col, "x": lx0, "y": ly0, "w": lw0,
-             "h": lh0, "start": cell.start, "end": cell.end}
+             "h": lh0, "start": start, "end": end}
         )
         if row != last_row:
             row_cells.append([])
             last_row = row
-        row_cells[-1].append(text[cell.start : cell.end])
+        row_cells[-1].append(text[start:end])
 
     return {
         "route": "table",

@@ -1,11 +1,12 @@
 """Turn decode + deterministic rasterization A1-A2 (SURVEY.md §2.A).
 
-``parse_pipe_table`` recovers the cell grid *and the character offsets of
-every cell's text inside the source turn* from a markdown/pipe table.
-``render_table`` paints a deterministic document image for it: black grid
-lines on a white canvas, plus dashed "glyph" ink strokes inside cells
-(dash run length < any structuring element, so morphological opening
-removes them exactly like real text), plus sub-``min_area`` noise specks.
+``parse_pipe_table`` recovers a markdown/pipe table as its grid shape plus
+the character offsets of each cell inside the source turn (a cell's text
+is the turn sliced at them). ``render_table`` paints a deterministic
+document image for it: black grid lines on a white canvas, plus dashed
+"glyph" ink strokes inside cells (dash run length < any structuring
+element, so morphological opening removes them exactly like real text),
+plus sub-``min_area`` noise specks.
 
 The geometry is the shared layout contract: the downstream morphology
 pipeline must *recover* these cell rects from pixels alone; spans are then
@@ -25,7 +26,6 @@ from dataclasses import dataclass
 import numpy as np
 
 __all__ = [
-    "Cell",
     "ParsedTable",
     "classify_payload",
     "parse_pipe_table",
@@ -54,19 +54,13 @@ _TAG = re.compile(r"<\s*/?\s*[a-zA-Z][a-zA-Z0-9]*(\s[^<>]*)?>")
 
 
 @dataclass(frozen=True)
-class Cell:
-    row: int
-    col: int
-    text: str
-    start: int  # char offset of text in the source turn payload
-    end: int
-
-
-@dataclass(frozen=True)
 class ParsedTable:
     n_rows: int
     n_cols: int
-    cells: tuple[Cell, ...]  # row-major, dense (empty cells have start==end)
+    # int64 char offsets of each cell's stripped text in the source turn,
+    # row-major and dense (a padded cell has start == end)
+    starts: np.ndarray
+    ends: np.ndarray
 
 
 def classify_payload(text: str) -> str:
@@ -90,47 +84,38 @@ def classify_payload(text: str) -> str:
 
 
 def parse_pipe_table(text: str) -> ParsedTable | None:
-    """Parse the first markdown/pipe table in `text`, with char offsets.
+    """Parse the first markdown/pipe table in `text` into cell offsets.
 
-    Separator rows (|---|---|) are skipped; ragged rows are padded to the
-    widest row with empty cells (start == end == offset of row end).
-    Cell text is the stripped content between pipes; (start, end) index
-    the stripped content inside the original string.
+    A cell is the stripped content between two pipes; its (start, end)
+    index that content inside the original string. Separator rows
+    (|---|---|) are skipped; ragged rows are padded to the widest row with
+    empty cells at the end of the row's last cell (start == end).
     """
-    lines = text.splitlines(keepends=True)
     pos = 0
-    rows: list[list[tuple[str, int, int]]] = []
+    rows: list[list[tuple[int, int]]] = []
     in_table = False
-    for ln in lines:
+    for ln in text.splitlines(keepends=True):
         stripped = ln.rstrip("\n")
         if _PIPE_ROW.match(stripped):
             in_table = True
             if not _SEP_ROW.match(stripped):
-                cells = []
-                bar_positions = [m.start() for m in re.finditer(r"\|", stripped)]
-                for a, b in zip(bar_positions, bar_positions[1:]):
+                bars = [m.start() for m in re.finditer(r"\|", stripped)]
+                row = []
+                for a, b in zip(bars, bars[1:]):
                     raw = stripped[a + 1 : b]
-                    lead = len(raw) - len(raw.lstrip())
-                    core = raw.strip()
-                    s = pos + a + 1 + lead
-                    cells.append((core, s, s + len(core)))
-                rows.append(cells)
+                    s = pos + a + 1 + len(raw) - len(raw.lstrip())
+                    row.append((s, s + len(raw.strip())))
+                rows.append(row)
         elif in_table and stripped.strip():
             break  # table ended
         pos += len(ln)
     if not rows:
         return None
-    n_cols = max(len(r) for r in rows)
-    n_rows = len(rows)
-    out: list[Cell] = []
-    for ri, r in enumerate(rows):
-        for ci in range(n_cols):
-            if ci < len(r):
-                t, s, e = r[ci]
-            else:
-                t, s, e = "", r[-1][2] if r else 0, r[-1][2] if r else 0
-            out.append(Cell(ri, ci, t, s, e))
-    return ParsedTable(n_rows, n_cols, tuple(out))
+    n_cols = max(map(len, rows))
+    # _PIPE_ROW needs two pipes, so every row has a last cell to pad from
+    spans = np.array([r + [(r[-1][1],) * 2] * (n_cols - len(r)) for r in rows],
+                     dtype=np.int64)
+    return ParsedTable(len(rows), n_cols, spans[..., 0].ravel(), spans[..., 1].ravel())
 
 
 def layout_table(pt: ParsedTable) -> tuple[int, int, np.ndarray]:
@@ -139,7 +124,7 @@ def layout_table(pt: ParsedTable) -> tuple[int, int, np.ndarray]:
     i.e. the regions bounded by (exclusive of) the grid lines. Columns
     start at the running sum of (width + LINE_T), rows at a fixed
     CELL_H + LINE_T stride."""
-    lens = np.fromiter((len(c.text) for c in pt.cells), np.int64, len(pt.cells))
+    lens = pt.ends - pt.starts
     col_w = np.maximum((lens.reshape(pt.n_rows, pt.n_cols).max(axis=0) + 2) * CHAR_W,
                        MIN_CELL_W)
     total_w = int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
@@ -173,8 +158,7 @@ def render_table(pt: ParsedTable, noise_seed: int = 0) -> tuple[np.ndarray, np.n
     # A cell's dash pixels are exactly the offsets j in [0, n_px) with
     # j % 6 < 3 at columns x+4+j, rows (cy, cy+1) — painted for ALL
     # cells in one scatter instead of a per-cell/per-dash Python loop.
-    lens = np.fromiter((len(c.text) for c in pt.cells), np.int64, len(pt.cells))
-    npx = np.minimum(lens * CHAR_W, rects[:, 2] - 8)
+    npx = np.minimum((pt.ends - pt.starts) * CHAR_W, rects[:, 2] - 8)
     valid = npx > 0
     npx_v = npx[valid]
     x_v = rects[valid, 0] + 4

@@ -68,6 +68,10 @@ def test_ragged_rows_padded():
     out = extract_turn(text)
     assert out["n_rows"] == 2 and out["n_cols"] == 3
     assert out["extracted_text"] == "a1\tb1\tc1\na2\tb2\t"
+    # the padded cell is empty at the end of its row's last real cell
+    last = out["spans"][-1]
+    assert (last["row"], last["col"]) == (1, 2)
+    assert last["start"] == last["end"] == text.index("b2") + 2
 
 
 def test_prose_noise_around_table_ignored():
@@ -80,8 +84,8 @@ def test_parse_offsets():
     text = "| alpha | beta |\n|---|---|\n| gamma | d |"
     pt = parse_pipe_table(text)
     assert pt.n_rows == 2 and pt.n_cols == 2
-    for cell in pt.cells:
-        assert text[cell.start : cell.end] == cell.text
+    assert [text[s:e] for s, e in zip(pt.starts.tolist(), pt.ends.tolist())] == [
+        "alpha", "beta", "gamma", "d"]
 
 
 def test_noise_specks_do_not_create_cells():

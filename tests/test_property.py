@@ -1,14 +1,22 @@
 """Property-based hardening (hypothesis) for the imaging primitives:
 morphology vs brute force on arbitrary masks, Otsu vs argmax scan on
 arbitrary histograms, CC invariants, parse-offset round-trips, and the
-render geometry."""
+render geometry, and the whole kernel on malformed input."""
+
+import re
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
 from opencv_table_extraction_spark.kernel.components import connected_components
+from opencv_table_extraction_spark.kernel.extract import (
+    arrow_out_schema,
+    extract_batch,
+    extract_turn,
+)
 from opencv_table_extraction_spark.kernel.imaging import (
     morph_open_h,
     morph_open_v,
@@ -19,6 +27,12 @@ from opencv_table_extraction_spark.kernel.render import (
     parse_pipe_table,
     render_table,
 )
+
+
+def cell_texts(text, pt):
+    """Each parsed cell's text: the turn sliced at its offsets."""
+    return [text[s:e] for s, e in zip(pt.starts.tolist(), pt.ends.tolist())]
+
 
 masks = arrays(
     np.uint8,
@@ -98,9 +112,14 @@ def test_cc_invariants(img):
 def test_parse_offsets_roundtrip(rows):
     text = "\n".join("| " + " | ".join(r) + " |" for r in rows)
     pt = parse_pipe_table(text)
-    assert pt is not None
-    for cell in pt.cells:
-        assert text[cell.start : cell.end] == cell.text
+    # a row of dash cells (with optional colons) is a |---| separator
+    kept = [r for r in rows if not all(re.fullmatch(":?-{2,}:?", c) for c in r)]
+    if not kept:
+        assert pt is None
+        return
+    n_cols = max(map(len, kept))
+    assert (pt.n_rows, pt.n_cols) == (len(kept), n_cols)
+    assert cell_texts(text, pt) == [c for r in kept for c in r + [""] * (n_cols - len(r))]
 
 
 @settings(max_examples=60, deadline=None)
@@ -118,11 +137,61 @@ def test_render_dash_pixels_inside_canvas(rows):
     assume(pt is not None)  # every row may parse as a |---| separator
     img, rects = render_table(pt)
     H, W = img.shape
-    for cell, (x, y, w, h) in zip(pt.cells, rects.tolist()):
-        npx = min(len(cell.text) * CHAR_W, w - 8)
+    for n_chars, (x, y, w, h) in zip((pt.ends - pt.starts).tolist(), rects.tolist()):
+        npx = min(n_chars * CHAR_W, w - 8)
         if npx <= 0:
             continue
         cols = x + 4 + np.flatnonzero(np.arange(npx) % 6 < 3)
         cy = y + h // 2
         assert 0 <= cols[0] and cols[-1] < W and 0 <= cy and cy + 1 < H
         assert not img[cy : cy + 2, cols].any()  # the pixels are ink
+
+
+# Malformed turns: lines of pipe-table, HTML and scan fragments and free
+# text, about half of them pipe rows, ended by mixed line breaks or none.
+# Only the header and region fragments hold digits, none starts with one
+# and free text has none, so a scan page size comes whole from one header
+# fragment and stays at most 64 px.
+_fragments = st.one_of(
+    st.sampled_from(["|", " ", "-", "---", ":", ":--", "--:", "\t", "\u00a0", "é",
+                     "表格", "<td>", "</td>", "<table>", "<p>", "</p>", "<br/>", "<b"]),
+    st.text(st.characters(blacklist_categories=("Cs", "Nd")), max_size=6),
+    st.one_of(st.builds("[[scan]] w={} h={}\n".format,
+                        st.integers(1, 64), st.integers(1, 64)),
+              st.builds("region x={} y={} w={} h={} d=0.{}\n".format,
+                        *[st.integers(0, 80)] * 4, st.integers(0, 9)),
+              st.sampled_from(["[[scan]]", "[[scan]] w=", "[[/scan]]", "[[/scan]]\n",
+                               "region x=", "d=."])),
+)
+_cell = st.lists(_fragments, max_size=3).map("".join)
+_line = st.one_of(_cell, st.lists(_cell, min_size=1, max_size=5).map(
+    lambda cells: "|" + "|".join(cells) + "|"))
+_eol = st.sampled_from(["\n", "\r\n", "\r", "\x0b", "\u2028", ""])
+malformed_texts = st.lists(st.tuples(_line, _eol), max_size=8).map(
+    lambda lines: "".join(ln + eol for ln, eol in lines))
+
+
+@settings(max_examples=300, deadline=None)
+@given(malformed_texts)
+def test_kernel_malformed_input(text):
+    """Parsed offsets stay inside the turn and index stripped text, and
+    the batch path returns one row of the output schema per turn, with
+    every exception ``extract_turn`` raises caught into ``err``."""
+    pt = parse_pipe_table(text)
+    if pt is not None:
+        assert pt.starts.shape == pt.ends.shape == (pt.n_rows * pt.n_cols,)
+        assert (0 <= pt.starts).all() and (pt.starts <= pt.ends).all()
+        assert (pt.ends <= len(text)).all()
+        assert all(c == c.strip() for c in cell_texts(text, pt))
+    batch = pa.RecordBatch.from_pydict(
+        {"conv_id": ["c"], "turn_idx": pa.array([0], pa.int32()), "text": [text]})
+    (out,) = extract_batch([batch])
+    assert out.schema == arrow_out_schema() and out.num_rows == 1
+    row = out.to_pylist()[0]
+    try:
+        want = extract_turn(text)
+    except Exception as e:  # noqa: BLE001 — must land in err, not escape
+        assert row["route"] == "error"
+        assert row["err"].startswith(type(e).__name__ + ": ")
+    else:
+        assert {k: row[k] for k in want} == want
