@@ -17,6 +17,12 @@ Layout:
   sources/    snapshot/commit catalog (Iceberg-semantics parquet fallback).
   streaming/  incremental (availableNow) driver reusing the batch body.
   fixtures/   deterministic transcript-table generator (seed=42).
+  _worker.py  imported inside a Spark task, keeps the worker from
+              re-reading every zip on sys.path at each task start.
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+_worker.install()

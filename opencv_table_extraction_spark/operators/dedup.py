@@ -26,6 +26,7 @@ brute-force pair set (see _SQL_MINHASH notes).
 from __future__ import annotations
 
 import functools
+import itertools
 import re
 from collections.abc import Callable
 
@@ -400,6 +401,12 @@ def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
                      keyed avalanche mixes (Steele et al., OOPSLA 2014);
       band hash    = fold of the band's signature rows.
 
+    Work is per Arrow batch, not per doc: one hash_array call hashes all
+    of the batch's tokens (a call per doc costs ~200 us of fixed
+    overhead), and each key takes every doc's minimum with one
+    np.minimum.reduceat over the doc boundaries. tests/test_operators.py
+    keeps the per-doc kernel as the reference.
+
     Why keyed splitmix64 and not the classic affine (a_i*h + b_i) mod p
     family with a LINEAR progression of a_i/b_i ((i+1)*phi masked): on
     the 200k-doc sf1-equivalent corpus (BENCH/BASELINE.md) that family
@@ -425,9 +432,7 @@ def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
         return z ^ (z >> np.uint64(31))
 
     with np.errstate(over="ignore"):
-        K = _splitmix64(
-            _splitmix64(np.arange(1, n_hashes + 1, dtype=np.uint64))
-        ).reshape(-1, 1)
+        K = _splitmix64(_splitmix64(np.arange(1, n_hashes + 1, dtype=np.uint64)))
     C1 = np.uint64(0x9E3779B97F4A7C15)
     C2 = np.uint64(0xC2B2AE3D27D4EB4F)
     C3 = np.uint64(0x165667B19E3779F9)
@@ -435,26 +440,38 @@ def _minhash_band_batches(batches, n_hashes: int, n_bands: int):
     band_ids = np.arange(n_bands, dtype=np.int32)
 
     for batch in batches:
-        doc_ids = batch.column("doc_id").to_pylist()
-        texts = batch.column("text").to_pylist()
-        out_doc = np.empty(len(doc_ids) * n_bands, dtype=np.int64)
-        out_hash = np.empty(len(doc_ids) * n_bands, dtype=np.uint64)
-        for i, (doc_id, text) in enumerate(zip(doc_ids, texts)):
-            toks = _jvm_tokens(text)  # match the JVM split(trim, \s+)
-            th = hash_array(np.asarray(toks, dtype=object))
-            if len(th) < 3:  # one partial shingle, zero-padded
-                th = np.pad(th, (0, 3 - len(th)))
-            with np.errstate(over="ignore"):  # wrapping uint64 is the point
-                sh = (th[:-2] * C1) ^ (th[1:-1] * C2) ^ (th[2:] * C3)
-                vals = _splitmix64(sh[None, :] ^ K)
-                sig = vals.min(axis=1).reshape(n_bands, rows_per_band)
-                bh = np.zeros(n_bands, dtype=np.uint64)
-                for c in range(rows_per_band):
-                    bh = bh * BANDF + sig[:, c]
-            out_doc[i * n_bands : (i + 1) * n_bands] = doc_id
-            out_hash[i * n_bands : (i + 1) * n_bands] = bh
+        n_docs = batch.num_rows
+        toks = [_jvm_tokens(t) for t in batch.column("text").to_pylist()]
+        n_toks = np.fromiter(map(len, toks), dtype=np.int64, count=n_docs)  # each >= 1
+        th = hash_array(np.fromiter(itertools.chain.from_iterable(toks), dtype=object,
+                                    count=int(n_toks.sum())))
+        # each doc's token hashes in a zero-padded block of >= 3 slots, so a
+        # doc of 1-2 tokens has one partial shingle; a doc of m slots has
+        # m - 2 shingles, and the 2 that straddle the next block are cut
+        slots = np.maximum(n_toks, 3)
+        ends = np.cumsum(slots)
+        starts = ends - slots
+        pad = np.zeros(int(slots.sum()), dtype=np.uint64)
+        pad[np.repeat(starts - (np.cumsum(n_toks) - n_toks), n_toks)
+            + np.arange(len(th))] = th
+        keep = np.ones(len(pad), dtype=bool)
+        keep[ends - 1] = keep[ends - 2] = False
+        doc_starts = starts - 2 * np.arange(n_docs)  # in the kept shingles
+        sig = np.empty((n_docs, n_hashes), dtype=np.uint64)
+        with np.errstate(over="ignore"):  # wrapping uint64 is the point
+            sh = ((pad[:-2] * C1) ^ (pad[1:-1] * C2) ^ (pad[2:] * C3))[keep[:-2]]
+            for k in range(n_hashes):
+                sig[:, k] = np.minimum.reduceat(_splitmix64(sh ^ K[k]), doc_starts)
+            bands = sig.reshape(n_docs, n_bands, rows_per_band)
+            bh = np.zeros((n_docs, n_bands), dtype=np.uint64)
+            for c in range(rows_per_band):
+                bh = bh * BANDF + bands[:, :, c]
         yield pa.RecordBatch.from_arrays(
-            [out_doc, np.tile(band_ids, len(doc_ids)), out_hash.astype(np.int64)],
+            [
+                np.repeat(batch.column("doc_id").to_numpy(), n_bands),
+                np.tile(band_ids, n_docs),
+                bh.ravel().astype(np.int64),
+            ],
             schema=_BAND_SCHEMA,
         )
 

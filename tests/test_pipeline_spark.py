@@ -203,6 +203,80 @@ def test_lineage_driver_write_reads_with_spark_written(spark, tmp_path, lineage_
         (s, rows.num_rows, sum(rows.column("n_turns").to_pylist())) for s in (1, 2)]
 
 
+def test_worker_zip_invalidation_is_stat_checked(spark, tmp_path):
+    """A Python task starts with importlib.invalidate_caches(). Inside a
+    task (before CPython 3.13) the package swaps in _worker's
+    stat-checked zipimporter.invalidate_caches: a zip rewritten in place
+    is re-read, so its new module imports, and an invalidate over
+    unchanged archives reads no zip directory. The driver keeps the
+    stdlib method."""
+    import sys
+    import zipimport
+
+    from opencv_table_extraction_spark import _worker
+
+    archive = str(tmp_path / "shipped.zip")
+
+    def check(batches):
+        import importlib
+        import sys
+        import zipfile
+        import zipimport
+
+        import pyarrow as pa
+
+        from opencv_table_extraction_spark import _worker
+
+        for _ in batches:
+            pass
+
+        def ship(*mods):
+            with zipfile.ZipFile(archive, "w") as z:
+                for m in mods:
+                    z.writestr(f"{m}.py", f"NAME = {m!r}\n")
+
+        reads, read = [0], zipimport._read_directory
+
+        def counted(path):
+            reads[0] += 1
+            return read(path)
+
+        ship("zipmod_a")
+        sys.path.insert(0, archive)
+        try:
+            importlib.import_module("zipmod_a")
+            importlib.invalidate_caches()
+            ship("zipmod_a", "zipmod_b")  # same path, new size
+            importlib.invalidate_caches()
+            try:
+                new_module = importlib.import_module("zipmod_b").NAME
+            except ImportError:
+                new_module = None
+            zipimport._read_directory = counted
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = read
+        finally:
+            sys.path.remove(archive)
+            sys.path_importer_cache.pop(archive, None)
+            for m in ("zipmod_a", "zipmod_b"):
+                sys.modules.pop(m, None)
+        installed = zipimport.zipimporter.invalidate_caches is _worker._invalidate_caches
+        yield pa.RecordBatch.from_pydict(
+            {"installed": [installed], "new_module": [new_module], "rereads": [reads[0]]})
+
+    row = spark.range(0, 1, 1, 1).mapInArrow(
+        check, "installed boolean, new_module string, rereads long").collect()[0]
+    assert row["installed"] == (sys.version_info < (3, 13))
+    assert row["new_module"] == "zipmod_b"
+    assert row["rereads"] == 0
+    driver_fn = zipimport.zipimporter.invalidate_caches
+    assert driver_fn is not _worker._invalidate_caches
+    assert (driver_fn.__module__, driver_fn.__qualname__) == (
+        "zipimport", "zipimporter.invalidate_caches")
+
+
 def test_iceberg_binding_contract(spark, tmp_path):
     """The Iceberg call sites are code behind the same interface; the
     sandbox has no runtime jar, so the real write path only runs when
