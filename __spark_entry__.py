@@ -636,11 +636,11 @@ FROM buckets GROUP BY 1, 2
 
 
 def _q_lineage_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver certification of the B8 lineage path (previously
-    pytest-only): run the REAL extraction pipeline on the order-table
-    family, aggregate its per-partition lineage rows, and reduce to the
-    partition-INVARIANT totals (per-partition rows themselves depend on
-    task placement; their sums do not). A hash match proves the lineage
+    """Driver certification of the B8 lineage path: run the REAL
+    extraction pipeline on the order-table family, aggregate its
+    per-partition lineage rows, and reduce to the partition-INVARIANT
+    totals (per-partition rows themselves depend on task placement;
+    their sums do not). A hash match proves the lineage
     aggregation counts exactly what the kernel produced — the oracle
     derives the same totals from lineitem arithmetic alone."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
@@ -704,7 +704,7 @@ FROM s GROUP BY user_id, sid
 
 def _q_event_olympic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED_AGG pandas UDAF (the Arrow-batched vectorized aggregate
-    flavor — SURVEY §2.C's one previously-unexercised UDF kind): per
+    flavor — the one SURVEY §2.C UDF kind no other query runs): per
     event_type "olympic mean" of value — drop ONE min and ONE max, mean
     the rest. The whole group's values arrive as one pandas Series
     (vectorized sum/min/max, no per-row Python); the oracle mirrors the

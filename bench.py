@@ -8,9 +8,9 @@ pairs, similarity, TPC-H-ish relational). Each query is timed to a full
 materialization (count/collect), 1 warmup for the session, per-query
 wall clock reported.
 
-Noisy-host protocol (r3 verdict: identical runs spread 3-40x under a
-bursty co-tenant): an ambient loadavg gate BEFORE the session starts
-(our own threads are idle then, so load1 is a pure tenant signal), then
+Noisy-host protocol (identical runs spread 3-40x under a bursty
+co-tenant): an ambient loadavg gate BEFORE the session starts (our own
+threads are idle then, so load1 is a pure tenant signal), then
 best-of-N per query (N = $SPARK_GRAFT_BENCH_ATTEMPTS, default 2 — a
 mid-run burst inflates one attempt, the min survives). The emitted JSON
 carries the gate metadata: release load, per-attempt raw times, and
@@ -187,15 +187,15 @@ def main() -> None:
     # the budget is spent, remaining queries degrade to one attempt
     # (recorded per query in the gate metadata)
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "600"))
-    # Per-ATTEMPT ambient gate (r4 verdict #5): the session-start gate
-    # released quiet but the co-tenant returned mid-run (recorded load1
-    # 9-14 on later queries). Before each attempt, wait bounded for the
+    # Per-ATTEMPT ambient gate: a session-start gate can release quiet
+    # while the co-tenant returns mid-run (load1 9-14 was recorded on
+    # later queries). Before each attempt, wait bounded for the
     # CO-TENANT's measured CPU (not loadavg — load1 carries ~1 min of
-    # OUR OWN decay after each heavy query, which burned the whole gate
-    # budget on an idle host in the first r5 run) to fall under qgate
-    # cores. Waits stay budget-capped (qgate_budget_frac of the total)
-    # and every attempt records wait spent + co-tenant cores + load1 at
-    # release, so a number can be audited either way.
+    # OUR OWN decay after each heavy query, enough to burn the whole
+    # gate budget on an idle host) to fall under qgate cores. Waits stay
+    # budget-capped (qgate_budget_frac of the total) and every attempt
+    # records wait spent + co-tenant cores + load1 at release, so a
+    # number can be audited either way.
     qgate = float(os.environ.get("SPARK_GRAFT_BENCH_QGATE", "2.0"))
     qgate_wait = float(os.environ.get("SPARK_GRAFT_BENCH_QGATE_WAIT", "90"))
     qgate_budget = budget_s * float(

@@ -24,8 +24,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opencv_table_extraction_spark.session import (  # noqa: E402
+    CPU_BOUND_SCAN_CONFS,
     build_session,
-    tune_scan_for_cpu_bound,
 )
 from opencv_table_extraction_spark.sources import (  # noqa: E402
     IcebergSnapshotCatalog,
@@ -63,15 +63,14 @@ def main() -> None:
                          "byte-proportional defaults")
     args = ap.parse_args()
 
+    # this job's scan feeds the image kernel narrowly: split by expected
+    # WORK, not bytes
     spark = build_session(
         "octe-extract-job",
         master=f"local[{args.local}]" if args.local else None,
         shuffle_partitions=args.local or None,
+        extra_confs=CPU_BOUND_SCAN_CONFS if args.cpu_bound_scan else None,
     )
-    if args.cpu_bound_scan:
-        # this job's scan feeds the image kernel narrowly: split by
-        # expected WORK, not bytes (the session is job-owned, no restore)
-        tune_scan_for_cpu_bound(spark)
     if args.iceberg_table:
         if not has_iceberg_runtime(spark):
             sys.exit("--iceberg-table requires the iceberg-spark-runtime "

@@ -70,8 +70,11 @@ from functools import lru_cache
 
 @lru_cache(maxsize=8)
 def _dither_pattern(H: int, W: int) -> np.ndarray:
-    yy, xx = np.mgrid[0:H, 0:W]
-    return (yy * 7 + xx * 3) % 16
+    # (y*7 + x*3) % 16 in uint8, one byte per pixel: each term is
+    # reduced mod 16 first, so their sum (< 32) cannot wrap
+    y = (np.arange(H) * 7 % 16).astype(np.uint8)
+    x = (np.arange(W) * 3 % 16).astype(np.uint8)
+    return (y[:, None] + x) % 16
 
 
 def render_scan(W: int, H: int, regions: np.ndarray) -> np.ndarray:

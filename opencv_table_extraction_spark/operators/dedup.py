@@ -27,7 +27,9 @@ from __future__ import annotations
 
 import functools
 import itertools
+import os
 import re
+import uuid
 from collections.abc import Callable
 
 import pyarrow as pa
@@ -153,8 +155,7 @@ def _bucket_ids(
     Returns the buckets frame (>1 ids each, all <= max_bucket) and the
     lazy ``dropped`` frame (key columns + n) enumerating every excluded
     bucket — callers attach it to their result for lineage/telemetry
-    (consuming it re-runs the banding subtree up to a partial count, as
-    before).
+    (consuming it re-runs the banding subtree up to a partial count).
     """
     n = F.count("*").over(Window.partitionBy(*keys))
     bounded = (
@@ -1250,41 +1251,6 @@ GROUP BY doc_id
 """
 
 
-def _set_ckpt_dir(sc, checkpoint_dir: str, context: str) -> str | None:
-    """Point the session at ``checkpoint_dir``, returning the prior dir
-    to restore (None if there was none — in which case ours REMAINS
-    after the call, Spark has no unset, and we warn: a later unrelated
-    checkpoint() on the shared session will land in a dir the caller
-    was told to delete)."""
-    prior = sc.getCheckpointDir()
-    if prior is None:
-        import warnings
-
-        warnings.warn(
-            f"{context}: session had no checkpoint dir; {checkpoint_dir!r} "
-            "will remain the session checkpoint dir after this call (Spark "
-            "cannot unset it) — later unrelated checkpoint() calls will "
-            "write there, so do not delete it while the session is live, "
-            "or set your own dir first",
-            stacklevel=3,
-        )
-    sc.setCheckpointDir(checkpoint_dir)
-    return prior
-
-
-def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
-    """Eagerly cut a frame's lineage: reliable storage-backed checkpoint
-    (persist-first so the eager count and the checkpoint write share one
-    execution) when the session has a checkpoint dir, else
-    localCheckpoint (executor-resident blocks)."""
-    if reliable:
-        base = df.persist()
-        out = df.checkpoint(eager=True)
-        base.unpersist()
-        return out
-    return df.localCheckpoint(eager=True)
-
-
 def _star_edges(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
     """One star operation of the alternating connected-components
     algorithm (Kiveris et al., "Connected Components in MapReduce and
@@ -1417,13 +1383,13 @@ def connected_components_pairs(
     ``max_iter`` rounds raises RuntimeError ("not converged");
     ``round_counter``, if given, gets the number of rounds appended.
 
-    Lineage is cut after the pre-contraction and after every round (a
-    star op reads its input 2-3x): a reliable checkpoint into
-    ``checkpoint_dir`` when set, else ``localCheckpoint``. Files in
-    ``checkpoint_dir`` are not auto-deleted: pass a per-job directory
-    and delete it after use. A prior session checkpoint dir is restored
-    on exit; without one, ours remains (Spark cannot unset it) and a
-    warning says so.
+    Lineage is cut after the pre-contraction, after every round (a star
+    op reads its input 2-3x) and on the output: ``localCheckpoint``, or,
+    when ``checkpoint_dir`` is set, a parquet copy read back from
+    ``<checkpoint_dir>/<call id>-<n>``, durable like ``checkpoint()``
+    but without touching the session's checkpoint dir. Each call writes
+    under its own uuid4 call id, so calls may share a directory. The
+    files are not auto-deleted: delete the directory after use.
 
     ``mode`` is deprecated and ignored ("minlabel", "twostar", "auto");
     any other value raises ``ValueError``.
@@ -1432,13 +1398,19 @@ def connected_components_pairs(
         raise ValueError(
             f"unknown mode {mode!r}: mode is deprecated, omit it"
         )
-    sc = pairs.sparkSession.sparkContext
-    reliable = checkpoint_dir is not None
-    prior_ckpt_dir = None
-    if reliable:
-        prior_ckpt_dir = _set_ckpt_dir(
-            sc, checkpoint_dir, "connected_components_pairs"
-        )
+    call_id, n_cuts = uuid.uuid4().hex, itertools.count()
+
+    def cut(df, eager=False):
+        # NON-eager localCheckpoint for the quotient and the rounds (the
+        # plan is truncated either way): building its RDD already runs
+        # the upstream AQE query stages, and the star-forest check's job
+        # that reads it stores the blocks
+        if checkpoint_dir is None:
+            return df.localCheckpoint(eager=eager)
+        path = os.path.join(checkpoint_dir, f"{call_id}-{next(n_cuts)}")
+        df.write.parquet(path)
+        return df.sparkSession.read.parquet(path)
+
     # one read of the (possibly expensive, unpersisted) pair input feeds
     # both the edge set and the node list (self-loops included) below
     canon = (
@@ -1451,15 +1423,6 @@ def connected_components_pairs(
     )
     edges0 = canon.where(F.col("a_id") != F.col("b_id"))
     try:
-        def cut(df):
-            # NON-eager localCheckpoint (the plan is truncated either
-            # way): building its RDD already runs the upstream AQE
-            # query stages, and the star-forest check's job that reads
-            # it stores the blocks
-            if reliable:
-                return _truncate_lineage(df, True)
-            return df.localCheckpoint(eager=False)
-
         edges = cut(
             edges0.repartitionByRange("a_id").mapInArrow(
                 _contract_batches, edges0.schema
@@ -1488,10 +1451,10 @@ def connected_components_pairs(
         keeper = F.coalesce("root", "doc_id")
         size = F.count("*").over(Window.partitionBy(keeper)).cast("int")
         nodes = canon.select(F.explode(F.array("a_id", "b_id")).alias("doc_id"))
-        out = _truncate_lineage(
+        out = cut(
             nodes.distinct().join(edges.toDF("root", "doc_id"), "doc_id", "left")
             .select("doc_id", keeper.alias("keeper_id"), size.alias("cluster_size")),
-            reliable,
+            eager=True,
         )
         # prove the checkpointed keepers against the ORIGINAL edges
         # before anything is returned: both endpoints present and equal
@@ -1511,8 +1474,6 @@ def connected_components_pairs(
         return out
     finally:
         canon.unpersist()
-        if prior_ckpt_dir is not None:
-            sc.setCheckpointDir(prior_ckpt_dir)
 
 
 def _q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:

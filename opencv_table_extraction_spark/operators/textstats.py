@@ -162,7 +162,11 @@ def winnow_fingerprint_batch(
     capped regardless of Arrow batch sizing. Normalization happens HERE,
     once, and its true post-normalization length feeds the cap —
     str.lower() can EXPAND code-point count (e.g. 'İ'.lower() is 2
-    chars), so measuring the raw length would make the bound soft."""
+    chars), so measuring the raw length would make the bound soft.
+    ``str.split()`` splits on Unicode whitespace, dedup._jvm_tokens on
+    ASCII only: the two agree only because
+    test_corpus_whitespace_is_pinned_for_oracles keeps non-ASCII
+    whitespace and \\v out of the corpora."""
     out: list[list[int]] = []
     chunk: list[str] = []
     chars = 0

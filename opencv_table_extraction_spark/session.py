@@ -16,8 +16,7 @@ from pyspark.sql import SparkSession
 __all__ = [
     "build_session",
     "kernel_partitions",
-    "tune_scan_for_cpu_bound",
-    "restore_confs",
+    "CPU_BOUND_SCAN_CONFS",
     "ENGINE_CONFS",
 ]
 
@@ -31,6 +30,17 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+}
+
+# File splits sized for a CPU-bound map over the scan: Spark bin-packs
+# small files by BYTES (128MB splits, 4MB open cost), and where a row
+# costs image work, not IO, a packed split is a 10x straggler. Pass to
+# build_session(extra_confs=...) for a job whose many-small-file scan
+# feeds the kernel narrowly (jobs/extract.py does by default); bytes ~
+# work elsewhere. The parquet scan ignores a per-read split option.
+CPU_BOUND_SCAN_CONFS: dict[str, str] = {
+    "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(512 * 1024),
 }
 
 
@@ -47,43 +57,6 @@ def kernel_partitions(spark: SparkSession) -> int:
     manages the joins and aggregations around it.
     """
     return spark.sparkContext.defaultParallelism * 2
-
-
-def tune_scan_for_cpu_bound(
-    spark: SparkSession, max_partition_mb: int = 4, open_cost_kb: int = 512
-) -> dict[str, str | None]:
-    """Size file splits for a CPU-bound map over the scan.
-
-    Spark's file reader bin-packs small files by BYTES (128MB splits +
-    4MB open cost by default). When the per-row cost is image work, not
-    IO, a packed split becomes a 10x straggler: bytes are the wrong
-    proxy for work. Call this before reading a many-small-file table
-    that feeds the kernel narrowly (no pre-shuffle); leave defaults for
-    ordinary relational scans, where bytes ~ work. The production job
-    (jobs/extract.py) applies this by default (--no-cpu-bound-scan to
-    opt out).
-
-    Returns the previous conf values so a shared session can restore
-    them (pass the returned dict to ``restore_confs``).
-    """
-    keys = {
-        "spark.sql.files.maxPartitionBytes": str(max_partition_mb * 1024 * 1024),
-        "spark.sql.files.openCostInBytes": str(open_cost_kb * 1024),
-    }
-    prev: dict[str, str | None] = {}
-    for k, v in keys.items():
-        prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    return prev
-
-
-def restore_confs(spark: SparkSession, prev: dict[str, str | None]) -> None:
-    """Undo a tune_* call on a shared session (None -> unset)."""
-    for k, v in prev.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 
 def build_session(

@@ -44,25 +44,6 @@ __all__ = [
 ]
 
 
-def _overwrite_partitions(df: DataFrame, part_col: str, path: str) -> None:
-    """Idempotent parquet write: dynamic partition overwrite replaces
-    exactly the ``part_col`` directories present in ``df``, so a retried
-    write replaces its own partitions instead of appending duplicates.
-    The overwrite-mode conf is saved/restored — mutating the session
-    globally would silently change unrelated writes."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(part_col).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def _replace_dir(src: str, dst: str) -> None:
     """Rename ``src`` over ``dst``. A directory rename needs an empty
     target, so an existing ``dst`` first moves aside under a hidden
@@ -121,8 +102,12 @@ class SnapshotCatalog:
 
     def write_data(self, out: DataFrame) -> None:
         """Idempotent per-bucket write: dynamic partition overwrite
-        replaces exactly the bucket directories this run owns."""
-        _overwrite_partitions(out, "bucket", os.path.join(self.root, "data"))
+        replaces exactly the bucket directories this run owns, so a
+        retried write replaces its own buckets instead of appending
+        duplicates. The overwrite mode is a writer option, which takes
+        precedence over the session conf and leaves it untouched."""
+        (out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(os.path.join(self.root, "data")))
 
     def write_lineage(self, lineage: pa.Table) -> None:
         """Driver-side write of the collected lineage rows: no Spark job.

@@ -32,7 +32,6 @@ from pyspark.sql.types import (
 )
 
 from ..plans.pipeline import extract_transcripts
-from ..sources.catalog import _overwrite_partitions
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -215,7 +214,8 @@ def run_incremental(
         )
         # idempotent sink: a retried micro-batch overwrites ITS OWN
         # batch_id partition instead of appending duplicates
-        _overwrite_partitions(out, "batch_id", os.path.join(out_dir, "data"))
+        (out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(os.path.join(out_dir, "data")))
         n_batches += 1
 
     stream = (

@@ -942,8 +942,6 @@ def multi_partition(spark, n: int = 16):
     pre-contraction sees only part of each component per task (by
     default a test graph fits one partition). Confs are restored on
     exit."""
-    from opencv_table_extraction_spark.session import restore_confs
-
     keys = {"spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.shuffle.partitions": str(n)}
     prev = {k: spark.conf.get(k, None) for k in keys}
@@ -952,7 +950,11 @@ def multi_partition(spark, n: int = 16):
             spark.conf.set(k, v)
         yield
     finally:
-        restore_confs(spark, prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
@@ -1173,26 +1175,33 @@ def test_winnow_oracle_matches_on_edge_whitespace(spark, tmp_path):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir engages the reliable checkpoint() path (per-round
-    edge truncation + checkpointed result): a chain needing several
-    rounds must converge to the exact keepers and sizes, and the
-    checkpoint dir must actually receive data."""
+    """checkpoint_dir cuts lineage with parquet copies under that dir
+    (per-round edges + the result): a chain needing several rounds, a
+    self-loop-only graph and an empty graph must give the exact keepers
+    and sizes, the dir must actually receive data, and a second call
+    into the same dir must give equal rows without colliding with the
+    first call's files."""
     import os
 
     from opencv_table_extraction_spark.operators.dedup import (
         connected_components_pairs,
     )
 
-    # chain 10-...-22: diameter 12, so the per-round reliable
-    # truncation fires several times mid-loop
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10, 22)], ["a_id", "b_id"]
-    )
+    # chain 10-...-22: diameter 12, so the per-round cut fires several
+    # times mid-loop
+    graphs = [
+        ([(i, i + 1) for i in range(10, 22)], {d: (10, 13) for d in range(10, 23)}),
+        ([(5, 5), (7, 7)], {5: (5, 1), 7: (7, 1)}),
+        ([], {}),
+    ]
     ckpt = str(tmp_path / "ckpt")
-    got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
-           for r in connected_components_pairs(
-               chain, max_iter=20, checkpoint_dir=ckpt).collect()}
-    assert got == {d: (10, 13) for d in range(10, 23)}
+    for edges, want in graphs:
+        pairs = spark.createDataFrame(edges, "a_id long, b_id long")
+        for _ in range(2):
+            got = {r["doc_id"]: (r["keeper_id"], r["cluster_size"])
+                   for r in connected_components_pairs(
+                       pairs, max_iter=20, checkpoint_dir=ckpt).collect()}
+            assert got == want, edges
     wrote = any(files for _, _, files in os.walk(ckpt))
     assert wrote, "reliable checkpoint dir received no data"
 
@@ -1266,26 +1275,29 @@ def test_winnow_batch_equals_per_doc():
         ]
 
 
-def test_connected_components_restores_prior_checkpoint_dir(spark, tmp_path):
-    """connected_components_pairs(checkpoint_dir=...) must not leak its
-    dir into the session: a prior checkpoint dir is restored on exit, so
-    later unrelated checkpoint() calls don't land in a directory the
-    caller may delete."""
+def test_connected_components_restores_prior_checkpoint_dir(
+    spark, tmp_path, tmp_path_factory
+):
+    """connected_components_pairs(checkpoint_dir=...) must leave the
+    session's checkpoint dir as it found it, both when the session has
+    none and when one is set, so later unrelated checkpoint() calls
+    never land in a directory the caller may delete."""
     from opencv_table_extraction_spark.operators.dedup import (
         connected_components_pairs,
     )
 
     sc = spark.sparkContext
-    prior = str(tmp_path / "prior_ckpt")
-    ours = str(tmp_path / "cc_ckpt")
-    sc.setCheckpointDir(prior)
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["a_id", "b_id"])
-    connected_components_pairs(pairs, checkpoint_dir=ours).collect()
-    got = sc.getCheckpointDir()
-    # getCheckpointDir returns the RESOLVED dir (Spark appends a UUID
-    # subdir per set); what matters is that future checkpoints land
-    # back under the caller's original tree, not under ours
-    assert got and "prior_ckpt" in got and "cc_ckpt" not in got, got
+    before = sc.getCheckpointDir()
+    connected_components_pairs(pairs, checkpoint_dir=str(tmp_path / "cc1")).collect()
+    assert sc.getCheckpointDir() == before
+    if before is None:
+        # Spark cannot unset a checkpoint dir: set one only after the
+        # None case has been checked, in a dir that outlives this test
+        sc.setCheckpointDir(str(tmp_path_factory.mktemp("prior_ckpt")))
+    before = sc.getCheckpointDir()
+    connected_components_pairs(pairs, checkpoint_dir=str(tmp_path / "cc2")).collect()
+    assert sc.getCheckpointDir() == before
 
 
 def union_find_components(edges) -> dict:
@@ -1464,46 +1476,3 @@ def test_two_star_components_logarithmic_on_long_chain(spark):
     assert len(got) == 1024
     assert all(v == (0, 1024) for v in got.values())
     assert rounds == [0], rounds
-
-
-@pytest.fixture
-def session_scoped_ckpt_after(spark, tmp_path_factory):
-    """This test intentionally leaves the shared session WITH a
-    checkpoint dir (Spark cannot unset one); without cleanup that dir
-    would be this test's function-scoped tmp_path — pruned while the
-    session lives. Re-point it at a session-scoped tmp dir afterwards so
-    later tests never inherit a doomed directory (r5 ADVICE)."""
-    yield
-    spark.sparkContext.setCheckpointDir(
-        str(tmp_path_factory.mktemp("session_ckpt"))
-    )
-
-
-def test_components_checkpoint_dir_warns_without_prior(
-    spark, tmp_path, session_scoped_ckpt_after
-):
-    """When the session has NO prior checkpoint dir, passing
-    checkpoint_dir= must warn that ours remains session-global after
-    the call (Spark cannot unset it) — callers on shared sessions need
-    to know later reliable checkpoints land in the dir they own. With a
-    prior dir set, no warning (it is restored instead)."""
-    import warnings
-
-    from opencv_table_extraction_spark.operators.dedup import (
-        connected_components_pairs,
-    )
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["a_id", "b_id"])
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with pytest.warns(UserWarning, match="checkpoint dir"):
-            connected_components_pairs(
-                pairs, checkpoint_dir=str(tmp_path / "ck1")
-            ).collect()
-    # now a dir IS set (either pre-existing or left by the call above):
-    # the restore path must stay silent
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        connected_components_pairs(
-            pairs, checkpoint_dir=str(tmp_path / "ck2")
-        ).collect()

@@ -41,7 +41,7 @@ def test_incremental_two_appends(spark, tmp_path):
     # idempotent: nothing new -> nothing appended
     run_incremental(spark, str(src), str(out))
     assert spark.read.parquet(str(out / "data")).count() == t1.num_rows + t2.num_rows
-    # the idempotent sink restores the session's overwrite mode
+    # the idempotent sink leaves the session's overwrite mode as it was
     assert spark.conf.get(key, None) == before
 
 

@@ -47,8 +47,8 @@ def _crosscheck_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
 
 def _containment_invariant(sdf: pd.DataFrame, ctx) -> list[str]:
     """Self-certifying check for dedup_containment_pairs at scales where
-    the quadratic all-pairs oracle is infeasible (r6 verdict #3). Two
-    legs, both independent of the Spark generator's candidate logic:
+    the quadratic all-pairs oracle is infeasible. Two legs, both
+    independent of the Spark generator's candidate logic:
 
     1. PLANTED partial oracle, O(N) not O(N^2): the dedup corpus plants
        one truncated twin per document, so DuckDB can compute the true
