@@ -1,7 +1,9 @@
 from .pipeline import (  # noqa: F401
     OUT_SCHEMA,
     extract_transcripts,
+    lineage_accumulator,
     lineage_summary,
+    lineage_table,
     ordered_output,
     transcripts_from_tpch,
     turn_seq_map,

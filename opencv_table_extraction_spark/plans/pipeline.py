@@ -6,7 +6,7 @@ pruning, and join strategy; the single Python boundary is the
 
   B1 scan -> B2 filter -> B3 prune -> B9 salt/repartition ->
   B4 mapInArrow(extract_batch) -> B5 window(turn order) ->
-  B6 range sort -> B13 sink (+ B8 lineage aggregation)
+  B6 range sort -> B13 sink (+ B8 lineage rows, tallied in the B4 tasks)
 
 At 100 TB the round-robin exchange is the only wide stage before the
 kernel; it breaks up hot conversations when the source is
@@ -19,8 +19,12 @@ narrow, straight off the scan.
 from __future__ import annotations
 
 import functools
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -29,8 +33,11 @@ from ..kernel.extract import arrow_out_schema, extract_batch
 from ..session import kernel_partitions
 
 __all__ = [
+    "LINEAGE_SCHEMA",
     "OUT_SCHEMA",
     "extract_transcripts",
+    "lineage_accumulator",
+    "lineage_table",
     "ordered_output",
     "turn_seq_map",
     "with_turn_seq",
@@ -41,6 +48,103 @@ __all__ = [
 # the Spark view of the kernel's one Arrow output schema
 OUT_SCHEMA = from_arrow_schema(arrow_out_schema())
 
+# B8: one lineage row per kernel-map partition (BASELINE.json:6
+# "per-partition lineage rows and counters")
+LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("conv_id_min", pa.string()),
+    ("conv_id_max", pa.string()),
+    ("n_turns", pa.int64()),
+    ("n_cells", pa.int64()),
+    ("n_errors", pa.int64()),
+    ("wall_ms", pa.int64()),
+])
+
+
+class _Tally:
+    """The lineage counters of one task's kernel-output batches: conv_id
+    range (byte order, nulls skipped), turns, cells, turns with a
+    non-empty ``err``, and kernel wall = floor(sum ``proc_us`` / 1000)."""
+
+    def __init__(self) -> None:
+        self.lo = self.hi = None
+        self.n_turns = self.n_cells = self.n_errors = self.proc_us = 0
+
+    def add(self, batch: pa.RecordBatch) -> None:
+        if batch.num_rows == 0:
+            return
+        lo, hi = pc.min_max(batch.column("conv_id")).values()
+        if lo.is_valid:
+            self.lo = min(self.lo, lo.as_py()) if self.lo is not None else lo.as_py()
+            self.hi = max(self.hi, hi.as_py()) if self.hi is not None else hi.as_py()
+        self.n_turns += batch.num_rows
+        self.n_cells += pc.sum(batch.column("n_cells")).as_py() or 0
+        self.n_errors += pc.sum(pc.not_equal(batch.column("err"), "")).as_py() or 0
+        self.proc_us += pc.sum(batch.column("proc_us")).as_py() or 0
+
+    def row(self) -> dict | None:
+        """This task's lineage row, keyed by its partition id (the
+        ``spark_partition_id()`` of the map it runs in); None for an
+        empty partition."""
+        if not self.n_turns:
+            return None
+        return {"partition_id": TaskContext.get().partitionId(),
+                "conv_id_min": self.lo, "conv_id_max": self.hi,
+                "n_turns": self.n_turns, "n_cells": self.n_cells,
+                "n_errors": self.n_errors, "wall_ms": self.proc_us // 1000}
+
+
+class _ByPartition(AccumulatorParam):
+    """Lineage rows keyed by partition id, merged by replacement: a
+    retried or speculative task replaces its partition's row, never adds
+    one."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, rows: dict, more: dict) -> dict:
+        rows.update(more)
+        return rows
+
+
+def lineage_accumulator(spark) -> Accumulator:
+    """A driver accumulator for ``extract_transcripts(lineage=...)``.
+    Spark merges only successful tasks' updates, and a Python update is
+    acknowledged by the driver before its task completes, so ``value`` is
+    complete when the action that ran the kernel returns. Classic
+    PySpark only: Spark Connect has no accumulators."""
+    return spark.sparkContext.accumulator({}, _ByPartition())
+
+
+def lineage_table(lineage: Accumulator) -> pa.Table:
+    """The accumulated lineage rows, in partition order."""
+    rows = lineage.value
+    return pa.Table.from_pylist([rows[p] for p in sorted(rows)], schema=LINEAGE_SCHEMA)
+
+
+def _extract_tallied(
+    batches: Iterable[pa.RecordBatch], lineage: Accumulator, **kernel
+) -> Iterator[pa.RecordBatch]:
+    """The kernel map, teeing its output through the task's tally into
+    ``lineage`` once the partition is done."""
+    tally = _Tally()
+    for out in extract_batch(batches, **kernel):
+        tally.add(out)
+        yield out
+    row = tally.row()
+    if row is not None:
+        lineage.add({row["partition_id"]: row})
+
+
+def _lineage_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """lineage_summary's map: the partition's tally as a one-row batch."""
+    tally = _Tally()
+    for b in batches:
+        tally.add(b)
+    row = tally.row()
+    if row is not None:
+        yield pa.RecordBatch.from_pylist([row], schema=LINEAGE_SCHEMA)
+
 
 def extract_transcripts(
     df: DataFrame,
@@ -49,6 +153,7 @@ def extract_transcripts(
     add_turn_seq: bool = True,
     unbounded_turn_seq: bool = False,
     keep_text: bool = False,
+    lineage: Accumulator | None = None,
 ) -> DataFrame:
     """The extraction pipeline body (B2-B5) over a transcript DataFrame.
 
@@ -65,13 +170,19 @@ def extract_transcripts(
     row->partition assignment stable under task retries.
     B5: row_number over (conv_id, turn_idx) re-establishes stable turn
     ordering after the exchange (never rely on task order).
+    B8: ``lineage`` (from :func:`lineage_accumulator`) receives one
+    lineage row per non-empty kernel task, tallied in the task itself
+    from the batches it emits: whatever action runs the frame fills it,
+    with no second query over the kernel output.
     """
     src = df.select("conv_id", "turn_idx", "text")
     if partitions != 0:
         src = src.repartition(partitions or kernel_partitions(df.sparkSession))
-    fn = functools.partial(
-        extract_batch, use_adaptive=use_adaptive, keep_text=keep_text
-    )
+    kernel = {"use_adaptive": use_adaptive, "keep_text": keep_text}
+    if lineage is None:
+        fn = functools.partial(extract_batch, **kernel)
+    else:
+        fn = functools.partial(_extract_tallied, lineage=lineage, **kernel)
     schema = OUT_SCHEMA
     if keep_text:
         # the echoed source payload (see extract_batch): lets span
@@ -162,9 +273,7 @@ def with_turn_seq(
     keys: DataFrame | None = None,
 ) -> DataFrame:
     """B5: stable turn ordering guarantee (turn_seq = 1-based rank of
-    turn_idx within conv_id). Kept separable from the kernel map so
-    lineage_summary can aggregate on the *map* partitions before this
-    stage's exchange.
+    turn_idx within conv_id).
 
     Default form: one window over conv_id — one shuffle, but each
     conversation serializes into one task. Correct and cheap while
@@ -197,20 +306,12 @@ def ordered_output(out: DataFrame) -> DataFrame:
 
 
 def lineage_summary(out: DataFrame) -> DataFrame:
-    """B8: one lineage row per task partition (BASELINE.json:6
-    "per-partition lineage rows and counters"). Aggregate BEFORE any
-    further shuffle so spark_partition_id() is the kernel-map partition."""
-    return (
-        out.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.min("conv_id").alias("conv_id_min"),
-            F.max("conv_id").alias("conv_id_max"),
-            F.count("*").alias("n_turns"),
-            F.sum("n_cells").alias("n_cells"),
-            F.sum(F.when(F.col("err") != "", 1).otherwise(0)).alias("n_errors"),
-            (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_ms"),
-        )
-    )
+    """B8: one lineage row per non-empty partition of ``out``, by the
+    same tally as ``extract_transcripts(lineage=...)``, in a narrow map
+    (no shuffle). Apply it to the kernel output before any further
+    exchange, so the partitions are the kernel-map partitions."""
+    cols = out.select("conv_id", "n_cells", "err", "proc_us")
+    return cols.mapInArrow(_lineage_batches, from_arrow_schema(LINEAGE_SCHEMA))
 
 
 def transcripts_from_tpch(

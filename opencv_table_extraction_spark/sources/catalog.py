@@ -15,8 +15,11 @@ Layout:
     root/
       data/bucket=K/*.parquet      one directory per conv bucket
       lineage/snapshot_id=N/*.parquet
-                                   per-partition lineage rows of snapshot N,
-                                   written by the driver, replaced on retry
+                                   per-partition lineage rows of snapshot N:
+                                   each kernel task tallies its own row into
+                                   a driver accumulator during the data
+                                   write; the driver writes them after it,
+                                   replaced on retry
       _committed.json              {"snapshots": [{id, buckets, ts}...]}
 """
 
@@ -34,7 +37,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import extract_transcripts, lineage_summary, with_turn_seq
+from ..plans.pipeline import extract_transcripts, lineage_accumulator, lineage_table
 
 __all__ = [
     "SnapshotCatalog",
@@ -217,14 +220,17 @@ def run_resumable(
 
     Reads the committed-bucket set, processes only the remainder
     (``max_buckets`` bounds this run — the resume tests kill the job
-    after half), writes per-bucket output, hands the lineage rows (one
-    per kernel partition, already on the driver from ``toArrow``) to
-    ``catalog.write_lineage``, then commits the manifest. Buckets are
-    committed only after their data lands, so a crash between write and
-    commit at worst reprocesses one run's buckets into overwritten
-    (idempotent) bucket directories.
+    after half), and runs ONE Spark query: scan → round-robin exchange →
+    kernel → ``turn_seq`` window → per-bucket write. Each kernel task
+    tallies its own lineage row into a driver accumulator as it runs, so
+    the rows (one per non-empty kernel partition) are on the driver when
+    the write returns; they go to ``catalog.write_lineage``, then the
+    manifest commits. Buckets are committed only after their data lands,
+    so a crash between write and commit at worst reprocesses one run's
+    buckets into overwritten (idempotent) bucket directories.
     ``partitions`` is the kernel exchange width (see
-    ``extract_transcripts``; 0 = no exchange).
+    ``extract_transcripts``; 0 = no exchange). Classic PySpark only:
+    the lineage accumulator does not exist under Spark Connect.
     """
     done = catalog.committed_buckets()
     todo = [b for b in range(catalog.n_buckets) if b not in done]
@@ -234,25 +240,16 @@ def run_resumable(
         return {"snapshot_id": catalog.last_snapshot_id(), "buckets": [], "n_turns": 0}
 
     work = transcripts.where(catalog.bucket_col().isin([int(b) for b in todo]))
-    # persist the kernel output once: both the lineage aggregation and the
-    # data write consume it, and the kernel is the expensive stage
-    raw = extract_transcripts(work, partitions=partitions, add_turn_seq=False)
-    raw.persist()
-    try:
-        snap_id = catalog.last_snapshot_id() + 1
-        lineage = (
-            lineage_summary(raw)
-            .withColumn("snapshot_id", F.lit(snap_id))
-            .withColumn("attempt", F.lit(len(catalog.snapshots()) + 1))
-        )
-        lin = lineage.toArrow()
-        n_turns = pc.sum(lin.column("n_turns")).as_py() or 0
-
-        out = with_turn_seq(raw).withColumn("bucket", catalog.bucket_col())
-        catalog.write_data(out)
-        catalog.write_lineage(lin)
-    finally:
-        raw.unpersist()
+    snap_id = catalog.last_snapshot_id() + 1
+    acc = lineage_accumulator(spark)
+    out = extract_transcripts(work, partitions=partitions, lineage=acc)
+    catalog.write_data(out.withColumn("bucket", catalog.bucket_col()))
+    lin = lineage_table(acc)
+    lin = lin.append_column("snapshot_id", pa.array([snap_id] * lin.num_rows, pa.int32()))
+    lin = lin.append_column(
+        "attempt", pa.array([len(catalog.snapshots()) + 1] * lin.num_rows, pa.int32()))
+    catalog.write_lineage(lin)
     committed_id = catalog.commit(todo)
     assert committed_id == snap_id
+    n_turns = pc.sum(lin.column("n_turns")).as_py() or 0
     return {"snapshot_id": snap_id, "buckets": todo, "n_turns": int(n_turns)}

@@ -10,13 +10,37 @@ from pyspark.sql import functions as F
 
 from opencv_table_extraction_spark.plans import (
     extract_transcripts,
+    lineage_accumulator,
     lineage_summary,
+    lineage_table,
     ordered_output,
 )
 from opencv_table_extraction_spark.sources import SnapshotCatalog, run_resumable
 
 DET_COLS = ["conv_id", "turn_idx", "route", "extracted_text", "n_rows",
             "n_cols", "n_cells", "n_joints", "err"]
+LINEAGE_KEY_COLS = ["partition_id", "conv_id_min", "conv_id_max", "n_turns",
+                    "n_cells", "n_errors"]  # wall_ms is a timing, not a count
+
+
+def lineage_reference(out):
+    """The lineage rows as a JVM aggregate over the kernel output's
+    partitions: the reference the package's per-task tally must equal."""
+    return (
+        out.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.min("conv_id").alias("conv_id_min"),
+            F.max("conv_id").alias("conv_id_max"),
+            F.count("*").alias("n_turns"),
+            F.sum("n_cells").alias("n_cells"),
+            F.sum(F.when(F.col("err") != "", 1).otherwise(0)).alias("n_errors"),
+            (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_ms"),
+        )
+    )
+
+
+def _lineage_keys(rows):
+    return sorted(tuple(r[c] for c in LINEAGE_KEY_COLS) for r in rows)
 
 
 @pytest.fixture(scope="module")
@@ -151,6 +175,103 @@ def test_lineage_idempotent_and_conf_restored(spark, fixture_dir, tmp_path):
     assert lin.agg(F.sum("n_turns")).collect()[0][0] == df.count()
     assert cat.read_output(spark).count() == df.count()
     assert spark.conf.get(key, None) == before
+
+
+# malformed [[scan]] payloads: the kernel raises, extract_batch records it in err
+_ERROR_TURNS = [(f"err-{i}", i, f"[[scan]] w=10 h=10\nregion x={i}") for i in range(5)]
+_ERROR_TURNS.append((None, 99, "| a |\n|---|\n| 1 |"))  # NULL conv_id
+
+
+@pytest.mark.parametrize("with_fixture", [True, False], ids=["fixture", "few-rows"])
+def test_lineage_tally_equals_groupby_reference(spark, fixture_dir, with_fixture):
+    """The per-task tally (the accumulator that extract_transcripts
+    feeds, and the lineage_summary map) equals the JVM groupBy over the
+    same kernel partitions, wall_ms aside: at 16 partitions, with err
+    rows and a NULL conv_id, with batches of 7 rows that split
+    conversations, and with at least 10 of 16 partitions empty on the
+    6-row input (which emit no row)."""
+    df = spark.createDataFrame(_ERROR_TURNS, "conv_id string, turn_idx int, text string")
+    if with_fixture:
+        df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet").select(
+            "conv_id", "turn_idx", "text").unionByName(df)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    acc = lineage_accumulator(spark)
+    raw = extract_transcripts(df, partitions=16, add_turn_seq=False, lineage=acc).persist()
+    try:
+        n = raw.count()  # one kernel pass: fills the cache and the accumulator
+        tally = lineage_table(acc).to_pylist()
+        summary = lineage_summary(raw).collect()
+        reference = lineage_reference(raw).collect()
+    finally:
+        raw.unpersist()
+        spark.conf.set(key, prev)
+    assert _lineage_keys(tally) == _lineage_keys(summary) == _lineage_keys(reference)
+    assert sum(r["n_turns"] for r in tally) == n
+    assert sum(r["n_errors"] for r in tally) == 5
+    if with_fixture:
+        assert len(tally) == 16
+    else:
+        assert len(tally) <= len(_ERROR_TURNS)
+
+
+def test_lineage_accumulator_replaces_by_partition(spark, fixture_dir):
+    """A partition's row replaces, never adds: on the driver, and when
+    the same kernel tasks run twice (a retried stage's shape)."""
+    acc = lineage_accumulator(spark)
+    acc.add({3: {"n_turns": 1}})
+    acc.add({3: {"n_turns": 2}})
+    assert acc.value == {3: {"n_turns": 2}}
+
+    df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet").limit(40)
+    acc = lineage_accumulator(spark)
+    out = extract_transcripts(df, partitions=4, add_turn_seq=False, lineage=acc)
+    out.count()
+    once = lineage_table(acc)
+    out.count()
+    twice = lineage_table(acc)
+    assert once.num_rows == twice.num_rows == 4
+    assert _lineage_keys(twice.to_pylist()) == _lineage_keys(once.to_pylist())
+    assert sum(twice.column("n_turns").to_pylist()) == 40
+
+
+def test_run_resumable_is_one_query_per_restart(spark, fixture_dir, tmp_path, monkeypatch):
+    """Each restart runs the write query alone: nothing persists, caches
+    or fetches the kernel output, and the restart takes 3 Spark jobs on
+    the fixture (the scan stage, the kernel stage feeding the turn_seq
+    exchange, and the write); the lineage rows come from the kernel
+    tasks of that query."""
+    import pyspark.sql.classic.dataframe as cdf
+
+    calls = []
+    for name in ("persist", "cache", "unpersist", "toArrow", "collect", "count",
+                 "toPandas", "localCheckpoint", "checkpoint"):
+        real = getattr(cdf.DataFrame, name)
+
+        def record(self, *args, _name=name, _real=real, **kwargs):
+            calls.append(_name)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cdf.DataFrame, name, record)
+
+    df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+    cat = SnapshotCatalog(str(tmp_path / "cat"), n_buckets=8)
+    sc = spark.sparkContext
+    jobs, results = [], []
+    try:
+        for i, max_buckets in enumerate((4, None)):
+            sc.setJobGroup(f"restart-{i}", f"restart-{i}")
+            results.append(run_resumable(spark, df, cat, max_buckets=max_buckets))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"restart-{i}")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert calls == []
+    assert jobs == [3, 3]
+    monkeypatch.undo()
+    lin = cat.read_lineage(spark).groupBy("snapshot_id").agg(F.sum("n_turns")).collect()
+    assert sorted(tuple(r) for r in lin) == [
+        (r["snapshot_id"], r["n_turns"]) for r in results]
 
 
 def _hidden_dirs(root):
@@ -414,8 +535,8 @@ def test_library_calls_leave_the_session_alone(spark, tmp_path, monkeypatch):
 def test_extract_job_runs_and_resumes(fixture_dir, tmp_path):
     """jobs/extract.py, the spark-submit entry point, end to end in its
     own local session: the first run extracts every turn into all 4
-    buckets and commits them; the second finds them committed and does
-    nothing."""
+    buckets and commits them, with lineage rows that count every turn;
+    the second finds them committed and does nothing."""
     import json
     import subprocess
     import sys
@@ -435,6 +556,8 @@ def test_extract_job_runs_and_resumes(fixture_dir, tmp_path):
     first, second = results
     assert sorted(first["buckets"]) == [0, 1, 2, 3]
     assert first["n_turns"] == n_turns
+    lineage = pq.read_table(str(tmp_path / "out" / "lineage"))
+    assert sum(lineage.column("n_turns").to_pylist()) == first["n_turns"]
     assert second["buckets"] == []
     assert second["snapshot_id"] == first["snapshot_id"]
 
