@@ -64,8 +64,10 @@ OUT_FIELDS: list[tuple[str, pa.DataType]] = [
 ]
 
 
-def arrow_out_schema() -> pa.Schema:
-    return pa.schema(OUT_FIELDS)
+def arrow_out_schema(keep_text: bool = False) -> pa.Schema:
+    """The kernel's output schema; ``keep_text`` appends the echoed
+    source ``text`` column (see :func:`extract_batch`)."""
+    return pa.schema(OUT_FIELDS + [("text", pa.string())] if keep_text else OUT_FIELDS)
 
 
 def _row(route: str, text: str, err: str = "") -> dict:
@@ -176,9 +178,7 @@ def extract_batch(
     input buffer re-emitted, so equality with the joined source holds by
     construction.
     """
-    schema = arrow_out_schema()
-    if keep_text:
-        schema = schema.append(pa.field("text", pa.string()))
+    schema = arrow_out_schema(keep_text)
     for batch in batches:
         if batch.num_rows == 0:
             continue

@@ -46,7 +46,7 @@ MIN_CELL_W = 16     # px floor for a column's interior width
 # Target canvas width, not a cap: layout_table scales wider tables'
 # columns down to it, but each column keeps an 8 px floor, so very
 # wide tables still exceed it; height grows with the row count.
-MAX_CANVAS = 2400
+TARGET_CANVAS_W = 2400
 
 _PIPE_ROW = re.compile(r"^\s*\|.*\|\s*$")
 _SEP_ROW = re.compile(r"^\s*\|(?:\s*:?-{2,}:?\s*\|)+\s*$")
@@ -128,8 +128,8 @@ def layout_table(pt: ParsedTable) -> tuple[int, int, np.ndarray]:
     col_w = np.maximum((lens.reshape(pt.n_rows, pt.n_cols).max(axis=0) + 2) * CHAR_W,
                        MIN_CELL_W)
     total_w = int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
-    if total_w > MAX_CANVAS - 2 * MARGIN:
-        scale = (MAX_CANVAS - 2 * MARGIN - (pt.n_cols + 1) * LINE_T) / float(col_w.sum())
+    if total_w > TARGET_CANVAS_W - 2 * MARGIN:
+        scale = (TARGET_CANVAS_W - 2 * MARGIN - (pt.n_cols + 1) * LINE_T) / float(col_w.sum())
         col_w = np.maximum((col_w * scale).astype(np.int64), 8)
     W = 2 * MARGIN + int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
     H = 2 * MARGIN + pt.n_rows * CELL_H + (pt.n_rows + 1) * LINE_T

@@ -613,12 +613,16 @@ def verify_candidate_pairs(
     # candidate pairs (16 B/row, feeding the CPU-bound kernel) and the doc
     # texts (one text per doc, not per pair) — instead of repartitioning
     # the joined pair-texts (|pairs| x two texts, ~270 MB at sf0.1's 444k
-    # candidates). When AQE broadcasts the doc side of a join, that join
-    # adds its text with no exchange and keeps the explicit par-wide
-    # partitioning. When both joins are shuffled (docs too big to
-    # broadcast), the second join re-partitions the first join's output by
-    # b_id, so the a-side texts DO cross that exchange, once per candidate
-    # pair; only the b-side texts never do.
+    # candidates). With few candidates (the near-dup benchmark corpus at
+    # local[4]) the first join broadcasts the CANDIDATE side after its
+    # par-wide exchange (BuildLeft) and streams the par-wide a-side doc
+    # exchange; the b-side docs reuse that doc exchange (ReusedExchange)
+    # and are broadcast into the second join, so the kernel runs on the
+    # doc exchange's par partitions. When both joins are shuffled (no
+    # side small enough to broadcast), the first join re-partitions the
+    # candidates by a_id after their (a_id, b_id) exchange, and the second
+    # re-partitions its output by b_id, so the a-side texts DO cross that
+    # exchange, once per candidate pair; only the b-side texts never do.
     cand = cand.repartition(par, "a_id", "b_id")
     ver = (
         cand.join(docs.select(F.col("doc_id").alias("a_id"),

@@ -1,7 +1,9 @@
 """Text analysis operators over the documents table: token counting
 (whitespace + BPE-ish regex), quality scoring, language-ID heuristic,
-document fingerprinting. All expressions are JVM-side built-ins (zero
-Python in the hot path); every query has an exact DuckDB oracle."""
+document fingerprinting, token-budget shard packing. Most expressions
+are JVM-side built-ins; winnowing fingerprints and repetition stats run
+in pandas UDFs (``winnow_fingerprint_batch``, ``repetition_stats_batch``).
+Every query has an exact DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import kernel_partitions
+from ..plans.pipeline import grouped_running_sum
 from .dedup import _jvm_tokens, normalized_fingerprint
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
@@ -356,7 +358,7 @@ FROM (SELECT doc_id, source,
 
 
 def pack_token_shards(
-    d: DataFrame, budget: int = 50_000, partitions: int | None = None
+    d: DataFrame, budget: int = 50_000, buckets: int | None = None
 ) -> DataFrame:
     """Token-budget shard packing: within each source (the natural
     shard boundary), docs in stable doc_id order accumulate whitespace
@@ -364,65 +366,24 @@ def pack_token_shards(
     sequence-packing step that turns a corpus into bounded training
     shards.
 
-    Scale shape — a DISTRIBUTED prefix sum, not one window per source
-    (a ``Window.partitionBy("source")`` puts an entire source in a
-    single task; with a handful of sources at 100 TB that is a
-    one-straggler plan). Instead:
-      1. range-partition by (source, doc_id) — each task holds a
-         contiguous doc_id slice of a source;
-      2. per-(source, partition) token subtotals — P rows total;
-      3. exclusive offsets over those P rows (a window over a frame the
-         size of the partition COUNT, trivially small);
-      4. local cumsum within each partition + offset.
-    The shard assignment is a pure function of the global running sum,
-    so it is independent of the partition count (tested under odd
-    parallelism)."""
-    from pyspark.sql import Window
-
-    par = partitions or kernel_partitions(d.sparkSession)
+    The running token total is :func:`plans.pipeline.grouped_running_sum`
+    over source in doc_id order, so no task holds a whole source (a
+    ``Window.partitionBy("source")`` would put each source in one task:
+    with a handful of sources at 100 TB, a one-straggler plan), and
+    building the plan launches no Spark job. ``buckets`` is that
+    helper's doc_id value-range bucket count; the shards are a pure
+    function of the running total, so they do not depend on it. A doc
+    with a NULL doc_id or source gets no row."""
     n_tok = F.size(F.split(F.trim("text"), r"\s+"))
-    parts = (
-        d.select("doc_id", "source", n_tok.alias("n_tokens"))
-        .repartitionByRange(par, "source", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        # pid is consumed by TWO branches (subtotals->offsets and the
-        # final join). RangePartitioner samples its boundaries, so if
-        # the branches ever planned as two separate exchanges (exchange
-        # reuse off, future planner change) they could assign DIFFERENT
-        # pids to boundary rows — subtotals counted in one partition,
-        # offsets applied from another: silently wrong shards. Eagerly
-        # materializing the (small, text-free) frame freezes pid in the
-        # data instead of relying on canonicalized-exchange reuse.
-        .localCheckpoint(eager=True)
-    )
-    partials = parts.groupBy("source", "pid").agg(
-        F.sum("n_tokens").alias("part_sum")
-    )
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = partials.select(
-        "source", "pid",
-        F.coalesce(F.sum("part_sum").over(w_off), F.lit(0)).alias("offset"),
-    )
-    w_local = (
-        Window.partitionBy("source", "pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_tokens").over(w_local) + F.col("offset")
-    return (
-        parts.join(F.broadcast(offsets), ["source", "pid"])
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            F.floor((cum - F.col("n_tokens")) / F.lit(budget))
-            .cast("int")
-            .alias("shard_id"),
-        )
+    docs = d.select("doc_id", "source", n_tok.alias("n_tokens"))
+    total = grouped_running_sum(docs, "source", "doc_id", F.col("n_tokens"), buckets)
+    return total.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.floor((F.col("running_sum") - F.col("n_tokens")) / F.lit(budget))
+        .cast("int")
+        .alias("shard_id"),
     )
 
 

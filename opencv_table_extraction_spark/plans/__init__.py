@@ -1,6 +1,7 @@
 from .pipeline import (  # noqa: F401
     OUT_SCHEMA,
     extract_transcripts,
+    grouped_running_sum,
     lineage_accumulator,
     lineage_summary,
     lineage_table,

@@ -25,7 +25,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.accumulators import Accumulator, AccumulatorParam
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -36,6 +36,7 @@ __all__ = [
     "LINEAGE_SCHEMA",
     "OUT_SCHEMA",
     "extract_transcripts",
+    "grouped_running_sum",
     "lineage_accumulator",
     "lineage_table",
     "ordered_output",
@@ -183,14 +184,7 @@ def extract_transcripts(
         fn = functools.partial(extract_batch, **kernel)
     else:
         fn = functools.partial(_extract_tallied, lineage=lineage, **kernel)
-    schema = OUT_SCHEMA
-    if keep_text:
-        # the echoed source payload (see extract_batch): lets span
-        # consumers slice offsets without a join-back derivation pass
-        schema = from_arrow_schema(
-            arrow_out_schema().append(pa.field("text", pa.string()))
-        )
-    out = src.mapInArrow(fn, schema)
+    out = src.mapInArrow(fn, from_arrow_schema(arrow_out_schema(keep_text)))
     if add_turn_seq:
         # unbounded mode takes its (conv_id, turn_idx) keys from the
         # INPUT frame — a column-pruned re-scan of the source (cheap,
@@ -203,67 +197,75 @@ def extract_transcripts(
     return out
 
 
+def grouped_running_sum(
+    df: DataFrame, group: str, order: str, value: Column, buckets: int | None = None
+) -> DataFrame:
+    """``df`` plus ``running_sum``: the sum of ``value`` over the rows
+    of the same ``group`` up to and including this one in ``order`` — a
+    running total computed WITHOUT ever holding a whole group in one
+    task (a two-level prefix sum):
+
+      1. bucket every row by ``order`` value range: the global (lo, width)
+         come from a 1-row min/max aggregate joined in by a broadcast
+         crossJoin, so the bounds are pure arithmetic over the input and
+         every pass over ``df`` buckets identically, with nothing
+         persisted and no eager ``.collect()`` (building the plan launches
+         no Spark job);
+      2. sum ``value`` per (group, bucket) — a SMALL frame (<= groups x
+         buckets rows) — and turn the sums into exclusive per-bucket
+         offsets with a window ORDERED BY BUCKET (a window partition holds
+         <= ``buckets`` rows per group, never the group's length);
+      3. join the offsets back on (group, bucket) and add a rows-frame
+         running sum WITHIN each (group, bucket).
+
+    The trade: a step-3 window task holds the rows of one value-range
+    bucket. For unique, dense ``order`` values (``turn_idx``, ``doc_id``)
+    that is at most range / ``buckets`` rows per group, so a 10^9-row
+    group splits across ~``buckets`` tasks; sparse outliers in ``order``
+    stretch the range and can crowd the dense rows into one bucket. Ties
+    on (group, order) get an arbitrary order, as a ``row_number`` would.
+    Rows with a NULL ``group`` or ``order`` fall out at the join. On empty
+    input the crossJoin against the 1-row NULL aggregate yields an empty
+    frame with the same schema. ``buckets`` defaults to four times the
+    default parallelism; the result does not depend on it."""
+    buckets = buckets or df.sparkSession.sparkContext.defaultParallelism * 4
+    bounds = df.agg(
+        F.min(order).alias("_lo"),
+        F.greatest(
+            F.lit(1),
+            F.ceil((F.max(order) - F.min(order) + 1) / F.lit(buckets)),
+        ).alias("_w"),
+    )
+    b = df.crossJoin(F.broadcast(bounds)).select(
+        *df.columns,
+        F.floor((F.col(order) - F.col("_lo")) / F.col("_w")).cast("int").alias("_bkt"),
+        value.alias("_v"),
+    )
+    sums = b.groupBy(group, "_bkt").agg(F.sum("_v").alias("_s"))
+    w_off = Window.partitionBy(group).orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
+    offs = sums.select(group, "_bkt", F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_off"))
+    w_run = (
+        Window.partitionBy(group, "_bkt")
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return b.join(offs, [group, "_bkt"]).select(
+        *df.columns, (F.col("_off") + F.sum("_v").over(w_run)).alias("running_sum")
+    )
+
+
 def turn_seq_map(keys: DataFrame, buckets: int | None = None) -> DataFrame:
     """Distributed ordinal assignment: (conv_id, turn_idx) ->
     (conv_id, turn_idx, turn_seq) where turn_seq is the 1-based rank of
-    turn_idx within its conversation — computed WITHOUT ever holding a
-    whole conversation in one task (the two-level prefix sum, the same
-    worked pattern as operators/textstats.pack_token_shards):
-
-      1. bucket every row by turn_idx value range (global min/max from
-         one 1-row aggregate; bucket boundaries are pure arithmetic, so
-         both passes over `keys` bucket identically — no persist needed,
-         unlike spark_partition_id()-based bucketing, which could drift
-         between a plan's re-executions);
-      2. count rows per (conv_id, bucket) — a SMALL frame (<= convs x
-         buckets) — and turn counts into exclusive per-bucket offsets
-         with a window ORDERED BY BUCKET (partition size <= `buckets`
-         rows per conversation, never conversation length);
-      3. join the offsets back on (conv_id, bucket) (AQE broadcasts the
-         small side) and rank WITHIN each (conv_id, bucket): partition
-         size is bounded by the bucket's value range share, so a 10^9-
-         turn conversation splits across ~`buckets` tasks instead of
-         serializing into one.
-
-    Ties on (conv_id, turn_idx) get arbitrary distinct ranks — identical
-    to the window form's row_number tie-break; the data model's turn_idx
-    is unique per conversation.
-
-    Plan construction is side-effect free: the global (lo, width) bounds
-    come from a 1-row min/max aggregate joined in via a broadcast
-    crossJoin, NOT an eager ``.collect()`` — so merely BUILDING an
-    unbounded plan (e.g. registering a query) launches no Spark job, and
-    the bounds recompute deterministically on any re-execution of the
-    plan (same input => same min/max => identical bucketing across both
-    passes over `keys`; no persist needed). On empty input the crossJoin
-    against the 1-row null aggregate yields an empty frame with the same
-    (conv_id, turn_idx, turn_seq) schema."""
-    spark = keys.sparkSession
-    buckets = buckets or spark.sparkContext.defaultParallelism * 4
-    k = keys.select("conv_id", "turn_idx")
-    bounds = k.agg(
-        F.min("turn_idx").alias("_lo"),
-        F.greatest(
-            F.lit(1),
-            F.ceil((F.max("turn_idx") - F.min("turn_idx") + 1) / F.lit(buckets)),
-        ).alias("_w"),
-    )
-    b = (
-        k.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "_bkt", F.floor((F.col("turn_idx") - F.col("_lo")) / F.col("_w")).cast("int")
-        )
-        .drop("_lo", "_w")
-    )
-    counts = b.groupBy("conv_id", "_bkt").agg(F.count("*").alias("_c"))
-    w_off = Window.partitionBy("conv_id").orderBy("_bkt")
-    offs = counts.withColumn("_off", F.sum("_c").over(w_off) - F.col("_c")).drop("_c")
-    w_rank = Window.partitionBy("conv_id", "_bkt").orderBy("turn_idx")
-    return (
-        b.join(offs, ["conv_id", "_bkt"])
-        .withColumn("turn_seq", (F.col("_off") + F.row_number().over(w_rank)).cast("int"))
-        .drop("_bkt", "_off")
-    )
+    turn_idx within its conversation: :func:`grouped_running_sum` of 1
+    over conv_id in turn_idx order, so no task holds a whole
+    conversation, and building the plan launches no Spark job. Ties on
+    (conv_id, turn_idx) get arbitrary distinct ranks, as the window
+    form's row_number does; the data model's turn_idx is unique per
+    conversation."""
+    seq = grouped_running_sum(keys.select("conv_id", "turn_idx"), "conv_id", "turn_idx",
+                              F.lit(1), buckets)
+    return seq.select("conv_id", "turn_idx", F.col("running_sum").cast("int").alias("turn_seq"))
 
 
 def with_turn_seq(

@@ -44,7 +44,7 @@ def test_exact_grid_recovery(R, C):
 )
 def test_oversized_canvas_extracts_every_cell(R, C, H, W):
     """Canvas size is not capped: layout_table only scales column widths
-    toward MAX_CANVAS (each keeps an 8 px floor) and height grows with
+    toward TARGET_CANVAS_W (each keeps an 8 px floor) and height grows with
     the rows. Pins that a 32,232 px tall table (vertical runs far past
     int16 range) and a 4,018 px wide one still extract every cell."""
     text = make_table_md(R, C)

@@ -300,18 +300,32 @@ def test_turn_seq_unbounded_equals_window_form(spark):
     assert empty.count() == 0
 
 
-def test_turn_seq_plan_construction_is_lazy(spark):
-    """Building an unbounded turn_seq plan must launch no Spark job
-    (r6 advice): the bucket bounds are a lazily-joined 1-row aggregate,
-    not an eager collect. Proven by constructing the plan over keys
-    whose evaluation RAISES — construction succeeds, execution fails."""
-    import pytest
-    from pyspark.sql.types import StructType, StructField, StringType, IntegerType
-
+def _unbounded_turn_seq(df):
     from opencv_table_extraction_spark.plans import with_turn_seq
 
+    return with_turn_seq(df, unbounded=True)
+
+
+def _token_shards(df):
+    from opencv_table_extraction_spark.operators.textstats import pack_token_shards
+
+    return pack_token_shards(df.withColumnRenamed("turn_idx", "doc_id")
+                             .withColumnRenamed("conv_id", "source"))
+
+
+@pytest.mark.parametrize("build, column", [(_unbounded_turn_seq, "turn_seq"),
+                                           (_token_shards, "shard_id")],
+                         ids=["turn_seq", "pack_token_shards"])
+def test_turn_seq_plan_construction_is_lazy(spark, build, column):
+    """Building a grouped_running_sum plan (unbounded turn_seq, token
+    shard packing) must launch no Spark job: the bucket bounds are a
+    lazily-joined 1-row aggregate, not an eager collect or checkpoint.
+    Proven by constructing the plan over input whose evaluation RAISES
+    — construction succeeds and runs no job, execution fails."""
+    from pyspark.sql.types import StructType, StructField, StringType, IntegerType
+
     def boom(_it):
-        raise RuntimeError("keys must not be evaluated at plan build")
+        raise RuntimeError("input must not be evaluated at plan build")
         yield  # pragma: no cover
 
     schema = StructType(
@@ -322,8 +336,15 @@ def test_turn_seq_plan_construction_is_lazy(spark):
         ]
     )
     df = spark.createDataFrame([("c", 1, "t")], schema).mapInPandas(boom, schema)
-    plan = with_turn_seq(df, unbounded=True)  # must not raise
-    assert "turn_seq" in plan.columns
+    sc = spark.sparkContext
+    group = f"lazy-build{build.__name__}"
+    sc.setJobGroup(group, "plan build")
+    try:
+        plan = build(df)  # must not raise
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert column in plan.columns
     with pytest.raises(Exception):
         plan.count()
 
