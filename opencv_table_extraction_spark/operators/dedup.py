@@ -5,14 +5,17 @@ connected components and the keep-filter that applies the decisions.
 
 Joins, aggregations, windows and native array ops stay JVM-side; every
 per-document and per-pair primitive has one implementation, an
-Arrow-batch (mapInArrow) kernel — word n-gram rows, minhash bands, pair
-verification, simhash, SRP sketches and the components pre-contraction
-— because Spark interprets higher-order-function lambdas and cannot
-express a union-find. Each kernel's output columns are one module-level
-``pa.Schema``; the Spark side passes ``from_arrow_schema`` of it. The
-bucketed generators (LSH, Jaccard prefix, simhash, SRP) get their
-candidates from a groupBy on the bucket key plus in-bucket pair
-enumeration (_bucket_pairs), never from a self-join of the bucket rows.
+Arrow-batch (mapInArrow) kernel — word n-gram rows, minhash bands,
+in-bucket pairs, pair verification, simhash, SRP sketches and the
+components pre-contraction — because Spark interprets higher-order-
+function lambdas and cannot express a union-find. Each kernel's output
+columns are a ``pa.Schema`` (module-level where it is fixed); the Spark
+side passes ``from_arrow_schema`` of it. The bucketed generators never
+self-join their bucket rows: LSH, simhash and SRP hash-partition them
+on the bucket key, sort within partitions and enumerate each key run's
+pairs in one kernel (_bucket_candidates); the Jaccard prefix join
+groups its prefix rows and prunes the pairs of each bucket's id array
+as JVM structs (_bucket_pairs).
 
 The dedup corpus derives near-duplicates deterministically from the
 documents table (each doc unioned with its 90%-prefix truncation at
@@ -35,7 +38,7 @@ from collections.abc import Callable
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 from ..session import kernel_partitions
 
@@ -44,10 +47,10 @@ N_BANDS = 16  # 16 bands x 2 rows: ~0.99 candidate recall at jaccard 0.5
 JACCARD_THRESHOLD = 0.2
 # Hot-bucket cap for the bucketed candidate generators (LSH / prefix /
 # containment / simhash / SRP): a bucket key shared by more than
-# MAX_BUCKET ids is dropped from pair enumeration BEFORE its id array is
-# ever materialized (a count window filters the key rows ahead of
-# collect_list, see _bucket_ids; the prefix joins filter on document
-# frequency). Over-hot buckets are exact-dup /
+# MAX_BUCKET ids is dropped from pair enumeration without ever being
+# held whole (the bucket-pair kernel drops a sorted key run once it
+# passes the cap, see _bucket_candidates; the prefix joins filter on
+# document frequency). Over-hot buckets are exact-dup /
 # boilerplate families that dedup_exact absorbs in O(N); enumerating
 # them here would be O(B^2) pairs and an O(B) single-task array. The
 # default clears every fixture bucket by >100x (measured max ~30 at
@@ -130,48 +133,133 @@ def _gram_rows(docs: DataFrame, n: int, widen: bool) -> DataFrame:
     )
 
 
-def _bucket_ids(
-    rows: DataFrame, keys: list[str], collect_expr, max_bucket: int
+# Pairs per output batch of the bucket-pair kernel: chunks hold whole
+# bucket rows, so a batch has fewer than _PAIR_BATCH + max_bucket pairs.
+_PAIR_BATCH = 1 << 16
+
+
+def _bucket_pair_batches(batches, keys, cols, max_bucket: int, schema: pa.Schema):
+    """Arrow-batch kernel: (key..., id, payload...) rows, SORTED on the
+    key columns ``keys`` -> ``schema`` rows, one per in-bucket element
+    pair of every bucket (run of equal keys) of 1 < n <= max_bucket
+    rows: canonical ``a_id`` <= ``b_id`` from the id column ``cols[0]``,
+    then ``a_<p>``, ``b_<p>`` for each payload column p of ``cols[1:]``,
+    taken from the row of ``a_id`` and of ``b_id``. Pairs are not
+    deduplicated: a pair that shares several buckets comes out once per
+    bucket.
+
+    A bucket's run may cross batch boundaries: the open run at the end
+    of a batch is carried into the next one, holding at most max_bucket
+    rows — once the run passes max_bucket it is dropped and only its key
+    is kept, so its remaining rows are skipped as they stream by. Pairs
+    are enumerated row-wise with NumPy (row i of a run pairs with the
+    run's rows after it), whole rows per output batch (_PAIR_BATCH)."""
+    import numpy as np
+
+    def pairs(v, starts, sizes):
+        # rows g of the runs, each paired with the c = run end - g - 1
+        # rows after it, in chunks of whole rows
+        g = np.repeat(starts, sizes) + (
+            np.arange(sizes.sum()) - np.repeat(np.cumsum(sizes) - sizes, sizes))
+        c = np.repeat(starts + sizes, sizes) - g - 1
+        ends = np.cumsum(c)
+        cuts = np.searchsorted(ends, np.arange(_PAIR_BATCH, ends[-1], _PAIR_BATCH),
+                               side="right").tolist() if len(ends) else []
+        for lo, hi in zip([0, *cuts], [*cuts, len(g)]):
+            gg, cc = g[lo:hi], c[lo:hi]
+            if not cc.sum():
+                continue
+            i = np.repeat(gg, cc)
+            j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(cc) - cc, cc)
+            first = v[0][i] <= v[0][j]
+            a, b = np.where(first, i, j), np.where(first, j, i)
+            out = [v[0][a], v[0][b]]
+            for p in v[1:]:
+                out += [p[a], p[b]]
+            yield pa.RecordBatch.from_arrays(out, schema=schema)
+
+    carry_key, carry = None, None  # the open run: its key, its rows or None if dropped
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        k = [batch.column(c).to_numpy() for c in keys]
+        v = [batch.column(c).to_numpy() for c in cols]
+        new = np.zeros(n, dtype=bool)
+        new[0] = True
+        for kc in k:
+            new[1:] |= kc[1:] != kc[:-1]
+        starts = np.flatnonzero(new)
+        skip_first = False
+        if carry_key is not None:
+            same = all(kc[0] == ck for kc, ck in zip(k, carry_key))
+            if carry is not None:
+                # the carried rows open the batch: as their own run, or
+                # as the head of the batch's first run
+                v = [np.concatenate([cv, bv]) for cv, bv in zip(carry, v)]
+                starts = starts + len(carry[0])
+                if same:
+                    starts[0] = 0
+                else:
+                    starts = np.concatenate([[0], starts])
+            else:
+                skip_first = same  # the rest of a dropped run
+        sizes = np.diff(np.append(starts, len(v[0])))
+        # the last run stays open: it may go on in the next batch
+        carry_key = tuple(kc[-1] for kc in k)
+        carry = ([cv[starts[-1]:].copy() for cv in v]
+                 if sizes[-1] <= max_bucket and not (skip_first and len(starts) == 1)
+                 else None)
+        ok = (sizes[:-1] > 1) & (sizes[:-1] <= max_bucket)
+        ok[:int(skip_first)] = False
+        yield from pairs(v, starts[:-1][ok], sizes[:-1][ok])
+    if carry is not None and len(carry[0]) > 1:
+        yield from pairs(carry, np.array([0]), np.array([len(carry[0])]))
+
+
+def _bucket_candidates(
+    rows: DataFrame, keys: list[str], id_col: str, max_bucket: int,
+    payload: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
-    """(key..., id) rows -> (bounded pair buckets, dropped-bucket stats).
+    """(key..., id, payload...) rows -> (distinct candidate pairs,
+    dropped-bucket stats).
 
-    Count-first hot-key exclusion: every bucket's size is known BEFORE
-    collect_list builds any id array, so no task ever materializes a
-    degenerate bucket's array (the OOM + cartesian bomb a
-    ``where(size(ids) <= cap)`` AFTER the agg would still hit).
+    ONE key-hash exchange, sorted within partitions on the key, feeds
+    _bucket_pair_batches: every bucket of 1 < n <= max_bucket rows
+    becomes its in-bucket pairs (a_id, b_id, a_<p>, b_<p>...) and no
+    task ever holds more than max_bucket rows of one bucket, so a
+    degenerate bucket is never materialized (the OOM + cartesian bomb a
+    size cap AFTER building the bucket would still hit). The pairs are
+    then deduplicated on (a_id, b_id).
 
-    ONE key-hash exchange, ONE kernel pass: the bucket size rides a
-    COUNT window over the key partition and the 1 < n <= max_bucket
-    filter runs BEFORE collect_list, which then aggregates in place on
-    the window's partitioning (no further exchange, no anti-join).
-    Counting in a separate partial-agg branch would avoid shipping a
-    degenerate bucket's rows, but would run the scan->banding kernel a
-    second time: Catalyst/AQE does not dedupe Python MapInArrow subtrees
-    (no ReusedExchange across them). Band rows are ~20-byte key tuples,
-    so shipping even a pathological bucket's rows once (window-buffered,
-    disk-spillable, never an array) costs far less than re-running the
-    per-doc kernel over the whole corpus.
-
-    Returns the buckets frame (>1 ids each, all <= max_bucket) and the
-    lazy ``dropped`` frame (key columns + n) enumerating every excluded
-    bucket — callers attach it to their result for lineage/telemetry
-    (consuming it re-runs the banding subtree up to a partial count).
+    ``dropped`` (key columns + n) enumerates every bucket over
+    max_bucket rows. It is a lazy groupBy count: callers attach it to
+    their result for lineage/telemetry, and reading it re-runs the
+    banding subtree up to a partial count (Catalyst/AQE does not dedupe
+    Python MapInArrow subtrees, so no exchange is shared with the pairs).
     """
-    n = F.count("*").over(Window.partitionBy(*keys))
-    bounded = (
-        rows.repartition(*[F.col(k) for k in keys])
-        .withColumn("_n", n)
-        .where((F.col("_n") > 1) & (F.col("_n") <= max_bucket))
+    cols = [id_col, *payload]
+    schema = pa.schema(
+        [("a_id", pa.int64()), ("b_id", pa.int64())]
+        + [(f"{s}_{c}", to_arrow_type(rows.schema[c].dataType)) for c in payload for s in "ab"]
     )
-    buckets = bounded.groupBy(*keys).agg(
-        F.collect_list(collect_expr).alias("ids")
+    cand = (
+        rows.select(*keys, F.col(id_col).cast("long").alias(id_col), *payload)
+        .repartition(*[F.col(k) for k in keys])
+        .sortWithinPartitions(*keys)
+        .mapInArrow(
+            functools.partial(_bucket_pair_batches, keys=keys, cols=cols,
+                              max_bucket=max_bucket, schema=schema),
+            from_arrow_schema(schema),
+        )
+        .dropDuplicates(["a_id", "b_id"])
     )
     dropped = (
         rows.groupBy(*keys)
         .agg(F.count("*").alias("n"))
         .where(F.col("n") > max_bucket)
     )
-    return buckets, dropped
+    return cand, dropped
 
 
 def _bucket_pairs(buckets: DataFrame, pair, keep=None) -> DataFrame:
@@ -194,11 +282,6 @@ def _bucket_pairs(buckets: DataFrame, pair, keep=None) -> DataFrame:
         .select("p.*")
         .dropDuplicates(["a_id", "b_id"])
     )
-
-
-def _canonical_pair(x, y):
-    """Pair struct of two bare ids, smaller id first."""
-    return F.struct(F.least(x, y).alias("a_id"), F.greatest(x, y).alias("b_id"))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,9 +637,12 @@ def minhash_lsh_pairs_with_drops(
 ) -> tuple[DataFrame, DataFrame]:
     """MinHash + LSH banding near-dup pairs, fully distributed:
       1. per-doc signature -> band keys (narrow Arrow kernel);
-      2. bucket by (band_id, band_hash), enumerate in-bucket pairs —
-         buckets over ``max_bucket`` ids are excluded count-first (no
-         giant single-task array, no quadratic blow-up; see _bucket_ids);
+      2. hash-partition the band rows on (band_id, band_hash), sort them
+         within partitions and enumerate each bucket's pairs in one
+         Arrow kernel — a bucket over ``max_bucket`` ids is dropped once
+         its run passes the cap, so no task holds more than max_bucket
+         of its rows and no quadratic blow-up follows (see
+         _bucket_candidates); the pairs are then deduplicated;
       3. exact-Jaccard verification of the deduped candidates.
 
     ``recall`` names the banding S-curve, one of RECALL_PROFILES:
@@ -576,15 +662,14 @@ def minhash_lsh_pairs_with_drops(
     n_bands, n_hashes = RECALL_PROFILES[recall]
     docs = corpus.select("doc_id", "text")
     bands = minhash_band_rows(docs, n_hashes=n_hashes, n_bands=n_bands)
-    # candidate pairs via ONE exchange: group band rows by bucket key and
-    # enumerate ordered pairs inside each bucket. A self-join would
-    # re-execute the whole scan->shingle->signature pipeline for both
-    # sides (no ReusedExchange: the two sides project different aliases);
-    # the groupBy computes signatures once.
-    buckets, dropped = _bucket_ids(
-        bands, ["band_id", "band_hash"], F.col("doc_id"), max_bucket
+    # candidate pairs via ONE exchange of the band rows on the bucket key,
+    # then the pairs inside each bucket. A self-join would re-execute the
+    # whole scan->shingle->signature pipeline for both sides (no
+    # ReusedExchange: the two sides project different aliases); the one
+    # exchange computes signatures once.
+    cand, dropped = _bucket_candidates(
+        bands, ["band_id", "band_hash"], "doc_id", max_bucket
     )
-    cand = _bucket_pairs(buckets, _canonical_pair)
     pairs = verify_candidate_pairs(cand, docs, threshold, _JACCARD)
     return pairs, dropped
 
@@ -609,21 +694,22 @@ def verify_candidate_pairs(
     schema, denom = metric
     col = schema.names[-1]
     par = kernel_partitions(docs.sparkSession)
-    # BOTH thin sides are widened explicitly BEFORE the joins — the
-    # candidate pairs (16 B/row, feeding the CPU-bound kernel) and the doc
-    # texts (one text per doc, not per pair) — instead of repartitioning
-    # the joined pair-texts (|pairs| x two texts, ~270 MB at sf0.1's 444k
-    # candidates). With few candidates (the near-dup benchmark corpus at
-    # local[4]) the first join broadcasts the CANDIDATE side after its
-    # par-wide exchange (BuildLeft) and streams the par-wide a-side doc
-    # exchange; the b-side docs reuse that doc exchange (ReusedExchange)
-    # and are broadcast into the second join, so the kernel runs on the
-    # doc exchange's par partitions. When both joins are shuffled (no
-    # side small enough to broadcast), the first join re-partitions the
-    # candidates by a_id after their (a_id, b_id) exchange, and the second
-    # re-partitions its output by b_id, so the a-side texts DO cross that
-    # exchange, once per candidate pair; only the b-side texts never do.
-    cand = cand.repartition(par, "a_id", "b_id")
+    # The candidates cross no exchange of their own: the first join reads
+    # them as their dedup left them, hash-partitioned on (a_id, b_id).
+    # The doc texts (one text per doc, not per pair) are widened to par
+    # explicitly BEFORE the joins, instead of repartitioning the joined
+    # pair-texts (|pairs| x two texts, ~270 MB at sf0.1's 444k
+    # candidates). When the docs are small enough to broadcast (the
+    # near-dup benchmark corpus and sf0.1 at local[4]), AQE broadcasts
+    # both doc sides — the b side reuses the a side's par-wide doc
+    # exchange (ReusedExchange) — and streams the candidates, so the
+    # kernel runs on the dedup's partitions as AQE coalesced them by
+    # bytes. When both joins are shuffled (no side small enough to
+    # broadcast), the candidates cross one exchange, hashpartitioning
+    # (a_id) to the par-wide a-side docs, and the first join's output
+    # crosses hashpartitioning(b_id) to the b-side docs: the a-side texts
+    # cross that exchange once per candidate pair, the b-side texts never,
+    # and the kernel runs on par partitions.
     ver = (
         cand.join(docs.select(F.col("doc_id").alias("a_id"),
                               F.col("text").alias("a_text"))
@@ -710,13 +796,14 @@ def jaccard_prefix_pairs_with_drops(
     ``max_bucket`` bounds the prefix buckets for FREE: a bucket on
     shingle s can never exceed s's document frequency, and df is already
     computed for the prefix order — so hot shingles are excluded by a
-    narrow filter on the prefix rows, with zero
-    extra aggregation passes (unlike the LSH/SRP operators, which need
-    the count-first _bucket_ids pass because their bucket sizes aren't
-    known upstream). Exactness holds whenever nothing is dropped — the
-    returned ``(pairs, dropped)`` tuple surfaces every excluded shingle
-    as (shingle, n=df) so the caller sees precisely where (and whether)
-    the no-false-negatives guarantee was traded for bound.
+    narrow filter on the prefix rows, with zero extra aggregation passes
+    (unlike the LSH/SRP operators, whose bucket sizes are not known
+    upstream, so their pair kernel counts each sorted key run as it
+    streams; see _bucket_candidates). Exactness holds whenever nothing
+    is dropped — the returned ``(pairs, dropped)`` tuple surfaces every
+    excluded shingle as (shingle, n=df) so the caller sees precisely
+    where (and whether) the no-false-negatives guarantee was traded for
+    bound.
     """
     t_eff = threshold - 0.0001  # guard the 4-digit rounding edge
     docs = corpus.select("doc_id", "text")
@@ -1076,25 +1163,15 @@ def simhash_candidate_pairs_with_drops(
     candidate-set growth per banding config (the scale-defining number:
     verification cost is linear in it).
 
-    Same shape as the LSH/SRP generators: groupBy the chunk key (ONE
-    exchange — a self-join would evaluate the simhash subtree twice) and
-    enumerate in-bucket pairs, with the count-first hot-bucket cap;
-    returns ``(candidates, dropped)``."""
+    Same shape as the LSH/SRP generators: one exchange on the chunk key
+    (a self-join would evaluate the simhash subtree twice) into the
+    bucket-pair kernel, which carries ``sh`` as a payload (``a_sh`` is
+    ``a_id``'s simhash, ``b_sh`` ``b_id``'s) and drops buckets over
+    ``max_bucket``; returns ``(candidates, dropped)``."""
     chunks = simhash_chunk_rows(corpus, n_chunks)
-    buckets, dropped = _bucket_ids(
-        chunks, ["chunk_id", "chunk_val"], F.struct("doc_id", "sh"), max_bucket
+    return _bucket_candidates(
+        chunks, ["chunk_id", "chunk_val"], "doc_id", max_bucket, payload=("sh",)
     )
-    cand = _bucket_pairs(
-        buckets,
-        lambda x, y: F.struct(
-            F.least(x["doc_id"], y["doc_id"]).alias("a_id"),
-            F.greatest(x["doc_id"], y["doc_id"]).alias("b_id"),
-            # hamming is symmetric: side assignment is free
-            x["sh"].alias("a_sh"),
-            y["sh"].alias("b_sh"),
-        ),
-    )
-    return cand, dropped
 
 
 def simhash_pairs_with_drops(
@@ -1148,9 +1225,10 @@ def simhash_pairs_with_drops(
 
 def assert_no_drops(dropped: DataFrame, context: str) -> None:
     """Fail fast when a bucketed candidate generator dropped ANY bucket
-    while running in an exactness-guaranteed mode. The count is one
-    cheap keys-only job (the banding subtree re-executes, but only up to
-    the partial-aggregated bucket counts — no arrays, no pairs)."""
+    while running in an exactness-guaranteed mode. ``dropped`` is the
+    generator's lazy groupBy count over the bucket keys, so this re-runs
+    the banding subtree up to that keys-only aggregate: a pass the pair
+    kernel does not share, which enumerates no pairs."""
     hot = dropped.limit(5).collect()
     if hot:
         keys = ", ".join(str(tuple(r)) for r in hot)
@@ -1366,29 +1444,38 @@ def connected_components_pairs(
     one row per doc that appears in some pair, including a (d, d, 1) row
     for a doc whose only pairs are self-loops.
 
-    The canonical edges (a_id < b_id, distinct, no self-loops) are
-    range-partitioned on a_id, and a union-find per partition
-    (_contract_batches) turns each local component into a star around
-    its minimum id (Łącki, Mirrokni and Włodarczyk, "Connected
-    Components at Scale via Local Contractions", 2018). AQE sizes these
-    partitions by bytes, which suits union-find work, linear in edge
-    bytes: each task's work and memory are O(edges in its partition),
-    bounded by the advisory partition size; a hub whose edges share one
-    a_id lands in one task. Two-star rounds (_star_edges) then run on
-    that quotient until it is a star forest (_is_star_forest): 0 rounds
-    when the graph fits one partition, about log2 P for a chain cut
-    into P partitions along its ids; components whose ids scatter
-    across partitions keep two-star's O(log diameter) rounds.
+    The canonical edges (a_id < b_id, no self-loops; a repeated pair
+    only unites two nodes again) are range-partitioned on a_id, and a
+    union-find per partition (_contract_batches) turns each local
+    component into a star around its minimum id (Łącki, Mirrokni and
+    Włodarczyk, "Connected Components at Scale via Local Contractions",
+    2018). AQE sizes these partitions by bytes, which suits union-find
+    work, linear in edge bytes: each task's work and memory are O(edges
+    in its partition), bounded by the advisory partition size; a hub
+    whose edges share one a_id lands in one task.
 
     Every node then takes its star root as keeper (a root, or a doc no
     star edge names as a child, keeps itself), and a proof checks that
-    every ORIGINAL pair joins two nodes with equal keepers before the
-    output is returned. A graph that is not a star forest after
+    every ORIGINAL pair joins two nodes with equal keepers. Star edges
+    only join nodes of one component, and a component's minimum is never
+    a child, so a passed proof means every keeper is its component's
+    minimum: the quotient is labelled and proved first, and when it
+    passes (a graph that fits one partition) the output is returned
+    after 0 rounds. Only when it fails do two-star rounds (_star_edges)
+    run on the quotient until it is a star forest (_is_star_forest):
+    about log2 P rounds for a chain cut into P partitions along its ids,
+    two-star's O(log diameter) for components whose ids scatter across
+    partitions; then it is labelled and proved again, and a second
+    failure raises RuntimeError ("label consistency"). The trade: a
+    quotient that is not already a star forest pays one extra labelling
+    and proof before its rounds. A graph that is not a star forest after
     ``max_iter`` rounds raises RuntimeError ("not converged");
     ``round_counter``, if given, gets the number of rounds appended.
 
     Lineage is cut after the pre-contraction, after every round (a star
-    op reads its input 2-3x) and on the output: ``localCheckpoint``, or,
+    op reads its input 2-3x) and on each labelling (a failed one is
+    released at once): a non-eager ``localCheckpoint``, whose blocks the
+    first job that reads it stores, or,
     when ``checkpoint_dir`` is set, a parquet copy read back from
     ``<checkpoint_dir>/<call id>-<n>``, durable like ``checkpoint()``
     but without touching the session's checkpoint dir. Each call writes
@@ -1404,27 +1491,52 @@ def connected_components_pairs(
         )
     call_id, n_cuts = uuid.uuid4().hex, itertools.count()
 
-    def cut(df, eager=False):
-        # NON-eager localCheckpoint for the quotient and the rounds (the
-        # plan is truncated either way): building its RDD already runs
-        # the upstream AQE query stages, and the star-forest check's job
-        # that reads it stores the blocks
+    def cut(df):
+        # NON-eager localCheckpoint (the plan is truncated either way):
+        # building its RDD already runs the upstream AQE query stages, and
+        # the first job that reads it (the star-forest check, the proof)
+        # stores the blocks
         if checkpoint_dir is None:
-            return df.localCheckpoint(eager=eager)
+            return df.localCheckpoint(eager=False)
         path = os.path.join(checkpoint_dir, f"{call_id}-{next(n_cuts)}")
         df.write.parquet(path)
         return df.sparkSession.read.parquet(path)
 
+    def free(df):
+        # release a local cut's blocks now, not when the ContextCleaner
+        # gets to them (a parquet cut stays until checkpoint_dir goes)
+        if checkpoint_dir is None:
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+    def label(edges):
+        # a child's keeper is its star root; every other node of canon (a
+        # root, a self-loop-only doc) keeps itself
+        keeper = F.coalesce("root", "doc_id")
+        size = F.count("*").over(Window.partitionBy(keeper)).cast("int")
+        nodes = canon.select(F.explode(F.array("a_id", "b_id")).alias("doc_id"))
+        return cut(
+            nodes.distinct().join(edges.toDF("root", "doc_id"), "doc_id", "left")
+            .select("doc_id", keeper.alias("keeper_id"), size.alias("cluster_size"))
+        )
+
+    def violations(out):
+        # the ORIGINAL pairs whose endpoints are not both labelled, and
+        # labelled equal
+        k = out.select("doc_id", "keeper_id")
+        return (
+            edges0.join(k.toDF("a_id", "ka"), "a_id", "left")
+            .join(k.toDF("b_id", "kb"), "b_id", "left")
+            .where(F.col("ka").isNull() | F.col("kb").isNull()
+                   | (F.col("ka") != F.col("kb")))
+            .count()
+        )
+
     # one read of the (possibly expensive, unpersisted) pair input feeds
     # both the edge set and the node list (self-loops included) below
-    canon = (
-        pairs.select(
-            F.least("a_id", "b_id").alias("a_id"),
-            F.greatest("a_id", "b_id").alias("b_id"),
-        )
-        .distinct()
-        .persist()
-    )
+    canon = pairs.select(
+        F.least("a_id", "b_id").alias("a_id"),
+        F.greatest("a_id", "b_id").alias("b_id"),
+    ).persist()
     edges0 = canon.where(F.col("a_id") != F.col("b_id"))
     try:
         edges = cut(
@@ -1432,49 +1544,38 @@ def connected_components_pairs(
                 _contract_batches, edges0.schema
             )
         )
-        rounds = 0
-        while not _is_star_forest(edges):
-            if rounds == max_iter:
-                raise RuntimeError(
-                    f"connected_components_pairs: not converged after "
-                    f"{max_iter} rounds — O(log n) convergence makes this a "
-                    "bug or an absurd graph; raise max_iter"
+        # label the quotient and prove it first: a passed proof means
+        # every label is its component's minimum (see the docstring), so
+        # a quotient that is already a star forest needs no check
+        out, rounds = label(edges), 0
+        if violations(out):
+            # a star-forest quotient always passes (its stars are whole
+            # components, rooted at their minima), so the first round
+            # runs unchecked
+            free(out)
+            while rounds == 0 or not _is_star_forest(edges):
+                if rounds == max_iter:
+                    raise RuntimeError(
+                        f"connected_components_pairs: not converged after "
+                        f"{max_iter} rounds — O(log n) convergence makes this a "
+                        "bug or an absurd graph; raise max_iter"
+                    )
+                # one distinct per round: the large-star output feeds the
+                # small-star raw (dedup=False — min is duplicate-blind, the
+                # per-round canonical SET is unchanged; see _star_edges)
+                edges = cut(
+                    _star_edges(_star_edges(edges, large=True, dedup=False), large=False)
                 )
-            # one distinct per round: the large-star output feeds the
-            # small-star raw (dedup=False — min is duplicate-blind, the
-            # per-round canonical SET is unchanged; see _star_edges)
-            edges = cut(
-                _star_edges(_star_edges(edges, large=True, dedup=False), large=False)
-            )
-            rounds += 1
+                rounds += 1
+            out = label(edges)
+            bad = violations(out)
+            if bad:
+                raise RuntimeError(
+                    f"connected_components_pairs: {bad} original pairs violate "
+                    "label consistency — star invariant broken"
+                )
         if round_counter is not None:
             round_counter.append(rounds)
-        # star forest: a child's keeper is its root, the component min;
-        # every other node of canon (a root, a self-loop-only doc) keeps
-        # itself
-        keeper = F.coalesce("root", "doc_id")
-        size = F.count("*").over(Window.partitionBy(keeper)).cast("int")
-        nodes = canon.select(F.explode(F.array("a_id", "b_id")).alias("doc_id"))
-        out = cut(
-            nodes.distinct().join(edges.toDF("root", "doc_id"), "doc_id", "left")
-            .select("doc_id", keeper.alias("keeper_id"), size.alias("cluster_size")),
-            eager=True,
-        )
-        # prove the checkpointed keepers against the ORIGINAL edges
-        # before anything is returned: both endpoints present and equal
-        k = out.select("doc_id", "keeper_id")
-        bad = (
-            edges0.join(k.toDF("a_id", "ka"), "a_id", "left")
-            .join(k.toDF("b_id", "kb"), "b_id", "left")
-            .where(F.col("ka").isNull() | F.col("kb").isNull()
-                   | (F.col("ka") != F.col("kb")))
-            .count()
-        )
-        if bad:
-            raise RuntimeError(
-                f"connected_components_pairs: {bad} original pairs violate "
-                "label consistency — star invariant broken"
-            )
         return out
     finally:
         canon.unpersist()
@@ -1620,8 +1721,8 @@ def embedding_cosine_pairs_with_drops(
 ) -> tuple[DataFrame, DataFrame]:
     """Embedding-cosine near-dup pairs: SRP-LSH bucketing (never
     all-pairs) -> in-bucket candidate enumeration (buckets over
-    ``max_bucket`` excluded count-first, returned as the second tuple
-    element) -> exact cosine verification. The verify cosine is the same
+    ``max_bucket`` dropped by the bucket-pair kernel, returned as the
+    second tuple element) -> exact cosine verification. The verify cosine is the same
     sequential-sum double expression the brute-force oracle uses, so
     values match bitwise."""
     from .similarity import cosine
@@ -1630,10 +1731,9 @@ def embedding_cosine_pairs_with_drops(
     sketches = corpus.repartition(par, "vec_id").mapInArrow(
         _srp_chunk_batches, from_arrow_schema(_SRP_SCHEMA)
     )
-    buckets, dropped = _bucket_ids(
-        sketches, ["chunk_id", "chunk_val"], F.col("vec_id"), max_bucket
+    cand, dropped = _bucket_candidates(
+        sketches, ["chunk_id", "chunk_val"], "vec_id", max_bucket
     )
-    cand = _bucket_pairs(buckets, _canonical_pair)
     ver = (
         cand.join(corpus.select(F.col("vec_id").alias("a_id"),
                                 F.col("v").alias("a_v")), "a_id")
@@ -1656,7 +1756,7 @@ def _q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Planted-degenerate certification of the hot-bucket cap itself: every
 # document rewritten to ONE constant text, so all N docs share identical
 # minhash band hashes -> exactly one bucket per band, each of size N >
-# the tiny cap -> the count-first exclusion must drop ALL of them and
+# the tiny cap -> the bucket-pair kernel must drop ALL of them and
 # the pair output must be EMPTY. The oracle is pure SQL: one row per
 # band with n = count(documents).
 DROPPED_DEMO_MAX_BUCKET = 8

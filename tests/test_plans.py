@@ -88,6 +88,45 @@ def test_lsh_band_rows_shuffle_only_keys(spark):
         assert not re.search(r"\bsh#", input_line), blk
 
 
+def test_verify_candidates_cross_one_exchange_when_shuffled(spark):
+    """With broadcast joins off, the deduplicated LSH candidates reach
+    the a_id sort-merge join of verify_candidate_pairs through ONE
+    exchange, the join's own hashpartitioning(a_id): no (a_id, b_id)
+    repartition runs in front of it (AQE-final plan). The shuffle
+    partition count differs from the kernel width, so such a
+    repartition could not coincide with the dedup's own exchange."""
+    import re
+
+    from __spark_entry__ import SF0001
+    from opencv_table_extraction_spark.operators.dedup import (
+        dedup_corpus,
+        minhash_lsh_pairs_with_drops,
+    )
+
+    confs = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+             "spark.sql.shuffle.partitions": "3"}
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q, _ = minhash_lsh_pairs_with_drops(dedup_corpus(spark, SF0001))
+        assert len(q.collect()) > 0
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    lines = q._jdf.queryExecution().executedPlan().toString().split("\n")
+    assert "isFinalPlan=true" in lines[0]
+    # the join's candidate side is its first child: the lines from the
+    # join down to the candidates' dedup aggregate
+    smj = next(i for i, ln in enumerate(lines) if "SortMergeJoin [a_id" in ln)
+    agg = next(i for i in range(smj, len(lines)) if "HashAggregate(keys=[a_id" in lines[i])
+    exchanges = [ln for ln in lines[smj:agg] if re.search(r"\bExchange ", ln)]
+    assert len(exchanges) == 1 and "hashpartitioning(a_id#" in exchanges[0], lines[smj:agg]
+
+
 def test_prefix_join_no_cache_and_single_scan(spark):
     """jaccard_prefix_pairs_with_drops must not persist its shingle
     explosion (the r2 cache leak / 100-TB memory cliff): no
