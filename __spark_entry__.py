@@ -42,9 +42,10 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derive transcripts from sf0.001 parquet, run the full
     extraction pipeline (balanced kernel map + turn ordering). Uses the
-    UNBOUNDED turn_seq form (two-level prefix sum + join-back) so no
-    stage of the flagship path serializes a conversation into one task
-    at any conversation size."""
+    UNBOUNDED turn_seq form (a two-level prefix sum over fixed-width
+    turn_idx buckets: the kernel output crosses one hash exchange on
+    (conv_id, bucket)) so no stage of the flagship path serializes a
+    conversation into one task at any conversation size."""
     transcripts = transcripts_from_tpch(spark, SF0001)
     return ordered_output(
         extract_transcripts(transcripts, unbounded_turn_seq=True)
@@ -73,9 +74,10 @@ def _q_extract_tables_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     imaging.py:79) — a hash-match certifies that adaptive binarization
     recovers the identical grid, cells, and spans end-to-end, the branch
     Otsu-default queries never execute. This row also certifies the
-    UNBOUNDED turn_seq form (plans/pipeline.turn_seq_map — two-level
-    prefix sum + join-back): the emitted turn_seq column
-    must hash-match the oracle's per-conversation row_number."""
+    UNBOUNDED turn_seq form (plans/pipeline.grouped_running_sum of 1 —
+    per-bucket turn counts of the input, joined onto the kernel output
+    on (conv_id, bucket)): the emitted turn_seq column must hash-match
+    the oracle's per-conversation row_number."""
     t = transcripts_from_tpch(spark, sf_dir).where(F.col("conv_id").startswith("order-"))
     out = extract_transcripts(t, use_adaptive=True, unbounded_turn_seq=True)
     return out.select(
@@ -132,7 +134,8 @@ FROM body
 # the adaptive row additionally certifies unbounded turn_seq: same table
 # oracle + the per-conversation ordinal (conv = order-{key % 100},
 # turn_idx = order key, so turn_seq = rank of the key within its mod
-# class — exactly what turn_seq_map must reproduce distributed)
+# class — exactly what with_turn_seq(unbounded=True) must reproduce
+# distributed, with offsets across 1,024-wide order-key buckets)
 _SQL_EXTRACT_TABLES_ADAPTIVE = _SQL_EXTRACT_TABLES.replace(
     "FROM body",
     """     ,

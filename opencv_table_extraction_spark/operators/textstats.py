@@ -357,9 +357,7 @@ FROM (SELECT doc_id, source,
 """
 
 
-def pack_token_shards(
-    d: DataFrame, budget: int = 50_000, buckets: int | None = None
-) -> DataFrame:
+def pack_token_shards(d: DataFrame, budget: int = 50_000) -> DataFrame:
     """Token-budget shard packing: within each source (the natural
     shard boundary), docs in stable doc_id order accumulate whitespace
     token counts and spill to a new shard every ``budget`` tokens — the
@@ -369,14 +367,13 @@ def pack_token_shards(
     The running token total is :func:`plans.pipeline.grouped_running_sum`
     over source in doc_id order, so no task holds a whole source (a
     ``Window.partitionBy("source")`` would put each source in one task:
-    with a handful of sources at 100 TB, a one-straggler plan), and
-    building the plan launches no Spark job. ``buckets`` is that
-    helper's doc_id value-range bucket count; the shards are a pure
-    function of the running total, so they do not depend on it. A doc
-    with a NULL doc_id or source gets no row."""
+    with a handful of sources at 100 TB, a one-straggler plan): a window
+    task holds one fixed-width doc_id bucket, at most 1,024 docs of a
+    source for unique doc_ids, and building the plan launches no Spark
+    job. A doc with a NULL doc_id or source gets no row."""
     n_tok = F.size(F.split(F.trim("text"), r"\s+"))
     docs = d.select("doc_id", "source", n_tok.alias("n_tokens"))
-    total = grouped_running_sum(docs, "source", "doc_id", F.col("n_tokens"), buckets)
+    total = grouped_running_sum(docs, "source", "doc_id", F.col("n_tokens"))
     return total.select(
         "doc_id",
         "source",

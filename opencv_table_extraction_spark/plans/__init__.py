@@ -7,6 +7,5 @@ from .pipeline import (  # noqa: F401
     lineage_table,
     ordered_output,
     transcripts_from_tpch,
-    turn_seq_map,
     with_turn_seq,
 )

@@ -40,7 +40,6 @@ __all__ = [
     "lineage_accumulator",
     "lineage_table",
     "ordered_output",
-    "turn_seq_map",
     "with_turn_seq",
     "lineage_summary",
     "transcripts_from_tpch",
@@ -169,8 +168,11 @@ def extract_transcripts(
     depends on grouping, and row order into the kernel is not
     load-bearing; Spark's sort-before-repartition keeps the
     row->partition assignment stable under task retries.
-    B5: row_number over (conv_id, turn_idx) re-establishes stable turn
-    ordering after the exchange (never rely on task order).
+    B5: ``turn_seq`` re-establishes stable turn ordering after the
+    exchange (never rely on task order): a row_number window over
+    conv_id, or with ``unbounded_turn_seq`` the bounded form of
+    :func:`with_turn_seq`, whose per-bucket turn counts come from the
+    input's keys.
     B8: ``lineage`` (from :func:`lineage_accumulator`) receives one
     lineage row per non-empty kernel task, tallied in the task itself
     from the batches it emits: whatever action runs the frame fills it,
@@ -186,8 +188,8 @@ def extract_transcripts(
         fn = functools.partial(_extract_tallied, lineage=lineage, **kernel)
     out = src.mapInArrow(fn, from_arrow_schema(arrow_out_schema(keep_text)))
     if add_turn_seq:
-        # unbounded mode takes its (conv_id, turn_idx) keys from the
-        # INPUT frame — a column-pruned re-scan of the source (cheap,
+        # unbounded mode counts turns per (conv_id, turn_idx bucket) on
+        # the INPUT frame — a column-pruned re-scan of the source (cheap,
         # JVM-only) instead of a second run of the Python kernel
         out = with_turn_seq(
             out,
@@ -197,81 +199,63 @@ def extract_transcripts(
     return out
 
 
+# grouped_running_sum's bucket width W = 2**RUN_BUCKET_BITS: the bucket of
+# an order value x is floor(x / W) = x >> RUN_BUCKET_BITS, an arithmetic
+# shift, so it is exact for any int or long (no division through double)
+RUN_BUCKET_BITS = 10
+
+
 def grouped_running_sum(
-    df: DataFrame, group: str, order: str, value: Column, buckets: int | None = None
+    df: DataFrame, group: str, order: str, value: Column, totals: DataFrame | None = None
 ) -> DataFrame:
     """``df`` plus ``running_sum``: the sum of ``value`` over the rows
     of the same ``group`` up to and including this one in ``order`` — a
     running total computed WITHOUT ever holding a whole group in one
-    task (a two-level prefix sum):
+    task (a two-level prefix sum over fixed-width ``order`` buckets,
+    ``floor(order / W)`` with W = 2 ** ``RUN_BUCKET_BITS``):
 
-      1. bucket every row by ``order`` value range: the global (lo, width)
-         come from a 1-row min/max aggregate joined in by a broadcast
-         crossJoin, so the bounds are pure arithmetic over the input and
-         every pass over ``df`` buckets identically, with nothing
-         persisted and no eager ``.collect()`` (building the plan launches
-         no Spark job);
-      2. sum ``value`` per (group, bucket) — a SMALL frame (<= groups x
-         buckets rows) — and turn the sums into exclusive per-bucket
-         offsets with a window ORDERED BY BUCKET (a window partition holds
-         <= ``buckets`` rows per group, never the group's length);
-      3. join the offsets back on (group, bucket) and add a rows-frame
-         running sum WITHIN each (group, bucket).
+      1. sum ``value`` per (group, bucket) of ``totals`` (default ``df``)
+         and turn the sums into exclusive per-bucket offsets with a
+         rows window over buckets — it holds one row per non-empty
+         bucket of a group, never the group's rows;
+      2. join the offsets onto ``df`` on (group, bucket) in a shuffled
+         hash join built on the offsets, and add a rows-frame running
+         sum WITHIN each (group, bucket): ``df`` crosses one hash
+         exchange on (group, bucket), is never broadcast, and an
+         in-bucket window holds at most W rows per group for unique
+         ``order`` values.
 
-    The trade: a step-3 window task holds the rows of one value-range
-    bucket. For unique, dense ``order`` values (``turn_idx``, ``doc_id``)
-    that is at most range / ``buckets`` rows per group, so a 10^9-row
-    group splits across ~``buckets`` tasks; sparse outliers in ``order``
-    stretch the range and can crowd the dense rows into one bucket. Ties
-    on (group, order) get an arbitrary order, as a ``row_number`` would.
-    Rows with a NULL ``group`` or ``order`` fall out at the join. On empty
-    input the crossJoin against the 1-row NULL aggregate yields an empty
-    frame with the same schema. ``buckets`` defaults to four times the
-    default parallelism; the result does not depend on it."""
-    buckets = buckets or df.sparkSession.sparkContext.defaultParallelism * 4
-    bounds = df.agg(
-        F.min(order).alias("_lo"),
-        F.greatest(
-            F.lit(1),
-            F.ceil((F.max(order) - F.min(order) + 1) / F.lit(buckets)),
-        ).alias("_w"),
-    )
-    b = df.crossJoin(F.broadcast(bounds)).select(
-        *df.columns,
-        F.floor((F.col(order) - F.col("_lo")) / F.col("_w")).cast("int").alias("_bkt"),
-        value.alias("_v"),
-    )
-    sums = b.groupBy(group, "_bkt").agg(F.sum("_v").alias("_s"))
+    ``totals`` must hold the same (group, order) rows as ``df`` and
+    resolve ``value``; pass a cheap projection of the same rows when
+    ``df`` sits downstream of an expensive map, else the totals branch
+    re-executes it. The bucket is pure arithmetic on ``order``: no
+    bounds aggregate, nothing persisted, and building the plan launches
+    no Spark job. Ties on (group, order) get an arbitrary order, as a
+    ``row_number`` would, and each row of ``df`` gets exactly one
+    output row. Rows with a NULL ``group`` or ``order`` fall out at the
+    join."""
+    bkt = F.shiftright(F.col(order), RUN_BUCKET_BITS).alias("_bkt")
+    sums = (df if totals is None else totals).groupBy(group, bkt).agg(F.sum(value).alias("_s"))
     w_off = Window.partitionBy(group).orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sums.select(group, "_bkt", F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_off"))
+    # the join builds on the offsets: broadcasting a small ``df`` instead
+    # (AQE's choice once its size is known) would leave it with the
+    # offsets' group-only partitioning, one task per group for w_run
+    offs = sums.select(
+        group, "_bkt", F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_off")
+    ).hint("shuffle_hash")
     w_run = (
         Window.partitionBy(group, "_bkt")
         .orderBy(order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return b.join(offs, [group, "_bkt"]).select(
+    return df.select(*df.columns, bkt, value.alias("_v")).join(offs, [group, "_bkt"]).select(
         *df.columns, (F.col("_off") + F.sum("_v").over(w_run)).alias("running_sum")
     )
-
-
-def turn_seq_map(keys: DataFrame, buckets: int | None = None) -> DataFrame:
-    """Distributed ordinal assignment: (conv_id, turn_idx) ->
-    (conv_id, turn_idx, turn_seq) where turn_seq is the 1-based rank of
-    turn_idx within its conversation: :func:`grouped_running_sum` of 1
-    over conv_id in turn_idx order, so no task holds a whole
-    conversation, and building the plan launches no Spark job. Ties on
-    (conv_id, turn_idx) get arbitrary distinct ranks, as the window
-    form's row_number does; the data model's turn_idx is unique per
-    conversation."""
-    seq = grouped_running_sum(keys.select("conv_id", "turn_idx"), "conv_id", "turn_idx",
-                              F.lit(1), buckets)
-    return seq.select("conv_id", "turn_idx", F.col("running_sum").cast("int").alias("turn_seq"))
 
 
 def with_turn_seq(
     out: DataFrame,
     unbounded: bool = False,
-    buckets: int | None = None,
     keys: DataFrame | None = None,
 ) -> DataFrame:
     """B5: stable turn ordering guarantee (turn_seq = 1-based rank of
@@ -284,19 +268,20 @@ def with_turn_seq(
     output, not images).
 
     ``unbounded=True`` (the production-shape twin, like asof's bucketed
-    mode): two-level prefix-sum ranking via :func:`turn_seq_map`, then
-    an equi-join back on (conv_id, turn_idx) — every stage's task size stays bounded at ANY
-    conversation length. Costs one extra small-side shuffle + the keys
-    pass; pass ``keys`` (a cheap pre-kernel projection of the same rows)
-    when ``out`` sits downstream of an expensive map, else the keys
-    branch re-executes it. Requires (conv_id, turn_idx) unique (the data
-    model's key) — the join would fan out duplicates, where the window
-    form would arbitrarily rank them."""
+    mode): :func:`grouped_running_sum` of 1 over conv_id in turn_idx
+    order, so every stage's task size stays bounded at ANY conversation
+    length: ``out`` crosses one hash exchange on (conv_id, turn_idx
+    bucket) and is never joined on (conv_id, turn_idx). The per-bucket
+    turn counts come from ``keys`` (default ``out``); pass a cheap
+    pre-kernel projection of the same (conv_id, turn_idx) rows when
+    ``out`` sits downstream of an expensive map, else the counts branch
+    re-executes it. A repeated (conv_id, turn_idx) gets arbitrary
+    distinct ranks, as the window form's row_number gives it."""
     if not unbounded:
         w = Window.partitionBy("conv_id").orderBy("turn_idx")
         return out.withColumn("turn_seq", F.row_number().over(w))
-    seq = turn_seq_map(keys if keys is not None else out.select("conv_id", "turn_idx"), buckets)
-    return out.join(seq, ["conv_id", "turn_idx"])
+    seq = grouped_running_sum(out, "conv_id", "turn_idx", F.lit(1), totals=keys)
+    return seq.select(*out.columns, F.col("running_sum").cast("int").alias("turn_seq"))
 
 
 def ordered_output(out: DataFrame) -> DataFrame:

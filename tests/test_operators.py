@@ -975,13 +975,13 @@ def test_train_test_split_is_stable_under_corpus_growth(spark):
 
 
 def test_pack_token_shards_is_partition_invariant(spark):
-    """The distributed prefix-sum packing must produce identical shard
-    assignments at any bucket count (3, 7, 32) and never a window
-    spanning a whole source in one task — the global cumsum is exact
-    regardless of how ranges split. Sparse, negative doc_ids (outliers
-    at +-10^12 stretch the value range, so the dense ids crowd one
-    bucket and the rest stay empty) must match a single-window running
-    sum per source."""
+    """The distributed prefix-sum packing must equal a single-window
+    running sum per source at any input partitioning (1, 5, 7) and
+    shuffle width (3, 8, 16) — the global cumsum is exact however the
+    fixed-width doc_id buckets land in tasks. Besides the documents
+    table, sparse, negative doc_ids with outliers at +-10^12 spread each
+    source over hundreds of buckets, mostly one doc each (real
+    cross-bucket offsets)."""
     import random
 
     from pyspark.sql import Window
@@ -990,17 +990,20 @@ def test_pack_token_shards_is_partition_invariant(spark):
         pack_token_shards,
     )
 
-    def shards(d, buckets):
-        return {r["doc_id"]: (r["source"], r["shard_id"])
-                for r in pack_token_shards(d, budget=300, buckets=buckets).collect()}
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
     # small budget so shard boundaries land mid-source (exercises the
     # cross-bucket offsets, not just shard 0)
-    base = shards(d, 3)
-    assert len({v[1] for v in base.values()}) > 3  # multiple shards
-    for b in (7, 32):
-        assert shards(d, b) == base, b
+    def shards(d):
+        return {r["doc_id"]: (r["source"], r["shard_id"])
+                for r in pack_token_shards(d, budget=300).collect()}
+
+    def window_shards(d):
+        w = (Window.partitionBy("source").orderBy("doc_id")
+             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        n_tok = F.size(F.split(F.trim("text"), r"\s+"))
+        return {r["doc_id"]: (r["source"], r["shard_id"]) for r in d.select(
+            "doc_id", "source",
+            F.floor((F.sum(n_tok).over(w) - n_tok) / 300).cast("int").alias("shard_id"),
+        ).collect()}
 
     rng = random.Random(11)
     ids = rng.sample(range(-10**6, 10**6), 400) + [-(10**12), 10**12]
@@ -1009,17 +1012,13 @@ def test_pack_token_shards_is_partition_invariant(spark):
                                               for _ in range(rng.randrange(1, 40))))
          for i in ids],
         "doc_id bigint, source string, text string",
-    ).repartition(5)
-    w = (Window.partitionBy("source").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    n_tok = F.size(F.split(F.trim("text"), r"\s+"))
-    ref = {r["doc_id"]: (r["source"], r["shard_id"]) for r in sparse.select(
-        "doc_id", "source",
-        F.floor((F.sum(n_tok).over(w) - n_tok) / 300).cast("int").alias("shard_id"),
-    ).collect()}
-    assert len({v[1] for v in ref.values()}) > 3
-    for b in (None, 3, 32):
-        assert shards(sparse, b) == ref, b
+    )
+    for d in (spark.read.parquet(f"{SF}/documents.parquet"), sparse):
+        ref = window_shards(d)
+        assert len({v[1] for v in ref.values()}) > 3  # multiple shards
+        for n_in, n_shuffle in ((1, 3), (5, 8), (7, 16)):
+            with spark_confs(spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}):
+                assert shards(d.repartition(n_in)) == ref, (n_in, n_shuffle)
 
 
 def test_connected_components_multi_hop_chain(spark):

@@ -302,14 +302,16 @@ def test_dedup_apply_corpus_side_never_shuffles(spark):
 
 def test_turn_seq_unbounded_equals_window_form(spark):
     """Property test for the two-level prefix-sum turn ordering (r5
-    verdict #3): on conversations with gaps, negative turn_idx, a giant
-    5,000-turn conversation, and a bucket count far smaller than the
-    giant conversation (forcing real cross-bucket offsets), the
-    unbounded form must equal the window form exactly — and no window
-    partition in the unbounded plan may hold a whole conversation."""
+    verdict #3): on conversations with gaps, negative turn_idx, and a
+    giant 5,000-turn conversation spread over 15 fixed-width turn_idx
+    buckets (real cross-bucket offsets), the unbounded form must equal
+    the window form exactly at any input partitioning and shuffle
+    width."""
     import random
 
-    from opencv_table_extraction_spark.plans import turn_seq_map, with_turn_seq
+    from test_operators import spark_confs
+
+    from opencv_table_extraction_spark.plans import with_turn_seq
 
     rng = random.Random(7)
     rows = [("giant", i * 3 - 500) for i in range(5000)]
@@ -317,26 +319,93 @@ def test_turn_seq_unbounded_equals_window_form(spark):
         ids = rng.sample(range(-1000, 10000), rng.randrange(1, 40))
         rows += [(f"c{c}", i) for i in ids]
     rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int").repartition(7)
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
 
-    win = with_turn_seq(df)
-    unb = with_turn_seq(df, unbounded=True, buckets=16)
-    a = {(r["conv_id"], r["turn_idx"]): r["turn_seq"] for r in win.collect()}
-    b = {(r["conv_id"], r["turn_idx"]): r["turn_seq"] for r in unb.collect()}
-    assert a == b and len(a) == len(rows)
+    def seqs(out):
+        return {(r["conv_id"], r["turn_idx"]): r["turn_seq"] for r in out.collect()}
 
-    # the map alone, with buckets=16 over a 5,000-turn conversation:
-    # ranks must still be the per-conversation 1..n ordinals
-    m = turn_seq_map(df, buckets=16)
-    got = sorted(
-        r["turn_seq"] for r in m.where(F.col("conv_id") == "giant").collect()
-    )
+    win = seqs(with_turn_seq(df.repartition(7)))
+    assert len(win) == len(rows)
+    for n_in, n_shuffle in ((7, 8), (1, 3), (13, 16)):
+        with spark_confs(spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}):
+            assert seqs(with_turn_seq(df.repartition(n_in), unbounded=True)) == win, n_in
+
+    # ranks are the per-conversation 1..n ordinals across the buckets
+    unb = with_turn_seq(df, unbounded=True)
+    got = sorted(r["turn_seq"] for r in unb.where(F.col("conv_id") == "giant").collect())
     assert got == list(range(1, 5001))
 
     # empty input keeps the schema
-    empty = turn_seq_map(df.where(F.lit(False)))
+    empty = with_turn_seq(df.where(F.lit(False)), unbounded=True)
     assert empty.columns == ["conv_id", "turn_idx", "turn_seq"]
     assert empty.count() == 0
+
+
+def test_turn_seq_unbounded_keeps_duplicated_keys(spark):
+    """A repeated (conv_id, turn_idx) keeps one row per input row in the
+    bounded form, with the window form's turn_seq multiset (the tied
+    rows get distinct ranks, as row_number gives them). A join back on
+    (conv_id, turn_idx) fans the pair out to 2 x 2 rows."""
+    from opencv_table_extraction_spark.plans import with_turn_seq
+
+    df = spark.createDataFrame([("a", 1), ("a", 2), ("a", 2), ("a", 3), ("b", 1)],
+                               "conv_id string, turn_idx int")
+
+    def ranks(out):
+        return sorted((r["conv_id"], r["turn_idx"], r["turn_seq"]) for r in out.collect())
+
+    unb = ranks(with_turn_seq(df, unbounded=True))
+    assert len(unb) == 5
+    assert unb == ranks(with_turn_seq(df))
+
+
+def test_turn_seq_unbounded_splits_hot_conversation(spark):
+    """One hot conversation of 100k turns (beside a cold one) at 8
+    shuffle partitions, AQE coalescing off: in the bounded form no task
+    of the turn_seq stage holds more than half of its rows, and every
+    (conv_id, bucket) window partition sits in one task with at most W
+    rows. The window form puts the whole conversation in one task."""
+    from collections import Counter
+
+    from test_operators import spark_confs
+
+    from opencv_table_extraction_spark.plans import with_turn_seq
+    from opencv_table_extraction_spark.plans.pipeline import RUN_BUCKET_BITS
+
+    n = 100_000
+    turns = spark.range(n + 100).select(
+        F.when(F.col("id") < n, "hot").otherwise("cold").alias("conv_id"),
+        (F.col("id") % n).cast("int").alias("turn_idx"),
+    ).repartition(4)
+
+    def hot_tasks(out):
+        """{(bucket, task): rows} of the hot conversation; asserts every
+        turn_seq is its turn_idx + 1"""
+        tagged = out.select(
+            "conv_id",
+            F.shiftright("turn_idx", RUN_BUCKET_BITS).alias("bkt"),
+            F.spark_partition_id().alias("task"),
+            (F.col("turn_seq") != F.col("turn_idx") + 1).cast("int").alias("bad"),
+        )
+        rows = tagged.groupBy("conv_id", "bkt", "task").agg(
+            F.count("*").alias("n"), F.sum("bad").alias("bad")).collect()
+        assert sum(r["n"] for r in rows) == n + 100
+        assert sum(r["bad"] for r in rows) == 0
+        return {(r["bkt"], r["task"]): r["n"] for r in rows if r["conv_id"] == "hot"}
+
+    with spark_confs(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false",
+                             "spark.sql.shuffle.partitions": "8"}):
+        bounded = hot_tasks(with_turn_seq(turns, unbounded=True))
+        window = hot_tasks(with_turn_seq(turns))
+
+    per_task = Counter()
+    for (_, task), c in bounded.items():
+        per_task[task] += c
+    assert max(per_task.values()) <= n // 2, per_task
+    buckets = [b for b, _ in bounded]
+    assert len(buckets) == len(set(buckets))  # each bucket in one task
+    assert max(bounded.values()) <= 1 << RUN_BUCKET_BITS
+    assert len({task for _, task in window}) == 1
 
 
 def _unbounded_turn_seq(df):
@@ -357,8 +426,9 @@ def _token_shards(df):
                          ids=["turn_seq", "pack_token_shards"])
 def test_turn_seq_plan_construction_is_lazy(spark, build, column):
     """Building a grouped_running_sum plan (unbounded turn_seq, token
-    shard packing) must launch no Spark job: the bucket bounds are a
-    lazily-joined 1-row aggregate, not an eager collect or checkpoint.
+    shard packing) must launch no Spark job: the bucket is arithmetic on
+    the order column, with no bounds aggregate, eager collect or
+    checkpoint.
     Proven by constructing the plan over input whose evaluation RAISES
     — construction succeeds and runs no job, execution fails."""
     from pyspark.sql.types import StructType, StructField, StringType, IntegerType
@@ -389,21 +459,46 @@ def test_turn_seq_plan_construction_is_lazy(spark, build, column):
 
 
 def test_unbounded_turn_seq_runs_kernel_once(spark, fixture_dir):
-    """The unbounded turn_seq form takes its ordinal keys from the
-    INPUT (a pruned JVM-only re-scan), never from the kernel output —
-    the Python kernel map must appear exactly once in the plan, and the
-    keys branch must not carry the text column."""
+    """The unbounded turn_seq form takes its per-bucket turn counts from
+    the INPUT (a pruned JVM-only re-scan), never from the kernel output:
+    the Python kernel map appears exactly once, the keys branch does not
+    carry the text column, and in the AQE-final plan the kernel output
+    crosses one exchange, a hash on (conv_id, bucket) — no bounds
+    aggregate (no SinglePartition exchange, no BroadcastNestedLoopJoin)
+    and no broadcast of the kernel output."""
     import re
 
     df = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
     out = extract_transcripts(df, unbounded_turn_seq=True)
     plan = _plan(out)
     assert len(re.findall(r"\(\d+\)\s+MapInArrow", plan)) == 1
-    # one scan feeds the kernel (carries text); the keys branch scans
-    # (counts + join-back sides) are pruned to (conv_id, turn_idx) only
+    # one scan feeds the kernel (carries text); the one keys-branch scan
+    # is pruned to (conv_id, turn_idx)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert sum("text" in s for s in schemas) == 1
-    assert sum("text" not in s for s in schemas) >= 1
-    # keys-branch scans are (conv_id, turn_idx); the lazy bounds
-    # aggregate prunes further to turn_idx alone
-    assert all("text" in s or ("turn_idx" in s and "role" not in s) for s in schemas)
+    assert sorted(schemas) == ["conv_id:string,turn_idx:int",
+                               "conv_id:string,turn_idx:int,text:string"], schemas
+
+    assert len(out.collect()) == df.count()  # finalizes the adaptive plan
+    final = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    lines = final[: final.index("== Initial Plan ==")].split("\n")
+    kernel = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+    assert len(kernel) == 1, final
+
+    def depth(ln):
+        m = re.match(r"[\s:]*[+:]- ", ln)
+        return m.end() if m else None
+
+    # the kernel node's ancestors: each tree line above it that is less
+    # indented than every one met so far on the way up
+    above, d = [], depth(lines[kernel[0]])
+    for ln in reversed(lines[: kernel[0]]):
+        if depth(ln) is not None and depth(ln) < d:
+            above.append(ln)
+            d = depth(ln)
+    exchanges = [ln for ln in above if re.search(r"\bExchange\b", ln)]
+    assert len(exchanges) == 1, above
+    assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, _bkt#\d+, \d+\)",
+                     exchanges[0]), exchanges
+    assert not any("BroadcastExchange" in ln for ln in above), above
+    assert "BroadcastNestedLoopJoin" not in final and "SinglePartition" not in final
